@@ -122,7 +122,6 @@ def _streaming_replay(
         import duckdb
 
         db = tempfile.mktemp(prefix="bench_replay_", suffix=".duckdb")
-        merge_stage = tempfile.mkdtemp(prefix="bench_merge_stage_")
         con = duckdb.connect(db)
         con.execute(
             "CREATE TABLE IF NOT EXISTS transactions ("
@@ -160,7 +159,6 @@ def _streaming_replay(
                 b.name,
                 cols[b.name],
                 list(b.key_cols),
-                stage_dir=f"{merge_stage}/{b.name}",
             )
     else:
         def sink_factory(b):

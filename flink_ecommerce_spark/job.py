@@ -17,6 +17,10 @@ paired with --sink memory, or with ``--jdbc-url duckdb:///path.db``
 which runs the jdbc/staged sinks against an embedded DuckDB file —
 demo/smoke use; DuckDB is single-writer, so production concurrency
 belongs to Postgres).
+
+``--sink staged`` is DuckDB-only: it runs one Spark action per
+micro-batch and holds the batch in driver memory as Arrow, so bound
+the batch at the source (``max_offsets_per_trigger`` for Kafka).
 """
 
 from __future__ import annotations
@@ -121,13 +125,18 @@ def _connection_factory(jdbc_url: str):
 def make_sink_factory(args):
     """Sink selection: ``memory`` (tests), ``jdbc`` (row-wise
     executemany upserts, the reference's K2-K5 shape), or ``staged``
-    (set-based: stage each micro-batch as parquet, ONE MERGE /
-    ON CONFLICT statement per batch — the warehouse-style path that
-    scales past row-at-a-time JDBC)."""
+    (set-based, DuckDB-only: one Spark action collects each
+    micro-batch as Arrow into driver memory, then ONE ON CONFLICT /
+    MERGE statement per batch)."""
     if args.sink == "memory":
         return lambda branch: MemoryUpsertSink(branch.key_cols)
 
     is_duckdb = args.jdbc_url.startswith("duckdb://")
+    if args.sink == "staged" and not is_duckdb:
+        raise SystemExit(
+            f"--sink staged writes to DuckDB only; got --jdbc-url "
+            f"{args.jdbc_url!r} (use duckdb:///path.db, or --sink jdbc)"
+        )
     factory = _connection_factory(args.jdbc_url)
     ddl.create_sink_tables(factory)  # K1: once, at startup
 
@@ -138,7 +147,6 @@ def make_sink_factory(args):
                 branch.name,
                 SINK_COLUMNS[branch.name],
                 list(branch.key_cols),
-                stage_dir=f"{args.stage_dir}/{branch.name}",
                 dialect=args.merge_dialect,
             )
 
@@ -165,7 +173,6 @@ def main(argv: list[str] | None = None) -> StreamingJob:
     p.add_argument("--rate-rps", type=int, default=1000)
     p.add_argument("--sink", choices=["jdbc", "staged", "memory"], default="jdbc")
     p.add_argument("--jdbc-url", default="postgresql://localhost/ecommerce")
-    p.add_argument("--stage-dir", default="/tmp/flink_ecommerce_spark_stage")
     p.add_argument("--merge-dialect", choices=["merge", "on_conflict"],
                    default="on_conflict")
     p.add_argument("--checkpoint", default="/tmp/flink_ecommerce_spark_ckpt")

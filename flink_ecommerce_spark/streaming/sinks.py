@@ -12,16 +12,17 @@ Three implementations of one contract (idempotent keyed upsert):
   etc.), batched executemany with retries (the reference's 1000-row /
   5-retry semantics). The container has no Postgres, so it's
   exercised in tests through a fake DB-API connection.
-- ``StagedMergeSink`` — set-based MERGE path: stage the micro-batch
-  as parquet (distributed write), apply ONE MERGE INTO /
-  INSERT..ON CONFLICT statement reading the staged files. Exercised
-  in tests against a real engine (DuckDB).
+- ``StagedMergeSink`` — set-based path into DuckDB: ONE Spark action
+  collects the micro-batch as Arrow, then ONE INSERT..ON CONFLICT /
+  MERGE INTO statement reads it from the connection. Exercised in
+  tests against a real engine (DuckDB).
 
 Scale notes: foreachBatch hands the micro-batch DataFrame to the
-sink; MemoryUpsertSink collects (test-only by design), while the
-JDBC sink writes per-partition via ``df.foreachPartition`` so
-executors connect directly — the driver never materializes the
-batch.
+sink; MemoryUpsertSink collects (test-only by design), the JDBC sink
+writes per-partition via ``df.foreachPartition`` so executors connect
+directly, and StagedMergeSink holds each batch in driver memory as
+Arrow — bound the batch at the source (``max_offsets_per_trigger``
+for Kafka).
 """
 
 from __future__ import annotations
@@ -81,7 +82,7 @@ def merge_upsert_sql(
     dialect: str = "merge",
 ) -> str:
     """ONE set-based upsert statement ingesting ``source`` (a table
-    name or subquery, e.g. ``read_parquet('stage/*.parquet')``) into
+    name or subquery, e.g. a registered Arrow table) into
     ``table``.
 
     dialect='merge': ANSI/Delta/Iceberg/Postgres-15 MERGE INTO.
@@ -116,25 +117,26 @@ def merge_upsert_sql(
 
 
 class StagedMergeSink:
-    """MERGE-shaped batch upsert: the Delta/Iceberg-style twin of
+    """MERGE-shaped batch upsert into DuckDB: the set-based twin of
     JdbcUpsertSink's row-at-a-time executemany.
 
     Per micro-batch:
-    1. reduce to ONE row per key (MERGE forbids duplicate source
-       keys): latest by ``order_col`` when given, else a
-       deterministic max over the non-key columns;
-    2. stage the reduced batch as parquet — a DISTRIBUTED
-       executor-side write, no driver materialization, no per-row
-       round-trips;
-    3. issue one set-based statement (``merge_upsert_sql``) whose
-       source reads the staged files directly
-       (``read_parquet('<stage>/*.parquet')``), exactly how a
-       warehouse MERGE ingests a staged load.
+    1. ONE Spark action: the batch's columns are collected to the
+       driver as an Arrow table (``toArrow``), so the plan — JSON
+       parse, state store — runs once; an empty batch stops here;
+    2. the Arrow table is registered on the DuckDB connection and ONE
+       set-based statement (``merge_upsert_sql``) ingests it. Its
+       source collapses duplicate keys (MERGE / ON CONFLICT reject
+       them): latest by ``order_col`` when given, then max over the
+       remaining non-key columns as a deterministic tie-break.
 
-    ``connection_factory`` returns a DB-API connection to the target
-    engine (DuckDB in tests; anything with MERGE or ON CONFLICT in
-    production). Final state is identical to the row-wise sinks —
-    pinned by tests against MemoryUpsertSink."""
+    The batch is held in driver memory, so bound it at the source
+    (``max_offsets_per_trigger`` for Kafka, ``maxFilesPerTrigger`` for
+    files). The sink is DuckDB-only: ``connection_factory`` returns a
+    DuckDB connection, whose ``TimeZone`` is pinned to UTC so Arrow's
+    UTC timestamps land unshifted in ``TIMESTAMP`` columns. Final state
+    is identical to the row-wise sinks — pinned by tests against
+    MemoryUpsertSink."""
 
     def __init__(
         self,
@@ -142,7 +144,6 @@ class StagedMergeSink:
         table: str,
         columns: Sequence[str],
         key_cols: Sequence[str],
-        stage_dir: str,
         dialect: str = "on_conflict",
         order_col: str | None = None,
     ):
@@ -150,79 +151,35 @@ class StagedMergeSink:
         self.table = table
         self.columns = tuple(columns)
         self.key_cols = tuple(key_cols)
-        self.stage_dir = stage_dir
-        self.dialect = dialect
-        self.order_col = order_col
-
-    def _reduce_to_latest(self, batch_df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         non_key = [c for c in self.columns if c not in self.key_cols]
-        if not non_key:
-            return batch_df.select(*self.columns).distinct()
-        # latest-per-key as a max-struct aggregation (map-side
-        # combine; no per-key sort): struct field order = the sort
-        # order — order_col first when given, then the remaining
-        # non-key columns as a deterministic tie-break (the window
-        # form this replaces left order_col ties arbitrary)
         lead = (
-            [self.order_col] + [c for c in non_key if c != self.order_col]
-            if self.order_col
+            [order_col] + [c for c in non_key if c != order_col]
+            if order_col
             else non_key
         )
-        reduced = (
-            batch_df.select(*self.columns)
-            .groupBy(*self.key_cols)
-            .agg(F.max(F.struct(*lead)).alias("__m"))
+        keys = ", ".join(self.key_cols)
+        order = ", ".join([keys] + [f"{c} DESC NULLS LAST" for c in lead])
+        latest = (
+            f"SELECT DISTINCT ON ({keys}) {', '.join(self.columns)} "
+            f"FROM __batch ORDER BY {order}"
         )
-        return reduced.select(
-            *self.key_cols, *[F.col(f"__m.{c}").alias(c) for c in non_key]
+        self.sql = merge_upsert_sql(
+            table, latest, self.columns, self.key_cols, dialect
         )
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
-        reduced = self._reduce_to_latest(batch_df)
-        # foreachBatch routinely delivers empty micro-batches; staging
-        # zero part files would make read_parquet('<stage>/*.parquet')
-        # fail on an empty glob
-        if reduced.isEmpty():
+        batch = batch_df.select(*self.columns).toArrow()
+        # foreachBatch routinely delivers empty micro-batches
+        if batch.num_rows == 0:
             return
-        stage = f"{self.stage_dir}/epoch={epoch_id or 0}"
-        reduced.write.mode("overwrite").parquet(stage)
-        sql = merge_upsert_sql(
-            self.table,
-            f"SELECT * FROM read_parquet('{stage}/*.parquet')",
-            self.columns,
-            self.key_cols,
-            self.dialect,
-        )
         conn = self.connection_factory()
         try:
-            conn.execute(sql)
-            if hasattr(conn, "commit"):
-                conn.commit()
+            conn.execute("SET TimeZone = 'UTC'")
+            conn.register("__batch", batch)
+            conn.execute(self.sql)
+            conn.commit()
         finally:
             conn.close()
-        self._prune_stage(keep=stage)
-
-    def _prune_stage(self, keep: str) -> None:
-        """Drop every epoch directory except ``keep`` once its merge
-        has committed — a long-running stream would otherwise grow the
-        stage dir without bound. The just-committed epoch is retained
-        so a foreachBatch retry of the same epoch re-merges
-        idempotently instead of failing on a missing glob.
-
-        Local filesystems only: an object-store stage (s3://, gs://,
-        ...) is left to a bucket lifecycle/TTL rule — driver-side
-        directory walks are the wrong tool there."""
-        if "://" in self.stage_dir:
-            return
-        import glob
-        import os
-        import shutil
-
-        for d in glob.glob(os.path.join(self.stage_dir, "epoch=*")):
-            if os.path.abspath(d) != os.path.abspath(keep):
-                shutil.rmtree(d, ignore_errors=True)
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return self.write_batch

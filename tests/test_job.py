@@ -88,7 +88,6 @@ def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
             "--input-path", src,
             "--sink", "staged",
             "--jdbc-url", f"duckdb://{db}",
-            "--stage-dir", str(tmp_path / "stage"),
             "--checkpoint", str(tmp_path / "ck2"),
         ]
     )
@@ -104,3 +103,22 @@ def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
     con.close()
     assert n_txn == 300
     assert abs(total_raw - total_day) < 0.05
+
+
+def test_staged_sink_rejects_non_duckdb_url():
+    """--sink staged writes through DuckDB only; any other URL stops at
+    start-up with a clear message instead of inside the first batch."""
+    import argparse
+
+    import pytest
+
+    args = argparse.Namespace(
+        source="file",
+        input_path="in",
+        sink="staged",
+        jdbc_url="postgresql://localhost/ecommerce",
+        stage_dir="stage",
+        merge_dialect="on_conflict",
+    )
+    with pytest.raises(SystemExit, match="DuckDB only"):
+        job_mod.make_sink_factory(args)

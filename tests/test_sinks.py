@@ -191,7 +191,6 @@ def test_staged_merge_final_state_matches_memory_sink(spark, tmp_path):
         "sales_per_day",
         cols,
         keys,
-        stage_dir=str(tmp_path / "stage"),
     )
     mem_sink = MemoryUpsertSink(keys)
 
@@ -229,7 +228,6 @@ def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path):
         "kv",
         ["k", "v", "ts"],
         ["k"],
-        stage_dir=str(tmp_path / "stage2"),
         order_col="ts",
     )
     batch = spark.createDataFrame(
@@ -242,7 +240,7 @@ def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path):
         for r in con.execute("SELECT k, v, ts FROM kv ORDER BY k").fetchall()
     )
     con.close()
-    # MERGE source reduced to latest-per-key: ts=200 wins for k=1
+    # merge source collapsed to latest-per-key: ts=200 wins for k=1
     assert rows == {1: (99.0, 200), 2: (5.0, 50)}
 
 
@@ -255,36 +253,9 @@ def test_merge_upsert_sql_all_key_columns_insert_only():
     assert oc.endswith("DO NOTHING") and "DO UPDATE" not in oc
 
 
-def test_staged_merge_prunes_committed_epochs(spark, tmp_path):
-    """The stage dir must not grow without bound on a long-running
-    stream: after each merge commits, earlier epoch directories are
-    dropped and only the just-committed one is kept (so a foreachBatch
-    retry of the same epoch stays idempotent)."""
-    import os
-
-    import duckdb
-
-    db = str(tmp_path / "prune.duckdb")
-    con = duckdb.connect(db)
-    con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
-    con.close()
-    stage = str(tmp_path / "stage_prune")
-    sink = StagedMergeSink(
-        lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"], stage_dir=stage
-    )
-    for epoch in range(3):
-        batch = spark.createDataFrame([(epoch, float(epoch))], "k long, v double")
-        sink.write_batch(batch, epoch)
-    assert sorted(os.listdir(stage)) == ["epoch=2"]
-    con = duckdb.connect(db)
-    assert con.execute("SELECT COUNT(*) FROM kv").fetchone()[0] == 3
-    con.close()
-
-
 def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
-    """foreachBatch may redeliver an epoch after a failure; re-staging
-    (mode=overwrite) plus re-merging the same rows must land in the
-    same final state — the at-least-once + idempotent-upsert contract
+    """foreachBatch may redeliver an epoch after a failure; re-merging
+    the same rows must land in the same final state — the at-least-once + idempotent-upsert contract
     the reference relies on (checkpointing off, DataStreamJob.java)."""
     import duckdb
 
@@ -293,8 +264,7 @@ def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
     con.close()
     sink = StagedMergeSink(
-        lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"],
-        stage_dir=str(tmp_path / "stage_retry"),
+        lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"]
     )
     batch = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double")
     sink.write_batch(batch, 7)
@@ -307,8 +277,7 @@ def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
 
 def test_staged_merge_skips_empty_batch(spark, tmp_path):
     """foreachBatch routinely delivers empty micro-batches; the sink
-    must not stage zero part files (read_parquet on an empty glob
-    raises) nor touch the target table."""
+    must not touch the target table for one."""
     import duckdb
 
     db = str(tmp_path / "empty.duckdb")
@@ -316,11 +285,78 @@ def test_staged_merge_skips_empty_batch(spark, tmp_path):
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
     con.close()
     sink = StagedMergeSink(
-        lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"],
-        stage_dir=str(tmp_path / "stage_empty"),
+        lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"]
     )
     empty = spark.createDataFrame([], "k long, v double")
     sink.write_batch(empty, 0)  # must not raise
     con = duckdb.connect(db)
     assert con.execute("SELECT COUNT(*) FROM kv").fetchone()[0] == 0
     con.close()
+
+
+def test_staged_merge_computes_batch_once(spark, tmp_path):
+    """One Spark action per micro-batch: every row passes through the
+    batch's plan exactly once (no separate emptiness probe, no second
+    pass for the write). The plan's Python UDF appends one byte per
+    evaluation to a file. An accumulator cannot see a second pass:
+    Spark left it at n for a sink that ran the UDF 2n times."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    db = str(tmp_path / "once.duckdb")
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
+    con.close()
+    evals = str(tmp_path / "evals")
+
+    def keep(_):
+        with open(evals, "a") as f:
+            f.write(".")
+        return True
+
+    n = 40
+    # a filter: no pass over the batch can prune it away
+    batch = spark.range(n).where(F.udf(keep, "boolean")("id")).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    )
+    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"])
+    sink.write_batch(batch, 0)
+    with open(evals) as f:
+        assert len(f.read()) == n
+    con = duckdb.connect(db)
+    assert con.execute("SELECT COUNT(*) FROM kv").fetchone()[0] == n
+    con.close()
+
+
+def test_staged_merge_keeps_utc_timestamps_on_any_host_zone(spark, tmp_path):
+    """Arrow hands Spark timestamps over as UTC instants; DuckDB would
+    cast them into a TIMESTAMP column through its session TimeZone,
+    which follows the host. The sink pins UTC, so 00:30 UTC stays
+    00:30 even on a connection that defaults to New York time."""
+    import datetime as dt
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    db = str(tmp_path / "tz.duckdb")
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE ts_kv (k BIGINT PRIMARY KEY, ts TIMESTAMP)")
+    con.close()
+
+    def connect_new_york():
+        # DuckDB 1.0 rejects TimeZone in connect(config=...); SET is the
+        # same session setting
+        c = duckdb.connect(db)
+        c.execute("SET TimeZone = 'America/New_York'")
+        return c
+
+    sink = StagedMergeSink(connect_new_york, "ts_kv", ["k", "ts"], ["k"])
+    # 1704069000 s = 2024-01-01 00:30:00 UTC, whatever Spark's zone
+    batch = spark.range(1).select(
+        F.col("id").alias("k"), F.timestamp_seconds(F.lit(1704069000)).alias("ts")
+    )
+    sink.write_batch(batch, 0)
+    con = duckdb.connect(db)
+    stored = con.execute("SELECT ts FROM ts_kv").fetchone()[0]
+    con.close()
+    assert stored == dt.datetime(2024, 1, 1, 0, 30)

@@ -114,7 +114,7 @@ def test_malformed_json_null_vs_strict(spark):
 
 def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_path):
     """Full streaming job through the set-based StagedMergeSink
-    (foreachBatch → stage parquet → one ON CONFLICT per batch) into a
+    (foreachBatch → Arrow → one ON CONFLICT per batch) into a
     real engine (DuckDB), with chunked micro-batches: final table
     state must equal the row-wise MemoryUpsertSink path for every
     branch — the job's --sink staged configuration."""
@@ -142,7 +142,6 @@ def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_pat
             b.name,
             SINK_COLUMNS[b.name],
             list(b.key_cols),
-            stage_dir=str(tmp_path / "stage" / b.name),
         )
 
     job = StreamingJob(
@@ -188,6 +187,51 @@ def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_pat
         assert got == want, f"branch {b.name} diverged (staged vs memory)"
         assert len(got) > 0, b.name
     con.close()
+
+
+def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
+    """A line that is not JSON parses to an all-null row. Its null
+    upsert key would fail the sinks' NOT NULL keys and stop every
+    query on every retry; instead each branch drops it and the valid
+    transaction next to it lands in all four tables."""
+    import duckdb
+
+    from flink_ecommerce_spark.job import SINK_COLUMNS
+    from flink_ecommerce_spark.sources.kafka import parse_transactions
+    from flink_ecommerce_spark.streaming import ddl
+    from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
+
+    valid = generator.transactions_as_json(
+        generator.transactions(spark, n_rows=1, seed=5)
+    ).first()["value"]
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "part-0.json").write_text(valid + "\n{not json\n")
+    db = str(tmp_path / "bad.duckdb")
+    ddl.create_sink_tables(lambda: duckdb.connect(db))
+
+    job = StreamingJob(
+        source=parse_transactions(spark.readStream.format("text").load(str(src))),
+        sink_factory=lambda b: StagedMergeSink(
+            lambda: duckdb.connect(db), b.name, SINK_COLUMNS[b.name], list(b.key_cols)
+        ),
+        branches=reference_branches(),
+        checkpoint_root=str(tmp_path / "ckpt"),
+    ).start()
+    try:
+        job.process_available()
+        failed = [q.name for q in job.queries if q.exception() is not None]
+    finally:
+        job.stop()
+
+    assert failed == []
+    con = duckdb.connect(db)
+    counts = {
+        t: con.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
+        for t in SINK_COLUMNS
+    }
+    con.close()
+    assert counts == dict.fromkeys(SINK_COLUMNS, 1)
 
 
 def test_kafka_reader_options_reference_parity():
