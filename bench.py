@@ -23,31 +23,6 @@ from flink_ecommerce_spark import registry  # noqa: E402
 from flink_ecommerce_spark.session import get_spark  # noqa: E402
 
 
-def _stage_replay_input(spark, sf_dir: str, replicas: int, n_files: int) -> tuple[str, int]:
-    """Write ``replicas`` id-remapped copies of the events table as
-    ``n_files`` parquet files so the file stream source delivers REAL
-    multi-batch input (the raw fixture is one file = one micro-batch,
-    which measures startup, not throughput). Returns (dir, n_events)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from flink_ecommerce_spark import catalog
-
-    events = catalog.table(spark, sf_dir, "events")
-    n = events.count()
-    copies = events
-    if replicas > 1:
-        rep = spark.range(replicas).select(F.col("id").alias("__rep"))
-        copies = events.crossJoin(F.broadcast(rep)).select(
-            (F.col("event_id") + F.col("__rep") * (n + 1)).alias("event_id"),
-            "ts", "user_id", "event_type", "value", "props",
-        )
-    stage = tempfile.mkdtemp(prefix="bench_replay_in_")
-    copies.repartition(n_files).write.mode("overwrite").parquet(stage)
-    return stage, n * replicas
-
-
 def _sustained_rate(queries) -> float:
     """Steady-state events/s from the engines' own batch progress:
     rows/duration summed over every batch AFTER each query's first
@@ -65,137 +40,14 @@ def _sustained_rate(queries) -> float:
     return min(rates) if rates else 0.0
 
 
-def _streaming_replay(
-    spark, sf_dir: str, metrics: dict, sink: str = "memory"
-) -> float:
-    """Replay the events table through the 4-branch streaming job and
-    return wall seconds. BASELINE.md targets ≥ 10k events/s.
-
-    sink='memory': driver-dict upsert sinks (the test harness path).
-    sink='staged': StagedMergeSink into an embedded DuckDB — the
-    set-based MERGE path that is the actual scale sink.
-
-    The input is staged as multiple files and replayed with
-    maxFilesPerTrigger, so the run has real micro-batches; besides the
-    end-to-end wall number this records ``sustained_events_per_sec``
-    (rows/duration of steady-state batches from StreamingQuery
-    progress, slowest branch) under ``metrics``."""
-    import tempfile
-
-    from flink_ecommerce_spark.streaming.runner import StreamingJob, reference_branches
-    from flink_ecommerce_spark.streaming.sinks import (
-        MemoryUpsertSink,
-        StagedMergeSink,
-    )
-
-    # 10x sf0.1 = 1M events: big enough that the ~0.4 s/branch/batch
-    # fixed micro-batch cost (plan + schedule + foreachBatch py4j
-    # round-trip — THE floor that had throughput plateaued at ~36k/s
-    # on single-batch replays) amortizes into the noise
-    replicas = int(os.environ.get("SPARK_GRAFT_REPLAY_REPLICAS", "10"))
-    n_files = 16
-    stage_dir, n = _stage_replay_input(spark, sf_dir, replicas, n_files)
-    raw_schema = spark.read.parquet(stage_dir).schema
-    ts_type = dict(
-        (f.name, f.dataType.simpleString()) for f in raw_schema.fields
-    )["ts"]
-    # 4 files/trigger → 4 batches: big enough to amortize per-batch
-    # fixed cost, multiple enough to expose the sustained rate
-    stream = (
-        spark.readStream.schema(
-            f"event_id long, ts {ts_type}, user_id long, "
-            "event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", "4")
-        .parquet(stage_dir)
-    )
-    if ts_type == "bigint":  # int64 nanos → micros, like catalog.table
-        from pyspark.sql import functions as F
-
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    branches = reference_branches(
-        ts_col="ts", category_col="event_type", amount_col="value",
-        id_col="event_id", user_col="user_id",
-    )
-
-    if sink == "staged":
-        import duckdb
-
-        db = tempfile.mktemp(prefix="bench_replay_", suffix=".duckdb")
-        con = duckdb.connect(db)
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS transactions ("
-            "transaction_id BIGINT PRIMARY KEY, transaction_ts TIMESTAMP, "
-            "customer_id BIGINT, category VARCHAR, total_amount DOUBLE)"
-        )
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS sales_per_category ("
-            "transaction_date DATE, category VARCHAR, total_sales DOUBLE, "
-            "PRIMARY KEY (transaction_date, category))"
-        )
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS sales_per_day ("
-            "transaction_date DATE PRIMARY KEY, total_sales DOUBLE)"
-        )
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS sales_per_month ("
-            "year INT, month INT, total_sales DOUBLE, "
-            "PRIMARY KEY (year, month))"
-        )
-        con.close()
-        cols = {
-            "transactions": [
-                "transaction_id", "transaction_ts", "customer_id",
-                "category", "total_amount",
-            ],
-            "sales_per_category": ["transaction_date", "category", "total_sales"],
-            "sales_per_day": ["transaction_date", "total_sales"],
-            "sales_per_month": ["year", "month", "total_sales"],
-        }
-
-        def sink_factory(b):
-            return StagedMergeSink(
-                lambda: duckdb.connect(db),
-                b.name,
-                cols[b.name],
-                list(b.key_cols),
-            )
-    else:
-        def sink_factory(b):
-            return MemoryUpsertSink(b.key_cols)
-
-    ckpt = tempfile.mkdtemp(prefix="bench_ckpt_")
-    t0 = time.perf_counter()
-    job = StreamingJob(
-        source=stream,
-        sink_factory=sink_factory,
-        branches=branches,
-        checkpoint_root=ckpt,
-        trigger_ms=200,
-    ).start()
-    job.process_available()
-    wall = time.perf_counter() - t0
-    sustained = _sustained_rate(job.queries)
-    job.stop()
-    metrics[f"replay_{sink}_events_per_sec"] = round(n / wall)
-    metrics[f"replay_{sink}_sustained_events_per_sec"] = round(sustained)
-    print(
-        f"streaming replay [{sink}]: {n} events in {wall:.1f}s = "
-        f"{n / wall:,.0f} events/s end-to-end, "
-        f"{sustained:,.0f} events/s sustained (slowest branch)",
-        file=sys.stderr,
-    )
-    return wall
-
-
 def _streaming_curation_bench(spark, sf_dir: str, metrics: dict) -> None:
     """Ingest-side curation throughput: the Gopher rule battery as a
     streaming filter over a replicated documents corpus (the
     batch-certified expressions running unchanged on a stream —
     tests/test_shards_semdedup.py proves value equality; this
-    measures the rate). Same staging discipline as the replay bench:
-    multiple files, maxFilesPerTrigger, sustained rate from
-    steady-state batch progress."""
+    measures the rate). The corpus is staged as multiple files and
+    read with maxFilesPerTrigger, so the run has real micro-batches;
+    the sustained rate comes from steady-state batch progress."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -900,16 +752,16 @@ def main() -> None:
     except Exception as e:
         print(f"ann_band_bench FAILED: {e}", file=sys.stderr)
 
-    # Replay wall times live in the 'replay' block, NOT in
-    # queries/total: the replayed volume is 10x the r03
-    # 'streaming_replay' entry, so folding its wall into the headline
-    # total would make round-over-round totals incomparable. events/s
-    # (the metric BASELINE targets) is the headline replay number.
+    # The streaming curation rate lives in the 'replay' block, NOT in
+    # queries/total: it replays a 10x corpus, so folding its wall into
+    # the headline total would make round-over-round totals
+    # incomparable. The job's own drain rate is perfbench's
+    # (txn_backlog, throughput_per_s), not measured here.
     replay_metrics: dict = {}
     replay_retries: list[dict] = []
 
     def _replay_block(label: str, bar_key: str, bar: float, fn) -> None:
-        """Run one replay/curation block; if its BASELINE-target
+        """Run one streaming block; if its BASELINE-target
         metric missed the bar AND the block's own /proc/stat window
         was contended (steal >= 2%), re-run ONCE (VERDICT r09 #6 —
         disclosed methodology, same spirit as the min-of-N query
@@ -959,24 +811,6 @@ def main() -> None:
                 replay_retries[-1]["retry"] = m.get(bar_key)
                 replay_retries[-1]["retry_steal_pct"] = steal
 
-    _replay_block(
-        "streaming_replay",
-        "replay_memory_events_per_sec",
-        10_000,
-        lambda m: m.__setitem__(
-            "replay_memory_wall_sec",
-            round(_streaming_replay(spark, sf_dir, m), 3),
-        ),
-    )
-    _replay_block(
-        "streaming_replay_staged",
-        "replay_staged_events_per_sec",
-        10_000,
-        lambda m: m.__setitem__(
-            "replay_staged_wall_sec",
-            round(_streaming_replay(spark, sf_dir, m, sink="staged"), 3),
-        ),
-    )
     _replay_block(
         "streaming_curation",
         "curation_docs_per_sec",
@@ -1043,18 +877,6 @@ def main() -> None:
                 file=sys.stderr,
             )
 
-    _target(
-        "replay_memory_events_per_sec",
-        replay_metrics.get("replay_memory_events_per_sec"),
-        ">=",
-        10_000,
-    )
-    _target(
-        "replay_staged_events_per_sec",
-        replay_metrics.get("replay_staged_events_per_sec"),
-        ">=",
-        10_000,
-    )
     _target(
         "curation_docs_per_sec",
         replay_metrics.get("curation_docs_per_sec"),

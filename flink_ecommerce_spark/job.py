@@ -18,6 +18,10 @@ which runs the jdbc/staged sinks against an embedded DuckDB file —
 demo/smoke use; DuckDB is single-writer, so production concurrency
 belongs to Postgres).
 
+Every ``--source`` delivers the one 12-field transaction DTO
+(``schemas.TRANSACTION_SCHEMA``), and every sink table gets one
+upsert form, ``INSERT .. ON CONFLICT (key) DO UPDATE``.
+
 ``--sink staged`` is DuckDB-only: it runs one Spark action per
 micro-batch and holds the batch in driver memory as Arrow, so bound
 the batch at the source (``max_offsets_per_trigger`` for Kafka).
@@ -126,8 +130,8 @@ def make_sink_factory(args):
     """Sink selection: ``memory`` (tests), ``jdbc`` (row-wise
     executemany upserts, the reference's K2-K5 shape), or ``staged``
     (set-based, DuckDB-only: one Spark action collects each
-    micro-batch as Arrow into driver memory, then ONE ON CONFLICT /
-    MERGE statement per batch)."""
+    micro-batch as Arrow into driver memory, then ONE INSERT .. SELECT
+    .. ON CONFLICT statement per batch)."""
     if args.sink == "memory":
         return lambda branch: MemoryUpsertSink(branch.key_cols)
 
@@ -143,11 +147,7 @@ def make_sink_factory(args):
     if args.sink == "staged":
         def staged_sink(branch: Branch):
             return StagedMergeSink(
-                factory,
-                branch.name,
-                SINK_COLUMNS[branch.name],
-                list(branch.key_cols),
-                dialect=args.merge_dialect,
+                factory, branch.name, SINK_COLUMNS[branch.name], list(branch.key_cols)
             )
 
         return staged_sink
@@ -173,8 +173,6 @@ def main(argv: list[str] | None = None) -> StreamingJob:
     p.add_argument("--rate-rps", type=int, default=1000)
     p.add_argument("--sink", choices=["jdbc", "staged", "memory"], default="jdbc")
     p.add_argument("--jdbc-url", default="postgresql://localhost/ecommerce")
-    p.add_argument("--merge-dialect", choices=["merge", "on_conflict"],
-                   default="on_conflict")
     p.add_argument("--checkpoint", default="/tmp/flink_ecommerce_spark_ckpt")
     p.add_argument("--trigger-ms", type=int, default=DEFAULT_TRIGGER_MS)
     p.add_argument("--enable-es", action="store_true")
@@ -184,18 +182,6 @@ def main(argv: list[str] | None = None) -> StreamingJob:
 
     spark = get_spark("flink-ecommerce-spark-job")
     source = build_source(spark, args)
-    # SINK_COLUMNS assumes the 12-column DTO branch; fail fast with a
-    # clear message if the source can't deliver it (a remapped source
-    # needs its own sink column config, not a runtime AnalysisException)
-    from .streaming.runner import _FULL_DTO_COLS
-
-    missing = _FULL_DTO_COLS - set(source.columns)
-    if missing:
-        raise SystemExit(
-            f"--source {args.source} does not deliver the full transaction "
-            f"DTO (missing: {sorted(missing)}); this CLI's sink tables "
-            "expect the 12-column schema"
-        )
     branches = reference_branches()
     job = StreamingJob(
         source=source,

@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """About half the host's physical memory, capped at 48g: a heap
+    sized past the host gets the JVM killed, not garbage-collected."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2 // 2**20, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "flink_ecommerce_spark",
     shuffle_partitions: int | None = None,
@@ -33,7 +40,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # test parquet stores events.ts as TIMESTAMP(NANOS); read the raw

@@ -25,25 +25,6 @@ from ..plans import sales
 
 DEFAULT_TRIGGER_MS = 200  # reference flush interval, DataStreamJob.java:102
 
-# the reference DTO's full field set (dto/TransactionDTO.java:9-20);
-# presence of ALL of these selects the 12-column K2 sink projection
-_FULL_DTO_COLS = frozenset(
-    {
-        "transactionId",
-        "productId",
-        "productName",
-        "productCategory",
-        "productPrice",
-        "productQuantity",
-        "productBrand",
-        "totalAmount",
-        "currency",
-        "customerId",
-        "transactionDate",
-        "paymentMethod",
-    }
-)
-
 
 @dataclass
 class Branch:
@@ -55,56 +36,26 @@ class Branch:
     output_mode: str = "update"
 
 
-def reference_branches(
-    ts_col: str = "transactionDate",
-    category_col: str = "productCategory",
-    amount_col: str = "totalAmount",
-    id_col: str = "transactionId",
-    user_col: str = "customerId",
-    full_schema: bool | None = None,
-) -> list[Branch]:
+def reference_branches() -> list[Branch]:
     """The reference's five sink attachments (raw + 3 aggs; ES sink is
-    dead code in the reference and omitted by default, K7).
-
-    ``full_schema`` picks the raw branch projection: True forces the
-    12-column K2 DTO projection (ddl.TRANSACTIONS_DDL), False the
-    5-column remapped subset, and the default None decides per-source
-    by whether ALL DTO fields are present — not by the timestamp
-    column's name, so a remapped source that happens to call its
-    timestamp ``transactionDate`` still gets the 5-column branch."""
-
-    def raw_plan(df: DataFrame) -> DataFrame:
-        use_full = full_schema
-        if use_full is None:
-            use_full = _FULL_DTO_COLS.issubset(set(df.columns))
-        if use_full:
-            return sales.raw_transactions_full(df)
-        return sales.raw_transactions(
-            df, id_col, ts_col, user_col, category_col, amount_col
-        )
-
+    dead code in the reference and omitted by default, K7) over the
+    12-field transaction DTO (``schemas.TRANSACTION_SCHEMA``, which
+    every ``job.build_source`` source delivers). The transactions
+    branch is the 12-column K2 projection (ddl.TRANSACTIONS_DDL)."""
     branches = [
         Branch(
             "transactions",
-            raw_plan,
+            sales.raw_transactions_full,
             ("transaction_id",),
             output_mode="append",
         ),
         Branch(
             "sales_per_category",
-            lambda df: sales.sales_per_category(df, ts_col, category_col, amount_col),
+            sales.sales_per_category,
             ("transaction_date", "category"),
         ),
-        Branch(
-            "sales_per_day",
-            lambda df: sales.sales_per_day(df, ts_col, amount_col),
-            ("transaction_date",),
-        ),
-        Branch(
-            "sales_per_month",
-            lambda df: sales.sales_per_month(df, ts_col, amount_col),
-            ("year", "month"),
-        ),
+        Branch("sales_per_day", sales.sales_per_day, ("transaction_date",)),
+        Branch("sales_per_month", sales.sales_per_month, ("year", "month")),
     ]
     # A row with a null upsert key (a malformed JSON line parses to an
     # all-null row) would fail the sink's NOT NULL key and, with it, the

@@ -13,9 +13,9 @@ Three implementations of one contract (idempotent keyed upsert):
   5-retry semantics). The container has no Postgres, so it's
   exercised in tests through a fake DB-API connection.
 - ``StagedMergeSink`` — set-based path into DuckDB: ONE Spark action
-  collects the micro-batch as Arrow, then ONE INSERT..ON CONFLICT /
-  MERGE INTO statement reads it from the connection. Exercised in
-  tests against a real engine (DuckDB).
+  collects the micro-batch as Arrow, then ONE INSERT .. SELECT .. ON
+  CONFLICT statement reads it from the connection. Exercised in tests
+  against a real engine (DuckDB).
 
 Scale notes: foreachBatch hands the micro-batch DataFrame to the
 sink; MemoryUpsertSink collects (test-only by design), the JDBC sink
@@ -79,46 +79,29 @@ def merge_upsert_sql(
     source: str,
     columns: Sequence[str],
     key_cols: Sequence[str],
-    dialect: str = "merge",
 ) -> str:
     """ONE set-based upsert statement ingesting ``source`` (a table
-    name or subquery, e.g. a registered Arrow table) into
-    ``table``.
-
-    dialect='merge': ANSI/Delta/Iceberg/Postgres-15 MERGE INTO.
-    dialect='on_conflict': INSERT .. SELECT .. ON CONFLICT DO UPDATE
-    (DuckDB / Postgres<15 / SQLite form — used by the in-sandbox
-    tests since the bundled DuckDB predates MERGE)."""
+    name or subquery, e.g. a registered Arrow table) into ``table``:
+    INSERT .. SELECT .. ON CONFLICT DO UPDATE, the reference's K2-K5
+    upsert in set form (the bundled DuckDB predates MERGE INTO)."""
     collist = ", ".join(columns)
+    keylist = ", ".join(key_cols)
     updates = ", ".join(
-        f"{c} = {'s' if dialect == 'merge' else 'EXCLUDED'}.{c}"
-        for c in columns
-        if c not in set(key_cols)
+        f"{c} = EXCLUDED.{c}" for c in columns if c not in set(key_cols)
     )
-    # all columns are key columns -> nothing to update on match;
+    # all columns are key columns -> nothing to update on conflict;
     # emit an insert-only statement instead of a malformed empty SET
-    if dialect == "merge":
-        on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        svals = ", ".join(f"s.{c}" for c in columns)
-        matched = f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else ""
-        return (
-            f"MERGE INTO {table} t USING ({source}) s ON {on} "
-            f"{matched}"
-            f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({svals})"
-        )
-    if dialect == "on_conflict":
-        keylist = ", ".join(key_cols)
-        action = f"DO UPDATE SET {updates}" if updates else "DO NOTHING"
-        return (
-            f"INSERT INTO {table} ({collist}) SELECT {collist} FROM ({source}) "
-            f"ON CONFLICT ({keylist}) {action}"
-        )
-    raise ValueError(f"unknown dialect {dialect!r}")
+    action = f"DO UPDATE SET {updates}" if updates else "DO NOTHING"
+    return (
+        f"INSERT INTO {table} ({collist}) SELECT {collist} FROM ({source}) "
+        f"ON CONFLICT ({keylist}) {action}"
+    )
 
 
 class StagedMergeSink:
-    """MERGE-shaped batch upsert into DuckDB: the set-based twin of
-    JdbcUpsertSink's row-at-a-time executemany.
+    """Set-based batch upsert into DuckDB: the twin of JdbcUpsertSink's
+    row-at-a-time executemany, with the same ON CONFLICT statement
+    shape.
 
     Per micro-batch:
     1. ONE Spark action: the batch's columns are collected to the
@@ -126,9 +109,10 @@ class StagedMergeSink:
        parse, state store — runs once; an empty batch stops here;
     2. the Arrow table is registered on the DuckDB connection and ONE
        set-based statement (``merge_upsert_sql``) ingests it. Its
-       source collapses duplicate keys (MERGE / ON CONFLICT reject
-       them): latest by ``order_col`` when given, then max over the
-       remaining non-key columns as a deterministic tie-break.
+       source collapses duplicate keys (ON CONFLICT rejects a key
+       twice in one statement), keeping per key the row with the
+       largest non-key columns, compared in column order — a
+       deterministic tie-break.
 
     The batch is held in driver memory, so bound it at the source
     (``max_offsets_per_trigger`` for Kafka, ``maxFilesPerTrigger`` for
@@ -144,28 +128,19 @@ class StagedMergeSink:
         table: str,
         columns: Sequence[str],
         key_cols: Sequence[str],
-        dialect: str = "on_conflict",
-        order_col: str | None = None,
     ):
         self.connection_factory = connection_factory
         self.table = table
         self.columns = tuple(columns)
         self.key_cols = tuple(key_cols)
         non_key = [c for c in self.columns if c not in self.key_cols]
-        lead = (
-            [order_col] + [c for c in non_key if c != order_col]
-            if order_col
-            else non_key
-        )
         keys = ", ".join(self.key_cols)
-        order = ", ".join([keys] + [f"{c} DESC NULLS LAST" for c in lead])
+        order = ", ".join([keys] + [f"{c} DESC NULLS LAST" for c in non_key])
         latest = (
             f"SELECT DISTINCT ON ({keys}) {', '.join(self.columns)} "
             f"FROM __batch ORDER BY {order}"
         )
-        self.sql = merge_upsert_sql(
-            table, latest, self.columns, self.key_cols, dialect
-        )
+        self.sql = merge_upsert_sql(table, latest, self.columns, self.key_cols)
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
         batch = batch_df.select(*self.columns).toArrow()

@@ -1,7 +1,7 @@
 """Pure-python tests for bench.py helpers (no Spark session): the
-sustained-rate computation feeding the replay metrics must read
+sustained-rate computation feeding the curation metrics must read
 StreamingQuery progress correctly — a wrong denominator would
-silently misreport the headline events/s."""
+silently misreport the docs/s."""
 
 from __future__ import annotations
 

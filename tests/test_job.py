@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from flink_ecommerce_spark import job as job_mod
 from flink_ecommerce_spark.sources import generator
 from flink_ecommerce_spark.streaming import ddl
@@ -59,20 +61,32 @@ def test_ddl_runs_once_with_fake_connection():
     assert all(e.startswith("CREATE TABLE IF NOT EXISTS") for e in executed)
 
 
-def test_rate_source_schema(spark):
+@pytest.mark.parametrize("source", ["rate", "file"])
+def test_rate_source_schema(spark, tmp_path, source):
+    """Every --source delivers the 12-field transaction DTO, name and
+    type field for field (the rate source's literals are non-nullable,
+    so nullability is not compared). Kafka is not run here: it goes
+    through the same ``parse_transactions`` as ``file``."""
     import argparse
 
-    args = argparse.Namespace(source="rate", rate_rps=10)
-    stream = job_mod.build_source(spark, args)
     from flink_ecommerce_spark.schemas import TRANSACTION_SCHEMA
 
-    assert [f.name for f in stream.schema.fields] == [
-        f.name for f in TRANSACTION_SCHEMA.fields
+    src = tmp_path / "in"
+    src.mkdir()
+    df = generator.transactions(spark, n_rows=3, seed=47)
+    (src / "part-0.json").write_text(
+        "\n".join(r["value"] for r in generator.transactions_as_json(df).collect())
+    )
+    args = argparse.Namespace(source=source, rate_rps=10, input_path=str(src))
+    stream = job_mod.build_source(spark, args)
+
+    assert [(f.name, f.dataType) for f in stream.schema.fields] == [
+        (f.name, f.dataType) for f in TRANSACTION_SCHEMA.fields
     ]
 
 
 def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
-    """The airgapped CLI path: file source → staged MERGE sinks into
+    """The airgapped CLI path: file source → staged upsert sinks into
     an embedded DuckDB file (duckdb:// URL), DDL at startup, final
     table state conserves totals across branches."""
     import duckdb
@@ -110,15 +124,22 @@ def test_staged_sink_rejects_non_duckdb_url():
     start-up with a clear message instead of inside the first batch."""
     import argparse
 
-    import pytest
-
     args = argparse.Namespace(
         source="file",
         input_path="in",
         sink="staged",
         jdbc_url="postgresql://localhost/ecommerce",
-        stage_dir="stage",
-        merge_dialect="on_conflict",
     )
     with pytest.raises(SystemExit, match="DuckDB only"):
         job_mod.make_sink_factory(args)
+
+
+def test_session_driver_heap_fits_host(spark):
+    """get_spark sizes its default heap from the host, so the test
+    session never asks for more memory than the machine has."""
+    import os
+
+    mem = spark.sparkContext.getConf().get("spark.driver.memory")
+    unit = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+    heap = int(mem[:-1]) * unit[mem[-1].lower()]
+    assert heap <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")

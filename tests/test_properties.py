@@ -82,7 +82,6 @@ def test_merge_upsert_sql_equals_dict_upsert(batches):
             f"SELECT * FROM (VALUES {values}) AS x(k, v)",
             ["k", "v"],
             ["k"],
-            dialect="on_conflict",
         )
         con.execute(sql)
     got = dict(con.execute("SELECT k, v FROM t").fetchall())

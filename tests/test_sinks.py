@@ -145,7 +145,7 @@ def test_jdbc_upsert_exhausted_retries_raise(spark):
         sink.write_batch(agg)
 
 
-# ---- staged MERGE sink (real engine: DuckDB) ---------------------------
+# ---- staged set-based upsert sink (real engine: DuckDB) ----------------
 
 from flink_ecommerce_spark.streaming.sinks import (  # noqa: E402
     StagedMergeSink,
@@ -156,15 +156,7 @@ from flink_ecommerce_spark.streaming.sinks import (  # noqa: E402
 def test_merge_upsert_sql_dialects():
     cols = ["transaction_date", "category", "total_sales"]
     keys = ["transaction_date", "category"]
-    m = merge_upsert_sql("t", "SELECT * FROM stage", cols, keys, "merge")
-    assert m == (
-        "MERGE INTO t t USING (SELECT * FROM stage) s "
-        "ON t.transaction_date = s.transaction_date AND t.category = s.category "
-        "WHEN MATCHED THEN UPDATE SET total_sales = s.total_sales "
-        "WHEN NOT MATCHED THEN INSERT (transaction_date, category, total_sales) "
-        "VALUES (s.transaction_date, s.category, s.total_sales)"
-    )
-    oc = merge_upsert_sql("t", "SELECT * FROM stage", cols, keys, "on_conflict")
+    oc = merge_upsert_sql("t", "SELECT * FROM stage", cols, keys)
     assert oc == (
         "INSERT INTO t (transaction_date, category, total_sales) "
         "SELECT transaction_date, category, total_sales FROM (SELECT * FROM stage) "
@@ -228,7 +220,6 @@ def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path):
         "kv",
         ["k", "v", "ts"],
         ["k"],
-        order_col="ts",
     )
     batch = spark.createDataFrame(
         [(1, 10.0, 100), (1, 99.0, 200), (2, 5.0, 50)], "k long, v double, ts long"
@@ -240,16 +231,14 @@ def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path):
         for r in con.execute("SELECT k, v, ts FROM kv ORDER BY k").fetchall()
     )
     con.close()
-    # merge source collapsed to latest-per-key: ts=200 wins for k=1
+    # merge source collapsed to one row per key: the larger v wins for k=1
     assert rows == {1: (99.0, 200), 2: (5.0, 50)}
 
 
 def test_merge_upsert_sql_all_key_columns_insert_only():
     """Every column in the key → no SET clause to emit; statement
     must degrade to insert-only instead of malformed SQL."""
-    m = merge_upsert_sql("t", "SELECT * FROM s0", ["a", "b"], ["a", "b"], "merge")
-    assert "WHEN MATCHED" not in m and "WHEN NOT MATCHED THEN INSERT" in m
-    oc = merge_upsert_sql("t", "SELECT * FROM s0", ["a", "b"], ["a", "b"], "on_conflict")
+    oc = merge_upsert_sql("t", "SELECT * FROM s0", ["a", "b"], ["a", "b"])
     assert oc.endswith("DO NOTHING") and "DO UPDATE" not in oc
 
 
