@@ -11,20 +11,26 @@ four sink branches → start + awaitTermination. DDL runs once before
 the stream starts (K1 fixed). The ES branch exists but is off by
 default (K7 parity: the reference ships it commented out).
 
+The ``--jdbc-url`` scheme picks the sink, as the reference's one JDBC
+upsert per table writes to whatever database its URL names. Every
+sink table gets one upsert form, ``INSERT .. ON CONFLICT (key) DO
+UPDATE``:
+
+- ``duckdb:///path.db`` — an embedded DuckDB file through
+  ``StagedMergeSink``: one Spark action per micro-batch, the batch
+  held in driver memory as Arrow, one set-based statement per batch.
+  The airgapped/demo path; DuckDB is single-writer, so production
+  concurrency belongs to Postgres.
+- anything else — Postgres through ``JdbcUpsertSink``: row-wise
+  psycopg2 upserts from the executors.
+
+The CLI sets no per-batch cap: the first batch after a downtime is
+the whole backlog, and the DuckDB path holds it in driver memory
+(perfbench's ``txn_backlog`` workload measures exactly this case).
+
 With ``--source file`` it replays JSON files through the identical
-dataflow — the airgapped/test path (no Kafka/Postgres needed when
-paired with --sink memory, or with ``--jdbc-url duckdb:///path.db``
-which runs the jdbc/staged sinks against an embedded DuckDB file —
-demo/smoke use; DuckDB is single-writer, so production concurrency
-belongs to Postgres).
-
-Every ``--source`` delivers the one 12-field transaction DTO
-(``schemas.TRANSACTION_SCHEMA``), and every sink table gets one
-upsert form, ``INSERT .. ON CONFLICT (key) DO UPDATE``.
-
-``--sink staged`` is DuckDB-only: it runs one Spark action per
-micro-batch and holds the batch in driver memory as Arrow, so bound
-the batch at the source (``max_offsets_per_trigger`` for Kafka).
+dataflow (no Kafka needed). Every ``--source`` delivers the one
+12-field transaction DTO (``schemas.TRANSACTION_SCHEMA``).
 """
 
 from __future__ import annotations
@@ -35,31 +41,8 @@ from pyspark.sql import DataFrame
 
 from .session import get_spark
 from .streaming import ddl
-from .streaming.runner import DEFAULT_TRIGGER_MS, Branch, StreamingJob, reference_branches
-from .streaming.sinks import JdbcUpsertSink, MemoryUpsertSink, StagedMergeSink
-
-# column list per branch = the branch plan's output schema (the
-# transactions branch carries the full 12-column K2 schema matching
-# ddl.TRANSACTIONS_DDL)
-SINK_COLUMNS: dict[str, list[str]] = {
-    "transactions": [
-        "transaction_id",
-        "product_id",
-        "product_name",
-        "product_category",
-        "product_price",
-        "product_quantity",
-        "product_brand",
-        "total_amount",
-        "currency",
-        "customer_id",
-        "transaction_date",
-        "payment_method",
-    ],
-    "sales_per_category": ["transaction_date", "category", "total_sales"],
-    "sales_per_day": ["transaction_date", "total_sales"],
-    "sales_per_month": ["year", "month", "total_sales"],
-}
+from .streaming.runner import DEFAULT_TRIGGER_MS, StreamingJob, reference_branches
+from .streaming.sinks import JdbcUpsertSink, StagedMergeSink
 
 
 def build_source(spark, args) -> DataFrame:
@@ -100,10 +83,11 @@ def build_source(spark, args) -> DataFrame:
 
 
 def _connection_factory(jdbc_url: str):
-    """DB-API connection factory from a URL. ``duckdb:///path.db``
-    targets an embedded DuckDB file — the airgapped path that lets
-    the whole CLI (DDL + jdbc/staged sinks) run end-to-end without a
-    Postgres; anything else goes to psycopg2 (production)."""
+    """DB-API connection factory from a URL, whose scheme also picks
+    the sink (``make_sink_factory``). ``duckdb:///path.db`` targets an
+    embedded DuckDB file — the airgapped path that lets the whole CLI
+    (DDL + StagedMergeSink) run end-to-end without a Postgres;
+    anything else goes to psycopg2 (production, JdbcUpsertSink)."""
     if jdbc_url.startswith("duckdb://"):
         # duckdb:///abs/path.db -> "/abs/path.db" (absolute),
         # duckdb://rel.db       -> "rel.db"       (relative, preserved),
@@ -127,41 +111,17 @@ def _connection_factory(jdbc_url: str):
 
 
 def make_sink_factory(args):
-    """Sink selection: ``memory`` (tests), ``jdbc`` (row-wise
-    executemany upserts, the reference's K2-K5 shape), or ``staged``
-    (set-based, DuckDB-only: one Spark action collects each
-    micro-batch as Arrow into driver memory, then ONE INSERT .. SELECT
-    .. ON CONFLICT statement per batch)."""
-    if args.sink == "memory":
-        return lambda branch: MemoryUpsertSink(branch.key_cols)
-
-    is_duckdb = args.jdbc_url.startswith("duckdb://")
-    if args.sink == "staged" and not is_duckdb:
-        raise SystemExit(
-            f"--sink staged writes to DuckDB only; got --jdbc-url "
-            f"{args.jdbc_url!r} (use duckdb:///path.db, or --sink jdbc)"
-        )
+    """Sink per branch, picked by the ``--jdbc-url`` scheme alone: a
+    ``duckdb://`` URL gives ``StagedMergeSink`` (set-based, one Spark
+    action and ONE INSERT .. SELECT .. ON CONFLICT statement per
+    micro-batch; DuckDB's single write lock belongs to the driver),
+    any other URL gives ``JdbcUpsertSink`` (row-wise psycopg2
+    executemany from the executors, the reference's K2-K5 shape).
+    Runs the DDL once, here."""
     factory = _connection_factory(args.jdbc_url)
     ddl.create_sink_tables(factory)  # K1: once, at startup
-
-    if args.sink == "staged":
-        def staged_sink(branch: Branch):
-            return StagedMergeSink(
-                factory, branch.name, SINK_COLUMNS[branch.name], list(branch.key_cols)
-            )
-
-        return staged_sink
-
-    def jdbc_sink(branch: Branch):
-        return JdbcUpsertSink(
-            factory,
-            branch.name,
-            SINK_COLUMNS[branch.name],
-            list(branch.key_cols),
-            placeholder="?" if is_duckdb else "%s",
-        )
-
-    return jdbc_sink
+    sink = StagedMergeSink if args.jdbc_url.startswith("duckdb://") else JdbcUpsertSink
+    return lambda branch: sink(factory, branch.name, branch.key_cols)
 
 
 def main(argv: list[str] | None = None) -> StreamingJob:
@@ -171,7 +131,6 @@ def main(argv: list[str] | None = None) -> StreamingJob:
     p.add_argument("--topic", default="financial_transactions")
     p.add_argument("--input-path", help="for --source file")
     p.add_argument("--rate-rps", type=int, default=1000)
-    p.add_argument("--sink", choices=["jdbc", "staged", "memory"], default="jdbc")
     p.add_argument("--jdbc-url", default="postgresql://localhost/ecommerce")
     p.add_argument("--checkpoint", default="/tmp/flink_ecommerce_spark_ckpt")
     p.add_argument("--trigger-ms", type=int, default=DEFAULT_TRIGGER_MS)

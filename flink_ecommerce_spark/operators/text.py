@@ -886,16 +886,17 @@ def kn_bigram_surprisal(
     plus once for the final token join. All count tables stay
     vocabulary²-bounded-by-observed aggregates with map-side combine;
     the type total folds in as a one-row broadcast. Every count is an
-    exact integer; the float expression is written with the identical
-    operation order in the DuckDB oracle so both engines run the same
-    IEEE sequence. The per-doc mean here is the double AVG of the
-    per-token surprisal — each token of a bigram type carries the
-    identical double, so AVG over (type, count) weights must
-    reproduce the token AVG's VALUE; Spark's AVG(sum/count) over
-    weighted rows is sum(c·s)/sum(c), and the token-level sum's
-    partial order was already partitioning-dependent (the accepted
-    residual class) — the oracle twin computes the identical
-    weighted form.
+    exact integer; the per-type probability is written with the
+    identical operation order in the DuckDB oracle so both engines
+    run the same IEEE sequence for it. The per-doc means differ in
+    form: here it is the weighted sum(dc·s)/sum(dc) over (type,
+    count) rows, while the oracle twin averages the token-level
+    values, AVG(s) over every bigram token. The two agree in exact
+    arithmetic, but dc·s is not IEEE-identical to dc repeated
+    additions of s, so they can differ in the last bits and land on
+    different sides of a micro rounding boundary. That difference is
+    in the accepted partition-order residual class: the token-level
+    sum's order was already partitioning-dependent.
 
     Contract note (markov/k-means-centroid class): construction runs
     the one tokenize+count job that materializes the checkpoint."""

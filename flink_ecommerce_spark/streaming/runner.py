@@ -2,7 +2,9 @@
 (DataStreamJob.java:84-170) as Structured Streaming.
 
 One source → four branches (raw upsert + three aggregations), each a
-StreamingQuery in update mode writing through foreachBatch upserts.
+StreamingQuery in update mode writing through foreachBatch upserts
+(for the raw branch, which has no aggregation, update mode emits
+exactly what append would).
 The plan functions are the SAME batch functions from plans/sales.py —
 written stream-agnostic, so batch results and streaming final-state
 are equal by construction (tested in tests/test_streaming.py).
@@ -28,12 +30,12 @@ DEFAULT_TRIGGER_MS = 200  # reference flush interval, DataStreamJob.java:102
 
 @dataclass
 class Branch:
-    """One sink branch: plan + upsert key + output mode."""
+    """One sink branch: plan + upsert key. The plan's output columns,
+    in order, are the sink table's columns."""
 
     name: str
     plan: Callable[[DataFrame], DataFrame]
     key_cols: tuple[str, ...]
-    output_mode: str = "update"
 
 
 def reference_branches() -> list[Branch]:
@@ -41,14 +43,11 @@ def reference_branches() -> list[Branch]:
     dead code in the reference and omitted by default, K7) over the
     12-field transaction DTO (``schemas.TRANSACTION_SCHEMA``, which
     every ``job.build_source`` source delivers). The transactions
-    branch is the 12-column K2 projection (ddl.TRANSACTIONS_DDL)."""
+    branch is the 12-column K2 projection (ddl.TRANSACTIONS_DDL). Each
+    plan's output columns are its table's columns, so whichever sink
+    the job's ``--jdbc-url`` scheme picks writes the batch as given."""
     branches = [
-        Branch(
-            "transactions",
-            sales.raw_transactions_full,
-            ("transaction_id",),
-            output_mode="append",
-        ),
+        Branch("transactions", sales.raw_transactions_full, ("transaction_id",)),
         Branch(
             "sales_per_category",
             sales.sales_per_category,
@@ -92,7 +91,7 @@ class StreamingJob:
             self.sinks[branch.name] = sink
             writer = (
                 branch.plan(self.source)
-                .writeStream.outputMode(branch.output_mode)
+                .writeStream.outputMode("update")
                 .queryName(branch.name)
                 .trigger(processingTime=f"{self.trigger_ms} milliseconds")
                 .foreachBatch(sink.foreach_batch())

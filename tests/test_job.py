@@ -1,4 +1,4 @@
-"""End-to-end job entry point: file source → 4 branches → memory
+"""End-to-end job entry point: file source → 4 branches → DuckDB
 sinks, DDL statement sanity, rate-source plan."""
 
 from __future__ import annotations
@@ -10,33 +10,6 @@ import pytest
 from flink_ecommerce_spark import job as job_mod
 from flink_ecommerce_spark.sources import generator
 from flink_ecommerce_spark.streaming import ddl
-
-
-def test_job_file_source_end_to_end(spark, tmp_path):
-    src = str(tmp_path / "in")
-    df = generator.transactions(spark, n_rows=500, seed=41)
-    generator.transactions_as_json(df).coalesce(2).write.mode("overwrite").text(src)
-
-    job = job_mod.main(
-        [
-            "--source", "file",
-            "--input-path", src,
-            "--sink", "memory",
-            "--checkpoint", str(tmp_path / "ck"),
-        ]
-    )
-    try:
-        job.process_available()
-    finally:
-        job.stop()
-
-    assert set(job.sinks) == {
-        "transactions", "sales_per_category", "sales_per_day", "sales_per_month",
-    }
-    assert len(job.sinks["transactions"].rows()) == 500
-    total_raw = round(sum(r["total_amount"] for r in job.sinks["transactions"].rows()), 2)
-    total_day = round(sum(r["total_sales"] for r in job.sinks["sales_per_day"].rows()), 2)
-    assert abs(total_raw - total_day) < 0.05  # conservation across branches
 
 
 def test_ddl_runs_once_with_fake_connection():
@@ -86,12 +59,17 @@ def test_rate_source_schema(spark, tmp_path, source):
 
 
 def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
-    """The airgapped CLI path: file source → staged upsert sinks into
-    an embedded DuckDB file (duckdb:// URL), DDL at startup, final
-    table state conserves totals across branches."""
+    """The airgapped CLI path: file source → four branches → DuckDB
+    file. The duckdb:// URL alone picks StagedMergeSink for every
+    branch, so only the driver opens the file: executors that opened
+    it themselves would fail on DuckDB's single write lock. DDL runs at
+    start-up, every table fills, and totals are conserved across
+    branches."""
     import duckdb
 
-    src = str(tmp_path / "in2")
+    from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
+
+    src = str(tmp_path / "in")
     df = generator.transactions(spark, n_rows=300, seed=43)
     generator.transactions_as_json(df).coalesce(2).write.mode("overwrite").text(src)
     db = str(tmp_path / "job.duckdb")
@@ -100,38 +78,35 @@ def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
         [
             "--source", "file",
             "--input-path", src,
-            "--sink", "staged",
             "--jdbc-url", f"duckdb://{db}",
-            "--checkpoint", str(tmp_path / "ck2"),
+            "--checkpoint", str(tmp_path / "ck"),
         ]
     )
     try:
         job.process_available()
+        failed = [q.name for q in job.queries if q.exception() is not None]
     finally:
         job.stop()
 
+    assert failed == []
+    assert set(job.sinks) == {
+        "transactions", "sales_per_category", "sales_per_day", "sales_per_month",
+    }
+    assert all(isinstance(s, StagedMergeSink) for s in job.sinks.values())
     con = duckdb.connect(db)
-    n_txn = con.execute("SELECT COUNT(*) FROM transactions").fetchone()[0]
+    counts = {
+        t: con.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0] for t in job.sinks
+    }
     total_raw = con.execute("SELECT ROUND(SUM(total_amount), 2) FROM transactions").fetchone()[0]
     total_day = con.execute("SELECT ROUND(SUM(total_sales), 2) FROM sales_per_day").fetchone()[0]
+    total_cat = con.execute("SELECT ROUND(SUM(total_sales), 2) FROM sales_per_category").fetchone()[0]
+    total_month = con.execute("SELECT ROUND(SUM(total_sales), 2) FROM sales_per_month").fetchone()[0]
     con.close()
-    assert n_txn == 300
-    assert abs(total_raw - total_day) < 0.05
-
-
-def test_staged_sink_rejects_non_duckdb_url():
-    """--sink staged writes through DuckDB only; any other URL stops at
-    start-up with a clear message instead of inside the first batch."""
-    import argparse
-
-    args = argparse.Namespace(
-        source="file",
-        input_path="in",
-        sink="staged",
-        jdbc_url="postgresql://localhost/ecommerce",
-    )
-    with pytest.raises(SystemExit, match="DuckDB only"):
-        job_mod.make_sink_factory(args)
+    assert counts["transactions"] == 300
+    assert all(n > 0 for n in counts.values()), counts
+    # conservation across branches
+    for total in (total_day, total_cat, total_month):
+        assert abs(total_raw - total) < 0.05
 
 
 def test_session_driver_heap_fits_host(spark):

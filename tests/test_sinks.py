@@ -104,7 +104,6 @@ def test_jdbc_upsert_writes_all_rows(spark):
     sink = JdbcUpsertSink(
         lambda: _FakeConn(path),
         "sales_per_category",
-        ["transaction_date", "category", "total_sales"],
         ["transaction_date", "category"],
         batch_size=50,
     )
@@ -122,7 +121,6 @@ def test_jdbc_upsert_retries_then_succeeds(spark):
     sink = JdbcUpsertSink(
         lambda: _FakeConn(path, fail_first=2),
         "sales_per_day",
-        ["transaction_date", "total_sales"],
         ["transaction_date"],
         max_retries=5,
     )
@@ -137,7 +135,6 @@ def test_jdbc_upsert_exhausted_retries_raise(spark):
     sink = JdbcUpsertSink(
         lambda: _FakeConn(path, fail_first=10**9),
         "sales_per_day",
-        ["transaction_date", "total_sales"],
         ["transaction_date"],
         max_retries=2,
     )
@@ -176,14 +173,8 @@ def test_staged_merge_final_state_matches_memory_sink(spark, tmp_path):
     )
     con.close()
 
-    cols = ["transaction_date", "total_sales"]
     keys = ["transaction_date"]
-    merge_sink = StagedMergeSink(
-        lambda: duckdb.connect(db),
-        "sales_per_day",
-        cols,
-        keys,
-    )
+    merge_sink = StagedMergeSink(lambda: duckdb.connect(db), "sales_per_day", keys)
     mem_sink = MemoryUpsertSink(keys)
 
     # two overlapping batches: day-ranges share keys, values change
@@ -215,12 +206,7 @@ def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path):
     con = duckdb.connect(db)
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE, ts BIGINT)")
     con.close()
-    sink = StagedMergeSink(
-        lambda: duckdb.connect(db),
-        "kv",
-        ["k", "v", "ts"],
-        ["k"],
-    )
+    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
     batch = spark.createDataFrame(
         [(1, 10.0, 100), (1, 99.0, 200), (2, 5.0, 50)], "k long, v double, ts long"
     )
@@ -236,10 +222,14 @@ def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path):
 
 
 def test_merge_upsert_sql_all_key_columns_insert_only():
-    """Every column in the key → no SET clause to emit; statement
-    must degrade to insert-only instead of malformed SQL."""
-    oc = merge_upsert_sql("t", "SELECT * FROM s0", ["a", "b"], ["a", "b"])
-    assert oc.endswith("DO NOTHING") and "DO UPDATE" not in oc
+    """Every column in the key → no SET clause to emit; both upsert
+    forms must degrade to insert-only instead of malformed SQL."""
+    for sql in (
+        merge_upsert_sql("t", "SELECT * FROM s0", ["a", "b"], ["a", "b"]),
+        upsert_sql("t", ["a", "b"], ["a", "b"]),
+    ):
+        assert sql.endswith("ON CONFLICT (a, b) DO NOTHING"), sql
+        assert "DO UPDATE" not in sql, sql
 
 
 def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
@@ -252,9 +242,7 @@ def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
     con = duckdb.connect(db)
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
     con.close()
-    sink = StagedMergeSink(
-        lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"]
-    )
+    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
     batch = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double")
     sink.write_batch(batch, 7)
     sink.write_batch(batch, 7)  # redelivery of the same epoch
@@ -273,9 +261,7 @@ def test_staged_merge_skips_empty_batch(spark, tmp_path):
     con = duckdb.connect(db)
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
     con.close()
-    sink = StagedMergeSink(
-        lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"]
-    )
+    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
     empty = spark.createDataFrame([], "k long, v double")
     sink.write_batch(empty, 0)  # must not raise
     con = duckdb.connect(db)
@@ -308,7 +294,7 @@ def test_staged_merge_computes_batch_once(spark, tmp_path):
     batch = spark.range(n).where(F.udf(keep, "boolean")("id")).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
-    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k", "v"], ["k"])
+    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
     sink.write_batch(batch, 0)
     with open(evals) as f:
         assert len(f.read()) == n
@@ -339,7 +325,7 @@ def test_staged_merge_keeps_utc_timestamps_on_any_host_zone(spark, tmp_path):
         c.execute("SET TimeZone = 'America/New_York'")
         return c
 
-    sink = StagedMergeSink(connect_new_york, "ts_kv", ["k", "ts"], ["k"])
+    sink = StagedMergeSink(connect_new_york, "ts_kv", ["k"])
     # 1704069000 s = 2024-01-01 00:30:00 UTC, whatever Spark's zone
     batch = spark.range(1).select(
         F.col("id").alias("k"), F.timestamp_seconds(F.lit(1704069000)).alias("ts")

@@ -117,10 +117,9 @@ def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_pat
     (foreachBatch → Arrow → one ON CONFLICT per batch) into a
     real engine (DuckDB), with chunked micro-batches: final table
     state must equal the row-wise MemoryUpsertSink path for every
-    branch — the job's --sink staged configuration."""
+    branch — the job's configuration for a duckdb:// --jdbc-url."""
     import duckdb
 
-    from flink_ecommerce_spark.job import SINK_COLUMNS
     from flink_ecommerce_spark.sources.kafka import parse_transactions
     from flink_ecommerce_spark.streaming import ddl
     from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
@@ -137,12 +136,7 @@ def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_pat
     branches = reference_branches()
 
     def staged(b):
-        return StagedMergeSink(
-            lambda: duckdb.connect(db),
-            b.name,
-            SINK_COLUMNS[b.name],
-            list(b.key_cols),
-        )
+        return StagedMergeSink(lambda: duckdb.connect(db), b.name, b.key_cols)
 
     job = StreamingJob(
         source=stream,
@@ -173,7 +167,7 @@ def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_pat
 
     con = duckdb.connect(db)
     for b in branches:
-        cols = SINK_COLUMNS[b.name]
+        cols = b.plan(stream).columns
         got = {
             tuple(norm(v) for v in r)
             for r in con.execute(
@@ -196,7 +190,6 @@ def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
     transaction next to it lands in all four tables."""
     import duckdb
 
-    from flink_ecommerce_spark.job import SINK_COLUMNS
     from flink_ecommerce_spark.sources.kafka import parse_transactions
     from flink_ecommerce_spark.streaming import ddl
     from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
@@ -209,13 +202,14 @@ def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
     (src / "part-0.json").write_text(valid + "\n{not json\n")
     db = str(tmp_path / "bad.duckdb")
     ddl.create_sink_tables(lambda: duckdb.connect(db))
+    branches = reference_branches()
 
     job = StreamingJob(
         source=parse_transactions(spark.readStream.format("text").load(str(src))),
         sink_factory=lambda b: StagedMergeSink(
-            lambda: duckdb.connect(db), b.name, SINK_COLUMNS[b.name], list(b.key_cols)
+            lambda: duckdb.connect(db), b.name, b.key_cols
         ),
-        branches=reference_branches(),
+        branches=branches,
         checkpoint_root=str(tmp_path / "ckpt"),
     ).start()
     try:
@@ -227,11 +221,11 @@ def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
     assert failed == []
     con = duckdb.connect(db)
     counts = {
-        t: con.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
-        for t in SINK_COLUMNS
+        b.name: con.execute(f"SELECT COUNT(*) FROM {b.name}").fetchone()[0]
+        for b in branches
     }
     con.close()
-    assert counts == dict.fromkeys(SINK_COLUMNS, 1)
+    assert counts == {b.name: 1 for b in branches}
 
 
 def test_kafka_reader_options_reference_parity():
