@@ -92,7 +92,7 @@ def lsh_plan_for(
     max(1, ceil(log2(n / target))) keeps the expected bucket at
     ~target rows whether the corpus is 2k or 20B vectors. A small
     corpus gets FEW planes — at 2k vectors 8 planes means 8-row
-    buckets and near-zero recall (measured in bench.py's ANN grid),
+    buckets and near-zero recall (BENCH_DETAIL.json's ANN grid),
     while 1 plane scans ~half the corpus per query, which at that
     size is the right price for real recall. Past N_PLANES planes
     (corpus > target·2^N_PLANES) the buckets are narrow enough that
@@ -1468,8 +1468,8 @@ PQ_RERANK = 50  # ADC shortlist size for the re-rank stage (IVF-PQ)
 # sf0.1 fixture — the sampled 32-codeword ADC is the weak stage, so
 # the shortlist carries the recall). The cost stays absolute, not
 # corpus-relative: re-rank touches shortlist×queries full-precision
-# rows at ANY corpus size, and bench.py gates the recommended row at
-# recall ≥ 0.9 so a regression fails the bench, not the narrative.
+# rows at ANY corpus size, and test_ann_recall_gate_at_bench_scale
+# gates it at recall ≥ 0.9 so a regression fails tier-1.
 PQ_RERANK_WIDE = 400
 
 

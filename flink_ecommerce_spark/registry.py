@@ -59,7 +59,7 @@ from .plans import analytics, sales, temporal, tpch
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None => driver runs rows-only check
-    bench: bool = False  # include in bench.py headline set
+    bench: bool = False  # headline set (perfbench catalog, explain_capture)
 
 
 def _t(name: str):

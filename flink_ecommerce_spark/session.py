@@ -1,9 +1,10 @@
 """SparkSession factory with scale-aware defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the
-same conf keys are what we'd set cluster-side at 100 TB, where the
-only changes are master/cores and shuffle-partition count (sized to
-~128 MB per task post-AQE-coalesce, not a fixed constant).
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) with
+one shuffle partition per core; the same conf keys are what we'd set
+cluster-side at 100 TB, where the only changes are master/cores and
+the shuffle-partition count, which a caller sets through
+``extra_conf`` (AQE then coalesces the small partitions).
 """
 
 from __future__ import annotations
@@ -22,19 +23,13 @@ def _default_driver_mem() -> str:
 
 def get_spark(
     app_name: str = "flink_ecommerce_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        # local mode: ~1 shuffle partition per core. On a real cluster
-        # AQE coalesces from a deliberately high initial number, so we
-        # set initialPartitionNum high and let AQE shrink.
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

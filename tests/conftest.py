@@ -14,6 +14,7 @@ from flink_ecommerce_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+SF_BENCH = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="session")

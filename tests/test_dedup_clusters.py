@@ -601,8 +601,8 @@ def test_exact_pairs_plan_crossover():
     # 50k docs / 10k target -> 1-in-5 sample caps the exact branch
     assert hi["meter_sample_mod"] == 5
     assert lo["meter_sample_mod"] is None
-    # the 10x rehearsal corpus (50k docs) sits ABOVE the crossover —
-    # bench.py must route it to the LSH side
+    # a 10x sf0.1 corpus (50k docs) sits ABOVE the crossover, so the
+    # planner must route it to the LSH side
     assert 50_000 > dedup.EXACT_PAIRS_MAX_DOCS
     # both fixture scales stay on the exact side
     for n in (500, 5_000):

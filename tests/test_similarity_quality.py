@@ -70,10 +70,10 @@ def test_lsh_plane_band_cost_recall_tradeoff(spark):
 
 def test_lsh_planner_recall_dominates_static_grid(spark):
     """BASELINE.md requires lsh_plan_for's recommendation to dominate
-    the bench grid. The recall axis is deterministic, so it's pinned
-    here at sf0.01 against every static grid config; the wall-clock
-    axis is recorded per-round in the bench JSON's ann_grid block
-    (timings in a unit test would be noise)."""
+    the static LSH grid. The recall axis is deterministic, so it's
+    pinned here at sf0.01 against every static grid config; the
+    wall-clock axis is not tested (timings in a unit test would be
+    noise)."""
     from tests.conftest import SF_MEDIUM
 
     emb = catalog.table(spark, SF_MEDIUM, "embeddings")
@@ -128,9 +128,9 @@ def test_lsh_plan_for_sizing():
     # 100TB scale: planes grow with log2(n), bands recover recall
     planes, bands = similarity.lsh_plan_for(1_000_000_000)
     assert planes >= 19 and bands > 1
-    # the bench rehearsal's premise: a 10x corpus (sf0.1 -> ~sf1
-    # embeddings counts) must change the recommendation — the planner
-    # moves with the data, it isn't a constant in disguise
+    # a 10x corpus (sf0.1 -> ~sf1 embeddings counts) must change the
+    # recommendation — the planner moves with the data, it isn't a
+    # constant in disguise
     assert similarity.lsh_plan_for(5_000) != similarity.lsh_plan_for(50_000)
     # expected occupancy stays ~target as corpus grows 1000x
     p1, _ = similarity.lsh_plan_for(10_000_000)
@@ -252,6 +252,32 @@ def test_pq_rerank_beats_raw_adc_recall(spark):
 
     assert mean_recall(rer) >= mean_recall(adc)
     assert mean_recall(rer) >= 0.5, f"rerank recall {mean_recall(rer):.2f}"
+
+
+def test_ann_recall_gate_at_bench_scale(spark):
+    """BASELINE.md's ANN bar at sf0.1 (2,000 vectors): recall@k >= 0.9
+    against brute force for pq_ann_rerank, the strategy ann_plan_for
+    picks above its crossover, and for whatever it picks here."""
+    from tests.conftest import SF_BENCH
+
+    emb = catalog.table(spark, SF_BENCH, "embeddings")
+    truth = _topk_sets(similarity.knn_bruteforce(emb))
+    by_strategy = {
+        "bruteforce": similarity.knn_bruteforce,
+        "pq_rerank": similarity.pq_ann_rerank,
+    }
+
+    def mean_recall(fn):
+        got = _topk_sets(fn(emb))
+        return sum(
+            len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
+        ) / len(truth)
+
+    pq = mean_recall(similarity.pq_ann_rerank)
+    assert pq >= 0.9, f"pq_rerank recall@{similarity.DEFAULT_K} {pq:.3f}"
+    recommended = similarity.ann_plan_for(emb.count())["strategy"]
+    rec = mean_recall(by_strategy[recommended])
+    assert rec >= 0.9, f"{recommended} recall@{similarity.DEFAULT_K} {rec:.3f}"
 
 
 def test_ivf_pq_recall_and_routing(spark):
