@@ -34,7 +34,7 @@ daily event-type co-movement correlations, median/MAD robust
 outlier screens, and seasonal trend/phase/residual decomposition —
 and the final round-4 block: Bloom membership sketches (corpus filter bits +
 batch admission gate), the portable oracle-exact HyperLogLog
-(registers + audited estimate, streaming twin), PMI collocations,
+(registers + audited estimate), PMI collocations,
 PSI distribution-drift monitoring, multi-touch linear revenue
 attribution, the degree-ordered co-purchase triangle census,
 k-anonymity release gates, exact per-group quota sampling,
@@ -67,9 +67,8 @@ ROUND(double)-final contract in the verify window — plus the
 round-8 block: the seeded epoch-shuffle training-data permutation
 (bucket-decomposed exact global ranks, no global sort), the
 simplified-silhouette cluster-quality meter over the k-means cells,
-interpolated trigram Kneser-Ney surprisal, streaming twins for both
-KS drift monitors (grid-bounded running counts sharing the batch
-arithmetic cores), and the r03/r02 ROUND-carrier migration (28
+interpolated trigram Kneser-Ney surprisal, the count-table cores of
+both KS drift monitors, and the r03/r02 ROUND-carrier migration (28
 stale-certified queries re-encoded to per-row cents / micro BIGINT
 contracts and re-windowed) — plus the round-9 block: the choose-K
 silhouette elbow sweep (exact per-point integer corpus mean, UNION
@@ -81,7 +80,7 @@ pure-stdlib baseline PNG decoder making the aHash media path real
 end-to-end for one actual format — each with a
 DuckDB oracle twin (COVERAGE.md is the full map; non-query machinery
 — continuous aggregates, Z-order layout, streaming
-sinks/packing/dedup/fuzzy-admission, BPE tokenizer train/apply — is
+runner/sinks, BPE tokenizer train/apply — is
 pytest-covered there too). tests/plan_ledger.json machine-checks
 that out-of-verify-window queries' plans are unchanged since their
 last external certification.

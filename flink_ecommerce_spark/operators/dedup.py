@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.portable import hash32, hash32_from_digest, micro, salted_md5
-from .textprep import shingles_from_words, word_shingles, words
+from .textprep import shingles_from_words, words
 
 NUM_HASHES = 16  # MinHash signature length
 NUM_BANDS = 4  # LSH bands (rows per band = NUM_HASHES // NUM_BANDS)
@@ -252,29 +252,6 @@ def source_overlap_minhash(
                 n_eq.cast("double") / F.lit(float(num_hashes))
             ).alias("est_jaccard_micro"),
         )
-    )
-
-
-def minhash_signature_array(text_col: F.Column, num_hashes: int = NUM_HASHES) -> F.Column:
-    """Per-ROW MinHash signature as array<long> — the same values as
-    ``minhash_signatures`` (same hash family/constants) computed with
-    array expressions only: no explode, no shuffle, no aggregation.
-    This is the streaming-safe form (stateless map, usable in a
-    Structured Streaming select) and the batch explode+groupBy form's
-    equivalence is pinned by tests. NULL for docs with no shingles."""
-    sh = word_shingles(text_col)
-    h1s = F.transform(sh, lambda s: hash32(s, salt="mh", half=0))
-    h2s = F.transform(sh, lambda s: hash32(s, salt="mh", half=1))
-    return F.when(
-        F.size(sh) >= 1,
-        F.array(
-            *[
-                F.array_min(
-                    F.zip_with(h1s, h2s, lambda a, b: (a + i * b) % MINHASH_PRIME)
-                )
-                for i in range(num_hashes)
-            ]
-        ),
     )
 
 
@@ -573,9 +550,7 @@ def incremental_dedup(
     Scale shape: both sides reduce to (hash) / (hash, doc_id) pairs
     before any join — the corpus side ships one hash per distinct
     content, the anti-join and the intra-batch groupBy shuffle hashes
-    only, never text. This is the batch twin of
-    streaming/dedup.streaming_minhash_dedup's first-seen filter, at
-    exact-content granularity."""
+    only, never text."""
     def h(df):
         text = F.col("text")
         if normalized:

@@ -76,13 +76,16 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the plan has fewer partitions
-    than cores — e.g. a small single-file scan feeding CPU-heavy
-    per-row work (hashing, decoding). At 100 TB the scan already has
-    thousands of splits and this is a no-op, so the extra shuffle is
-    strictly a small-input fixup, never a scale cost."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    than ``spark.sql.shuffle.partitions`` — e.g. a small single-file
+    scan feeding CPU-heavy per-row work (hashing, decoding). At 100 TB
+    the scan already has thousands of splits and this is a no-op, so
+    the extra shuffle is strictly a small-input fixup, never a scale
+    cost. The target is the session conf (``get_spark`` sets it to the
+    core count), not the host's cores, so a plan does not change with
+    the machine that builds it."""
+    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -108,7 +111,7 @@ def ensure_parallelism_for_heavy_scan(
     text corpus reports ~1 MB — so those err toward repartitioning:
     over-shuffling a genuinely tiny frame costs milliseconds, while
     single-core-scanning a heavy one costs the 2.4×."""
-    target = df.sparkSession.sparkContext.defaultParallelism
+    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     parts = df.rdd.getNumPartitions()
     # 0 partitions = the optimizer proved the frame empty (LocalRelation
     # from filter(lit(false)) / limit(0)); nothing to spread, and the

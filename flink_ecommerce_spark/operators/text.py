@@ -2297,9 +2297,8 @@ def quality_psi_by_source(
     Buckets are the quality score's own [0,1] range in fixed 0.1
     steps (engine-portable, no quantile estimation); the PSI
     arithmetic is the shared ``psi_from_bucket_counts`` core, so
-    batch, streaming, and admission monitors all agree on what PSI
-    means. One text scan computes the score; state is
-    #sources × n_buckets."""
+    every PSI monitor agrees on what PSI means. One text scan
+    computes the score; state is #sources × n_buckets."""
     corpus = documents.filter(F.col("doc_id") % 5 != 0)
     batch = documents.filter(F.col("doc_id") % 5 == 0)
     return quality_psi_frames(batch, corpus, n_buckets)
@@ -2321,8 +2320,7 @@ def quality_psi_frames(
 ) -> DataFrame:
     """The frame-explicit core of ``quality_psi_by_source``: PSI of
     the batch's per-source quality distribution against an arbitrary
-    corpus frame — what the streaming admission pipeline calls per
-    micro-batch (the registry query fixes the fixture split)."""
+    corpus frame (the registry query fixes the fixture split)."""
     from ..plans.analytics import psi_from_bucket_counts
 
     bucket = _quality_bucket(n_buckets)
@@ -2664,12 +2662,11 @@ def quality_ks_by_source(documents: DataFrame) -> DataFrame:
 
 def ks_report_from_quality_counts(sq: DataFrame) -> DataFrame:
     """The source-vs-corpus KS arithmetic core over an already-
-    aggregated (source, qm, c_s) quality-grid count table — shared
-    verbatim by ``quality_ks_by_source`` and the streaming twin
-    (``streaming.drift.streaming_quality_counts``). The corpus ECDF
-    is derived from the same table (sum over sources), so the two
-    monitors cannot disagree; input size is sources × occupied grid
-    values, never document volume."""
+    aggregated (source, qm, c_s) quality-grid count table, as built
+    by ``quality_ks_by_source``. The corpus ECDF is derived from the
+    same table (sum over sources), so source and corpus cannot
+    disagree; input size is sources × occupied grid values, never
+    document volume."""
     from pyspark.sql import Window
 
     grid = sq.groupBy("qm").agg(F.sum("c_s").alias("c_all"))

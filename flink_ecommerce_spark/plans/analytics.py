@@ -1306,10 +1306,9 @@ BENFORD_P = {
 
 def digit_counts(events: DataFrame) -> DataFrame:
     """(event_type, digit, n) — first-significant-digit counts of the
-    money column, the shared reduction under the batch Benford screen
-    and its streaming twin (``streaming.drift.streaming_digit_counts``):
-    counts sum, so the aggregation commutes with micro-batching and
-    the streaming state is capped at #types × 9 rows."""
+    money column, the reduction under the batch Benford screen:
+    counts sum, so the aggregation has map-side combine and its
+    output is capped at #types × 9 rows."""
     cents = F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5)).cast("long")
     return (
         events.filter(F.col("value") != 0)
@@ -1389,8 +1388,7 @@ def value_benford_by_type(events: DataFrame) -> DataFrame:
     Scale: one scan → a #types × 9 aggregation with map-side
     combine; the digit grid is enumerated so absent digits emit
     explicit zero rows (a digit NEVER hit is itself the signal).
-    Composition of the two shared pieces (``digit_counts`` +
-    ``benford_from_digit_counts``) the streaming twin reuses."""
+    Composition of ``digit_counts`` and ``benford_from_digit_counts``."""
     return benford_from_digit_counts(digit_counts(events))
 
 
@@ -1436,12 +1434,10 @@ def value_ks_by_type(events: DataFrame) -> DataFrame:
 
 def ks_report_from_split_counts(counts: DataFrame) -> DataFrame:
     """The KS arithmetic core over an already-aggregated
-    (event_type, cents, nb, nc) split-count table — shared verbatim
-    by ``value_ks_by_type`` (batch midpoint split) and the streaming
-    twin (``streaming.drift.streaming_value_split_counts``), so the
-    two monitors cannot disagree on what D means. The input table is
+    (event_type, cents, nb, nc) split-count table, as built by
+    ``value_ks_by_type`` (batch midpoint split). The input table is
     value-grid-bounded (types × distinct cents), never event-volume-
-    bounded — per-emission cost is tiny by construction."""
+    bounded — per-call cost is tiny by construction."""
     totals = counts.groupBy("event_type").agg(
         F.sum("nb").alias("tb"), F.sum("nc").alias("tc")
     )

@@ -118,8 +118,8 @@ def rows_only_observed() -> set[str]:
 def main() -> None:
     import os
 
-    # plans embed the core count (ensure_parallelism targets
-    # defaultParallelism) — mirror tests/conftest.py exactly or the
+    # plans embed spark.sql.shuffle.partitions (ensure_parallelism
+    # targets it) — mirror tests/conftest.py exactly or the
     # fingerprints won't be comparable with the pytest session's
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 

@@ -4,6 +4,7 @@ sinks, DDL statement sanity, rate-source plan."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 
@@ -118,3 +119,23 @@ def test_session_driver_heap_fits_host(spark):
     unit = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
     heap = int(mem[:-1]) * unit[mem[-1].lower()]
     assert heap <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
+
+def test_streaming_package_holds_only_what_the_job_imports():
+    """Every module in ``streaming/`` is reachable from ``job.py``,
+    function-level imports included: a streaming operator that no job
+    runs does not belong there. ModuleFinder compiles and scans the
+    sources without running them, and the search path holds only this
+    repository, so no third-party package is read."""
+    from modulefinder import ModuleFinder
+
+    pkg_dir = Path(job_mod.__file__).parent
+    finder = ModuleFinder(path=[str(pkg_dir.parent)])
+    finder.import_hook(f"{pkg_dir.name}.job")
+    streaming = {
+        f"{pkg_dir.name}.streaming"
+        + ("" if p.stem == "__init__" else f".{p.stem}")
+        for p in (pkg_dir / "streaming").glob("*.py")
+    }
+    orphans = sorted(streaming - set(finder.modules))
+    assert not orphans, f"not imported by job.py: {orphans}"

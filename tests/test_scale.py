@@ -191,7 +191,7 @@ def test_heavy_scan_fixup_gates_on_size(spark, tmp_path):
         .coalesce(1)
         .localCheckpoint(eager=True)
     )
-    target = spark.sparkContext.defaultParallelism
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     fixed = ensure_parallelism_for_heavy_scan(ckpt)
     assert fixed.rdd.getNumPartitions() == target
 
