@@ -14,18 +14,23 @@ default (K7 parity: the reference ships it commented out).
 The ``--jdbc-url`` scheme picks the sink, as the reference's one JDBC
 upsert per table writes to whatever database its URL names. Every
 sink table gets one upsert form, ``INSERT .. ON CONFLICT (key) DO
-UPDATE``:
+UPDATE``, applied per micro-batch in one driver-side transaction: the
+raw table keeps the latest row per key, and the three sum tables add
+the batch's sums under an epoch ledger (streaming/sinks.py), so the
+sink tables hold the running sums and the Spark job keeps no keyed
+state:
 
 - ``duckdb:///path.db`` — an embedded DuckDB file through
   ``StagedMergeSink``: one Spark action per micro-batch, the batch
   held in driver memory as Arrow, one set-based statement per batch.
   The airgapped/demo path; DuckDB is single-writer, so production
   concurrency belongs to Postgres.
-- anything else — Postgres through ``JdbcUpsertSink``: row-wise
-  psycopg2 upserts from the executors.
+- anything else — Postgres through ``JdbcUpsertSink``: the batch is
+  collected to the driver, copied into a temporary table with
+  psycopg2 and applied by the same statements.
 
 The CLI sets no per-batch cap: the first batch after a downtime is
-the whole backlog, and the DuckDB path holds it in driver memory
+the whole backlog, and both sinks hold it in driver memory
 (perfbench's ``txn_backlog`` workload measures exactly this case).
 
 With ``--source file`` it replays JSON files through the identical
@@ -115,13 +120,13 @@ def make_sink_factory(args):
     ``duckdb://`` URL gives ``StagedMergeSink`` (set-based, one Spark
     action and ONE INSERT .. SELECT .. ON CONFLICT statement per
     micro-batch; DuckDB's single write lock belongs to the driver),
-    any other URL gives ``JdbcUpsertSink`` (row-wise psycopg2
-    executemany from the executors, the reference's K2-K5 shape).
-    Runs the DDL once, here."""
+    any other URL gives ``JdbcUpsertSink`` (the same statements, run
+    by psycopg2 from the driver). Runs the DDL, the epoch ledger's
+    included, once, here."""
     factory = _connection_factory(args.jdbc_url)
     ddl.create_sink_tables(factory)  # K1: once, at startup
     sink = StagedMergeSink if args.jdbc_url.startswith("duckdb://") else JdbcUpsertSink
-    return lambda branch: sink(factory, branch.name, branch.key_cols)
+    return lambda branch: sink(factory, branch.name, branch.key_cols, branch.sum_col)
 
 
 def main(argv: list[str] | None = None) -> StreamingJob:
@@ -140,6 +145,9 @@ def main(argv: list[str] | None = None) -> StreamingJob:
     args = p.parse_args(argv)
 
     spark = get_spark("flink-ecommerce-spark-job")
+    # awaitAnyTermination() returns at once for a query that terminated
+    # before this job; forget those, before any of the job's starts
+    spark.streams.resetTerminated()
     source = build_source(spark, args)
     branches = reference_branches()
     job = StreamingJob(
@@ -165,8 +173,13 @@ def main(argv: list[str] | None = None) -> StreamingJob:
         job.queries.append(q)
 
     if args.await_termination:
-        for q in job.queries:
-            q.awaitTermination()
+        # the first query to stop or fail ends the job: the others are
+        # stopped, and a failure is raised, rather than the job running
+        # on with one table no longer updated
+        try:
+            spark.streams.awaitAnyTermination()
+        finally:
+            job.stop()
     return job
 
 

@@ -82,6 +82,31 @@ def raw_transactions_full(df: DataFrame) -> DataFrame:
     return df.select(*[F.col(a).alias(b) for a, b in renames])
 
 
+def day_keys(ts_col: str = "transactionDate") -> list[Column]:
+    """The per-day sums' key: calendar day of the event timestamp
+    (DataStreamJob.java:138-149). The batch plans below group by these
+    key expressions and the streaming job's per-row sum branches
+    (``streaming/runner.py``) project them, so the two cannot drift."""
+    return [F.to_date(ts_col).alias("transaction_date")]
+
+
+def category_keys(
+    ts_col: str = "transactionDate", category_col: str = "productCategory"
+) -> list[Column]:
+    """The per-category sums' key: the full (transaction_date,
+    category) upsert key (sink ON CONFLICT, DataStreamJob.java:223)."""
+    return [
+        F.to_date(ts_col).alias("transaction_date"),
+        F.col(category_col).alias("category"),
+    ]
+
+
+def month_keys(ts_col: str = "transactionDate") -> list[Column]:
+    """The per-month sums' key: the full (year, month) upsert key
+    (sink ON CONFLICT, DataStreamJob.java:189)."""
+    return [F.year(ts_col).alias("year"), F.month(ts_col).alias("month")]
+
+
 def sales_per_day(
     df: DataFrame, ts_col: str = "transactionDate", amount_col: str = "totalAmount"
 ) -> DataFrame:
@@ -89,7 +114,7 @@ def sales_per_day(
     (DataStreamJob.java:150-153; date conversion :138-149). Session
     timezone is pinned UTC (SURVEY.md §7 risk 2)."""
     return (
-        df.groupBy(F.to_date(ts_col).alias("transaction_date"))
+        df.groupBy(*day_keys(ts_col))
         .agg(F.round(F.sum(amount_col), 2).alias("total_sales"))
     )
 
@@ -103,10 +128,7 @@ def sales_per_category(
     """A1 with the full (transaction_date, category) upsert key
     (sink ON CONFLICT, DataStreamJob.java:223; quirk Q1 fixed)."""
     return (
-        df.groupBy(
-            F.to_date(ts_col).alias("transaction_date"),
-            F.col(category_col).alias("category"),
-        )
+        df.groupBy(*category_keys(ts_col, category_col))
         .agg(F.round(F.sum(amount_col), 2).alias("total_sales"))
     )
 
@@ -117,9 +139,7 @@ def sales_per_month(
     """A3 with the full (year, month) upsert key
     (sink ON CONFLICT, DataStreamJob.java:189; quirk Q2 fixed)."""
     return (
-        df.groupBy(
-            F.year(ts_col).alias("year"), F.month(ts_col).alias("month")
-        )
+        df.groupBy(*month_keys(ts_col))
         .agg(F.round(F.sum(amount_col), 2).alias("total_sales"))
     )
 
@@ -131,7 +151,7 @@ def sales_per_day_cents(
     form; the streaming sink keeps ``sales_per_day``'s DOUBLE column
     for reference DDL parity, DataStreamJob.java:291-293). Same
     single-shuffle partial-sum plan — only the encoding differs."""
-    return df.groupBy(F.to_date(ts_col).alias("transaction_date")).agg(
+    return df.groupBy(*day_keys(ts_col)).agg(
         F.sum(_cents(amount_col)).alias("total_sales_cents")
     )
 
@@ -143,19 +163,18 @@ def sales_per_category_cents(
     amount_col: str = "totalAmount",
 ) -> DataFrame:
     """A1 (full upsert key) under the integer-cents contract."""
-    return df.groupBy(
-        F.to_date(ts_col).alias("transaction_date"),
-        F.col(category_col).alias("category"),
-    ).agg(F.sum(_cents(amount_col)).alias("total_sales_cents"))
+    return df.groupBy(*category_keys(ts_col, category_col)).agg(
+        F.sum(_cents(amount_col)).alias("total_sales_cents")
+    )
 
 
 def sales_per_month_cents(
     df: DataFrame, ts_col: str = "transactionDate", amount_col: str = "totalAmount"
 ) -> DataFrame:
     """A3 (full upsert key) under the integer-cents contract."""
-    return df.groupBy(
-        F.year(ts_col).alias("year"), F.month(ts_col).alias("month")
-    ).agg(F.sum(_cents(amount_col)).alias("total_sales_cents"))
+    return df.groupBy(*month_keys(ts_col)).agg(
+        F.sum(_cents(amount_col)).alias("total_sales_cents")
+    )
 
 
 def sales_per_day_filtered_cents(

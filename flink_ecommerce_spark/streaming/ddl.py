@@ -53,11 +53,25 @@ CREATE TABLE IF NOT EXISTS sales_per_month (
 )
 """
 
+# The epoch ledger of the three running-sum tables (sinks._record_epoch):
+# one row per (table, stream query id, epoch) whose sums were added, so
+# a replayed epoch is a no-op. Created here, at start-up: created inside
+# each batch's transaction, concurrent sinks conflict on DuckDB's catalog.
+SINK_EPOCHS_DDL = """
+CREATE TABLE IF NOT EXISTS _sink_epochs (
+    sink VARCHAR(255),
+    query_id VARCHAR(255),
+    epoch BIGINT,
+    PRIMARY KEY (sink, query_id, epoch)
+)
+"""
+
 ALL_DDL = (
     TRANSACTIONS_DDL,
     SALES_PER_CATEGORY_DDL,
     SALES_PER_DAY_DDL,
     SALES_PER_MONTH_DDL,
+    SINK_EPOCHS_DDL,
 )
 
 

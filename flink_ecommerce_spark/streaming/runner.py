@@ -1,13 +1,17 @@
 """Streaming job assembly: the reference job's full dataflow
 (DataStreamJob.java:84-170) as Structured Streaming.
 
-One source → four branches (raw upsert + three aggregations), each a
-StreamingQuery in update mode writing through foreachBatch upserts
-(for the raw branch, which has no aggregation, update mode emits
-exactly what append would).
-The plan functions are the SAME batch functions from plans/sales.py —
-written stream-agnostic, so batch results and streaming final-state
-are equal by construction (tested in tests/test_streaming.py).
+One source → four branches (raw upsert + three running sums), each a
+stateless StreamingQuery writing through foreachBatch upserts. No
+branch aggregates in Spark: each sum branch streams one row per sale
+(its key columns, built by the same ``plans/sales.py`` key
+expressions the batch ``sales_per_*`` plans group by, plus the
+amount as ``total_sales``), and its sink adds the batch's sums to the
+table under an epoch ledger (streaming/sinks.py). The sink tables
+hold the running sums, as the reference's Postgres tables do. That
+streaming and batch sums agree is checked, not built in: the tests
+compare each sum table with the batch ``sales_per_*_cents`` plans,
+and perfbench with its DuckDB stream oracle.
 
 Reference-vs-us deliberate deltas (SURVEY.md §7):
 - checkpointing ON (reference never enabled it),
@@ -20,7 +24,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..plans import sales
@@ -31,30 +36,45 @@ DEFAULT_TRIGGER_MS = 200  # reference flush interval, DataStreamJob.java:102
 @dataclass
 class Branch:
     """One sink branch: plan + upsert key. The plan's output columns,
-    in order, are the sink table's columns."""
+    in order, are the sink table's columns. ``sum_col`` marks a
+    running-sum table: the plan emits one row per sale and the sink
+    adds each batch's per-key sums of ``sum_col`` to the table."""
 
     name: str
     plan: Callable[[DataFrame], DataFrame]
     key_cols: tuple[str, ...]
+    sum_col: str | None = None
 
 
 def reference_branches() -> list[Branch]:
-    """The reference's five sink attachments (raw + 3 aggs; ES sink is
+    """The reference's five sink attachments (raw + 3 sums; ES sink is
     dead code in the reference and omitted by default, K7) over the
     12-field transaction DTO (``schemas.TRANSACTION_SCHEMA``, which
     every ``job.build_source`` source delivers). The transactions
-    branch is the 12-column K2 projection (ddl.TRANSACTIONS_DDL). Each
-    plan's output columns are its table's columns, so whichever sink
-    the job's ``--jdbc-url`` scheme picks writes the batch as given."""
+    branch is the 12-column K2 projection (ddl.TRANSACTIONS_DDL); each
+    sum branch projects its key columns and ``total_sales``, its
+    table's columns, so whichever sink the job's ``--jdbc-url`` scheme
+    picks writes the batch as given."""
     branches = [
         Branch("transactions", sales.raw_transactions_full, ("transaction_id",)),
         Branch(
             "sales_per_category",
-            sales.sales_per_category,
+            _sale_rows(sales.category_keys),
             ("transaction_date", "category"),
+            sum_col="total_sales",
         ),
-        Branch("sales_per_day", sales.sales_per_day, ("transaction_date",)),
-        Branch("sales_per_month", sales.sales_per_month, ("year", "month")),
+        Branch(
+            "sales_per_day",
+            _sale_rows(sales.day_keys),
+            ("transaction_date",),
+            sum_col="total_sales",
+        ),
+        Branch(
+            "sales_per_month",
+            _sale_rows(sales.month_keys),
+            ("year", "month"),
+            sum_col="total_sales",
+        ),
     ]
     # A row with a null upsert key (a malformed JSON line parses to an
     # all-null row) would fail the sink's NOT NULL key and, with it, the
@@ -63,6 +83,13 @@ def reference_branches() -> list[Branch]:
     for b in branches:
         b.plan = _drop_null_keys(b.plan, b.key_cols)
     return branches
+
+
+def _sale_rows(
+    keys: Callable[[], list[Column]],
+) -> Callable[[DataFrame], DataFrame]:
+    """One row per sale: the sum's key columns and the amount."""
+    return lambda df: df.select(*keys(), F.col("totalAmount").alias("total_sales"))
 
 
 def _drop_null_keys(
@@ -91,8 +118,7 @@ class StreamingJob:
             self.sinks[branch.name] = sink
             writer = (
                 branch.plan(self.source)
-                .writeStream.outputMode("update")
-                .queryName(branch.name)
+                .writeStream.queryName(branch.name)
                 .trigger(processingTime=f"{self.trigger_ms} milliseconds")
                 .foreachBatch(sink.foreach_batch())
             )

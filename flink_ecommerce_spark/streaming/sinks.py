@@ -1,30 +1,31 @@
 """Upsert sinks for foreachBatch (reference K2-K5: JDBC
-INSERT ... ON CONFLICT upserts, DataStreamJob.java:185-272; batching
-and retry config K6 at :100-104).
+INSERT ... ON CONFLICT upserts, DataStreamJob.java:185-272; retry
+config K6 at :100-104).
 
-Three implementations of one contract (idempotent keyed upsert). The
-two database sinks take their columns from the batch they are given,
-and the job's ``--jdbc-url`` scheme picks between them
-(``job.make_sink_factory``):
+The two database sinks take their columns from the batch they are
+given, and the job's ``--jdbc-url`` scheme picks between them
+(``job.make_sink_factory``). Both collect each micro-batch on the
+driver and apply it in one transaction with the same statement
+(``upsert_sql``): the raw ``transactions`` table keeps the latest row
+per key, and each running-sum table (``sum_col``) adds the batch's
+sums to the stored ones — the sink table is the running sum, as the
+reference's Postgres table is. Adding is not idempotent, so a sum
+batch also records ``(table, query id, epoch)`` in the
+``_sink_epochs`` ledger, and an epoch Spark replays after a restart
+changes nothing.
 
-- ``MemoryUpsertSink`` — driver-side dict keyed by the upsert key;
-  used by tests as the reference sink for final-table-state
-  equivalence.
-- ``JdbcUpsertSink`` — the Postgres path (any non-``duckdb://`` URL):
-  row-wise ON CONFLICT upserts through psycopg2, batched executemany
-  with retries (the reference's 1000-row / 5-retry semantics). The
-  container has no Postgres, so it's exercised in tests through a
-  fake DB-API connection.
-- ``StagedMergeSink`` — the ``duckdb://`` path: ONE Spark action
-  collects the micro-batch as Arrow, then ONE INSERT .. SELECT .. ON
-  CONFLICT statement reads it from the connection. Exercised in tests
+- ``StagedMergeSink`` — the ``duckdb://`` path, exercised in tests
   against a real engine (DuckDB).
+- ``JdbcUpsertSink`` — the Postgres path (any non-``duckdb://`` URL).
+  The container has no Postgres, so tests drive it through a
+  psycopg2-style wrapper around DuckDB.
+- ``MemoryUpsertSink`` — a driver-side last-write-wins dict, the
+  tests' reference for the raw branch. It has no additive rule: the
+  sum tables are checked against the batch ``sales_*_cents`` plans.
 
-Scale notes: foreachBatch hands the micro-batch DataFrame to the
-sink; MemoryUpsertSink collects (test-only by design), the JDBC sink
-writes per-partition via ``df.foreachPartition`` so executors connect
-directly, and StagedMergeSink holds each batch in driver memory as
-Arrow.
+Both database sinks hold each batch in driver memory. The job's CLI
+sets no per-batch cap, so the first batch after a downtime is the
+whole backlog (perfbench's ``txn_backlog`` workload measures this case).
 """
 
 from __future__ import annotations
@@ -34,10 +35,13 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, Row
 
+from ..functions.portable import sql_micro
+
 
 class MemoryUpsertSink:
     """Keyed upsert into a driver-side dict. Final state == what the
-    reference's Postgres table holds after the same events."""
+    reference's Postgres table holds after the same events, for a
+    last-write-wins table."""
 
     def __init__(self, key_cols: Sequence[str]):
         self.key_cols = tuple(key_cols)
@@ -55,25 +59,14 @@ class MemoryUpsertSink:
 
 
 def _on_conflict(columns: Sequence[str], key_cols: Sequence[str]) -> str:
-    """The ON CONFLICT clause both upsert forms share. When every column
-    is a key column there is nothing to update on conflict, so it is
+    """The last-write-wins ON CONFLICT clause. When every column is a
+    key column there is nothing to update on conflict, so it is
     insert-only instead of a malformed empty SET."""
     updates = ", ".join(
         f"{c} = EXCLUDED.{c}" for c in columns if c not in set(key_cols)
     )
     action = f"DO UPDATE SET {updates}" if updates else "DO NOTHING"
     return f"ON CONFLICT ({', '.join(key_cols)}) {action}"
-
-
-def upsert_sql(table: str, columns: Sequence[str], key_cols: Sequence[str]) -> str:
-    """Row-wise INSERT ... ON CONFLICT DO UPDATE statement in psycopg2's
-    ``%s`` paramstyle (reference K2-K5 shape, e.g.
-    DataStreamJob.java:240-258 for transactions)."""
-    placeholders = ", ".join(["%s"] * len(columns))
-    return (
-        f"INSERT INTO {table} ({', '.join(columns)}) VALUES ({placeholders}) "
-        + _on_conflict(columns, key_cols)
-    )
 
 
 def merge_upsert_sql(
@@ -93,61 +86,120 @@ def merge_upsert_sql(
     )
 
 
+def upsert_sql(
+    table: str,
+    columns: Sequence[str],
+    key_cols: Sequence[str],
+    sum_col: str | None = None,
+) -> str:
+    """The one statement both database sinks run to apply ``__batch``
+    (whose columns, in order, are ``columns``) to ``table``; plain SQL
+    that DuckDB and Postgres both accept.
+
+    Without ``sum_col``: the latest row per key replaces the stored
+    one. ``__batch`` may repeat a key (a redelivered event), and ON
+    CONFLICT rejects a key twice in one statement, so the source keeps
+    per key the row with the largest non-key columns, compared in
+    column order — a deterministic tie-break.
+
+    With ``sum_col``: ``__batch`` holds one row per sale, and the
+    batch's per-key sum is ADDED to the stored one. Money is summed in
+    integer cents, rounded per row as ``functions.portable.micro``
+    rounds (``floor(x * 100 + 0.5)``, the same in every engine, so the
+    table equals the batch ``sales_*_cents`` plans divided by 100),
+    and converted to the DDL's DOUBLE only when stored. A NULL amount
+    is skipped, as SUM skips it."""
+    keys = ", ".join(key_cols)
+    if sum_col is None:
+        non_key = [c for c in columns if c not in key_cols]
+        order = ", ".join([keys] + [f"{c} DESC NULLS LAST" for c in non_key])
+        latest = (
+            f"SELECT DISTINCT ON ({keys}) {', '.join(columns)} "
+            f"FROM __batch ORDER BY {order}"
+        )
+        return merge_upsert_sql(table, latest, columns, key_cols)
+    stored, added = f"{table}.{sum_col}", f"EXCLUDED.{sum_col}"
+    return (
+        f"INSERT INTO {table} ({keys}, {sum_col}) "
+        f"SELECT {keys}, sum({sql_micro(sum_col, 100)}) / 100.0 "
+        f"FROM __batch GROUP BY {keys} "
+        f"ON CONFLICT ({keys}) DO UPDATE SET {sum_col} = coalesce("
+        f"({sql_micro(stored, 100)} + {sql_micro(added, 100)}) / 100.0, "
+        f"{stored}, {added})"
+    )
+
+
+def _query_id(batch_df: DataFrame) -> str:
+    """The id of the stream query delivering ``batch_df``: stable
+    across restarts from one checkpoint, new for a new checkpoint, so
+    the epoch ledger tells a replay from a new query's epoch 0. Empty
+    for a batch given outside a stream query."""
+    sc = batch_df.sparkSession.sparkContext
+    return sc.getLocalProperty("sql.streaming.queryId") or ""
+
+
+def _record_epoch(cur, param: str, table: str, qid: str, epoch_id: int) -> bool:
+    """Inside the caller's open transaction, add ``(table, qid,
+    epoch_id)`` to the epoch ledger. False when the row is already
+    there: the epoch was applied before, and the caller rolls back.
+    ``param`` is the driver's placeholder (``?`` or ``%s``)."""
+    key = (table, qid, epoch_id)
+    where = " AND ".join(f"{c} = {param}" for c in ("sink", "query_id", "epoch"))
+    cur.execute(f"SELECT 1 FROM _sink_epochs WHERE {where}", key)
+    if cur.fetchone() is not None:
+        return False
+    cur.execute(f"INSERT INTO _sink_epochs VALUES ({param}, {param}, {param})", key)
+    return True
+
+
 class StagedMergeSink:
     """Set-based batch upsert into DuckDB, the sink a ``duckdb://``
-    ``--jdbc-url`` selects: the twin of JdbcUpsertSink's row-at-a-time
-    executemany, with the same ON CONFLICT clause. The batch's columns,
-    in order, are the table's columns.
+    ``--jdbc-url`` selects. ``sum_col`` marks a running-sum table
+    (see ``upsert_sql``); the batch's columns, in order, are then the
+    key columns and ``sum_col``, otherwise the table's columns.
 
     Per micro-batch:
     1. ONE Spark action: the batch is collected to the driver as an
-       Arrow table (``toArrow``), so the plan — JSON parse, state
-       store — runs once; an empty batch stops here;
-    2. the Arrow table is registered on the DuckDB connection and ONE
-       set-based statement (``merge_upsert_sql``) ingests it. Its
-       source collapses duplicate keys (ON CONFLICT rejects a key
-       twice in one statement), keeping per key the row with the
-       largest non-key columns, compared in column order — a
-       deterministic tie-break.
+       Arrow table (``toArrow``), so its plan runs once; an empty batch
+       stops here;
+    2. the Arrow table is registered on the DuckDB connection as
+       ``__batch`` and, in one transaction, a sum table's epoch is
+       recorded in the ledger (a replay rolls back here) and ONE
+       ``upsert_sql`` statement ingests the batch.
 
-    The whole batch is held in driver memory. The job's CLI sets no
-    per-batch cap, so the first batch after a downtime is the whole
-    backlog (perfbench's ``txn_backlog`` workload measures this case).
     ``connection_factory`` returns a DuckDB connection, whose
     ``TimeZone`` is pinned to UTC so Arrow's UTC timestamps land
-    unshifted in ``TIMESTAMP`` columns. Final state is identical to the
-    row-wise sinks — pinned by tests against MemoryUpsertSink."""
+    unshifted in ``TIMESTAMP`` columns."""
 
     def __init__(
         self,
         connection_factory: Callable[[], object],
         table: str,
         key_cols: Sequence[str],
+        sum_col: str | None = None,
     ):
         self.connection_factory = connection_factory
         self.table = table
         self.key_cols = tuple(key_cols)
+        self.sum_col = sum_col
 
-    def _merge_sql(self, columns: Sequence[str]) -> str:
-        non_key = [c for c in columns if c not in self.key_cols]
-        keys = ", ".join(self.key_cols)
-        order = ", ".join([keys] + [f"{c} DESC NULLS LAST" for c in non_key])
-        latest = (
-            f"SELECT DISTINCT ON ({keys}) {', '.join(columns)} "
-            f"FROM __batch ORDER BY {order}"
-        )
-        return merge_upsert_sql(self.table, latest, columns, self.key_cols)
-
-    def write_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
+    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.toArrow()
         # foreachBatch routinely delivers empty micro-batches
         if batch.num_rows == 0:
             return
+        sql = upsert_sql(self.table, batch.column_names, self.key_cols, self.sum_col)
         conn = self.connection_factory()
         try:
             conn.execute("SET TimeZone = 'UTC'")
             conn.register("__batch", batch)
-            conn.execute(self._merge_sql(batch.column_names))
+            conn.begin()
+            if self.sum_col and not _record_epoch(
+                conn, "?", self.table, _query_id(batch_df), epoch_id
+            ):
+                conn.rollback()
+                return
+            conn.execute(sql)
             conn.commit()
         finally:
             conn.close()
@@ -157,65 +209,72 @@ class StagedMergeSink:
 
 
 class JdbcUpsertSink:
-    """Per-batch idempotent JDBC upsert with the reference's batching
-    knobs (K6: batch 1000 / 5 retries, DataStreamJob.java:100-104): the
-    Postgres path, which any non-``duckdb://`` ``--jdbc-url`` selects.
-    The batch's columns, in order, are the table's columns.
+    """Per-batch upsert through a psycopg2 (``%s`` paramstyle)
+    connection: the Postgres path, which any non-``duckdb://``
+    ``--jdbc-url`` selects. Same SQL and ledger as StagedMergeSink,
+    in one driver-side transaction per micro-batch:
 
-    ``connection_factory`` returns a psycopg2 (``%s`` paramstyle)
-    connection; it must be picklable (a top-level function), because
-    it runs inside ``foreachPartition`` on executors.
-    """
+    1. the batch is collected to the driver; an empty one stops here;
+    2. a sum table's epoch is recorded in the ledger (a replay rolls
+       back here, before any copying);
+    3. ``CREATE TEMP TABLE __batch AS SELECT * FROM <table> LIMIT 0``
+       (plain SQL, so a DuckDB-backed fake runs it too) and one
+       ``executemany`` copy the rows into it by column name;
+       ``upsert_sql`` applies the batch, and the transaction commits.
+
+    A failed attempt is rolled back — the temporary table with it —
+    and the whole transaction retried, up to ``max_retries`` attempts
+    (the reference's 5, K6)."""
 
     def __init__(
         self,
         connection_factory: Callable[[], object],
         table: str,
         key_cols: Sequence[str],
-        batch_size: int = 1000,
+        sum_col: str | None = None,
         max_retries: int = 5,
     ):
         self.connection_factory = connection_factory
         self.table = table
         self.key_cols = tuple(key_cols)
-        self.batch_size = batch_size
+        self.sum_col = sum_col
         self.max_retries = max_retries
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
-        factory = self.connection_factory
-        sql = upsert_sql(self.table, batch_df.columns, self.key_cols)
-        batch_size, max_retries = self.batch_size, self.max_retries
-
-        def write_partition(rows) -> None:
-            buf: list[tuple] = []
-            conn = factory()
-            try:
-                cur = conn.cursor()
-
-                def flush() -> None:
-                    if not buf:
+    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        rows = [tuple(r) for r in batch_df.collect()]
+        if not rows:
+            return
+        columns = batch_df.columns
+        qid = _query_id(batch_df)
+        copy = (
+            f"INSERT INTO __batch ({', '.join(columns)}) "
+            f"VALUES ({', '.join(['%s'] * len(columns))})"
+        )
+        sql = upsert_sql(self.table, columns, self.key_cols, self.sum_col)
+        conn = self.connection_factory()
+        try:
+            for attempt in range(self.max_retries):
+                try:
+                    cur = conn.cursor()
+                    if self.sum_col and not _record_epoch(
+                        cur, "%s", self.table, qid, epoch_id
+                    ):
+                        conn.rollback()
                         return
-                    for attempt in range(max_retries):
-                        try:
-                            cur.executemany(sql, buf)
-                            conn.commit()
-                            buf.clear()
-                            return
-                        except Exception:
-                            conn.rollback()
-                            if attempt == max_retries - 1:
-                                raise
-                            time.sleep(0.2 * (attempt + 1))
-
-                for row in rows:
-                    buf.append(tuple(row))
-                    if len(buf) >= batch_size:
-                        flush()
-                flush()
-            finally:
-                conn.close()
-
-        batch_df.foreachPartition(write_partition)
+                    cur.execute(
+                        f"CREATE TEMP TABLE __batch AS SELECT * FROM {self.table} LIMIT 0"
+                    )
+                    cur.executemany(copy, rows)
+                    cur.execute(sql)
+                    conn.commit()
+                    return
+                except Exception:
+                    conn.rollback()
+                    if attempt == self.max_retries - 1:
+                        raise
+                    time.sleep(0.2 * (attempt + 1))
+        finally:
+            conn.close()
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return self.write_batch

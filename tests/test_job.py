@@ -9,6 +9,7 @@ from pathlib import Path
 import pytest
 
 from flink_ecommerce_spark import job as job_mod
+from flink_ecommerce_spark.plans import sales
 from flink_ecommerce_spark.sources import generator
 from flink_ecommerce_spark.streaming import ddl
 
@@ -31,7 +32,8 @@ def test_ddl_runs_once_with_fake_connection():
             pass
 
     ddl.create_sink_tables(lambda: Conn())
-    assert len(executed) == 4
+    # the four sink tables and the epoch ledger
+    assert len(executed) == 5
     assert all(e.startswith("CREATE TABLE IF NOT EXISTS") for e in executed)
 
 
@@ -108,6 +110,138 @@ def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
     # conservation across branches
     for total in (total_day, total_cat, total_month):
         assert abs(total_raw - total) < 0.05
+
+
+def _write_input(spark, path, n_rows, seed):
+    df = generator.transactions(spark, n_rows=n_rows, seed=seed)
+    generator.transactions_as_json(df).coalesce(2).write.mode("overwrite").text(path)
+
+
+def _run_cli(args):
+    """``job.main`` drained and stopped; the queries, for their progress."""
+    job = job_mod.main(args)
+    try:
+        job.process_available()
+        assert [q.name for q in job.queries if q.exception() is not None] == []
+    finally:
+        job.stop()
+    return job.queries
+
+
+def _tables(db):
+    import duckdb
+
+    con = duckdb.connect(db)
+    try:
+        return {
+            t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
+            for t in ("transactions", "sales_per_category", "sales_per_day",
+                      "sales_per_month")
+        }
+    finally:
+        con.close()
+
+
+def test_restart_replays_uncommitted_epoch_without_adding_twice(spark, tmp_path):
+    """The sink commits an epoch's sums, then Spark fails before its own
+    commit log: on restart Spark runs that epoch again. Deleting the
+    last ``commits/<n>`` of ``sales_per_day`` makes that happen; the
+    epoch ledger turns the replay into a no-op, so every table is
+    unchanged (without it, the day sums would double)."""
+    src, db, ck = str(tmp_path / "in"), str(tmp_path / "job.duckdb"), tmp_path / "ck"
+    _write_input(spark, src, 300, 53)
+    args = ["--source", "file", "--input-path", src,
+            "--jdbc-url", f"duckdb://{db}", "--checkpoint", str(ck)]
+    _run_cli(args)
+    before = _tables(db)
+
+    commits = ck / "sales_per_day" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink(missing_ok=True)
+    queries = _run_cli(args)
+
+    day = next(q for q in queries if q.name == "sales_per_day")
+    replayed = [p for p in day.recentProgress if p.batchId == last]
+    assert replayed and replayed[0].numInputRows > 0, "Spark did not re-run the epoch"
+    assert _tables(db) == before
+
+
+def test_new_checkpoint_epoch_zero_is_added(spark, tmp_path):
+    """A second query on a new checkpoint has a new query id, so its
+    epoch 0 is added to the sums the first query left, not skipped as
+    a replay of the first query's epoch 0."""
+    import duckdb
+
+    from flink_ecommerce_spark.sources.kafka import parse_transactions
+
+    db = str(tmp_path / "job.duckdb")
+    inputs = [str(tmp_path / "in1"), str(tmp_path / "in2")]
+    for i, (src, seed) in enumerate(zip(inputs, (59, 61))):
+        _write_input(spark, src, 200, seed)
+        _run_cli(["--source", "file", "--input-path", src,
+                  "--jdbc-url", f"duckdb://{db}",
+                  "--checkpoint", str(tmp_path / f"ck{i}")])
+
+    both = parse_transactions(spark.read.text(inputs))
+    want = {
+        r["transaction_date"]: r["total_sales_cents"] / 100
+        for r in sales.sales_per_day_cents(both).collect()
+    }
+    con = duckdb.connect(db)
+    got = dict(con.execute("SELECT transaction_date, total_sales FROM sales_per_day").fetchall())
+    epochs = con.execute(
+        "SELECT count(DISTINCT query_id), max(epoch) FROM _sink_epochs "
+        "WHERE sink = 'sales_per_day'"
+    ).fetchone()
+    con.close()
+    assert got == want
+    assert epochs == (2, 0)
+
+
+def test_await_ends_when_any_query_fails(spark, tmp_path):
+    """``--await`` ends the job when any one query fails, not only the
+    first: the failure is raised and the other queries are stopped.
+    ``sales_per_month`` (not the first query) is made to fail by a
+    CHECK its first batch violates; the job runs in a thread, bounded
+    by a join timeout."""
+    import threading
+
+    import duckdb
+
+    src, db = str(tmp_path / "in"), str(tmp_path / "job.duckdb")
+    _write_input(spark, src, 20, 67)
+    con = duckdb.connect(db)
+    con.execute(
+        "CREATE TABLE sales_per_month (year INTEGER, month INTEGER, "
+        "total_sales DOUBLE CHECK (total_sales < 0), PRIMARY KEY (year, month))"
+    )
+    con.close()
+
+    outcome = {}
+
+    def run():
+        try:
+            job_mod.main(["--source", "file", "--input-path", src,
+                          "--jdbc-url", f"duckdb://{db}",
+                          "--checkpoint", str(tmp_path / "ck"), "--await"])
+            outcome["returned"] = True
+        except Exception as e:  # the failure --await must raise
+            outcome["raised"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    try:
+        t.join(timeout=120)
+        ended = not t.is_alive()
+        still_active = [q.name for q in spark.streams.active]
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        t.join(timeout=60)
+    assert ended, "--await kept blocking after sales_per_month failed"
+    assert "sales_per_month" in str(outcome.get("raised")), outcome
+    assert still_active == []
 
 
 def test_session_driver_heap_fits_host(spark):

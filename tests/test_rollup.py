@@ -77,13 +77,12 @@ def test_rollup_tail_only_scans_past_threshold(spark):
 
 def test_streaming_maintenance_converges_to_batch_rollup(spark, tmp_path):
     """The materialized side of the continuous aggregate is maintained
-    by the SAME keyed-upsert streaming machinery as the sales
-    branches: replaying events through a rollup Branch must end with
-    exactly the batch rollup's state — which is what rollup_with_tail
-    assumes of its `materialized` input."""
+    by a streaming aggregation in update mode landing in a keyed
+    upsert sink: replaying events through it must end with exactly
+    the batch rollup's state — which is what rollup_with_tail assumes
+    of its `materialized` input."""
     from flink_ecommerce_spark.sources import generator
     from flink_ecommerce_spark.sources.kafka import parse_transactions
-    from flink_ecommerce_spark.streaming.runner import Branch, StreamingJob
     from flink_ecommerce_spark.streaming.sinks import MemoryUpsertSink
 
     path = str(tmp_path / "txn_json")
@@ -97,16 +96,16 @@ def test_streaming_maintenance_converges_to_batch_rollup(spark, tmp_path):
         )
 
     stream = parse_transactions(spark.readStream.format("text").load(path))
-    job = StreamingJob(
-        source=stream,
-        sink_factory=lambda b: MemoryUpsertSink(b.key_cols),
-        branches=[
-            Branch("rollup", rollup_plan, ("bucket_start", "productCategory"))
-        ],
-        checkpoint_root=str(tmp_path / "ckpt"),
-    ).start()
-    job.process_available()
-    job.stop()
+    sink = MemoryUpsertSink(("bucket_start", "productCategory"))
+    query = (
+        rollup_plan(stream)
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(sink.foreach_batch())
+        .start()
+    )
+    query.processAllAvailable()
+    query.stop()
 
     batch = rollup_plan(parse_transactions(spark.read.text(path)))
     expected = {
@@ -115,7 +114,7 @@ def test_streaming_maintenance_converges_to_batch_rollup(spark, tmp_path):
     }
     got = {
         (r["bucket_start"], r["productCategory"]): (r["n_events"], r["total_value"])
-        for r in job.sinks["rollup"].rows()
+        for r in sink.rows()
     }
     assert got == expected and len(got) > 0
 

@@ -1,14 +1,18 @@
-"""Upsert sink tests: SQL shape (reference K2-K5), idempotence,
-batching/retry (K6), through a fake DB-API connection — no Postgres
-in the container.
+"""Upsert sink tests: SQL shape (reference K2-K5), idempotence, the
+additive sums under the epoch ledger, and the JDBC sink's driver-side
+transaction and retries (K6) through a psycopg2-style wrapper around
+DuckDB — no Postgres in the container.
 """
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from flink_ecommerce_spark.sources import generator
 from flink_ecommerce_spark.plans import sales
+from flink_ecommerce_spark.streaming import ddl
+from flink_ecommerce_spark.streaming.runner import reference_branches
 from flink_ecommerce_spark.streaming.sinks import (
     JdbcUpsertSink,
     MemoryUpsertSink,
@@ -17,16 +21,23 @@ from flink_ecommerce_spark.streaming.sinks import (
 
 
 def test_upsert_sql_shape():
+    """A sum table adds the batch's integer-cent sums to the stored ones
+    (a NULL on either side is skipped, as SUM skips it)."""
     sql = upsert_sql(
         "sales_per_category",
         ["transaction_date", "category", "total_sales"],
         ["transaction_date", "category"],
+        sum_col="total_sales",
     )
     assert sql == (
         "INSERT INTO sales_per_category (transaction_date, category, total_sales) "
-        "VALUES (%s, %s, %s) "
-        "ON CONFLICT (transaction_date, category) DO UPDATE SET "
-        "total_sales = EXCLUDED.total_sales"
+        "SELECT transaction_date, category, "
+        "sum(CAST(FLOOR((total_sales) * 100 + 0.5) AS BIGINT)) / 100.0 "
+        "FROM __batch GROUP BY transaction_date, category "
+        "ON CONFLICT (transaction_date, category) DO UPDATE SET total_sales = "
+        "coalesce((CAST(FLOOR((sales_per_category.total_sales) * 100 + 0.5) AS BIGINT)"
+        " + CAST(FLOOR((EXCLUDED.total_sales) * 100 + 0.5) AS BIGINT)) / 100.0, "
+        "sales_per_category.total_sales, EXCLUDED.total_sales)"
     )
 
 
@@ -41,105 +52,161 @@ def test_memory_upsert_idempotent(spark):
     assert first == second
 
 
-# ---- fake DB-API plumbing ----------------------------------------------
-# foreachPartition runs in separate Python worker processes, so the
-# fake "database" is a file the workers append to and the driver reads.
-
-import json
-import os
-import tempfile
+# ---- psycopg2 stand-in -------------------------------------------------
 
 
-class _FakeCursor:
-    def __init__(self, path, fail_first=0):
-        self.path = path
-        self.fail_first = fail_first
-        self.calls = 0
+class _PsycopgOverDuckDB:
+    """A psycopg2-style connection over a DuckDB file: ``%s``
+    placeholders, a transaction opened by the first statement, and a
+    COMMIT that fails ``fail_commits`` times — after the batch, the
+    ledger row and the sums were written, so a retry that did not roll
+    back would count them twice."""
 
-    def executemany(self, sql, rows):
-        self.calls += 1
-        if self.calls <= self.fail_first:
-            raise RuntimeError("transient failure")
-        with open(self.path, "a") as f:
-            for row in rows:
-                f.write(json.dumps([str(v) for v in row]) + "\n")
-
-
-class _FakeConn:
-    def __init__(self, path, fail_first=0):
-        self.cursor_obj = _FakeCursor(path, fail_first)
+    def __init__(self, db, fail_commits=0):
+        self.con = duckdb.connect(db)
+        self.fail_commits = fail_commits
+        self.in_txn = False
 
     def cursor(self):
-        return self.cursor_obj
+        return self
+
+    def _begin(self):
+        if not self.in_txn:
+            self.con.begin()
+            self.in_txn = True
+
+    def execute(self, sql, params=()):
+        self._begin()
+        self.con.execute(sql.replace("%s", "?"), list(params))
+
+    def executemany(self, sql, rows):
+        self._begin()
+        self.con.executemany(sql.replace("%s", "?"), rows)
+
+    def fetchone(self):
+        return self.con.fetchone()
 
     def commit(self):
-        pass
+        if self.fail_commits:
+            self.fail_commits -= 1
+            raise RuntimeError("transient failure")
+        self.con.commit()
+        self.in_txn = False
 
     def rollback(self):
-        pass
+        if self.in_txn:
+            self.con.rollback()
+            self.in_txn = False
 
     def close(self):
-        pass
+        self.con.close()
 
 
-def _read_store(path):
-    rows = []
-    if os.path.exists(path):
-        with open(path) as f:
-            rows = [tuple(json.loads(line)) for line in f]
-    return rows
+def _sink_db(tmp_path):
+    db = str(tmp_path / "sink.duckdb")
+    ddl.create_sink_tables(lambda: duckdb.connect(db))
+    return db
 
 
-def _tmp_store():
-    fd, path = tempfile.mkstemp(suffix=".fakejdbc")
-    os.close(fd)
-    os.unlink(path)
-    return path
+def _branch(name):
+    return next(b for b in reference_branches() if b.name == name)
 
 
-def test_jdbc_upsert_writes_all_rows(spark):
-    path = _tmp_store()
-    df = generator.transactions(spark, n_rows=500, seed=13).coalesce(1)
-    agg = sales.sales_per_category(df)
+def _sums(db, table):
+    con = duckdb.connect(db)
+    try:
+        return dict(con.execute(f"SELECT transaction_date, total_sales FROM {table}").fetchall())
+    finally:
+        con.close()
+
+
+def _day_cents(df):
+    return {
+        r["transaction_date"]: r["total_sales_cents"] / 100
+        for r in sales.sales_per_day_cents(df).collect()
+    }
+
+
+def test_jdbc_upsert_writes_all_rows(spark, tmp_path):
+    """The raw table receives every row and a sum table the exact
+    integer-cent sums, through the driver-side temporary-table copy."""
+    db = _sink_db(tmp_path)
+    df = generator.transactions(spark, n_rows=500, seed=13)
+    for name in ("transactions", "sales_per_category"):
+        b = _branch(name)
+        sink = JdbcUpsertSink(
+            lambda: _PsycopgOverDuckDB(db), b.name, b.key_cols, b.sum_col
+        )
+        sink.write_batch(b.plan(df), 0)
+    con = duckdb.connect(db)
+    ids = con.execute("SELECT count(DISTINCT transaction_id) FROM transactions").fetchone()
+    cats = {
+        (d, c): v
+        for d, c, v in con.execute("SELECT * FROM sales_per_category").fetchall()
+    }
+    con.close()
+    assert ids[0] == 500
+    assert cats == {
+        (r["transaction_date"], r["category"]): r["total_sales_cents"] / 100
+        for r in sales.sales_per_category_cents(df).collect()
+    }
+
+
+def test_jdbc_upsert_retries_then_succeeds(spark, tmp_path):
+    """Two failed COMMITs, each after the sums were written: every
+    attempt is rolled back whole, so the third adds the sums once."""
+    db = _sink_db(tmp_path)
+    df = generator.transactions(spark, n_rows=50, seed=17)
+    b = _branch("sales_per_day")
     sink = JdbcUpsertSink(
-        lambda: _FakeConn(path),
-        "sales_per_category",
-        ["transaction_date", "category"],
-        batch_size=50,
+        lambda: _PsycopgOverDuckDB(db, fail_commits=2),
+        b.name, b.key_cols, b.sum_col, max_retries=5,
     )
-    sink.write_batch(agg)
-    written = _read_store(path)
-    assert len(written) == agg.count()
-    # upsert key uniqueness holds in the source aggregation
-    assert len({(r[0], r[1]) for r in written}) == len(written)
+    sink.write_batch(b.plan(df), 0)
+    assert _sums(db, "sales_per_day") == _day_cents(df)
 
 
-def test_jdbc_upsert_retries_then_succeeds(spark):
-    path = _tmp_store()
-    df = generator.transactions(spark, n_rows=50, seed=17).coalesce(1)
-    agg = sales.sales_per_day(df).coalesce(1)
+def test_jdbc_upsert_exhausted_retries_raise(spark, tmp_path):
+    db = _sink_db(tmp_path)
+    df = generator.transactions(spark, n_rows=20, seed=19)
+    b = _branch("sales_per_day")
     sink = JdbcUpsertSink(
-        lambda: _FakeConn(path, fail_first=2),
-        "sales_per_day",
-        ["transaction_date"],
-        max_retries=5,
+        lambda: _PsycopgOverDuckDB(db, fail_commits=10**9),
+        b.name, b.key_cols, b.sum_col, max_retries=2,
     )
-    sink.write_batch(agg)
-    assert len(_read_store(path)) == agg.count()
+    with pytest.raises(RuntimeError, match="transient failure"):
+        sink.write_batch(b.plan(df), 0)
+    assert _sums(db, "sales_per_day") == {}
+    con = duckdb.connect(db)
+    assert con.execute("SELECT count(*) FROM _sink_epochs").fetchone()[0] == 0
+    con.close()
 
 
-def test_jdbc_upsert_exhausted_retries_raise(spark):
-    path = _tmp_store()
-    df = generator.transactions(spark, n_rows=20, seed=19).coalesce(1)
-    agg = sales.sales_per_day(df).coalesce(1)
-    sink = JdbcUpsertSink(
-        lambda: _FakeConn(path, fail_first=10**9),
-        "sales_per_day",
-        ["transaction_date"],
-        max_retries=2,
-    )
-    with pytest.raises(Exception):
-        sink.write_batch(agg)
+@pytest.mark.parametrize("kind", ["staged", "jdbc"])
+def test_sum_sink_adds_each_epoch_once(spark, tmp_path, kind):
+    """Both database sinks: a replayed epoch leaves the sums as they
+    are, and the next epoch, even with the same rows, adds to them."""
+    from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
+
+    db = _sink_db(tmp_path)
+    df = generator.transactions(spark, n_rows=200, seed=23)
+    b = _branch("sales_per_day")
+    if kind == "staged":
+        sink = StagedMergeSink(lambda: duckdb.connect(db), b.name, b.key_cols, b.sum_col)
+    else:
+        sink = JdbcUpsertSink(
+            lambda: _PsycopgOverDuckDB(db), b.name, b.key_cols, b.sum_col
+        )
+    once = _day_cents(df)
+    sink.write_batch(b.plan(df), 0)
+    sink.write_batch(b.plan(df), 0)  # the same epoch, replayed
+    assert _sums(db, "sales_per_day") == once
+    sink.write_batch(b.plan(df), 1)
+    cents = {
+        r["transaction_date"]: 2 * r["total_sales_cents"] / 100
+        for r in sales.sales_per_day_cents(df).collect()
+    }
+    assert _sums(db, "sales_per_day") == cents
 
 
 # ---- staged set-based upsert sink (real engine: DuckDB) ----------------

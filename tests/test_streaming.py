@@ -1,13 +1,18 @@
 """Streaming equivalence (SURVEY.md §5.3): the same rows through the
 batch plans and through Structured Streaming + foreachBatch upserts
 must produce identical final table state — the Flink→Spark semantic
-equivalence argument of SURVEY.md §2.3.
+equivalence argument of SURVEY.md §2.3. The sink adds each batch's
+sums, so the sum tables are compared with the batch integer-cents
+plans exactly, over one micro-batch and over several.
 """
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
+from flink_ecommerce_spark.plans import sales
 from flink_ecommerce_spark.schemas import TRANSACTION_SCHEMA
 from flink_ecommerce_spark.sources import generator
 from flink_ecommerce_spark.streaming.runner import StreamingJob, reference_branches
@@ -24,68 +29,105 @@ def txn_json_dir(spark, tmp_path_factory):
     return path
 
 
-def _final_state(rows, key_cols):
-    return {
-        tuple(r[k] for k in key_cols): tuple(r.asDict().items()) for r in rows
-    }
+# sum table -> (batch integer-cents plan, key columns)
+SUM_TABLES = {
+    "sales_per_category": (
+        sales.sales_per_category_cents, ("transaction_date", "category")
+    ),
+    "sales_per_day": (sales.sales_per_day_cents, ("transaction_date",)),
+    "sales_per_month": (sales.sales_per_month_cents, ("year", "month")),
+}
+
+
+def _run_staged(spark, src, db, ckpt, branches, max_files_per_trigger=None):
+    """The job's branches from the JSON files in ``src`` into DuckDB
+    through StagedMergeSink, drained and stopped."""
+    import duckdb
+
+    from flink_ecommerce_spark.sources.kafka import parse_transactions
+    from flink_ecommerce_spark.streaming import ddl
+    from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
+
+    ddl.create_sink_tables(lambda: duckdb.connect(db))
+    reader = spark.readStream.format("text")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    job = StreamingJob(
+        source=parse_transactions(reader.load(src)),
+        sink_factory=lambda b: StagedMergeSink(
+            lambda: duckdb.connect(db), b.name, b.key_cols, b.sum_col
+        ),
+        branches=branches,
+        checkpoint_root=ckpt,
+    ).start()
+    try:
+        job.process_available()
+    finally:
+        job.stop()
+
+
+def _assert_sums_equal_batch_cents(spark, src, db):
+    """Each sum table equals its batch ``sales_per_*_cents`` plan over
+    the same files, divided by 100 — exactly, not within a cent."""
+    import duckdb
+
+    from flink_ecommerce_spark.sources.kafka import parse_transactions
+
+    batch = parse_transactions(spark.read.text(src))
+    con = duckdb.connect(db)
+    try:
+        for table, (plan, keys) in SUM_TABLES.items():
+            want = {
+                tuple(r[k] for k in keys): r["total_sales_cents"] / 100
+                for r in plan(batch).collect()
+            }
+            got = {
+                tuple(r[:-1]): r[-1]
+                for r in con.execute(
+                    f"SELECT {', '.join(keys)}, total_sales FROM {table}"
+                ).fetchall()
+            }
+            assert got == want, f"{table} diverged from the batch cents plan"
+            assert len(got) > 0, table
+    finally:
+        con.close()
 
 
 def test_streaming_matches_batch_final_state(spark, txn_json_dir, tmp_path):
-    from flink_ecommerce_spark.sources.kafka import parse_transactions
+    """All files in one micro-batch: every sum table equals the batch
+    integer-cents plan, and the transactions table holds each id once."""
+    import duckdb
 
-    raw_stream = spark.readStream.format("text").load(txn_json_dir)
-    stream = parse_transactions(raw_stream)
-
-    branches = reference_branches()
-    job = StreamingJob(
-        source=stream,
-        sink_factory=lambda b: MemoryUpsertSink(b.key_cols),
-        branches=branches,
-        checkpoint_root=str(tmp_path / "ckpt"),
-    ).start()
-    job.process_available()
-    job.stop()
-
-    batch_raw = spark.read.text(txn_json_dir)
-    batch = parse_transactions(batch_raw)
-    for branch in branches:
-        expected = branch.plan(batch).collect()
-        got = job.sinks[branch.name].rows()
-        assert _final_state(got, branch.key_cols) == _final_state(
-            expected, branch.key_cols
-        ), f"branch {branch.name} diverged between batch and streaming"
-        assert len(got) > 0, branch.name
+    db = str(tmp_path / "one.duckdb")
+    _run_staged(spark, txn_json_dir, db, str(tmp_path / "ckpt"), reference_branches())
+    _assert_sums_equal_batch_cents(spark, txn_json_dir, db)
+    con = duckdb.connect(db)
+    n = con.execute("SELECT count(DISTINCT transaction_id) FROM transactions").fetchone()
+    con.close()
+    assert n[0] == N_ROWS
 
 
 def test_streaming_incremental_updates_converge(spark, txn_json_dir, tmp_path):
-    """Feeding the same data in two chunks (separate micro-batches)
-    converges to the same final state as one batch — idempotent
-    upsert semantics across micro-batch boundaries."""
-    from flink_ecommerce_spark.sources.kafka import parse_transactions
+    """One file per micro-batch: the sink adds each batch's sums to the
+    table, and after every batch is applied once (one ledger row per
+    file) the tables equal the batch integer-cents plans exactly."""
+    import duckdb
 
-    # chunked replay: maxFilesPerTrigger=1 forces multiple micro-batches
-    raw_stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(txn_json_dir)
+    db = str(tmp_path / "chunked.duckdb")
+    sums = [b for b in reference_branches() if b.sum_col]
+    _run_staged(
+        spark, txn_json_dir, db, str(tmp_path / "ckpt2"), sums,
+        max_files_per_trigger=1,
     )
-    stream = parse_transactions(raw_stream)
-    branch = [b for b in reference_branches() if b.name == "sales_per_day"][0]
-    job = StreamingJob(
-        source=stream,
-        sink_factory=lambda b: MemoryUpsertSink(b.key_cols),
-        branches=[branch],
-        checkpoint_root=str(tmp_path / "ckpt2"),
-    ).start()
-    job.process_available()
-    job.stop()
-
-    batch = parse_transactions(spark.read.text(txn_json_dir))
-    expected = branch.plan(batch).collect()
-    got = job.sinks[branch.name].rows()
-    assert _final_state(got, branch.key_cols) == _final_state(
-        expected, branch.key_cols
+    _assert_sums_equal_batch_cents(spark, txn_json_dir, db)
+    n_files = len(list(Path(txn_json_dir).glob("part-*")))
+    con = duckdb.connect(db)
+    epochs = dict(
+        con.execute("SELECT sink, count(*) FROM _sink_epochs GROUP BY sink").fetchall()
     )
+    con.close()
+    assert n_files > 1
+    assert epochs == {b.name: n_files for b in sums}
 
 
 def test_json_roundtrip_preserves_schema(spark):
@@ -113,46 +155,29 @@ def test_malformed_json_null_vs_strict(spark):
 
 
 def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_path):
-    """Full streaming job through the set-based StagedMergeSink
-    (foreachBatch → Arrow → one ON CONFLICT per batch) into a
-    real engine (DuckDB), with chunked micro-batches: final table
-    state must equal the row-wise MemoryUpsertSink path for every
-    branch — the job's configuration for a duckdb:// --jdbc-url."""
+    """The raw transactions branch through the set-based StagedMergeSink
+    (foreachBatch → Arrow → one ON CONFLICT per batch) into a real
+    engine (DuckDB), with chunked micro-batches: final table state must
+    equal the row-wise MemoryUpsertSink path — the job's configuration
+    for a duckdb:// --jdbc-url. The sum branches are checked against
+    the batch cents plans above."""
     import duckdb
 
     from flink_ecommerce_spark.sources.kafka import parse_transactions
-    from flink_ecommerce_spark.streaming import ddl
-    from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
 
     db = str(tmp_path / "staged.duckdb")
-    ddl.create_sink_tables(lambda: duckdb.connect(db))
-
-    raw_stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")  # several micro-batches
-        .load(txn_json_dir)
+    raw = [b for b in reference_branches() if b.name == "transactions"]
+    _run_staged(
+        spark, txn_json_dir, db, str(tmp_path / "ckpt3"), raw,
+        max_files_per_trigger=1,
     )
-    stream = parse_transactions(raw_stream)
-    branches = reference_branches()
-
-    def staged(b):
-        return StagedMergeSink(lambda: duckdb.connect(db), b.name, b.key_cols)
-
-    job = StreamingJob(
-        source=stream,
-        sink_factory=staged,
-        branches=branches,
-        checkpoint_root=str(tmp_path / "ckpt3"),
-    ).start()
-    job.process_available()
-    job.stop()
 
     mem_job = StreamingJob(
         source=parse_transactions(
             spark.readStream.format("text").load(txn_json_dir)
         ),
         sink_factory=lambda b: MemoryUpsertSink(b.key_cols),
-        branches=branches,
+        branches=raw,
         checkpoint_root=str(tmp_path / "ckpt4"),
     ).start()
     mem_job.process_available()
@@ -165,22 +190,19 @@ def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_pat
             return round(v, 6)
         return v
 
+    (b,) = raw
+    cols = b.plan(parse_transactions(spark.read.text(txn_json_dir))).columns
     con = duckdb.connect(db)
-    for b in branches:
-        cols = b.plan(stream).columns
-        got = {
-            tuple(norm(v) for v in r)
-            for r in con.execute(
-                f"SELECT {', '.join(cols)} FROM {b.name}"
-            ).fetchall()
-        }
-        want = {
-            tuple(norm(r[c]) for c in cols)
-            for r in mem_job.sinks[b.name].rows()
-        }
-        assert got == want, f"branch {b.name} diverged (staged vs memory)"
-        assert len(got) > 0, b.name
+    got = {
+        tuple(norm(v) for v in r)
+        for r in con.execute(f"SELECT {', '.join(cols)} FROM {b.name}").fetchall()
+    }
     con.close()
+    want = {
+        tuple(norm(r[c]) for c in cols) for r in mem_job.sinks[b.name].rows()
+    }
+    assert got == want, "transactions diverged (staged vs memory)"
+    assert len(got) == N_ROWS
 
 
 def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
@@ -207,7 +229,7 @@ def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
     job = StreamingJob(
         source=parse_transactions(spark.readStream.format("text").load(str(src))),
         sink_factory=lambda b: StagedMergeSink(
-            lambda: duckdb.connect(db), b.name, b.key_cols
+            lambda: duckdb.connect(db), b.name, b.key_cols, b.sum_col
         ),
         branches=branches,
         checkpoint_root=str(tmp_path / "ckpt"),
