@@ -79,11 +79,10 @@ fragments), the micro(AVG(double)) order-independence fixes, and a
 pure-stdlib baseline PNG decoder making the aHash media path real
 end-to-end for one actual format — each with a
 DuckDB oracle twin (COVERAGE.md is the full map; non-query machinery
-— continuous aggregates, Z-order layout, streaming
-runner/sinks, BPE tokenizer train/apply — is
-pytest-covered there too). tests/plan_ledger.json machine-checks
-that out-of-verify-window queries' plans are unchanged since their
-last external certification.
+— the streaming runner/sinks — is pytest-covered there too).
+tests/plan_ledger.json machine-checks that out-of-verify-window
+queries' plans are unchanged since their last external
+certification.
 """
 
 from __future__ import annotations

@@ -17,8 +17,6 @@ from pyspark.sql.types import LongType
 
 from .schemas import TABLE_NAMES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. `name` must be one of TABLE_NAMES.

@@ -62,28 +62,6 @@ def build_source(spark, args) -> DataFrame:
 
         raw = spark.readStream.format("text").load(args.input_path)
         return parse_transactions(raw)
-    if args.source == "rate":  # smoke: synthesize rows at a fixed rate
-        from pyspark.sql import functions as F
-
-        rate = spark.readStream.format("rate").option(
-            "rowsPerSecond", str(args.rate_rps)
-        ).load()
-        return rate.select(
-            F.md5(F.col("value").cast("string")).alias("transactionId"),
-            F.lit("product1").alias("productId"),
-            F.lit("laptop").alias("productName"),
-            F.lit("electronic").alias("productCategory"),
-            F.lit(10.0).alias("productPrice"),
-            F.lit(1).cast("int").alias("productQuantity"),
-            F.lit("apple").alias("productBrand"),
-            (F.col("value") % 100).cast("double").alias("totalAmount"),
-            F.lit("USD").alias("currency"),
-            F.concat(F.lit("user_"), (F.col("value") % 50).cast("string")).alias(
-                "customerId"
-            ),
-            F.col("timestamp").alias("transactionDate"),
-            F.lit("credit_card").alias("paymentMethod"),
-        )
     raise ValueError(f"unknown source {args.source!r}")
 
 
@@ -95,10 +73,15 @@ def _connection_factory(jdbc_url: str):
     anything else goes to psycopg2 (production, JdbcUpsertSink)."""
     if jdbc_url.startswith("duckdb://"):
         # duckdb:///abs/path.db -> "/abs/path.db" (absolute),
-        # duckdb://rel.db       -> "rel.db"       (relative, preserved),
-        # duckdb://:memory: or duckdb:// -> in-memory
-        rest = jdbc_url[len("duckdb://"):]
-        db_path = ":memory:" if rest in ("", ":memory:") else rest
+        # duckdb://rel.db       -> "rel.db"       (relative, preserved)
+        db_path = jdbc_url[len("duckdb://"):]
+        if db_path in ("", ":memory:"):
+            # every connect would open a new, empty database: the DDL
+            # and each sink batch would never see the same tables
+            raise ValueError(
+                f"{jdbc_url!r}: a duckdb:// URL needs a file path, "
+                "e.g. duckdb:///tmp/ecommerce.db"
+            )
 
         def connect_duckdb():
             import duckdb
@@ -131,11 +114,10 @@ def make_sink_factory(args):
 
 def main(argv: list[str] | None = None) -> StreamingJob:
     p = argparse.ArgumentParser(description="e-commerce streaming analytics job")
-    p.add_argument("--source", choices=["kafka", "file", "rate"], default="kafka")
+    p.add_argument("--source", choices=["kafka", "file"], default="kafka")
     p.add_argument("--kafka-servers", default="localhost:9092")
     p.add_argument("--topic", default="financial_transactions")
     p.add_argument("--input-path", help="for --source file")
-    p.add_argument("--rate-rps", type=int, default=1000)
     p.add_argument("--jdbc-url", default="postgresql://localhost/ecommerce")
     p.add_argument("--checkpoint", default="/tmp/flink_ecommerce_spark_ckpt")
     p.add_argument("--trigger-ms", type=int, default=DEFAULT_TRIGGER_MS)

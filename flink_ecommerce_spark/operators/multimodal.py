@@ -238,7 +238,6 @@ def media_dedup(with_payload: DataFrame) -> DataFrame:
     )
 
 
-AHASH_CELLS = 64  # 8x8 perceptual grid
 AHASH_BAND_BITS = 8  # 8 bands -> pigeonhole-exact for hamming <= 7
 AHASH_HAMMING_MAX = 7
 

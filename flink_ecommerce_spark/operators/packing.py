@@ -193,8 +193,7 @@ def balanced_shards(
     occupied (length, bucket) pair, cumulated in (length DESC,
     bucket ASC) order. Still exact; parallelism = occupied pairs.
     NOTE — eager when b > 0: the id bounds are one 2-scalar driver
-    fetch (same discipline as the Z-order bounds). Default 0 keeps
-    the certified single-level plan.
+    fetch. Default 0 keeps the certified single-level plan.
 
     The narrow (doc_id, n_tokens) frame is localCheckpoint'ed: both
     the counts aggregate and the rank join consume it, and without
@@ -352,11 +351,11 @@ def epoch_shuffle(
     bucket_bits: int = EPOCH_SHUFFLE_BUCKET_BITS,
 ) -> DataFrame:
     """Deterministic per-epoch global permutation of training samples
-    — the data-loader step between ``balanced_shards``/
-    ``export_curated_shards`` and an actual training run: every epoch
-    must visit every sample exactly once in a seed-reproducible
-    pseudorandom order, identical no matter how the corpus is
-    partitioned or which executor computes it.
+    — the data-loader step between ``balanced_shards`` and an
+    actual training run: every epoch must visit every sample exactly
+    once in a seed-reproducible pseudorandom order, identical no
+    matter how the corpus is partitioned or which executor computes
+    it.
 
     Returns (doc_id, pos, shard): ``pos`` is the sample's 0-based
     position in the epoch-``seed`` permutation (rank by the portable

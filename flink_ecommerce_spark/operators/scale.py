@@ -17,6 +17,8 @@ These are the knobs a 100 TB deployment turns when the defaults
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -130,6 +132,24 @@ def ensure_parallelism_for_heavy_scan(
     return df.repartition(target)
 
 
+@contextmanager
+def _aqe_off(spark):
+    """Turn ``spark.sql.adaptive.enabled`` off for the block, then put
+    the key back as it was; a key that was unset is unset again. The
+    key is session-global and nothing locks it: plan construction is
+    assumed to be single-threaded."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def checkpoint_partitioned(
     df: DataFrame, *cols: str, eager: bool = True
 ) -> DataFrame:
@@ -159,13 +179,8 @@ def checkpoint_partitioned(
     correct whenever the first consumer is a single sequential job —
     a frame feeding two PARALLEL stages of one job should stay eager
     or both stages race to compute it."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _aqe_off(df.sparkSession):
         return df.repartition(*cols).localCheckpoint(eager=eager)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def checkpoint_keep_partitioning(
@@ -183,19 +198,8 @@ def checkpoint_keep_partitioning(
     enough. The loop-state frames are the SMALL side (edge-touched
     vertices / node ranks), so losing AQE for their per-round jobs
     costs nothing; the win is the removed per-round exchange."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _aqe_off(df.sparkSession):
         return df.localCheckpoint(eager=eager)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def repartition_for_join(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
-    """Pre-partition by the join key so several subsequent operations
-    (join + groupBy on the same key) reuse one Exchange."""
-    return df.repartition(n, key) if n else df.repartition(key)
 
 
 def key_skew_topk(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:

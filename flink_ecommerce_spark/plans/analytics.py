@@ -265,20 +265,6 @@ def distinct_users_per_day(events: DataFrame) -> DataFrame:
     )
 
 
-def approx_distinct_users(events: DataFrame, rsd: float = 0.02) -> DataFrame:
-    """HyperLogLog++ approximate distinct per event_type via Spark's
-    engine-native sketch. NOT in the registry: it is inherently
-    uncertifiable (a different sketch than any oracle engine's), and
-    the portable HLL (operators/sketch.py: hll_distinct_users) is the
-    oracle-exact, mergeable approx-distinct path this repo advertises.
-    Kept as a library demo of the built-in (on a real cluster the
-    native sketch is the cheapest option when cross-engine
-    reproducibility doesn't matter)."""
-    return events.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd).alias("approx_users")
-    )
-
-
 def value_stats_per_type(events: DataFrame) -> DataFrame:
     """Exact median/min/max per event_type (median = exact percentile;
     at 100 TB you'd switch to percentile_approx — kept exact here for

@@ -221,21 +221,6 @@ def category_stats_int(
     )
 
 
-def sales_per_day_filtered(
-    df: DataFrame,
-    category: str,
-    ts_col: str = "transactionDate",
-    category_col: str = "productCategory",
-    amount_col: str = "totalAmount",
-) -> DataFrame:
-    """Filtered A2 variant (the reference has no predicates — SURVEY.md
-    §2.2 — this covers df.filter; the predicate is pushed into the
-    parquet scan by Catalyst)."""
-    return sales_per_day(
-        df.filter(F.col(category_col) == category), ts_col, amount_col
-    )
-
-
 def category_stats(
     df: DataFrame,
     category_col: str = "productCategory",

@@ -73,11 +73,6 @@ EMBEDDINGS_SCHEMA = StructType(
     ]
 )
 
-# Aggregate sink schemas (reference sink DDL, DataStreamJob.java:276-331).
-SALES_PER_CATEGORY_COLUMNS = ("transaction_date", "category", "total_sales")
-SALES_PER_DAY_COLUMNS = ("transaction_date", "total_sales")
-SALES_PER_MONTH_COLUMNS = ("year", "month", "total_sales")
-
 TABLE_NAMES = (
     "region",
     "nation",

@@ -132,8 +132,8 @@ def test_fuzzy_admission_and_sampling_on_empty(spark, empty_docs):
     assert sampling.weighted_sample(empty_docs).collect() == []
 
 
-def test_pq_jl_bpe_on_empty(spark):
-    from flink_ecommerce_spark.operators import bpe, similarity
+def test_pq_jl_on_empty(spark):
+    from flink_ecommerce_spark.operators import similarity
 
     empty_emb = spark.createDataFrame(
         [], "vec_id long, embedding array<float>, label int"
@@ -142,10 +142,6 @@ def test_pq_jl_bpe_on_empty(spark):
     assert similarity.pq_ann_topk(empty_emb).collect() == []
     assert similarity.pq_ann_rerank(empty_emb).collect() == []
     assert similarity.jl_project(empty_emb).collect() == []
-
-    empty_docs = spark.createDataFrame([], DOCUMENTS_SCHEMA)
-    assert bpe.bpe_train(empty_docs, num_merges=5) == []
-    assert bpe.bpe_apply(empty_docs, []).collect() == []
 
 
 def test_retrieval_on_empty_docs(spark, empty_docs):

@@ -1,5 +1,5 @@
 """End-to-end job entry point: file source → 4 branches → DuckDB
-sinks, DDL statement sanity, rate-source plan."""
+sinks, DDL statement sanity, source schema, URL checks at start-up."""
 
 from __future__ import annotations
 
@@ -37,12 +37,10 @@ def test_ddl_runs_once_with_fake_connection():
     assert all(e.startswith("CREATE TABLE IF NOT EXISTS") for e in executed)
 
 
-@pytest.mark.parametrize("source", ["rate", "file"])
-def test_rate_source_schema(spark, tmp_path, source):
-    """Every --source delivers the 12-field transaction DTO, name and
-    type field for field (the rate source's literals are non-nullable,
-    so nullability is not compared). Kafka is not run here: it goes
-    through the same ``parse_transactions`` as ``file``."""
+def test_file_source_schema(spark, tmp_path):
+    """The file source delivers the 12-field transaction DTO, name and
+    type field for field. Kafka is not run here: it goes through the
+    same ``parse_transactions`` as ``file``."""
     import argparse
 
     from flink_ecommerce_spark.schemas import TRANSACTION_SCHEMA
@@ -53,12 +51,27 @@ def test_rate_source_schema(spark, tmp_path, source):
     (src / "part-0.json").write_text(
         "\n".join(r["value"] for r in generator.transactions_as_json(df).collect())
     )
-    args = argparse.Namespace(source=source, rate_rps=10, input_path=str(src))
+    args = argparse.Namespace(source="file", input_path=str(src))
     stream = job_mod.build_source(spark, args)
 
     assert [(f.name, f.dataType) for f in stream.schema.fields] == [
         (f.name, f.dataType) for f in TRANSACTION_SCHEMA.fields
     ]
+
+
+@pytest.mark.parametrize("url", ["duckdb://", "duckdb://:memory:"])
+def test_in_memory_duckdb_url_is_rejected_before_any_query(spark, tmp_path, url):
+    """An in-memory DuckDB is a new, empty database per connection, so
+    the DDL and every sink batch would each see a different one: the
+    job refuses the URL at start-up and starts no query."""
+    src = tmp_path / "in"
+    src.mkdir()
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="needs a file path"):
+        job_mod.main(["--source", "file", "--input-path", str(src),
+                      "--jdbc-url", url, "--checkpoint", str(tmp_path / "ck")])
+    assert {q.id for q in spark.streams.active} == before
+    assert not (tmp_path / "ck").exists()
 
 
 def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
@@ -255,21 +268,25 @@ def test_session_driver_heap_fits_host(spark):
     assert heap <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
-def test_streaming_package_holds_only_what_the_job_imports():
-    """Every module in ``streaming/`` is reachable from ``job.py``,
-    function-level imports included: a streaming operator that no job
-    runs does not belong there. ModuleFinder compiles and scans the
-    sources without running them, and the search path holds only this
-    repository, so no third-party package is read."""
+def test_package_holds_only_what_a_caller_imports():
+    """Every module in the package is reachable, function-level imports
+    included, from one of the five callers that run it: the job, the
+    query CLI, the typed oracle check, the benchmark and the driver
+    contract (all registry queries). A module that only tests reach
+    does not belong in the package. ModuleFinder compiles and scans
+    the sources without running them, and the search path holds only
+    this repository, so no third-party package is read."""
     from modulefinder import ModuleFinder
 
     pkg_dir = Path(job_mod.__file__).parent
-    finder = ModuleFinder(path=[str(pkg_dir.parent)])
-    finder.import_hook(f"{pkg_dir.name}.job")
-    streaming = {
-        f"{pkg_dir.name}.streaming"
-        + ("" if p.stem == "__init__" else f".{p.stem}")
-        for p in (pkg_dir / "streaming").glob("*.py")
+    root, pkg = pkg_dir.parent, pkg_dir.name
+    finder = ModuleFinder(path=[str(root)])
+    for caller in (f"{pkg}.job", f"{pkg}.run", f"{pkg}.typed_check",
+                   "perfbench.run", "__spark_entry__"):
+        finder.import_hook(caller)
+    modules = {
+        ".".join(p.relative_to(root).with_suffix("").parts).removesuffix(".__init__")
+        for p in pkg_dir.rglob("*.py")
     }
-    orphans = sorted(streaming - set(finder.modules))
-    assert not orphans, f"not imported by job.py: {orphans}"
+    orphans = sorted(modules - set(finder.modules))
+    assert not orphans, f"reachable from no caller: {orphans}"

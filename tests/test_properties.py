@@ -6,15 +6,20 @@ run in seconds.
   walk-the-token-stream simulation (the claim that lets the op
   distribute as one window cumsum);
 - merge_upsert_sql applied batch-by-batch through DuckDB == a Python
-  dict upsert (the idempotent-upsert contract every sink shares).
+  dict upsert (the idempotent-upsert contract every sink shares);
+- the portable hash32, int(md5[:8], 16), is identical in Python and
+  DuckDB.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from flink_ecommerce_spark.functions.portable import sql_hash32
 from flink_ecommerce_spark.streaming.sinks import merge_upsert_sql
 
 
@@ -339,3 +344,17 @@ def test_changepoint_statistic_identity(series):
         assert abs(d - t * (n - t) / n * (m_b - m_a)) < 1e-6 * max(
             1.0, abs(s_n)
         )
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(min_size=0, max_size=60))
+def test_portable_hash_matches_python_and_duckdb(s):
+    """hash32 contract: int(md5[:8], 16) identical in python/duckdb
+    (the Spark side is covered by every oracle test using hash32)."""
+    expected = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
+    con = duckdb.connect()
+    got = con.execute(
+        f"SELECT {sql_hash32('s')} FROM (SELECT ? AS s)", [s]
+    ).fetchone()[0]
+    con.close()
+    assert got == expected, repr(s)

@@ -265,3 +265,19 @@ def test_bloom_prefilter_is_scan_shaped(spark):
     )
     assert "Exchange" not in plan
     assert "Join" not in plan
+
+
+def test_checkpoint_leaves_an_unset_aqe_key_unset(spark):
+    """The checkpoints turn AQE off only for their own planning: a key
+    the session never set is unset again afterwards, not pinned to
+    the value it read back."""
+    from flink_ecommerce_spark.operators.scale import checkpoint_partitioned
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        checkpoint_partitioned(spark.range(10), "id")
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, prev)
