@@ -11,27 +11,26 @@ four sink branches → start + awaitTermination. DDL runs once before
 the stream starts (K1 fixed). The ES branch exists but is off by
 default (K7 parity: the reference ships it commented out).
 
-The ``--jdbc-url`` scheme picks the sink, as the reference's one JDBC
-upsert per table writes to whatever database its URL names. Every
-sink table gets one upsert form, ``INSERT .. ON CONFLICT (key) DO
-UPDATE``, applied per micro-batch in one driver-side transaction: the
-raw table keeps the latest row per key, and the three sum tables add
-the batch's sums under an epoch ledger (streaming/sinks.py), so the
-sink tables hold the running sums and the Spark job keeps no keyed
-state:
+Every sink table gets one upsert form, ``INSERT .. ON CONFLICT (key)
+DO UPDATE``, applied per micro-batch by one sink,
+``streaming.sinks.StagedMergeSink``: one Spark action collects the
+batch to the driver as Arrow, and one UTC transaction applies it,
+retried up to the reference's 5 attempts. The raw table keeps the
+latest row per key, and the three sum tables add the batch's sums
+under an epoch ledger, so the sink tables hold the running sums and
+the Spark job keeps no keyed state. The ``--jdbc-url`` scheme picks
+only the database client, as the reference's one JDBC upsert per table writes
+to whatever database its URL names:
 
-- ``duckdb:///path.db`` — an embedded DuckDB file through
-  ``StagedMergeSink``: one Spark action per micro-batch, the batch
-  held in driver memory as Arrow, one set-based statement per batch.
-  The airgapped/demo path; DuckDB is single-writer, so production
-  concurrency belongs to Postgres.
-- anything else — Postgres through ``JdbcUpsertSink``: the batch is
-  collected to the driver, copied into a temporary table with
-  psycopg2 and applied by the same statements.
+- ``duckdb:///path.db`` — an embedded DuckDB file, which scans the
+  Arrow batch in place. The airgapped/demo path; DuckDB is
+  single-writer, so production concurrency belongs to Postgres.
+- anything else — Postgres through psycopg2, which copies the batch
+  into a temporary table first.
 
 The CLI sets no per-batch cap: the first batch after a downtime is
-the whole backlog, and both sinks hold it in driver memory
-(perfbench's ``txn_backlog`` workload measures exactly this case).
+the whole backlog, held in driver memory (perfbench's
+``txn_backlog`` workload measures exactly this case).
 
 With ``--source file`` it replays JSON files through the identical
 dataflow (no Kafka needed). Every ``--source`` delivers the one
@@ -47,7 +46,7 @@ from pyspark.sql import DataFrame
 from .session import get_spark
 from .streaming import ddl
 from .streaming.runner import DEFAULT_TRIGGER_MS, StreamingJob, reference_branches
-from .streaming.sinks import JdbcUpsertSink, StagedMergeSink
+from .streaming.sinks import StagedMergeSink
 
 
 def build_source(spark, args) -> DataFrame:
@@ -66,11 +65,10 @@ def build_source(spark, args) -> DataFrame:
 
 
 def _connection_factory(jdbc_url: str):
-    """DB-API connection factory from a URL, whose scheme also picks
-    the sink (``make_sink_factory``). ``duckdb:///path.db`` targets an
-    embedded DuckDB file — the airgapped path that lets the whole CLI
-    (DDL + StagedMergeSink) run end-to-end without a Postgres;
-    anything else goes to psycopg2 (production, JdbcUpsertSink)."""
+    """DB-API connection factory from a URL: the one thing the URL
+    picks. ``duckdb:///path.db`` targets an embedded DuckDB file — the
+    airgapped path that lets the whole CLI run end-to-end without a
+    Postgres; anything else goes to psycopg2 (production)."""
     if jdbc_url.startswith("duckdb://"):
         # duckdb:///abs/path.db -> "/abs/path.db" (absolute),
         # duckdb://rel.db       -> "rel.db"       (relative, preserved)
@@ -99,17 +97,15 @@ def _connection_factory(jdbc_url: str):
 
 
 def make_sink_factory(args):
-    """Sink per branch, picked by the ``--jdbc-url`` scheme alone: a
-    ``duckdb://`` URL gives ``StagedMergeSink`` (set-based, one Spark
-    action and ONE INSERT .. SELECT .. ON CONFLICT statement per
-    micro-batch; DuckDB's single write lock belongs to the driver),
-    any other URL gives ``JdbcUpsertSink`` (the same statements, run
-    by psycopg2 from the driver). Runs the DDL, the epoch ledger's
-    included, once, here."""
+    """A ``StagedMergeSink`` per branch, on the connection the
+    ``--jdbc-url`` names: one Spark action and ONE INSERT .. SELECT ..
+    ON CONFLICT statement per micro-batch. Runs the DDL, the epoch
+    ledger's included, once, here."""
     factory = _connection_factory(args.jdbc_url)
     ddl.create_sink_tables(factory)  # K1: once, at startup
-    sink = StagedMergeSink if args.jdbc_url.startswith("duckdb://") else JdbcUpsertSink
-    return lambda branch: sink(factory, branch.name, branch.key_cols, branch.sum_col)
+    return lambda branch: StagedMergeSink(
+        factory, branch.name, branch.key_cols, branch.sum_col
+    )
 
 
 def main(argv: list[str] | None = None) -> StreamingJob:

@@ -45,12 +45,9 @@ def get_spark(
         # int64 and convert in catalog.table (Spark has no nanos type)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local fixtures are single small files — split finer so scan
-        # tasks ≈ cores (a cluster with many files keeps the 128m
-        # default; override via SPARK_GRAFT_MAX_PARTITION_BYTES)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
-        )
+        # tasks ≈ cores (a cluster with many files may want the 128m
+        # default back: pass it in extra_conf)
+        .config("spark.sql.files.maxPartitionBytes", "8m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -7,7 +7,8 @@ explicit TRANSACTION_SCHEMA — value-only, latest offsets, same
 topic/group defaults as the reference. The JSON parse happens
 JVM-side inside codegen; a malformed record yields a NULL struct
 (Jackson in the reference would throw — we keep the row with nulls,
-the more stream-robust choice, and expose a strict flag).
+the more stream-robust choice; the job drops rows with a null key
+before its sinks, ``runner._drop_null_keys``).
 
 No broker exists in the test container, so this module only BUILDS
 plans; tests cover the parse path via an in-memory DataFrame of raw
@@ -18,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schemas import TRANSACTION_SCHEMA
 
@@ -26,35 +26,13 @@ DEFAULT_TOPIC = "financial_transactions"  # DataStreamJob.java:88
 DEFAULT_GROUP = "flink-group"  # DataStreamJob.java:92
 
 
-def parse_transactions(raw: DataFrame, value_col: str = "value", strict: bool = False) -> DataFrame:
-    """bytes/string JSON → typed transaction rows (reference S2).
-
-    ``strict=True`` drops rows that fail to parse; default keeps them
-    as all-null rows (Jackson missing-field → null semantics per
-    SURVEY.md §1.2). Malformed detection uses the standard
-    columnNameOfCorruptRecord pattern (from_json yields an all-null
-    struct for bad input, so a plain null-check can't see it)."""
-    if not strict:
-        return raw.select(
-            F.from_json(F.col(value_col).cast("string"), TRANSACTION_SCHEMA).alias("t")
-        ).select("t.*")
-    # NB: StructType.add mutates in place — build a fresh copy instead
-    # of poisoning the shared TRANSACTION_SCHEMA.
-    schema = StructType(
-        list(TRANSACTION_SCHEMA.fields) + [StructField("_corrupt_record", StringType())]
-    )
-    parsed = raw.select(
-        F.from_json(
-            F.col(value_col).cast("string"),
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("t")
-    )
-    return (
-        parsed.filter(F.col("t._corrupt_record").isNull())
-        .select("t.*")
-        .drop("_corrupt_record")
-    )
+def parse_transactions(raw: DataFrame, value_col: str = "value") -> DataFrame:
+    """bytes/string JSON → typed transaction rows (reference S2). A
+    malformed line parses to an all-null row (Jackson missing-field →
+    null semantics per SURVEY.md §1.2)."""
+    return raw.select(
+        F.from_json(F.col(value_col).cast("string"), TRANSACTION_SCHEMA).alias("t")
+    ).select("t.*")
 
 
 def kafka_reader_options(

@@ -2,34 +2,31 @@
 INSERT ... ON CONFLICT upserts, DataStreamJob.java:185-272; retry
 config K6 at :100-104).
 
-The two database sinks take their columns from the batch they are
-given, and the job's ``--jdbc-url`` scheme picks between them
-(``job.make_sink_factory``). Both collect each micro-batch on the
-driver and apply it in one transaction with the same statement
-(``upsert_sql``): the raw ``transactions`` table keeps the latest row
-per key, and each running-sum table (``sum_col``) adds the batch's
-sums to the stored ones — the sink table is the running sum, as the
-reference's Postgres table is. Adding is not idempotent, so a sum
-batch also records ``(table, query id, epoch)`` in the
-``_sink_epochs`` ledger, and an epoch Spark replays after a restart
-changes nothing.
-
-- ``StagedMergeSink`` — the ``duckdb://`` path, exercised in tests
-  against a real engine (DuckDB).
-- ``JdbcUpsertSink`` — the Postgres path (any non-``duckdb://`` URL).
-  The container has no Postgres, so tests drive it through a
-  psycopg2-style wrapper around DuckDB.
+- ``StagedMergeSink`` — the one database sink, for DuckDB and
+  Postgres alike; the job's ``--jdbc-url`` picks only the connection
+  (``job._connection_factory``). It takes its columns from the batch
+  it is given, collects each micro-batch on the driver as Arrow and
+  applies it in one UTC transaction with one statement
+  (``upsert_sql``): the raw ``transactions`` table keeps the latest
+  row per key, and each running-sum table (``sum_col``) adds the
+  batch's sums to the stored ones — the sink table is the running
+  sum, as the reference's Postgres table is. Adding is not
+  idempotent, so a sum batch also records ``(table, query id,
+  epoch)`` in the ``_sink_epochs`` ledger, and an epoch Spark replays
+  after a restart changes nothing. The container has no Postgres, so
+  tests drive the psycopg2 path through a wrapper around DuckDB.
 - ``MemoryUpsertSink`` — a driver-side last-write-wins dict, the
   tests' reference for the raw branch. It has no additive rule: the
   sum tables are checked against the batch ``sales_*_cents`` plans.
 
-Both database sinks hold each batch in driver memory. The job's CLI
+The database sink holds each batch in driver memory. The job's CLI
 sets no per-batch cap, so the first batch after a downtime is the
 whole backlog (perfbench's ``txn_backlog`` workload measures this case).
 """
 
 from __future__ import annotations
 
+import contextlib
 import time
 from collections.abc import Callable, Sequence
 
@@ -92,7 +89,7 @@ def upsert_sql(
     key_cols: Sequence[str],
     sum_col: str | None = None,
 ) -> str:
-    """The one statement both database sinks run to apply ``__batch``
+    """The one statement the database sink runs to apply ``__batch``
     (whose columns, in order, are ``columns``) to ``table``; plain SQL
     that DuckDB and Postgres both accept.
 
@@ -152,24 +149,59 @@ def _record_epoch(cur, param: str, table: str, qid: str, epoch_id: int) -> bool:
     return True
 
 
+# attempts at one batch's transaction, the reference's retry count (K6)
+_ATTEMPTS = 5
+
+
+def _begin_batch(conn, batch, table: str) -> tuple[object, str]:
+    """Pin the session to UTC, open a transaction and make the Arrow
+    ``batch`` readable as ``__batch`` — the one place DuckDB and
+    psycopg2 differ. Returns what to run statements on and its
+    placeholder.
+
+    DuckDB (a connection with ``register``) scans the Arrow table in
+    place. psycopg2 gets a temporary copy, ``CREATE TEMP TABLE .. AS
+    SELECT * FROM <table> LIMIT 0`` (plain SQL, so a DuckDB-backed fake
+    runs it too) filled by one ``executemany``; its first statement
+    opens the transaction, and a rollback drops the copy.
+
+    UTC comes first: Arrow hands timestamps over as UTC instants, and
+    either database would shift them by its session zone on the way
+    into a ``TIMESTAMP`` column."""
+    if hasattr(conn, "register"):
+        conn.execute("SET TimeZone = 'UTC'")
+        conn.register("__batch", batch)
+        conn.begin()
+        return conn, "?"
+    cur = conn.cursor()
+    cur.execute("SET TimeZone = 'UTC'")
+    cur.execute(f"CREATE TEMP TABLE __batch AS SELECT * FROM {table} LIMIT 0")
+    cols = batch.column_names
+    cur.executemany(
+        f"INSERT INTO __batch ({', '.join(cols)}) "
+        f"VALUES ({', '.join(['%s'] * len(cols))})",
+        list(zip(*(c.to_pylist() for c in batch.columns))),
+    )
+    return cur, "%s"
+
+
 class StagedMergeSink:
-    """Set-based batch upsert into DuckDB, the sink a ``duckdb://``
-    ``--jdbc-url`` selects. ``sum_col`` marks a running-sum table
-    (see ``upsert_sql``); the batch's columns, in order, are then the
-    key columns and ``sum_col``, otherwise the table's columns.
+    """Set-based batch upsert, the sink of every ``--jdbc-url``: the
+    connection, DuckDB or psycopg2, is all the URL picks. ``sum_col``
+    marks a running-sum table (see ``upsert_sql``); the batch's
+    columns, in order, are then the key columns and ``sum_col``,
+    otherwise the table's columns.
 
     Per micro-batch:
     1. ONE Spark action: the batch is collected to the driver as an
        Arrow table (``toArrow``), so its plan runs once; an empty batch
        stops here;
-    2. the Arrow table is registered on the DuckDB connection as
-       ``__batch`` and, in one transaction, a sum table's epoch is
-       recorded in the ledger (a replay rolls back here) and ONE
-       ``upsert_sql`` statement ingests the batch.
+    2. in one transaction on one connection (``_begin_batch``), a sum
+       table's epoch is recorded in the ledger (a replay rolls back
+       here) and ONE ``upsert_sql`` statement applies ``__batch``.
 
-    ``connection_factory`` returns a DuckDB connection, whose
-    ``TimeZone`` is pinned to UTC so Arrow's UTC timestamps land
-    unshifted in ``TIMESTAMP`` columns."""
+    A failed attempt is rolled back whole and the transaction retried,
+    up to ``_ATTEMPTS`` times with a growing pause."""
 
     def __init__(
         self,
@@ -189,88 +221,27 @@ class StagedMergeSink:
         if batch.num_rows == 0:
             return
         sql = upsert_sql(self.table, batch.column_names, self.key_cols, self.sum_col)
-        conn = self.connection_factory()
-        try:
-            conn.execute("SET TimeZone = 'UTC'")
-            conn.register("__batch", batch)
-            conn.begin()
-            if self.sum_col and not _record_epoch(
-                conn, "?", self.table, _query_id(batch_df), epoch_id
-            ):
-                conn.rollback()
-                return
-            conn.execute(sql)
-            conn.commit()
-        finally:
-            conn.close()
-
-    def foreach_batch(self) -> Callable[[DataFrame, int], None]:
-        return self.write_batch
-
-
-class JdbcUpsertSink:
-    """Per-batch upsert through a psycopg2 (``%s`` paramstyle)
-    connection: the Postgres path, which any non-``duckdb://``
-    ``--jdbc-url`` selects. Same SQL and ledger as StagedMergeSink,
-    in one driver-side transaction per micro-batch:
-
-    1. the batch is collected to the driver; an empty one stops here;
-    2. a sum table's epoch is recorded in the ledger (a replay rolls
-       back here, before any copying);
-    3. ``CREATE TEMP TABLE __batch AS SELECT * FROM <table> LIMIT 0``
-       (plain SQL, so a DuckDB-backed fake runs it too) and one
-       ``executemany`` copy the rows into it by column name;
-       ``upsert_sql`` applies the batch, and the transaction commits.
-
-    A failed attempt is rolled back — the temporary table with it —
-    and the whole transaction retried, up to ``max_retries`` attempts
-    (the reference's 5, K6)."""
-
-    def __init__(
-        self,
-        connection_factory: Callable[[], object],
-        table: str,
-        key_cols: Sequence[str],
-        sum_col: str | None = None,
-        max_retries: int = 5,
-    ):
-        self.connection_factory = connection_factory
-        self.table = table
-        self.key_cols = tuple(key_cols)
-        self.sum_col = sum_col
-        self.max_retries = max_retries
-
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        rows = [tuple(r) for r in batch_df.collect()]
-        if not rows:
-            return
-        columns = batch_df.columns
         qid = _query_id(batch_df)
-        copy = (
-            f"INSERT INTO __batch ({', '.join(columns)}) "
-            f"VALUES ({', '.join(['%s'] * len(columns))})"
-        )
-        sql = upsert_sql(self.table, columns, self.key_cols, self.sum_col)
         conn = self.connection_factory()
         try:
-            for attempt in range(self.max_retries):
+            for attempt in range(_ATTEMPTS):
                 try:
-                    cur = conn.cursor()
+                    cur, param = _begin_batch(conn, batch, self.table)
                     if self.sum_col and not _record_epoch(
-                        cur, "%s", self.table, qid, epoch_id
+                        cur, param, self.table, qid, epoch_id
                     ):
                         conn.rollback()
                         return
-                    cur.execute(
-                        f"CREATE TEMP TABLE __batch AS SELECT * FROM {self.table} LIMIT 0"
-                    )
-                    cur.executemany(copy, rows)
                     cur.execute(sql)
                     conn.commit()
                     return
                 except Exception:
-                    conn.rollback()
-                    if attempt == self.max_retries - 1:
+                    # DuckDB refuses a rollback with no open transaction,
+                    # as after its "Failed to commit" (a concurrent writer
+                    # inserted the same key first; the retry upserts it)
+                    with contextlib.suppress(Exception):
+                        conn.rollback()
+                    if attempt == _ATTEMPTS - 1:
                         raise
                     time.sleep(0.2 * (attempt + 1))
         finally:

@@ -76,8 +76,8 @@ def test_in_memory_duckdb_url_is_rejected_before_any_query(spark, tmp_path, url)
 
 def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
     """The airgapped CLI path: file source → four branches → DuckDB
-    file. The duckdb:// URL alone picks StagedMergeSink for every
-    branch, so only the driver opens the file: executors that opened
+    file. Every branch gets a StagedMergeSink on the duckdb:// URL's
+    connection, so only the driver opens the file: executors that opened
     it themselves would fail on DuckDB's single write lock. DDL runs at
     start-up, every table fills, and totals are conserved across
     branches."""

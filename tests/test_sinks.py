@@ -1,10 +1,13 @@
 """Upsert sink tests: SQL shape (reference K2-K5), idempotence, the
-additive sums under the epoch ledger, and the JDBC sink's driver-side
-transaction and retries (K6) through a psycopg2-style wrapper around
-DuckDB — no Postgres in the container.
+additive sums under the epoch ledger, and the one database sink's
+transaction and retries (K6) on DuckDB and through a psycopg2-style
+wrapper around DuckDB — no Postgres in the container.
 """
 
 from __future__ import annotations
+
+import datetime as dt
+import time
 
 import duckdb
 import pytest
@@ -14,8 +17,9 @@ from flink_ecommerce_spark.plans import sales
 from flink_ecommerce_spark.streaming import ddl
 from flink_ecommerce_spark.streaming.runner import reference_branches
 from flink_ecommerce_spark.streaming.sinks import (
-    JdbcUpsertSink,
     MemoryUpsertSink,
+    StagedMergeSink,
+    merge_upsert_sql,
     upsert_sql,
 )
 
@@ -102,6 +106,14 @@ class _PsycopgOverDuckDB:
         self.con.close()
 
 
+def _connect(kind, db):
+    """A connection factory over ``db``: DuckDB itself, or psycopg2 as
+    the stand-in plays it."""
+    if kind == "duckdb":
+        return lambda: duckdb.connect(db)
+    return lambda: _PsycopgOverDuckDB(db)
+
+
 def _sink_db(tmp_path):
     db = str(tmp_path / "sink.duckdb")
     ddl.create_sink_tables(lambda: duckdb.connect(db))
@@ -128,15 +140,13 @@ def _day_cents(df):
 
 
 def test_jdbc_upsert_writes_all_rows(spark, tmp_path):
-    """The raw table receives every row and a sum table the exact
-    integer-cent sums, through the driver-side temporary-table copy."""
+    """Through psycopg2, the raw table receives every row and a sum
+    table the exact integer-cent sums, by the temporary-table copy."""
     db = _sink_db(tmp_path)
     df = generator.transactions(spark, n_rows=500, seed=13)
     for name in ("transactions", "sales_per_category"):
         b = _branch(name)
-        sink = JdbcUpsertSink(
-            lambda: _PsycopgOverDuckDB(db), b.name, b.key_cols, b.sum_col
-        )
+        sink = StagedMergeSink(_connect("psycopg", db), b.name, b.key_cols, b.sum_col)
         sink.write_batch(b.plan(df), 0)
     con = duckdb.connect(db)
     ids = con.execute("SELECT count(DISTINCT transaction_id) FROM transactions").fetchone()
@@ -158,21 +168,22 @@ def test_jdbc_upsert_retries_then_succeeds(spark, tmp_path):
     db = _sink_db(tmp_path)
     df = generator.transactions(spark, n_rows=50, seed=17)
     b = _branch("sales_per_day")
-    sink = JdbcUpsertSink(
-        lambda: _PsycopgOverDuckDB(db, fail_commits=2),
-        b.name, b.key_cols, b.sum_col, max_retries=5,
+    sink = StagedMergeSink(
+        lambda: _PsycopgOverDuckDB(db, fail_commits=2), b.name, b.key_cols, b.sum_col
     )
     sink.write_batch(b.plan(df), 0)
     assert _sums(db, "sales_per_day") == _day_cents(df)
 
 
 def test_jdbc_upsert_exhausted_retries_raise(spark, tmp_path):
+    """Every attempt fails: the last failure is raised, and nothing of
+    the batch or its epoch is left behind."""
     db = _sink_db(tmp_path)
     df = generator.transactions(spark, n_rows=20, seed=19)
     b = _branch("sales_per_day")
-    sink = JdbcUpsertSink(
+    sink = StagedMergeSink(
         lambda: _PsycopgOverDuckDB(db, fail_commits=10**9),
-        b.name, b.key_cols, b.sum_col, max_retries=2,
+        b.name, b.key_cols, b.sum_col,
     )
     with pytest.raises(RuntimeError, match="transient failure"):
         sink.write_batch(b.plan(df), 0)
@@ -184,19 +195,14 @@ def test_jdbc_upsert_exhausted_retries_raise(spark, tmp_path):
 
 @pytest.mark.parametrize("kind", ["staged", "jdbc"])
 def test_sum_sink_adds_each_epoch_once(spark, tmp_path, kind):
-    """Both database sinks: a replayed epoch leaves the sums as they
-    are, and the next epoch, even with the same rows, adds to them."""
-    from flink_ecommerce_spark.streaming.sinks import StagedMergeSink
-
+    """Both connections (DuckDB, psycopg2): a replayed epoch leaves the
+    sums as they are, and the next epoch, even with the same rows, adds
+    to them."""
     db = _sink_db(tmp_path)
     df = generator.transactions(spark, n_rows=200, seed=23)
     b = _branch("sales_per_day")
-    if kind == "staged":
-        sink = StagedMergeSink(lambda: duckdb.connect(db), b.name, b.key_cols, b.sum_col)
-    else:
-        sink = JdbcUpsertSink(
-            lambda: _PsycopgOverDuckDB(db), b.name, b.key_cols, b.sum_col
-        )
+    connect = _connect("duckdb" if kind == "staged" else "psycopg", db)
+    sink = StagedMergeSink(connect, b.name, b.key_cols, b.sum_col)
     once = _day_cents(df)
     sink.write_batch(b.plan(df), 0)
     sink.write_batch(b.plan(df), 0)  # the same epoch, replayed
@@ -209,12 +215,7 @@ def test_sum_sink_adds_each_epoch_once(spark, tmp_path, kind):
     assert _sums(db, "sales_per_day") == cents
 
 
-# ---- staged set-based upsert sink (real engine: DuckDB) ----------------
-
-from flink_ecommerce_spark.streaming.sinks import (  # noqa: E402
-    StagedMergeSink,
-    merge_upsert_sql,
-)
+# ---- the set-based upsert sink on either connection --------------------
 
 
 def test_merge_upsert_sql_dialects():
@@ -230,8 +231,6 @@ def test_merge_upsert_sql_dialects():
 
 
 def test_staged_merge_final_state_matches_memory_sink(spark, tmp_path):
-    import duckdb
-
     db = str(tmp_path / "merge.duckdb")
     con = duckdb.connect(db)
     con.execute(
@@ -266,14 +265,13 @@ def test_staged_merge_final_state_matches_memory_sink(spark, tmp_path):
     assert merged == expected and len(merged) > 0
 
 
-def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path):
-    import duckdb
-
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path, kind):
     db = str(tmp_path / "dup.duckdb")
     con = duckdb.connect(db)
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE, ts BIGINT)")
     con.close()
-    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
+    sink = StagedMergeSink(_connect(kind, db), "kv", ["k"])
     batch = spark.createDataFrame(
         [(1, 10.0, 100), (1, 99.0, 200), (2, 5.0, 50)], "k long, v double, ts long"
     )
@@ -299,17 +297,16 @@ def test_merge_upsert_sql_all_key_columns_insert_only():
         assert "DO UPDATE" not in sql, sql
 
 
-def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path, kind):
     """foreachBatch may redeliver an epoch after a failure; re-merging
     the same rows must land in the same final state — the at-least-once + idempotent-upsert contract
     the reference relies on (checkpointing off, DataStreamJob.java)."""
-    import duckdb
-
     db = str(tmp_path / "retry.duckdb")
     con = duckdb.connect(db)
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
     con.close()
-    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
+    sink = StagedMergeSink(_connect(kind, db), "kv", ["k"])
     batch = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double")
     sink.write_batch(batch, 7)
     sink.write_batch(batch, 7)  # redelivery of the same epoch
@@ -319,16 +316,15 @@ def test_staged_merge_epoch_retry_is_idempotent(spark, tmp_path):
     assert rows == {1: 1.0, 2: 2.0}
 
 
-def test_staged_merge_skips_empty_batch(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_staged_merge_skips_empty_batch(spark, tmp_path, kind):
     """foreachBatch routinely delivers empty micro-batches; the sink
     must not touch the target table for one."""
-    import duckdb
-
     db = str(tmp_path / "empty.duckdb")
     con = duckdb.connect(db)
     con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE)")
     con.close()
-    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
+    sink = StagedMergeSink(_connect(kind, db), "kv", ["k"])
     empty = spark.createDataFrame([], "k long, v double")
     sink.write_batch(empty, 0)  # must not raise
     con = duckdb.connect(db)
@@ -336,13 +332,13 @@ def test_staged_merge_skips_empty_batch(spark, tmp_path):
     con.close()
 
 
-def test_staged_merge_computes_batch_once(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_staged_merge_computes_batch_once(spark, tmp_path, kind):
     """One Spark action per micro-batch: every row passes through the
     batch's plan exactly once (no separate emptiness probe, no second
     pass for the write). The plan's Python UDF appends one byte per
     evaluation to a file. An accumulator cannot see a second pass:
     Spark left it at n for a sink that ran the UDF 2n times."""
-    import duckdb
     from pyspark.sql import functions as F
 
     db = str(tmp_path / "once.duckdb")
@@ -361,7 +357,7 @@ def test_staged_merge_computes_batch_once(spark, tmp_path):
     batch = spark.range(n).where(F.udf(keep, "boolean")("id")).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
-    sink = StagedMergeSink(lambda: duckdb.connect(db), "kv", ["k"])
+    sink = StagedMergeSink(_connect(kind, db), "kv", ["k"])
     sink.write_batch(batch, 0)
     with open(evals) as f:
         assert len(f.read()) == n
@@ -370,14 +366,16 @@ def test_staged_merge_computes_batch_once(spark, tmp_path):
     con.close()
 
 
-def test_staged_merge_keeps_utc_timestamps_on_any_host_zone(spark, tmp_path):
-    """Arrow hands Spark timestamps over as UTC instants; DuckDB would
-    cast them into a TIMESTAMP column through its session TimeZone,
-    which follows the host. The sink pins UTC, so 00:30 UTC stays
-    00:30 even on a connection that defaults to New York time."""
-    import datetime as dt
-
-    import duckdb
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_staged_merge_keeps_utc_timestamps_on_any_host_zone(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A Python process and a database session both on New York time:
+    00:30 UTC is still stored as 00:30. Arrow hands Spark timestamps
+    over as UTC instants, whatever the process zone, and the sink pins
+    the session to UTC, through which either database casts them into
+    a TIMESTAMP column. (Rows collected as Python objects carry the
+    process's local time instead: 2023-12-31 19:30.)"""
     from pyspark.sql import functions as F
 
     db = str(tmp_path / "tz.duckdb")
@@ -386,10 +384,10 @@ def test_staged_merge_keeps_utc_timestamps_on_any_host_zone(spark, tmp_path):
     con.close()
 
     def connect_new_york():
+        c = _connect(kind, db)()
         # DuckDB 1.0 rejects TimeZone in connect(config=...); SET is the
         # same session setting
-        c = duckdb.connect(db)
-        c.execute("SET TimeZone = 'America/New_York'")
+        (c if kind == "duckdb" else c.con).execute("SET TimeZone = 'America/New_York'")
         return c
 
     sink = StagedMergeSink(connect_new_york, "ts_kv", ["k"])
@@ -397,7 +395,13 @@ def test_staged_merge_keeps_utc_timestamps_on_any_host_zone(spark, tmp_path):
     batch = spark.range(1).select(
         F.col("id").alias("k"), F.timestamp_seconds(F.lit(1704069000)).alias("ts")
     )
-    sink.write_batch(batch, 0)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        sink.write_batch(batch, 0)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
     con = duckdb.connect(db)
     stored = con.execute("SELECT ts FROM ts_kv").fetchone()[0]
     con.close()

@@ -143,15 +143,17 @@ def test_json_roundtrip_preserves_schema(spark):
         assert a[k] == b[k]
 
 
-def test_malformed_json_null_vs_strict(spark):
+def test_malformed_json_parses_to_all_null_row(spark):
+    """A malformed line is kept as a row of nulls (the job's sinks drop
+    it by its null key); a well-formed one beside it parses as usual."""
     from flink_ecommerce_spark.sources.kafka import parse_transactions
 
     rows = [("{not json",), ('{"transactionId": "t1", "totalAmount": 5.0}',)]
     raw = spark.createDataFrame(rows, ["value"])
-    lenient = parse_transactions(raw).collect()
-    assert len(lenient) == 2  # malformed kept as all-null row
-    strict = parse_transactions(raw, strict=True).collect()
-    assert len(strict) == 1 and strict[0]["transactionId"] == "t1"
+    parsed = parse_transactions(raw).collect()
+    assert len(parsed) == 2
+    assert all(v is None for v in parsed[0])
+    assert parsed[1]["transactionId"] == "t1" and parsed[1]["totalAmount"] == 5.0
 
 
 def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_path):
