@@ -5,11 +5,17 @@
         --source kafka --kafka-servers broker:9092 \
         --jdbc-url postgresql://... [--enable-es --es-url http://es:9200]
 
+The command blocks while the job runs, as the reference's
+``env.execute()`` does: the first query to stop or fail stops the
+others and ends it, raising the failure. Every query triggers every
+200 ms (``runner.TRIGGER_MS``, the reference's flush interval).
+
 Lifecycle parity (SURVEY.md §3): build session → load config (CLI
 args ≈ the reference's ParameterTool) → declare source → attach the
-four sink branches → start + awaitTermination. DDL runs once before
-the stream starts (K1 fixed). The ES branch exists but is off by
-default (K7 parity: the reference ships it commented out).
+four sink branches → start (``start``) + awaitTermination (``main``).
+DDL runs once before the stream starts (K1 fixed). The ES branch
+exists but is off by default (K7 parity: the reference ships it
+commented out).
 
 Every sink table gets one upsert form, ``INSERT .. ON CONFLICT (key)
 DO UPDATE``, applied per micro-batch by one sink,
@@ -45,7 +51,7 @@ from pyspark.sql import DataFrame
 
 from .session import get_spark
 from .streaming import ddl
-from .streaming.runner import DEFAULT_TRIGGER_MS, StreamingJob, reference_branches
+from .streaming.runner import TRIGGER_MS, StreamingJob, reference_branches
 from .streaming.sinks import StagedMergeSink
 
 
@@ -108,7 +114,10 @@ def make_sink_factory(args):
     )
 
 
-def main(argv: list[str] | None = None) -> StreamingJob:
+def start(argv: list[str] | None = None) -> StreamingJob:
+    """Everything ``main`` does before it blocks: session, source, DDL,
+    sinks and every query started (the ES one too, with
+    ``--enable-es``). Returns the running job."""
     p = argparse.ArgumentParser(description="e-commerce streaming analytics job")
     p.add_argument("--source", choices=["kafka", "file"], default="kafka")
     p.add_argument("--kafka-servers", default="localhost:9092")
@@ -116,10 +125,8 @@ def main(argv: list[str] | None = None) -> StreamingJob:
     p.add_argument("--input-path", help="for --source file")
     p.add_argument("--jdbc-url", default="postgresql://localhost/ecommerce")
     p.add_argument("--checkpoint", default="/tmp/flink_ecommerce_spark_ckpt")
-    p.add_argument("--trigger-ms", type=int, default=DEFAULT_TRIGGER_MS)
     p.add_argument("--enable-es", action="store_true")
     p.add_argument("--es-url", default="http://localhost:9200")
-    p.add_argument("--await", dest="await_termination", action="store_true")
     args = p.parse_args(argv)
 
     spark = get_spark("flink-ecommerce-spark-job")
@@ -127,13 +134,11 @@ def main(argv: list[str] | None = None) -> StreamingJob:
     # before this job; forget those, before any of the job's starts
     spark.streams.resetTerminated()
     source = build_source(spark, args)
-    branches = reference_branches()
     job = StreamingJob(
         source=source,
         sink_factory=make_sink_factory(args),
-        branches=branches,
+        branches=reference_branches(),
         checkpoint_root=args.checkpoint,
-        trigger_ms=args.trigger_ms,
     ).start()
 
     if args.enable_es:  # K7: opt-in, mirrors the reference's disabled sink
@@ -143,22 +148,26 @@ def main(argv: list[str] | None = None) -> StreamingJob:
         q = (
             source.writeStream.outputMode("append")
             .queryName("es_transactions")
-            .trigger(processingTime=f"{args.trigger_ms} milliseconds")
+            .trigger(processingTime=f"{TRIGGER_MS} milliseconds")
             .option("checkpointLocation", f"{args.checkpoint}/es")
             .foreachBatch(es.foreach_batch())
             .start()
         )
         job.queries.append(q)
-
-    if args.await_termination:
-        # the first query to stop or fail ends the job: the others are
-        # stopped, and a failure is raised, rather than the job running
-        # on with one table no longer updated
-        try:
-            spark.streams.awaitAnyTermination()
-        finally:
-            job.stop()
     return job
+
+
+def main(argv: list[str] | None = None) -> None:
+    """Start the job and block while it runs, as the reference's
+    ``env.execute()`` does (DataStreamJob.java:169)."""
+    job = start(argv)
+    # the first query to stop or fail ends the job: the others are
+    # stopped, and a failure is raised, rather than the job running
+    # on with one table no longer updated
+    try:
+        job.source.sparkSession.streams.awaitAnyTermination()
+    finally:
+        job.stop()
 
 
 if __name__ == "__main__":

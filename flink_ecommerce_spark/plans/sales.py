@@ -196,9 +196,10 @@ def category_stats_int(
     category_col: str = "productCategory",
     amount_col: str = "totalAmount",
 ) -> DataFrame:
-    """``category_stats`` under the integer contract: money as
-    per-row cents (sum/min/max commute with the monotonic per-row
-    quantization), the mean as the integer mean of PER-ROW micro
+    """Multi-aggregate per category — count / sum / avg / min / max,
+    the registry's ``category_stats`` — under the integer contract:
+    money as per-row cents (sum/min/max commute with the monotonic
+    per-row quantization), the mean as the integer mean of PER-ROW micro
     units — quantize before the sum, so the reported mean never rides
     the partial-sum order of a double AVG (the r08 ADVICE residual
     class). Amounts are strictly positive by the generator contract,
@@ -218,22 +219,6 @@ def category_stats_int(
         ),
         F.min("__c").alias("min_sale_cents"),
         F.max("__c").alias("max_sale_cents"),
-    )
-
-
-def category_stats(
-    df: DataFrame,
-    category_col: str = "productCategory",
-    amount_col: str = "totalAmount",
-) -> DataFrame:
-    """Multi-aggregate per category: count / sum / avg / min / max.
-    One shuffle, all five aggregates share the partial-agg pass."""
-    return df.groupBy(F.col(category_col).alias("category")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(amount_col), 2).alias("total_sales"),
-        F.round(F.avg(amount_col), 6).alias("avg_sale"),
-        F.round(F.min(amount_col), 2).alias("min_sale"),
-        F.round(F.max(amount_col), 2).alias("max_sale"),
     )
 
 

@@ -63,49 +63,18 @@ def asof_join_last_click(events: DataFrame) -> DataFrame:
     )
 
 
-def interval_join_click_purchase(events: DataFrame, window_hours: int = 1) -> DataFrame:
+def interval_join_click_purchase_cents(
+    events: DataFrame, window_hours: int = 1
+) -> DataFrame:
     """Interval join (Flink's interval-join shape): every (click,
     purchase) pair of the same user where the purchase lands within
     ``window_hours`` after the click. In batch this is an equi-join
     on user_id with a range predicate — one shuffle, and the range
-    filter runs during the join. The same plan works stream-stream
-    with watermarks on both sides (tests/test_stream_joins.py)."""
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return clicks.join(
-        purchases,
-        (clicks.user_id == purchases.user_id)
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {window_hours} HOURS")
-        ),
-    ).select(
-        clicks.user_id.alias("user_id"),
-        "click_id",
-        "click_ts",
-        "purchase_id",
-        F.round("purchase_value", 2).alias("purchase_value"),
-    )
-
-
-def interval_join_click_purchase_cents(
-    events: DataFrame, window_hours: int = 1
-) -> DataFrame:
-    """``interval_join_click_purchase`` under the integer output
-    contract (COVERAGE.md "Oracle encoding rule"): the money column
-    ships as per-row integer cents (floor(value·100 + 0.5) BIGINT)
-    instead of ROUND(double, 2). Same one-shuffle equi-join with the
-    range predicate evaluated during the join."""
+    filter runs during the join; tests/test_stream_joins.py runs the
+    same shape stream-stream with watermarks on both sides. Under the
+    integer output contract (COVERAGE.md "Oracle encoding rule") the
+    money column ships as per-row integer cents (floor(value·100 +
+    0.5) BIGINT)."""
     from ..functions.portable import micro
 
     clicks = events.filter(F.col("event_type") == "click").select(
@@ -617,7 +586,7 @@ def linear_attribution(events: DataFrame, window_hours: int = 1) -> DataFrame:
 
     Shape: one equi-join on user_id with the range predicate running
     inside the join (same interval-join shape as
-    ``interval_join_click_purchase``), then two aggregations keyed by
+    ``interval_join_click_purchase_cents``), then two aggregations keyed by
     purchase — the per-purchase touch split is a window SUM over the
     already-aggregated (purchase, channel) frame, so the wide event
     rows never sort, only the counts do. Money rounded to 2dp at the

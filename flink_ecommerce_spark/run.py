@@ -12,7 +12,9 @@ engine is runnable without writing a driver program —
     python -m flink_ecommerce_spark.run bm25_topk --out /tmp/hits.parquet
 
 Output goes to stdout as a show() table (default), one JSON line per
-row (``--json``), or a parquet directory (``--out``).
+row (``--json``), or a parquet directory (``--out``). The session is
+``session.get_spark``'s, so ``SPARK_GRAFT_CPUS`` sets the core count
+(default 32).
 """
 
 from __future__ import annotations
@@ -21,6 +23,8 @@ import argparse
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import get_spark
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -36,7 +40,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--json", action="store_true", help="JSON lines output")
     p.add_argument("--out", help="write result parquet to this path")
     p.add_argument("--limit", type=int, default=20, help="show() row cap")
-    p.add_argument("--cpus", type=int, default=8, help="local[N] cores")
     return p
 
 
@@ -91,13 +94,9 @@ def main(argv: list[str] | None = None) -> None:
     if not args.queries and not args.sql:
         build_parser().print_help()
         raise SystemExit(2)
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("flink-ecommerce-spark-run")
-        .config("spark.sql.shuffle.partitions", str(args.cpus * 2))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "flink-ecommerce-spark-run",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     try:
         results = list(resolve(spark, args.sf, args))

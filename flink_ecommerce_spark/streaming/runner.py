@@ -14,7 +14,7 @@ compare each sum table with the batch ``sales_per_*_cents`` plans,
 and perfbench with its DuckDB stream oracle.
 
 Reference-vs-us deliberate deltas (SURVEY.md §7):
-- checkpointing ON (reference never enabled it),
+- checkpointing always on (reference never enabled it),
 - one-time DDL at startup, not per-batch (fixes K1),
 - aggregation keys = full sink upsert keys (fixes Q1/Q2).
 """
@@ -30,7 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans import sales
 
-DEFAULT_TRIGGER_MS = 200  # reference flush interval, DataStreamJob.java:102
+TRIGGER_MS = 200  # reference flush interval, DataStreamJob.java:102
 
 
 @dataclass
@@ -102,31 +102,33 @@ def _drop_null_keys(
 class StreamingJob:
     """Assembled job: start()/stop()/process_available() over all
     branches. ``sink_factory(branch)`` returns an object with a
-    ``foreach_batch()`` callable (see streaming/sinks.py)."""
+    ``foreach_batch()`` callable (see streaming/sinks.py).
+
+    ``checkpoint_root`` is required: each branch's checkpoint keeps its
+    query id and the files or offsets its source has read. Without it a
+    restart would get a new query id and re-read every input, and the
+    epoch ledger would add the sums a second time."""
 
     source: DataFrame
     sink_factory: Callable[[Branch], object]
     branches: list[Branch]
-    checkpoint_root: str | None = None
-    trigger_ms: int = DEFAULT_TRIGGER_MS
-    queries: list[StreamingQuery] = field(default_factory=list)
-    sinks: dict[str, object] = field(default_factory=dict)
+    checkpoint_root: str
+    queries: list[StreamingQuery] = field(init=False, default_factory=list)
+    sinks: dict[str, object] = field(init=False, default_factory=dict)
 
     def start(self) -> "StreamingJob":
         for branch in self.branches:
             sink = self.sink_factory(branch)
             self.sinks[branch.name] = sink
-            writer = (
+            query = (
                 branch.plan(self.source)
                 .writeStream.queryName(branch.name)
-                .trigger(processingTime=f"{self.trigger_ms} milliseconds")
+                .trigger(processingTime=f"{TRIGGER_MS} milliseconds")
+                .option("checkpointLocation", f"{self.checkpoint_root}/{branch.name}")
                 .foreachBatch(sink.foreach_batch())
+                .start()
             )
-            if self.checkpoint_root:
-                writer = writer.option(
-                    "checkpointLocation", f"{self.checkpoint_root}/{branch.name}"
-                )
-            self.queries.append(writer.start())
+            self.queries.append(query)
         return self
 
     def process_available(self) -> None:

@@ -68,8 +68,8 @@ def test_in_memory_duckdb_url_is_rejected_before_any_query(spark, tmp_path, url)
     src.mkdir()
     before = {q.id for q in spark.streams.active}
     with pytest.raises(ValueError, match="needs a file path"):
-        job_mod.main(["--source", "file", "--input-path", str(src),
-                      "--jdbc-url", url, "--checkpoint", str(tmp_path / "ck")])
+        job_mod.start(["--source", "file", "--input-path", str(src),
+                       "--jdbc-url", url, "--checkpoint", str(tmp_path / "ck")])
     assert {q.id for q in spark.streams.active} == before
     assert not (tmp_path / "ck").exists()
 
@@ -90,7 +90,7 @@ def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
     generator.transactions_as_json(df).coalesce(2).write.mode("overwrite").text(src)
     db = str(tmp_path / "job.duckdb")
 
-    job = job_mod.main(
+    job = job_mod.start(
         [
             "--source", "file",
             "--input-path", src,
@@ -131,8 +131,8 @@ def _write_input(spark, path, n_rows, seed):
 
 
 def _run_cli(args):
-    """``job.main`` drained and stopped; the queries, for their progress."""
-    job = job_mod.main(args)
+    """``job.start`` drained and stopped; the queries, for their progress."""
+    job = job_mod.start(args)
     try:
         job.process_available()
         assert [q.name for q in job.queries if q.exception() is not None] == []
@@ -212,12 +212,13 @@ def test_new_checkpoint_epoch_zero_is_added(spark, tmp_path):
     assert epochs == (2, 0)
 
 
-def test_await_ends_when_any_query_fails(spark, tmp_path):
-    """``--await`` ends the job when any one query fails, not only the
-    first: the failure is raised and the other queries are stopped.
-    ``sales_per_month`` (not the first query) is made to fail by a
-    CHECK its first batch violates; the job runs in a thread, bounded
-    by a join timeout."""
+def test_main_blocks_until_any_query_fails(spark, tmp_path):
+    """``main`` blocks while the job runs, as the reference's
+    ``env.execute()`` does, and returns only when a query ends: when
+    any one query fails, not only the first, the failure is raised and
+    the other queries are stopped. ``sales_per_month`` (not the first
+    query) is made to fail by a CHECK its first batch violates; the job
+    runs in a thread, bounded by a join timeout."""
     import threading
 
     import duckdb
@@ -237,9 +238,9 @@ def test_await_ends_when_any_query_fails(spark, tmp_path):
         try:
             job_mod.main(["--source", "file", "--input-path", src,
                           "--jdbc-url", f"duckdb://{db}",
-                          "--checkpoint", str(tmp_path / "ck"), "--await"])
+                          "--checkpoint", str(tmp_path / "ck")])
             outcome["returned"] = True
-        except Exception as e:  # the failure --await must raise
+        except Exception as e:  # the failure main must raise
             outcome["raised"] = e
 
     t = threading.Thread(target=run, daemon=True)
@@ -252,7 +253,7 @@ def test_await_ends_when_any_query_fails(spark, tmp_path):
         for q in spark.streams.active:
             q.stop()
         t.join(timeout=60)
-    assert ended, "--await kept blocking after sales_per_month failed"
+    assert ended, "main kept blocking after sales_per_month failed"
     assert "sales_per_month" in str(outcome.get("raised")), outcome
     assert still_active == []
 
