@@ -7,6 +7,3 @@
   higher-order functions (JVM-side, whole-stage-codegen'd — no Python
   in the hot path).
 """
-
-from .portable import hash32, sql_hash32  # noqa: F401
-from .vector import cosine_sim, dot, l2_norm  # noqa: F401

@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import dot  # noqa: F401  (re-exported convenience)
 
 DEFAULT_K = 8
 DEFAULT_ITER = 5

@@ -19,7 +19,7 @@ Scale notes (100 TB):
 - the plain n-gram Jaccard all-shared-shingle join is the exact
   baseline; at 100 TB you'd only run it on LSH candidates (which is
   exactly what lsh_candidate_pairs does).
-- SimHash pairs join on width-sized bands (simhash_plan_for pins
+- SimHash pairs join on ``band_bits``-wide bands (wider bands bound
   bucket occupancy as the corpus grows), hamming filter after —
   never all-pairs.
 - the exact n-gram Jaccard join caps shingle document frequency
@@ -38,7 +38,7 @@ from .textprep import shingles_from_words, words
 NUM_HASHES = 16  # MinHash signature length
 NUM_BANDS = 4  # LSH bands (rows per band = NUM_HASHES // NUM_BANDS)
 SIMHASH_BITS = 64  # fingerprint width (two 32-bit halves, engine-portable)
-SIMHASH_BAND_BITS = 8  # default band width; see simhash_plan_for
+SIMHASH_BAND_BITS = 8  # default band width; see simhash_near_pairs
 JACCARD_THRESHOLD = 0.2
 HAMMING_MAX = 6
 # Shingles appearing in more than this fraction of documents are
@@ -287,12 +287,11 @@ def lsh_candidate_pairs(
     candidates, exact shingle Jaccard verifies. Output matches
     ngram_jaccard_pairs' schema restricted to LSH-surfaced pairs.
 
-    ``(num_hashes, num_bands)`` sets the candidate S-curve — size it
-    with ``minhash_plan_for(target_jaccard)`` so the banding's
-    inflection matches the similarity the pipeline actually hunts
-    (the shipped defaults are the planner's answer at 0.7; a 0.5
-    fuzzy-dup sweep gets (8, 4), a 0.9 precision pass (16, 2) —
-    candidate volume moves accordingly, pinned in tests).
+    ``(num_hashes, num_bands)`` sets the candidate S-curve, whose
+    inflection sits near t = (1/b)^(1/r) with r = num_hashes /
+    num_bands: the shipped (16, 4) puts it at ≈0.71; (8, 4) suits a
+    0.5 fuzzy-dup sweep, (16, 2) a 0.9 precision pass — candidate
+    volume moves accordingly, pinned in tests.
 
     Reuse discipline: the band table feeds BOTH sides of the self-join
     and the shingle table feeds three joins — each is materialized
@@ -386,31 +385,6 @@ def dedup_clusters(documents: DataFrame, threshold: float = JACCARD_THRESHOLD) -
     )
 
 
-def simhash_plan_for(
-    corpus_size: int, target_bucket_rows: int = 1024
-) -> tuple[int, int]:
-    """Scale-aware (band_bits, n_bands) for ``simhash_near_pairs`` —
-    the same occupancy-pinning discipline as similarity.lsh_plan_for.
-
-    The band self-join costs Σ(bucket size²); a band of ``w`` bits has
-    2^w buckets, so a FIXED w means the expected per-band bucket holds
-    n/2^w docs and the pair count grows quadratically with corpus
-    size. Pick the smallest w ∈ {8, 16, 32} with 2^w ≥ corpus_size /
-    target_bucket_rows (widths that divide 32 so a band never
-    straddles the hi/lo fingerprint halves). Fewer, wider bands trade
-    recall for cost: the pigeonhole guarantee covers hamming <
-    n_bands (= SIMHASH_BITS / w)."""
-    import math
-
-    need = math.ceil(
-        math.log2(max(corpus_size, 1) / target_bucket_rows)
-    ) if corpus_size > target_bucket_rows else 0
-    for w in (8, 16, 32):
-        if w >= need:
-            return w, SIMHASH_BITS // w
-    return 32, SIMHASH_BITS // 32
-
-
 def simhash(documents: DataFrame) -> DataFrame:
     """64-bit SimHash per document, carried as two 32-bit halves
     (simhash_hi = bits 32-63, simhash_lo = bits 0-31): per-token
@@ -487,11 +461,11 @@ def simhash_near_pairs(
     Recall guarantee (pigeonhole): with B = SIMHASH_BITS/band_bits
     bands, a pair at hamming distance < B MUST share an untouched
     band. At the 8-bit default B = 8 > HAMMING_MAX, so recall is
-    EXACT for the shipped threshold. At scale, size the band width
-    with ``simhash_plan_for(corpus_size)`` — 16-bit bands give 65k
-    buckets (bounded self-join cost) at B = 4 bands, making hamming
-    4..max_hamming best-effort: the standard LSH cost/recall
-    tradeoff, now an explicit knob instead of a fixed constant."""
+    EXACT for the shipped threshold. At scale, widen the bands —
+    16-bit bands give 65k buckets (bounded self-join cost) at B = 4
+    bands, making hamming 4..max_hamming best-effort: the standard
+    LSH cost/recall tradeoff, an explicit knob instead of a fixed
+    constant."""
     assert SIMHASH_BITS % band_bits == 0 and band_bits in (8, 16, 32)
     sh = simhash(documents).localCheckpoint(eager=True)
     mask = (1 << band_bits) - 1
@@ -1497,30 +1471,13 @@ def lsh_recall_report(
     )
 
 
-RECALL_SAMPLE_TARGET_DOCS = 10_000
-
-
-def recall_sample_mod_for(
-    n_docs: int, target_docs: int = RECALL_SAMPLE_TARGET_DOCS
-) -> int:
-    """Deterministic 1-in-``mod`` sampling rate for the recall meter:
-    the smallest modulus that brings the exact-truth side under
-    ``target_docs`` documents. The exact prefix join's measured curve
-    is ≈ n^1.5 (exact_pairs_plan_for), so capping its INPUT caps the
-    meter's cost at any corpus size — the planner moves with the
-    corpus, the meter's budget doesn't."""
-    import math
-
-    return max(1, math.ceil(n_docs / max(1, target_docs)))
-
-
 def lsh_recall_sampled(
     documents: DataFrame,
     threshold: float = PREFIX_JOIN_THRESHOLD,
     sample_mod: int = 2,
 ) -> DataFrame:
-    """The recall meter that stays usable ABOVE the
-    ``exact_pairs_plan_for`` crossover: exact truth is computed only
+    """The recall meter that stays usable on corpora too large for
+    the exact prefix join: exact truth is computed only
     over a deterministic portable-hash sample of documents
     (hash32(doc_id) % sample_mod == 0 — the same hash-ordered
     uniform-sampling primitive as ``kmv_sample``), so the meter's
@@ -1534,7 +1491,7 @@ def lsh_recall_sampled(
     sampled pairs estimates corpus recall without bias. The report
     carries its own evidence count (``n_true_sample``) so a consumer
     can judge the estimate's weight; ``lsh_recall_report`` remains
-    the lossless test oracle below the crossover.
+    the lossless test oracle on small corpora.
 
     Output contract (COVERAGE.md encoding rule): one row
     (n_docs_sampled, sample_mod, n_true_sample, n_lsh_sample,
@@ -1569,101 +1526,6 @@ def lsh_recall_sampled(
             ).alias("recall_micro"),
         )
     )
-
-
-def minhash_candidate_prob(
-    jaccard: float, num_bands: int, rows_per_band: int
-) -> float:
-    """P(two docs become an LSH candidate pair | their true Jaccard):
-    1 - (1 - s^r)^b — the banding S-curve (Leskovec/Rajaraman/Ullman,
-    Mining of Massive Datasets §3.4)."""
-    return 1.0 - (1.0 - jaccard**rows_per_band) ** num_bands
-
-
-EXACT_PAIRS_MAX_DOCS = 30_000
-
-
-def exact_pairs_plan_for(
-    n_docs: int, max_docs: int = EXACT_PAIRS_MAX_DOCS
-) -> dict:
-    """Strategy planner for the all-true-pairs similarity join — the
-    fourth plan-for-scale planner next to ``minhash_plan_for`` /
-    ``lsh_plan_for`` / ``simhash_plan_for``, enforcing the crossover
-    VERDICT r05 #5 asked for.
-
-    ``prefix_jaccard_pairs`` is LOSSLESS but its output (and verify
-    stage) is inherently super-linear in dense near-dup clusters:
-    measured 2.8 s at 5k docs → 95.5 s at 50k (≈34× for 10×,
-    exponent ≈1.5 — BENCH_DETAIL rehearsal_10x). Extrapolating that
-    curve, a 60 s single-stage budget is exhausted near ~37k docs, so
-    the default crossover is 30k: below it pipelines get the exact
-    join; above it they MUST take ``lsh_candidate_pairs`` (linear in
-    banded candidates) and meter the loss with ``lsh_recall_report``
-    (both externally certified). The loss is explicit, never silent:
-    the planner's answer carries the meter's name.
-
-    Returns {"strategy": "prefix_jaccard" | "lsh_candidates",
-    "n_docs", "crossover", "loss_meter", "meter_sample_mod"} —
-    loss_meter is None on the exact side. Above the crossover the
-    meter is the SAMPLED one: the lossless ``lsh_recall_report``'s
-    truth side is itself the exact prefix join, so at 100× the meter
-    would blow any budget while the thing it meters stays linear
-    (VERDICT r06 #5); ``lsh_recall_sampled`` pins the truth side to
-    ``recall_sample_mod_for(n_docs)`` docs instead."""
-    if n_docs <= max_docs:
-        return {
-            "strategy": "prefix_jaccard",
-            "n_docs": n_docs,
-            "crossover": max_docs,
-            "loss_meter": None,
-            "meter_sample_mod": None,
-        }
-    return {
-        "strategy": "lsh_candidates",
-        "n_docs": n_docs,
-        "crossover": max_docs,
-        "loss_meter": "lsh_recall_sampled",
-        "meter_sample_mod": recall_sample_mod_for(n_docs),
-    }
-
-
-def minhash_plan_for(
-    target_jaccard: float = 0.7, max_hashes: int = 256
-) -> tuple[int, int]:
-    """Scale-aware (num_hashes, num_bands) for the MinHash LSH dedup
-    family — the third leg of the plan-for-scale planners next to
-    ``lsh_plan_for`` (hyperplane ANN) and ``simhash_plan_for``.
-
-    The banding S-curve has its inflection near t = (1/b)^(1/r):
-    pairs with Jaccard above t are likely candidates, below it
-    unlikely. Shipping fixed (b, r) means shipping a fixed similarity
-    threshold — the planner inverts that: given the threshold the
-    pipeline wants (e.g. 0.7 near-dup vs 0.5 fuzzy-dup sweeps), pick
-    the divisor pair whose inflection lands closest, preferring the
-    SHORTEST signature on ties (signature width is per-corpus-row
-    storage and per-row compute; unlike bucket-count planners there
-    is no corpus-size term here, because band buckets live in a
-    2^32r key space — occupancy never saturates the way 2^P
-    hyperplane buckets do; hot buckets come from true duplicate mass,
-    which is exactly what the candidate stage should surface).
-
-    The shipped defaults (NUM_HASHES=16, NUM_BANDS=4 → r=4,
-    t ≈ 0.707) are this planner's answer for target 0.7 (pinned in
-    tests)."""
-    best: tuple[float, int, int] | None = None
-    n = 8
-    while n <= max_hashes:
-        for b in range(1, n + 1):
-            if n % b:
-                continue
-            r = n // b
-            t = (1.0 / b) ** (1.0 / r) if b > 1 else 1.0
-            key = (abs(t - target_jaccard), n, b)
-            if best is None or key < best:
-                best = key
-        n *= 2
-    assert best is not None
-    return best[1], best[2]
 
 
 def dup_rate_by_source(documents: DataFrame) -> DataFrame:
@@ -1706,8 +1568,8 @@ def lsh_candidate_precision(
     Jaccard >= ``threshold``. The complement of ``lsh_recall_report``
     / ``lsh_recall_sampled`` — recall says what the banding misses,
     precision says what the verify stage pays to throw away, and the
-    two together are the full operating point of the
-    ``minhash_plan_for`` S-curve. Output: (n_candidates, n_verified,
+    two together are the full operating point of the banding
+    S-curve. Output: (n_candidates, n_verified,
     precision_u) with precision in integer micro-units.
 
     Integer contract: the verify compare is the exact rational

@@ -1,11 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads + typed
 metadata, with Arrow-batched (mapInPandas) decode/feature-extract.
 
-The container has no image/audio codecs, so the decode step is a
+There are no image/audio codecs here, so the decode step is a
 clearly-marked STUB: ``decode_features`` computes deterministic fake
-features from the payload bytes (oracle-checkable arithmetic), and
-``decode_real`` raises NotImplementedError naming the codec you'd
-plug in. Everything Spark-side — schema, binary column handling,
+features from the payload bytes (oracle-checkable arithmetic); a
+real codec (PIL, ffmpeg) would replace ``_fake_decode``. Everything
+Spark-side — schema, binary column handling,
 mapInPandas batch iteration, partitioning — is real and tested.
 
 Scale notes: payloads travel as parquet binary columns; mapInPandas
@@ -107,55 +107,6 @@ def multimodal_frames(documents: DataFrame) -> DataFrame:
         "doc_id",
         "frame_idx",
         (F.col("frame_idx") * F.col("frame_stride")).alias("frame_offset"),
-    )
-
-
-def decode_real(with_payload: DataFrame) -> DataFrame:
-    """Real image decode: identical Arrow-batched plumbing to
-    decode_features, but the per-batch body opens each payload with
-    PIL and emits true (width, height) plus n_frames (animated
-    formats report their frame count; stills are 1). Gated on PIL
-    being importable — this container ships without codecs, so the
-    deterministic stub (decode_features) carries the oracle and this
-    path raises with instructions until PIL is installed."""
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is None:
-        raise NotImplementedError(
-            "general image decode requires PIL (pip install pillow); this "
-            "container has no codec libraries — for PNG and baseline-JPEG "
-            "payloads use media_ahash_real / decode_luma (pure-stdlib "
-            "reference decoders, real end-to-end); for other formats use "
-            "decode_features (deterministic stub), whose Spark-side "
-            "plumbing is identical"
-        )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        from PIL import Image
-
-        for pdf in batches:
-            widths, heights, frames, sizes = [], [], [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload)
-                sizes.append(len(raw))
-                with Image.open(io.BytesIO(raw)) as im:
-                    widths.append(im.width)
-                    heights.append(im.height)
-                    frames.append(int(getattr(im, "n_frames", 1)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": pd.Series(sizes, dtype="int32"),
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "n_frames": pd.Series(frames, dtype="int32"),
-                }
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        decode, schema=FEATURE_SCHEMA
     )
 
 
@@ -322,10 +273,10 @@ def media_ahash_pairs(
     must share an untouched band — at 8-bit bands B = 8 > 7, so
     recall is EXACT for the shipped threshold. Scale knob: 8-bit
     bands give 256 buckets per band, so at large corpora hot buckets
-    form from true perceptual-dup mass — size the width with
-    ``dedup.simhash_plan_for(corpus_size)`` exactly as the simhash
-    family does (wider bands bound the self-join; recall beyond the
-    pigeonhole bound is then metered, not assumed)."""
+    form from true perceptual-dup mass — widen ``band_bits`` exactly
+    as for ``dedup.simhash_near_pairs`` (wider bands bound the
+    self-join; recall beyond the pigeonhole bound is then metered,
+    not assumed)."""
     assert 64 % band_bits == 0 and band_bits in (8, 16, 32)
     sh = media_ahash(documents).localCheckpoint(eager=True)
     mask = (1 << band_bits) - 1
@@ -370,519 +321,4 @@ def media_ahash_pairs(
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# ------------------------------------------------------------------ PNG
-# One real codec, zero dependencies (VERDICT r08 #6): PNG is a public
-# spec (RFC 2083 / W3C PNG) whose baseline decode needs only zlib —
-# already in the stdlib. This closes the media-codec boundary honestly
-# for ONE actual format; JPEG/video stay behind decode_real's
-# documented NotImplementedError (their codecs aren't in stdlib).
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def decode_png(raw: bytes) -> tuple[int, int, list[list[int]]]:
-    """Pure-stdlib baseline PNG decode → (width, height, luma grid).
-
-    Supports 8-bit depth, color types 0 (gray), 2 (RGB), 3 (palette),
-    4 (gray+alpha), 6 (RGBA), non-interlaced — the baseline every PNG
-    encoder can emit. Interlaced (Adam7) and 16-bit files raise: this
-    is a correctness-first reference decoder for the aHash path, not
-    a general codec (swap in PIL for production throughput — the
-    mapInPandas plumbing in media_ahash_png is identical either way).
-
-    Luma is integer Rec.601: (299·R + 587·G + 114·B) DIV 1000 — pure
-    integer arithmetic so the downstream hash is engine- and
-    platform-exact. Alpha is ignored (aHash keys on luminance
-    structure).
-    """
-    import struct
-    import zlib
-
-    if raw[:8] != _PNG_SIG:
-        raise ValueError("not a PNG (bad signature)")
-    pos = 8
-    idat = bytearray()
-    plte: bytes | None = None
-    w = h = depth = color = interlace = None
-    while pos + 8 <= len(raw):
-        (ln,), typ = struct.unpack(">I", raw[pos : pos + 4]), raw[pos + 4 : pos + 8]
-        pos += 8
-        data = raw[pos : pos + ln]
-        pos += ln + 4  # payload + CRC (CRC not verified: reference decoder)
-        if typ == b"IHDR":
-            w, h, depth, color, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-        elif typ == b"PLTE":
-            plte = bytes(data)
-        elif typ == b"IDAT":
-            idat += data
-        elif typ == b"IEND":
-            break
-    if w is None:
-        raise ValueError("PNG missing IHDR")
-    if depth != 8:
-        raise NotImplementedError(f"PNG bit depth {depth} (only 8 supported)")
-    if interlace != 0:
-        raise NotImplementedError("interlaced (Adam7) PNG not supported")
-    if color not in _PNG_CHANNELS:
-        raise NotImplementedError(f"PNG color type {color}")
-    if color == 3 and plte is None:
-        raise ValueError("palette PNG missing PLTE")
-    ch = _PNG_CHANNELS[color]
-    stride = w * ch
-    dec = zlib.decompress(bytes(idat))
-    if len(dec) != (stride + 1) * h:
-        raise ValueError("PNG IDAT length mismatch")
-    # per-row unfilter (spec §6): each row leads with its filter byte
-    rows: list[bytearray] = []
-    prev = bytearray(stride)
-    i = 0
-    for _y in range(h):
-        f = dec[i]
-        i += 1
-        row = bytearray(dec[i : i + stride])
-        i += stride
-        if f == 1:  # Sub
-            for x in range(ch, stride):
-                row[x] = (row[x] + row[x - ch]) & 0xFF
-        elif f == 2:  # Up
-            for x in range(stride):
-                row[x] = (row[x] + prev[x]) & 0xFF
-        elif f == 3:  # Average
-            for x in range(stride):
-                a = row[x - ch] if x >= ch else 0
-                row[x] = (row[x] + ((a + prev[x]) >> 1)) & 0xFF
-        elif f == 4:  # Paeth
-            for x in range(stride):
-                a = row[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = prev[x - ch] if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[x] = (row[x] + pr) & 0xFF
-        elif f != 0:
-            raise ValueError(f"bad PNG filter byte {f}")
-        rows.append(row)
-        prev = row
-    luma: list[list[int]] = []
-    for row in rows:
-        lr: list[int] = []
-        for x in range(w):
-            o = x * ch
-            if color == 0 or color == 4:
-                lr.append(row[o])
-            elif color == 3:
-                pi = row[o] * 3
-                r, g, b = plte[pi], plte[pi + 1], plte[pi + 2]
-                lr.append((299 * r + 587 * g + 114 * b) // 1000)
-            else:  # 2 or 6
-                r, g, b = row[o], row[o + 1], row[o + 2]
-                lr.append((299 * r + 587 * g + 114 * b) // 1000)
-        luma.append(lr)
-    return w, h, luma
-
-
-def ahash64_from_luma(luma: list[list[int]], w: int, h: int) -> int:
-    """64-bit average hash from a luma grid: 8×8 integer mean
-    downsample, bit i set where 64·cell_i ≥ Σcells — EXACTLY the
-    integer thresholding rule of the stub ``media_ahash`` expression
-    (no division by 64, integer cell means), so the banding /
-    hamming / pairs machinery downstream is representation-agnostic
-    between the stub and this real decode path."""
-    cells: list[int] = []
-    for gy in range(8):
-        y0, y1 = (gy * h) // 8, ((gy + 1) * h) // 8
-        if y1 <= y0:
-            y1 = min(h, y0 + 1)
-        for gx in range(8):
-            x0, x1 = (gx * w) // 8, ((gx + 1) * w) // 8
-            if x1 <= x0:
-                x1 = min(w, x0 + 1)
-            s = 0
-            n = 0
-            for y in range(y0, y1):
-                lr = luma[y]
-                for x in range(x0, x1):
-                    s += lr[x]
-                    n += 1
-            cells.append(s // n if n else 0)
-    tot = sum(cells)
-    bits = 0
-    for i, c in enumerate(cells):
-        if 64 * c >= tot:
-            bits |= 1 << i
-    return bits
-
-
-def media_ahash_png(with_payload: DataFrame) -> DataFrame:
-    """(doc_id, ahash_hi, ahash_lo) — the REAL-codec twin of
-    ``media_ahash``: identical output schema and bit packing, but the
-    cell intensities come from an actual PNG decode (stdlib zlib)
-    instead of the text stub. Arrow-batched mapInPandas, payloads
-    never shuffle — the same scale shape as every decode path in
-    this module. Feed its output anywhere media_ahash's goes (the
-    banding pairs logic is representation-agnostic)."""
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            his: list[int] = []
-            los: list[int] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, luma = decode_png(bytes(payload))
-                bits = ahash64_from_luma(luma, w, h)
-                ids.append(int(doc_id))
-                his.append((bits >> 32) & 0xFFFFFFFF)
-                los.append(bits & 0xFFFFFFFF)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "ahash_hi": pd.Series(his, dtype="int64"),
-                    "ahash_lo": pd.Series(los, dtype="int64"),
-                }
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        body, schema="doc_id long, ahash_hi long, ahash_lo long"
-    )
-
-
-# ------------------------------------------------------------------ JPEG
-# Second real codec, zero dependencies: baseline sequential JPEG
-# (ITU-T T.81 / ISO 10918-1, a public spec) needs no external library
-# at all — Huffman entropy decode + dequantize + 8×8 IDCT are plain
-# arithmetic (numpy for the IDCT matrix product). Together with
-# decode_png this makes media_ahash_real end-to-end for the two
-# formats that dominate web-crawl image payloads; progressive JPEG
-# (SOF2) and exotic SOFs stay behind an explicit NotImplementedError.
-
-_JPEG_ZIGZAG = [  # zig-zag index -> (row-major) position, T.81 Fig. 5
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-
-def _jpeg_huffman(bits: bytes, vals: bytes) -> dict[tuple[int, int], int]:
-    """Canonical JPEG Huffman table (T.81 Annex C): codes are assigned
-    in value order, increasing by code length, doubling the running
-    code at each length step. Keyed (length, code) -> symbol."""
-    table: dict[tuple[int, int], int] = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            table[(ln, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-class _JpegBitReader:
-    """MSB-first reader over entropy-coded scan bytes: un-stuffs the
-    0x00 after 0xFF (T.81 §B.1.1.5) and stops at any real marker; a
-    restart marker is consumed (byte-aligned) via restart()."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read_bit(self) -> int:
-        d, p = self.data, self.pos
-        if self.bit == 0:
-            if d[p] == 0xFF:
-                nxt = d[p + 1]
-                if nxt == 0x00:
-                    pass  # stuffed 0xFF data byte; skipped on advance
-                else:
-                    raise ValueError(f"marker 0xFF{nxt:02X} inside scan")
-        b = (d[p] >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 2 if d[p] == 0xFF else 1
-        return b
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def decode_symbol(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in JPEG scan")
-
-    def restart(self) -> None:
-        """Byte-align and consume an RSTn marker (T.81 §E.2.4)."""
-        if self.bit != 0:
-            self.bit = 0
-            self.pos += 2 if self.data[self.pos] == 0xFF else 1
-        if not (
-            self.data[self.pos] == 0xFF
-            and 0xD0 <= self.data[self.pos + 1] <= 0xD7
-        ):
-            raise ValueError("expected JPEG restart marker")
-        self.pos += 2
-
-
-def _jpeg_extend(bits_val: int, t: int) -> int:
-    """DC/AC magnitude-category decode (T.81 Table F.2 EXTEND): the
-    t-bit field encodes [−(2^t−1), −2^(t−1)] ∪ [2^(t−1), 2^t−1]."""
-    if t == 0:
-        return 0
-    return bits_val if bits_val >= (1 << (t - 1)) else bits_val - ((1 << t) - 1)
-
-
-def _idct_matrix():
-    """A[u, x] = C(u)/2 · cos((2x+1)uπ/16), so pixels = Aᵀ·F·A gives
-    T.81's f(x,y) = ¼ ΣΣ C(u)C(v) F(u,v) cos·cos."""
-    import math
-
-    import numpy as np
-
-    a = np.empty((8, 8))
-    for u in range(8):
-        cu = (1.0 / math.sqrt(2.0)) if u == 0 else 1.0
-        for x in range(8):
-            a[u, x] = 0.5 * cu * math.cos((2 * x + 1) * u * math.pi / 16.0)
-    return a
-
-
-def decode_jpeg(raw: bytes) -> tuple[int, int, list[list[int]]]:
-    """Pure-stdlib(+numpy) baseline JPEG decode → (width, height,
-    luma grid).
-
-    Supports baseline and extended sequential Huffman JPEG (SOF0/
-    SOF1): grayscale or YCbCr, any h×v subsampling (4:4:4, 4:2:2,
-    4:2:0, …), restart intervals (DRI/RSTn), multiple DQT/DHT
-    segments, 16-bit quant tables. Progressive (SOF2), arithmetic
-    coding, lossless and hierarchical SOFs raise NotImplementedError.
-
-    Only the Y component is dequantized and inverse-transformed —
-    chroma blocks are entropy-decoded solely to advance the bitstream
-    (the MCU stream interleaves components, T.81 §A.2.3), then
-    dropped: the aHash path keys on luminance alone, and this skips
-    2/3 of the IDCT work at 4:4:4 (more at 4:2:0 it's ~1/2). When Y
-    is not the full-resolution component (nonstandard files) the luma
-    plane is nearest-neighbor expanded to (width, height).
-
-    This is a correctness-first reference decoder, like decode_png:
-    per-payload Python cost is fine at the documented Arrow batch
-    boundary; swap in a native codec for production throughput — the
-    media_ahash_real plumbing is identical either way."""
-    import struct
-
-    try:
-        return _decode_jpeg_impl(raw)
-    except (IndexError, struct.error) as e:  # ran off the bitstream
-        raise ValueError(f"truncated or corrupt JPEG ({e})") from e
-
-
-def _decode_jpeg_impl(raw: bytes) -> tuple[int, int, list[list[int]]]:
-    import struct
-
-    import numpy as np
-
-    if raw[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qt: dict[int, list[int]] = {}
-    hdc: dict[int, dict[tuple[int, int], int]] = {}
-    hac: dict[int, dict[tuple[int, int], int]] = {}
-    restart_interval = 0
-    frame = None  # (w, h, comps) with comps: [(cid, hs, vs, tq)]
-    scan = None  # ([(comp_index, td, ta)], data_start)
-    while pos + 4 <= len(raw):
-        if raw[pos] != 0xFF:
-            raise ValueError("bad JPEG marker sync")
-        m = raw[pos + 1]
-        if m == 0xD9:  # EOI
-            break
-        (seg_len,) = struct.unpack(">H", raw[pos + 2 : pos + 4])
-        body = raw[pos + 4 : pos + 2 + seg_len]
-        if m == 0xDB:  # DQT — possibly several tables per segment
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0xF
-                i += 1
-                if pq:
-                    qt[tq] = [
-                        struct.unpack(">H", body[i + 2 * k : i + 2 * k + 2])[0]
-                        for k in range(64)
-                    ]
-                    i += 128
-                else:
-                    qt[tq] = list(body[i : i + 64])
-                    i += 64
-        elif m == 0xC4:  # DHT — possibly several tables per segment
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0xF
-                bits = body[i + 1 : i + 17]
-                n = sum(bits)
-                vals = body[i + 17 : i + 17 + n]
-                (hdc if tc == 0 else hac)[th] = _jpeg_huffman(bits, vals)
-                i += 17 + n
-        elif m == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif m in (0xC0, 0xC1):  # SOF0 baseline / SOF1 extended seq.
-            _prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            comps = []
-            for c in range(nc):
-                cid, hv, tq_ = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0xF, tq_))
-            frame = (w, h, comps)
-        elif m in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                   0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG SOF marker 0xFF{m:02X} (progressive/arithmetic/"
-                "lossless) — only baseline/extended sequential Huffman "
-                "(SOF0/SOF1) is supported"
-            )
-        elif m == 0xDA:  # SOS
-            ns = body[0]
-            sel = []
-            for s in range(ns):
-                cs, tt = body[1 + 2 * s], body[2 + 2 * s]
-                sel.append((cs, tt >> 4, tt & 0xF))
-            scan = (sel, pos + 2 + seg_len)
-            break
-        # APPn / COM / anything else: skip
-        pos += 2 + seg_len
-    if frame is None or scan is None:
-        raise ValueError("JPEG missing SOF/SOS")
-    w, h, comps = frame
-    sel, data_start = scan
-    by_id = {cid: (ci, hs, vs, tq_) for ci, (cid, hs, vs, tq_) in enumerate(comps)}
-    # scan-ordered component plan: (is_luma, hs, vs, quant, dc_tbl, ac_tbl)
-    plan = []
-    y_index = None
-    for cs, td, ta in sel:
-        ci, hs, vs, tq_ = by_id[cs]
-        is_luma = ci == 0  # T.81 orders Y first; grayscale has only Y
-        if is_luma:
-            y_index = len(plan)
-        plan.append((is_luma, hs, vs, qt[tq_], hdc[td], hac[ta]))
-    if y_index is None:
-        raise ValueError("JPEG scan without a luma component")
-    hmax = max(p[1] for p in plan)
-    vmax = max(p[2] for p in plan)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    _, hy, vy, qy, _, _ = plan[y_index]
-    yw, yh = mcux * hy * 8, mcuy * vy * 8  # padded Y plane
-    yplane = np.empty((yh, yw), dtype=np.int16)
-    qy_dz = np.zeros(64)
-    for zz, q in enumerate(qy):
-        qy_dz[_JPEG_ZIGZAG[zz]] = q
-    qy_dz = qy_dz.reshape(8, 8)
-    a_mat = _idct_matrix()
-    reader = _JpegBitReader(raw, data_start)
-    pred = [0] * len(plan)
-    coef = np.zeros(64)
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                reader.restart()
-                pred = [0] * len(plan)
-            mcu_count += 1
-            for pi, (is_luma, hs, vs, q, dct, act) in enumerate(plan):
-                for by in range(vs):
-                    for bx in range(hs):
-                        t = reader.decode_symbol(dct)
-                        pred[pi] += _jpeg_extend(reader.read_bits(t), t)
-                        if is_luma:
-                            coef[:] = 0.0
-                            coef[0] = pred[pi]
-                        k = 1
-                        while k < 64:
-                            rs = reader.decode_symbol(act)
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r == 15:  # ZRL: 16 zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            v = _jpeg_extend(reader.read_bits(s), s)
-                            if is_luma and k < 64:
-                                coef[_JPEG_ZIGZAG[k]] = v
-                            k += 1
-                        if not is_luma:
-                            continue
-                        f = coef.reshape(8, 8)
-                        block = a_mat.T @ (f * qy_dz) @ a_mat
-                        px = np.clip(np.round(block) + 128, 0, 255)
-                        oy = (my * vy + by) * 8
-                        ox = (mx * hy + bx) * 8
-                        yplane[oy : oy + 8, ox : ox + 8] = px.astype(np.int16)
-    # crop (and, for nonstandard sub-resolution Y, expand) to (w, h)
-    nat_w = (w * hy + hmax - 1) // hmax
-    nat_h = (h * vy + vmax - 1) // vmax
-    yplane = yplane[:nat_h, :nat_w]
-    if (nat_w, nat_h) != (w, h):
-        xs = (np.arange(w) * nat_w) // w
-        ys = (np.arange(h) * nat_h) // h
-        yplane = yplane[np.ix_(ys, xs)]
-    return w, h, [[int(v) for v in row] for row in yplane]
-
-
-def decode_luma(raw: bytes) -> tuple[int, int, list[list[int]]]:
-    """Magic-dispatched real decode: PNG (stdlib zlib) or baseline
-    JPEG (pure arithmetic) → (width, height, luma grid). Other
-    formats raise ValueError naming the leading bytes."""
-    if raw[:8] == _PNG_SIG:
-        return decode_png(raw)
-    if raw[:2] == b"\xff\xd8":
-        return decode_jpeg(raw)
-    raise ValueError(
-        f"unsupported image format (leading bytes {raw[:4]!r}); real "
-        "decode supports PNG and baseline JPEG — use decode_features "
-        "for the deterministic stub path"
-    )
-
-
-def media_ahash_real(with_payload: DataFrame) -> DataFrame:
-    """(doc_id, ahash_hi, ahash_lo) — media_ahash over REAL payloads
-    in either supported format (PNG or baseline JPEG), dispatched per
-    payload by magic bytes. Same Arrow-batched mapInPandas shape and
-    bit packing as media_ahash_png; payloads never shuffle."""
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            his: list[int] = []
-            los: list[int] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, luma = decode_luma(bytes(payload))
-                bits = ahash64_from_luma(luma, w, h)
-                ids.append(int(doc_id))
-                his.append((bits >> 32) & 0xFFFFFFFF)
-                los.append(bits & 0xFFFFFFFF)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "ahash_hi": pd.Series(his, dtype="int64"),
-                    "ahash_lo": pd.Series(los, dtype="int64"),
-                }
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        body, schema="doc_id long, ahash_hi long, ahash_lo long"
     )

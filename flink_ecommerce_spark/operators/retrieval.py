@@ -20,9 +20,9 @@ Scale notes (100 TB):
   (term, doc_id, pos) — the inverted-index shape. Adjacency is an
   equi-join on (doc_id, pos±j), never a string scan. For a standing
   corpus you'd persist `build_postings` bucketed by term
-  (`operators/scale.py::write_bucketed`) so every phrase query prunes
-  to its terms' buckets; here the postings are built inline from the
-  same scan-side term filter.
+  (`DataFrameWriter.bucketBy`) so every phrase query prunes to its
+  terms' buckets; here the postings are built inline from the same
+  scan-side term filter.
 - Corpus scalars (N, avgdl) are one-row aggregates broadcast into the
   scoring join — the standard tiny-side crossJoin(broadcast(...))
   discipline used repo-wide.

@@ -1,4 +1,4 @@
-"""Scale utilities: skew-salted joins and bucketed table layout.
+"""Scale utilities: skew-salted joins and small-input parallelism.
 
 These are the knobs a 100 TB deployment turns when the defaults
 (AQE skew-join splitting, sort-merge) aren't enough:
@@ -10,9 +10,6 @@ These are the knobs a 100 TB deployment turns when the defaults
   runtime; explicit salting is for when you know the hot key ahead
   of time (e.g. the null/default-tenant key) and want deterministic
   layout.
-- ``write_bucketed`` / co-located reads: pre-shuffle a fact table
-  into N buckets by join key at write time, so every later join/agg
-  on that key skips its Exchange entirely.
 """
 
 from __future__ import annotations
@@ -60,22 +57,6 @@ def salted_join(
     )
     out = fact_salted.join(dim_salted, on=[key, "__salt"], how=how)
     return out.drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    n_buckets: int = 32,
-    sort_by: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
-    Later equi-joins/aggs on ``key`` between tables bucketed the same
-    way run shuffle-free (SortMergeJoin without Exchange)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table_name)
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -1013,25 +1013,6 @@ SEMDEDUP_THRESHOLD = 0.95
 SEMDEDUP_PREFILTER_DIMS = 16
 
 
-def semdedup_bits_for(
-    corpus_size: int, n_base_cells: int, target_cell_rows: int = 1024
-) -> int:
-    """How many LSH sub-bucket bits ``semantic_dedup`` needs so the
-    expected cell stays ~target_cell_rows as the corpus grows: with
-    fixed base cells the within-cell pair cost is quadratic in corpus
-    size; each extra bit halves the expected cell. The same occupancy
-    pinning as ``lsh_plan_for`` / ``simhash_plan_for``, applied to
-    the SemDeDup cluster count (the paper's answer is 'use more
-    k-means clusters'; the deterministic analog is label cell ×
-    hyperplane sub-bucket)."""
-    import math
-
-    expected = corpus_size / max(n_base_cells, 1)
-    if expected <= target_cell_rows:
-        return 0
-    return math.ceil(math.log2(expected / target_cell_rows))
-
-
 def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = SEMDEDUP_THRESHOLD,
@@ -1080,8 +1061,9 @@ def semantic_dedup(
     bounded recall loss: a true near-dup pair splits sub-buckets only
     when some plane passes between the two vectors, probability
     ≈ bits·θ/π per pair with θ = arccos(threshold) (≈ bits·10% at
-    0.95) — same pigeonhole argument as the banded SimHash. Size it
-    with ``semdedup_bits_for``. The default 0 is the exact,
+    0.95) — same pigeonhole argument as the banded SimHash. Each
+    extra bit halves the expected cell, so ⌈log2(cell rows / target
+    rows)⌉ bits pin occupancy. The default 0 is the exact,
     oracle-certified path."""
     assign, _ = build_ivf_index(embeddings)
     cell = F.col("cell")

@@ -322,47 +322,15 @@ def top_bigrams(documents: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k terms per document by tf-idf (ln-scaled idf, raw tf).
-
-    Classic IR pipeline as three hash-partitioned aggregations:
-    term counts per doc (tf), document frequency per term (df), and
-    a broadcast-joined score. Deterministic tie-break on the term
-    string. idf = ln(N / df) with N = corpus size."""
-    from pyspark.sql import Window
-
-    toks = documents.select(
-        "doc_id", F.explode(words("text")).alias("term")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = documents.select(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
-        tf.join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn(
-            "tfidf",
-            F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("tfidf"), F.asc("term")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("doc_id", "term", "tf", "tfidf", F.col("rk").alias("rk"))
-    )
-
-
 def tfidf_top_terms_int(documents: DataFrame, k: int = 3) -> DataFrame:
-    """``tfidf_top_terms`` under the integer output contract: the
-    score ships as ``tfidf_micro`` = floor(tfidf·1e6 + 0.5) BIGINT
-    and the per-doc rank orders on that integer (same 1e-6
-    granularity as the legacy ROUND ordering, so ties and rank are
-    engine-stable by construction). Same plan shape: two
-    hash-partitioned aggregations + broadcast joins + per-doc
-    row_number."""
+    """Top-k terms per document by tf-idf (ln-scaled idf, raw tf)
+    under the integer output contract: idf = ln(N / df) with N the
+    corpus size, the score ships as ``tfidf_micro`` =
+    floor(tfidf·1e6 + 0.5) BIGINT and the per-doc rank orders on that
+    integer (desc), then on the term string, so ties and rank are
+    engine-stable by construction. Plan shape: two hash-partitioned
+    aggregations (tf per (doc, term), df per term) + broadcast joins
+    + per-doc row_number."""
     from pyspark.sql import Window
 
     from ..functions.portable import micro
@@ -575,7 +543,7 @@ def sentence_chunks(
     )
 
 
-EVAL_BCAST_MAX_BYTES = 256 * 1024 * 1024  # local default; see gate below
+EVAL_BCAST_MAX_BYTES = 256 * 1024 * 1024  # see _maybe_broadcast_eval
 
 
 def _maybe_broadcast_eval(eval_shingles: DataFrame, documents: DataFrame,
@@ -589,17 +557,12 @@ def _maybe_broadcast_eval(eval_shingles: DataFrame, documents: DataFrame,
     ~3 overlapping word-shingles per token position / eval_mod — a
     coarse upper-shape estimate, deliberately cheap: no job, no
     count) and keeps the explicit broadcast hint only under
-    $SPARK_GRAFT_EVAL_BCAST_MAX bytes (default 256 MB). Past the
+    ``EVAL_BCAST_MAX_BYTES`` (256 MB). Past the
     limit the hint is dropped and the membership join plans as a
     shuffle join (AQE may still broadcast at runtime from REAL sizes
     — strictly better information than this estimate). Join type
     never changes the values, only the movement plan; both branches
     are pinned in tests/test_curation_ops.py."""
-    import os
-
-    limit = int(
-        os.environ.get("SPARK_GRAFT_EVAL_BCAST_MAX", EVAL_BCAST_MAX_BYTES)
-    )
     try:
         base = int(
             documents._jdf.queryExecution()
@@ -610,7 +573,9 @@ def _maybe_broadcast_eval(eval_shingles: DataFrame, documents: DataFrame,
     except Exception:  # stats unavailable — keep the legacy hint
         base = 0
     est = base * 3 // max(eval_mod, 1)
-    return F.broadcast(eval_shingles) if est <= limit else eval_shingles
+    if est <= EVAL_BCAST_MAX_BYTES:
+        return F.broadcast(eval_shingles)
+    return eval_shingles
 
 
 def decontaminate(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
@@ -1078,9 +1043,9 @@ def cross_corpus_surprisal(
     Scale: the history pays one tokenize + one term-keyed count (the
     LM *is* that frequency table — vocabulary-sized, broadcastable);
     the new batch pays one tokenize + the term join + one
-    groupBy(doc_id). Incremental by construction: pass the maintained
-    (term, cnt) aggregate as ``history_tf`` (see
-    ``merge_term_frequencies``) instead of rescanning history."""
+    groupBy(doc_id). Incremental by construction: pass a maintained
+    (term, cnt) aggregate (``term_frequencies``' shape; counts add
+    across batches) as ``history_tf`` instead of rescanning history."""
     if (history is None) == (history_tf is None):
         raise ValueError("pass exactly one of history / history_tf")
     tf = history_tf if history_tf is not None else term_frequencies(history)
@@ -1120,23 +1085,6 @@ def term_frequencies(documents: DataFrame) -> DataFrame:
         documents.select(F.explode(words("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def merge_term_frequencies(
-    history_tf: DataFrame, new_docs: DataFrame
-) -> DataFrame:
-    """Incremental LM maintenance: fold a new batch's term counts into
-    the stored frequency table instead of rescanning history — union
-    of two (term, cnt) tables + one groupBy-sum, cost proportional to
-    the BATCH's vocabulary, not the corpus. Equivalence to the full
-    rescan is pinned in tests (counts are associative), so the
-    admission pipeline can run cross_corpus_surprisal against a
-    maintained aggregate forever."""
-    return (
-        history_tf.unionByName(term_frequencies(new_docs))
-        .groupBy("term")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 

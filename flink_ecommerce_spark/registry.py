@@ -653,8 +653,8 @@ def _q_media_ahash_pairs(spark, sf):
 def _q_lsh_recall_sampled(spark, sf):
     """The above-crossover recall meter (VERDICT r06 #5): exact truth
     over a deterministic 1-in-2 portable-hash document sample. The
-    fixed sample_mod=2 keeps the oracle SQL a closed form; production
-    pipelines take the mod from exact_pairs_plan_for."""
+    fixed sample_mod=2 keeps the oracle SQL a closed form; larger
+    corpora take a larger mod, ⌈n_docs / sample target⌉."""
     return dedup.lsh_recall_sampled(_t("documents")(spark, sf), sample_mod=2)
 
 
@@ -1584,8 +1584,8 @@ FROM hs)
 
 # lsh_recall_sampled: identical signature pipeline, but the corpus is
 # first cut to the deterministic 1-in-2 portable-hash sample (the
-# sampled truth keeps the meter linear-budget above the
-# exact_pairs_plan_for crossover).
+# sampled truth keeps the meter linear-budget on corpora too large
+# for the exact prefix join).
 _SAMPLE_PRED = (
     f"{sql_hash32('CAST(doc_id AS VARCHAR)', salt='rs')} % 2 = 0"
 )
@@ -6365,124 +6365,6 @@ _VERIFY_FIRST: tuple[str, ...] = (
     "weighted_sample",
 )
 
-_VERIFY_FIRST_R09: tuple[str, ...] = (
-    # r09 window (VERDICT r08 #1-#3 + COVERAGE.md rotation/migration
-    # queues). Composition:
-    # (1) kn_trigram_surprisal — the only registry query that never
-    #     held an external green row (registered after the r08
-    #     window filled), plus its migration to the per-row-micro
-    #     integer mean;
-    # (2) the two winnowing queries — re-planned this round to the
-    #     zero-shuffle array form (VERDICT r08 #1);
-    # (3) silhouette_by_k — newly registered with its UNION-ALL
-    #     per-K oracle (VERDICT r08 #3), plus cluster_silhouette's
-    #     exact-mean helper refactor;
-    # (4) the three r08-certified queries migrated off
-    #     micro(AVG(double)) to order-independent integer means
-    #     (r08 ADVICE #2): category_stats, event_metrics_long,
-    #     customers_above_avg_balance;
-    # (5) the 17 stale r03 non-carrier rows (certifications valid
-    #     but five rounds old — the staleness rotation);
-    # (6) the r04 ROUND-carrier migration block: 15 carriers
-    #     re-encoded to the integer contract on their rotation
-    #     (per-row cents sums, pure-integer DIV shares, micro
-    #     finals, integer-grid thresholds — incl. the gopher
-    #     metric family and the last legacy ROUND-jaccard holdouts
-    #     prefix_jaccard_pairs / incremental_fuzzy_dedup);
-    # (7) two r08-certified composers transitively re-planned by
-    #     prefix_jaccard_pairs' migration (their truth side):
-    #     lsh_recall_report, lsh_recall_sampled;
-    # (8) eight ROUND-free r04-certified rows as staleness backfill
-    #     (pit_enriched_events / pq_codes / repeated_substring_spans
-    #     head the r10 backfill queue).
-    # Still queued (COVERAGE.md): the r04 cosine/ANN ROUND family
-    # (shared fragment, large transitive set) and the remaining
-    # r04/r05/r06 carriers — r10+.
-    "kn_trigram_surprisal",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-    "silhouette_by_k",
-    "cluster_silhouette",
-    "category_stats",
-    "event_metrics_long",
-    "customers_above_avg_balance",
-    # (5) the r03 staleness block
-    "raw_transactions",
-    "corpus_diff",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "distinct_user_event_pairs",
-    "doc_chunks",
-    "incremental_dedup",
-    "latest_event_per_user",
-    "minhash_signatures",
-    "multimodal_thumbnails",
-    "purchasers_also_errored",
-    "scd2_user_segments",
-    "sequence_packing",
-    "simhash",
-    "simhash_near_pairs",
-    "viewers_never_purchased",
-    # (6) the r04 carrier migration block
-    "daily_gapfill",
-    "daily_anomaly_scores",
-    "event_user_skew_topk",
-    "event_user_skew_summary",
-    "corpus_growth",
-    "cross_corpus_surprisal",
-    "supplier_pagerank",
-    "value_percentiles_hist",
-    "gopher_quality_flags",
-    "corpus_funnel",
-    "corpus_funnel_by_source",
-    "curation_drop_reasons",
-    "prefix_jaccard_pairs",
-    "incremental_fuzzy_dedup",
-    "nb_lang_scores",
-    # (7) transitively re-planned composers
-    "lsh_recall_report",
-    "lsh_recall_sampled",
-    # (9) r09 OPTIMIZATION re-plans (each displaces one staleness
-    #     backfill below — those keep their valid prior-round
-    #     certifications, plans unchanged):
-    #     markov_attribution — the unrolled all-Spark propagation
-    #     (3 walks × Σsteps ≈ 108 broadcast-join mini-plans over a
-    #     ≤25-row matrix) replaced by a driver-side integer walk on
-    #     the collected bounded matrix (k-means centroid pattern);
-    #     measured 35.5 s → see OPTIMIZATION_r09.md.
-    #     classifier_calibration — top-2-per-doc re-planned from a
-    #     row_number window (full sort-exchange of the |docs|×|classes|
-    #     grid) + a corpus-sized join back to documents for the true
-    #     label, to one sorted-collect_list aggregate with the
-    #     doc-constant label carried as MAX through the existing
-    #     aggregates (Window nodes 6 → 0).
-    #     the copurchase family — the shared basket build collapsed
-    #     distinct + orderkey self-join (4 exchanges) into one
-    #     groupBy(l_orderkey)/sorted-collect_set basket table whose
-    #     pairs explode in-task (2 exchanges); all five consumers
-    #     re-plan transitively.
-    "markov_attribution",
-    "classifier_calibration",
-    "copurchase_pairs",
-    "copurchase_graph_stats",
-    "copurchase_components",
-    "item_neighbors_topk",
-    "basket_rules",
-    #     _doc_shingles' explode→distinct collapsed to a per-row
-    #     array_distinct (doc_id is in the pair key, so the global
-    #     distinct only removed within-doc repeats): one full-stream
-    #     Exchange fewer in every shingle consumer; these two are the
-    #     non-checkpoint-shielded consumers whose plans drift.
-    "shingle_novelty",
-    "hybrid_search_rrf",
-    # (8) ROUND-free r04 staleness backfill (phrase_search,
-    # media_dedup, asof_next_purchase, balanced_shards,
-    # bpe_merge_candidates, countmin_estimates, countmin_sketch,
-    # entity_merge_groups were displaced by the r09 re-plans above —
-    # their r04 certifications stay valid, plans unchanged; one r03
-    # staleness rotation (props_extract) also yields its slot, its
-    # r03 row likewise still plan-pinned)
-)
 assert set(_VERIFY_FIRST) <= set(_SPEC_DEFS), sorted(
     set(_VERIFY_FIRST) - set(_SPEC_DEFS)
 )

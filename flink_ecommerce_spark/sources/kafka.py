@@ -4,7 +4,8 @@ JSONValueDeserializationSchema.java:21-33).
 
 Spark-first: ``readStream.format("kafka")`` + ``from_json`` with the
 explicit TRANSACTION_SCHEMA — value-only, latest offsets, the
-reference's topic (the default) and consumer group (fixed). The JSON
+reference's topic (the default) and consumer-group name (fixed, as a
+prefix: see ``kafka_reader_options``). The JSON
 parse happens JVM-side inside codegen; a malformed record yields a
 NULL struct (Jackson in the reference would throw — we keep the row
 with nulls, the more stream-robust choice; the job drops rows with a
@@ -42,7 +43,11 @@ def kafka_reader_options(
     """Reader options as a dict (testable without a broker or the
     kafka connector on the classpath). Reference parity: topic,
     consumer group ``flink-group`` (DataStreamJob.java:92), latest
-    offsets (``OffsetsInitializer.latest()``, :94). Production knobs
+    offsets (``OffsetsInitializer.latest()``, :94). Every query of the
+    job reads this source, and queries that share one
+    ``kafka.group.id`` may each read only part of the data, so the
+    name is a ``groupIdPrefix``: Spark gives each query its own
+    ``flink-group-…`` group. Production knobs
     beyond the reference: ``failOnDataLoss=false`` keeps the query
     alive across topic retention evictions, and
     ``max_offsets_per_trigger`` caps each micro-batch (backpressure —
@@ -51,7 +56,7 @@ def kafka_reader_options(
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,
         "subscribe": topic,
-        "kafka.group.id": "flink-group",
+        "groupIdPrefix": "flink-group",
         "startingOffsets": "latest",
         "failOnDataLoss": "false",
     }

@@ -18,19 +18,3 @@ def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     """Register all catalog tables as temp views, run ``query``."""
     catalog.register_views(spark, sf_dir)
     return spark.sql(query)
-
-
-def register_query_views(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> list[str]:
-    """Expose registry queries as temp views: after this,
-    ``spark.sql("SELECT * FROM q5_regional_revenue")`` works — every
-    operator result is a SQL-composable relation (views are lazy;
-    nothing executes until queried). ``names`` restricts the set;
-    default registers every registry query."""
-    from . import registry
-
-    picked = list(registry.SPECS) if names is None else names
-    for name in picked:
-        registry.SPECS[name].fn(spark, sf_dir).createOrReplaceTempView(name)
-    return picked

@@ -54,8 +54,8 @@ CREATE TABLE IF NOT EXISTS sales_per_month (
 """
 
 # The epoch ledger of the three running-sum tables (sinks._record_epoch):
-# one row per (table, stream query id, epoch) whose sums were added, so
-# a replayed epoch is a no-op. Created here, at start-up: created inside
+# per (table, stream query id), the latest epoch whose sums were added,
+# so a replayed epoch is a no-op. Created here, at start-up: created inside
 # each batch's transaction, concurrent sinks conflict on DuckDB's catalog.
 SINK_EPOCHS_DDL = """
 CREATE TABLE IF NOT EXISTS _sink_epochs (

@@ -12,8 +12,9 @@ config K6 at :100-104).
   batch's sums to the stored ones — the sink table is the running
   sum, as the reference's Postgres table is. Adding is not
   idempotent, so a sum batch also records ``(table, query id,
-  epoch)`` in the ``_sink_epochs`` ledger, and an epoch Spark replays
-  after a restart changes nothing. The container has no Postgres, so
+  epoch)`` in the ``_sink_epochs`` ledger, which keeps each query's
+  latest epoch per table, and an epoch Spark replays after a restart
+  changes nothing. The container has no Postgres, so
   tests drive the psycopg2 path through a wrapper around DuckDB.
 - ``MemoryUpsertSink`` — a driver-side last-write-wins dict, the
   tests' reference for the raw branch. It has no additive rule: the
@@ -136,15 +137,19 @@ def _query_id(batch_df: DataFrame) -> str:
 
 
 def _record_epoch(cur, param: str, table: str, qid: str, epoch_id: int) -> bool:
-    """Inside the caller's open transaction, add ``(table, qid,
-    epoch_id)`` to the epoch ledger. False when the row is already
-    there: the epoch was applied before, and the caller rolls back.
-    ``param`` is the driver's placeholder (``?`` or ``%s``)."""
+    """Inside the caller's open transaction, make ``(table, qid,
+    epoch_id)`` the ledger's one row for ``(table, qid)``. False when
+    the ledger holds this epoch or a later one: the epoch was applied
+    before, and the caller rolls back. A query's epochs only grow and
+    Spark replays only its latest one, so the latest row is all the
+    ledger needs, and the older rows are deleted here. ``param`` is
+    the driver's placeholder (``?`` or ``%s``)."""
     key = (table, qid, epoch_id)
-    where = " AND ".join(f"{c} = {param}" for c in ("sink", "query_id", "epoch"))
-    cur.execute(f"SELECT 1 FROM _sink_epochs WHERE {where}", key)
+    where = f"sink = {param} AND query_id = {param}"
+    cur.execute(f"SELECT 1 FROM _sink_epochs WHERE {where} AND epoch >= {param}", key)
     if cur.fetchone() is not None:
         return False
+    cur.execute(f"DELETE FROM _sink_epochs WHERE {where}", key[:2])
     cur.execute(f"INSERT INTO _sink_epochs VALUES ({param}, {param}, {param})", key)
     return True
 

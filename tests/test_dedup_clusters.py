@@ -108,23 +108,6 @@ def test_shingle_novelty_df_cap_drops_hot_shingles(spark):
     assert uncapped[9]["novelty_frac"] < 1.0
 
 
-def test_simhash_plan_for_sizing():
-    """Band width grows with corpus size so bucket occupancy (and the
-    band self-join cost) stays pinned; band count shrinks, trading
-    the pigeonhole recall bound — mirror of lsh_plan_for."""
-    from flink_ecommerce_spark.operators import dedup
-
-    # test scale: oracle constants (8-bit bands, 8 bands -> exact
-    # recall for hamming <= HAMMING_MAX)
-    assert dedup.simhash_plan_for(500) == (8, 8)
-    assert dedup.simhash_plan_for(200_000) == (8, 8)
-    # larger corpora widen the band: 2^16 buckets
-    assert dedup.simhash_plan_for(50_000_000) == (16, 4)
-    # 100TB-class corpora: widest band
-    w, b = dedup.simhash_plan_for(10_000_000_000)
-    assert w == 32 and b == 2
-
-
 def test_simhash_band_width_cost_recall_tradeoff(spark):
     """Two band widths on one corpus: wider bands (fewer buckets
     matched per doc, more buckets total) surface FEWER candidate
@@ -407,40 +390,11 @@ def test_documents_substr_deduped_keep_one(spark):
         assert n_chars == len(text)
 
 
-def test_minhash_plan_for_sizing():
-    from flink_ecommerce_spark.operators import dedup
-
-    """The banding planner inverts the S-curve: shipped defaults are
-    its answer at the default 0.7 near-dup threshold; lowering the
-    target threshold buys shorter signatures, raising it buys more
-    rows per band; ties prefer the cheapest signature."""
-    assert dedup.minhash_plan_for(0.7) == (dedup.NUM_HASHES, dedup.NUM_BANDS)
-    # r=2, b=4: t=(1/4)^(1/2)=0.5 exactly, with the minimal 8-hash sig
-    assert dedup.minhash_plan_for(0.5) == (8, 4)
-    # high-precision sweep wants longer rows per band
-    n, b = dedup.minhash_plan_for(0.9)
-    assert n // b >= 8
-
-
-def test_minhash_candidate_prob_s_curve():
-    from flink_ecommerce_spark.operators import dedup
-
-    n, b = dedup.NUM_HASHES, dedup.NUM_BANDS
-    r = n // b
-    t = (1.0 / b) ** (1.0 / r)
-    # monotone in similarity
-    probs = [dedup.minhash_candidate_prob(s / 10, b, r) for s in range(11)]
-    assert probs == sorted(probs)
-    # sharp around the inflection: strong dups almost surely caught,
-    # noise-level pairs almost surely not
-    assert dedup.minhash_candidate_prob(min(t + 0.15, 0.99), b, r) > 0.9
-    assert dedup.minhash_candidate_prob(max(t - 0.4, 0.05), b, r) < 0.1
-
-
 def test_lsh_banding_follows_planner_s_curve(spark):
-    """End-to-end planner actionability: looser-threshold plans
-    surface at least as many verified pairs as the default, tighter
-    plans at most as many — the S-curve direction on real data."""
+    """The banding S-curve on real data: a (num_hashes, num_bands)
+    whose inflection (1/b)^(1/r) sits lower — (8, 4) at 0.5 — surfaces
+    at least as many verified pairs as the default (16, 4) at ≈0.71,
+    and one that sits higher — (16, 2) at ≈0.92 — at most as many."""
     from flink_ecommerce_spark.operators import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -451,9 +405,9 @@ def test_lsh_banding_follows_planner_s_curve(spark):
             docs, threshold=0.0, num_hashes=n, num_bands=b
         ).count()
 
-    loose = pairs(dedup.minhash_plan_for(0.5))
+    loose = pairs((8, 4))
     default = pairs((dedup.NUM_HASHES, dedup.NUM_BANDS))
-    tight = pairs(dedup.minhash_plan_for(0.9))
+    tight = pairs((16, 2))
     assert loose >= default >= tight, (loose, default, tight)
     assert loose > tight  # the knob must actually move on this corpus
 
@@ -580,30 +534,3 @@ def test_documents_deduped_best_keeps_highest_quality_member(spark):
     loser = ({0, 1} - {winner}).pop()
     assert q[winner] >= q[loser]
     assert winner == (0 if q[0] > q[1] else 1 if q[1] > q[0] else 0)
-
-
-def test_exact_pairs_plan_crossover():
-    """The planner enforces the lossless→LSH crossover (VERDICT r05
-    #5): below EXACT_PAIRS_MAX_DOCS pipelines get the exact
-    prefix-filter join; above it they get banded candidates WITH the
-    recall meter named — the loss is explicit, never silent."""
-    from flink_ecommerce_spark.operators import dedup
-
-    lo = dedup.exact_pairs_plan_for(5_000)
-    assert lo["strategy"] == "prefix_jaccard" and lo["loss_meter"] is None
-    at = dedup.exact_pairs_plan_for(dedup.EXACT_PAIRS_MAX_DOCS)
-    assert at["strategy"] == "prefix_jaccard"
-    hi = dedup.exact_pairs_plan_for(50_000)
-    assert hi["strategy"] == "lsh_candidates"
-    # the meter above the crossover is the SAMPLED one (VERDICT r06
-    # #5): the lossless meter's truth side is itself the exact join
-    assert hi["loss_meter"] == "lsh_recall_sampled"
-    # 50k docs / 10k target -> 1-in-5 sample caps the exact branch
-    assert hi["meter_sample_mod"] == 5
-    assert lo["meter_sample_mod"] is None
-    # a 10x sf0.1 corpus (50k docs) sits ABOVE the crossover, so the
-    # planner must route it to the LSH side
-    assert 50_000 > dedup.EXACT_PAIRS_MAX_DOCS
-    # both fixture scales stay on the exact side
-    for n in (500, 5_000):
-        assert dedup.exact_pairs_plan_for(n)["strategy"] == "prefix_jaccard"

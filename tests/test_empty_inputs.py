@@ -42,7 +42,7 @@ def test_dedup_on_empty_docs(spark, empty_docs):
 
 def test_text_on_empty_and_tiny_docs(spark, empty_docs):
     assert text.token_counts(empty_docs).collect() == []
-    assert text.tfidf_top_terms(empty_docs).collect() == []
+    assert text.tfidf_top_terms_int(empty_docs).collect() == []
     # one-word doc: shorter than the shingle width
     tiny = spark.createDataFrame([(1, "hi", "en", "s", 2)], DOCUMENTS_SCHEMA)
     sigs = dedup.minhash_signatures(tiny).collect()

@@ -269,6 +269,27 @@ def test_session_driver_heap_fits_host(spark):
     assert heap <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
+# Package names that no caller runs but that stay, each with its reason.
+TEST_ONLY_NAMES = {
+    "__version__": "the package's version string",
+    "catalog.schema_violations": "the contract check of the fixture schemas",
+    "schemas.EVENTS_SCHEMA": "a fixture schema the tests build frames with",
+    "schemas.DOCUMENTS_SCHEMA": "a fixture schema the tests build frames with",
+    "schemas.EMBEDDINGS_SCHEMA": "a fixture schema the tests build frames with",
+    "typed_check.typed_mismatches": "the typed oracle check itself",
+    "streaming.sinks.MemoryUpsertSink": "the tests' reference sink",
+    "operators.retrieval.phrase_scan": "the reference phrase_search is compared against",
+    "operators.text.curated_corpus": "the legacy twin its integer query is compared against",
+    "operators.text.repetition_scores": "the legacy twin its integer query is compared against",
+    "operators.classifier.nb_train": "half of the split nb_lang_scores is compared against",
+    "operators.classifier.nb_classify": "half of the split nb_lang_scores is compared against",
+    "operators.similarity.ann_plan_for": "the strategy choice of the ANN recall gate",
+    "operators.dedup.substr_dedup_spans": "test seam onto step 1 of documents_substr_deduped",
+    "operators.dedup.remove_spans": "test seam onto step 2 of documents_substr_deduped",
+    "registry.bench_queries": "named by perfbench/README.md",
+}
+
+
 def test_package_holds_only_what_a_caller_imports():
     """Every module in the package is reachable, function-level imports
     included, from one of the five callers that run it: the job, the
@@ -276,7 +297,15 @@ def test_package_holds_only_what_a_caller_imports():
     contract (all registry queries). A module that only tests reach
     does not belong in the package. ModuleFinder compiles and scans
     the sources without running them, and the search path holds only
-    this repository, so no third-party package is read."""
+    this repository, so no third-party package is read.
+
+    Within those modules, every top-level name is referenced (as a
+    name, an attribute or an import) from the package, perfbench or
+    ``__spark_entry__.py`` outside its own definition, unless
+    ``TEST_ONLY_NAMES`` gives the reason it stays. One pass: a name
+    that only an unreferenced name uses still counts as referenced."""
+    import ast
+    from collections import defaultdict
     from modulefinder import ModuleFinder
 
     pkg_dir = Path(job_mod.__file__).parent
@@ -286,8 +315,48 @@ def test_package_holds_only_what_a_caller_imports():
                    "perfbench.run", "__spark_entry__"):
         finder.import_hook(caller)
     modules = {
-        ".".join(p.relative_to(root).with_suffix("").parts).removesuffix(".__init__")
+        ".".join(p.relative_to(root).with_suffix("").parts).removesuffix(".__init__"): p
         for p in pkg_dir.rglob("*.py")
     }
-    orphans = sorted(modules - set(finder.modules))
+    orphans = sorted(set(modules) - set(finder.modules))
     assert not orphans, f"reachable from no caller: {orphans}"
+
+    sources = [*pkg_dir.rglob("*.py"), *(root / "perfbench").glob("*.py"),
+               root / "__spark_entry__.py"]
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in sources}
+    uses = defaultdict(list)  # name -> [(file, line)]
+    for p, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.alias):
+                names = [node.name.rpartition(".")[2], node.asname]
+            else:
+                continue
+            for name in names:
+                uses[name].append((p, node.lineno))
+    defined, unused = set(), []
+    for mod in sorted(set(modules) & set(finder.modules)):
+        p = modules[mod]
+        for st in trees[p].body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [st.name]
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            first = min([st.lineno] + [d.lineno for d in getattr(st, "decorator_list", [])])
+            for name in names:
+                qual = f"{mod}.{name}".removeprefix(f"{pkg}.")
+                defined.add(qual)
+                if qual in TEST_ONLY_NAMES or any(
+                    q != p or not first <= line <= st.end_lineno for q, line in uses[name]
+                ):
+                    continue
+                unused.append(qual)
+    assert not unused, f"referenced by no caller's code: {unused}"
+    stale = sorted(set(TEST_ONLY_NAMES) - defined)
+    assert not stale, f"TEST_ONLY_NAMES entries with no definition: {stale}"

@@ -159,14 +159,6 @@ def test_lsh_recall_sampled_equals_report_on_sample(spark):
     assert got["n_hit_sample"] == ref["n_hit"]
 
 
-def test_recall_sample_mod_planner():
-    from flink_ecommerce_spark.operators.dedup import recall_sample_mod_for
-
-    assert recall_sample_mod_for(5_000) == 1  # below target: no sampling
-    assert recall_sample_mod_for(50_000) == 5
-    assert recall_sample_mod_for(1_000_000) == 100
-
-
 # -------------------------------------------- r02 integer-contract migrations
 
 

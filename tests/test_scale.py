@@ -1,13 +1,11 @@
-"""Scale utilities: salted join correctness, bucketed-table
-shuffle elimination.
-"""
+"""Scale utilities: salted join correctness."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from flink_ecommerce_spark import catalog
-from flink_ecommerce_spark.operators.scale import salted_join, write_bucketed
+from flink_ecommerce_spark.operators.scale import salted_join
 
 from tests.conftest import SF_SMALL
 
@@ -64,49 +62,6 @@ def test_salted_join_left_outer(spark):
     plain = customer.join(orders, "c_custkey", "left").count()
     salted = salted_join(customer, orders, "c_custkey", salt=4, how="left").count()
     assert plain == salted
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    # warehouse dir is a static conf — tables land in the session's
-    # default spark-warehouse; clear leftovers from prior runs
-    import shutil
-
-    for t in ("orders_b", "lineitem_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    orders = catalog.table(spark, SF_SMALL, "orders")
-    lineitem = catalog.table(spark, SF_SMALL, "lineitem")
-    write_bucketed(orders, "orders_b", "o_orderkey", n_buckets=8)
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "lineitem_b",
-        "o_orderkey",
-        n_buckets=8,
-    )
-    a = spark.table("orders_b")
-    b = spark.table("lineitem_b")
-    # force the shuffle-join path (broadcast would sidestep bucketing
-    # at this tiny scale; at 100 TB both sides are fact-sized)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, (
-            f"bucketed join still shuffles:\n{plan[:2000]}"
-        )
-        assert "SortMergeJoin" in plan
-    # and the result is right
-        expected = (
-            orders.join(
-                lineitem.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-            ).count()
-        )
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
 def test_fuzzy_block_cap_drops_only_hot_blocks(spark):

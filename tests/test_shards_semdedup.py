@@ -228,16 +228,7 @@ def test_gopher_flags_are_stream_agnostic(spark, tmp_path):
 
 
 def test_semantic_dedup_extra_bits_scale_knob(spark):
-    from flink_ecommerce_spark.operators.similarity import (
-        semantic_dedup,
-        semdedup_bits_for,
-    )
-
-    # occupancy pinning: 0 bits while cells are small, +1 bit per
-    # doubling past the target
-    assert semdedup_bits_for(10_000, 10, target_cell_rows=1024) == 0
-    assert semdedup_bits_for(100_000, 10, target_cell_rows=1024) == 4
-    assert semdedup_bits_for(200_000, 10, target_cell_rows=1024) == 5
+    from flink_ecommerce_spark.operators.similarity import semantic_dedup
 
     # exact duplicates always share every hyperplane side -> still
     # caught at any bit width; sub-bucketing only multiplies cells
@@ -279,21 +270,6 @@ def test_balanced_shards_matches_python_reference_random_lengths(spark):
     for rank, row in enumerate(ref, start=1):
         assert out[row[0]]["rank"] == rank
         assert out[row[0]]["shard"] == (rank - 1) % 5
-
-
-def test_minhash_planner_threshold_tolerance():
-    """Property: across the useful threshold range the planned
-    config's S-curve inflection lands within 0.12 of the target —
-    the guarantee that makes 'plan from the threshold you want'
-    meaningful."""
-    from flink_ecommerce_spark.operators import dedup
-
-    for t10 in range(30, 96, 5):
-        target = t10 / 100
-        n, b = dedup.minhash_plan_for(target)
-        r = n // b
-        t = (1.0 / b) ** (1.0 / r) if b > 1 else 1.0
-        assert abs(t - target) < 0.12, (target, n, b, t)
 
 
 def test_corpus_funnel_by_source_sums_to_global(spark):

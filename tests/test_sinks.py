@@ -215,6 +215,30 @@ def test_sum_sink_adds_each_epoch_once(spark, tmp_path, kind):
     assert _sums(db, "sales_per_day") == cents
 
 
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_epoch_ledger_keeps_only_the_latest_epoch(spark, tmp_path, kind):
+    """After epochs 0, 1 and 2 the ledger holds one row, epoch 2's, and
+    a replay of epoch 2 still adds nothing: the ledger stays bounded on
+    a long-running job."""
+    db = _sink_db(tmp_path)
+    df = generator.transactions(spark, n_rows=100, seed=29)
+    b = _branch("sales_per_day")
+    sink = StagedMergeSink(_connect(kind, db), b.name, b.key_cols, b.sum_col)
+    for epoch in (0, 1, 2):
+        sink.write_batch(b.plan(df), epoch)
+    thrice = _sums(db, "sales_per_day")
+    sink.write_batch(b.plan(df), 2)
+    assert _sums(db, "sales_per_day") == thrice
+    assert thrice == {
+        r["transaction_date"]: 3 * r["total_sales_cents"] / 100
+        for r in sales.sales_per_day_cents(df).collect()
+    }
+    con = duckdb.connect(db)
+    rows = con.execute("SELECT sink, epoch FROM _sink_epochs").fetchall()
+    con.close()
+    assert rows == [("sales_per_day", 2)]
+
+
 # ---- the set-based upsert sink on either connection --------------------
 
 

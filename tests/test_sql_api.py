@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from flink_ecommerce_spark import catalog, sql as sql_mod
+from flink_ecommerce_spark import catalog, registry, sql as sql_mod
 from flink_ecommerce_spark.plans import sales
 
 from tests.conftest import SF_SMALL
@@ -36,9 +36,8 @@ def test_sql_join_across_views(spark):
 def test_registry_queries_compose_as_views(spark):
     """Operator results are SQL relations: register a few registry
     queries as views and JOIN them in plain SQL."""
-    sql_mod.register_query_views(
-        spark, SF_SMALL, ["dedup_exact", "profile_documents"]
-    )
+    for name in ("dedup_exact", "profile_documents"):
+        registry.SPECS[name].fn(spark, SF_SMALL).createOrReplaceTempView(name)
     out = spark.sql(
         """
         SELECT p.source, COUNT(*) AS n_unique_docs

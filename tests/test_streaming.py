@@ -109,8 +109,9 @@ def test_streaming_matches_batch_final_state(spark, txn_json_dir, tmp_path):
 
 def test_streaming_incremental_updates_converge(spark, txn_json_dir, tmp_path):
     """One file per micro-batch: the sink adds each batch's sums to the
-    table, and after every batch is applied once (one ledger row per
-    file) the tables equal the batch integer-cents plans exactly."""
+    table, and after every batch is applied once (the ledger keeps one
+    row per sink, the last file's epoch) the tables equal the batch
+    integer-cents plans exactly."""
     import duckdb
 
     db = str(tmp_path / "chunked.duckdb")
@@ -122,12 +123,15 @@ def test_streaming_incremental_updates_converge(spark, txn_json_dir, tmp_path):
     _assert_sums_equal_batch_cents(spark, txn_json_dir, db)
     n_files = len(list(Path(txn_json_dir).glob("part-*")))
     con = duckdb.connect(db)
-    epochs = dict(
-        con.execute("SELECT sink, count(*) FROM _sink_epochs GROUP BY sink").fetchall()
-    )
+    epochs = {
+        sink: (n, last)
+        for sink, n, last in con.execute(
+            "SELECT sink, count(*), max(epoch) FROM _sink_epochs GROUP BY sink"
+        ).fetchall()
+    }
     con.close()
     assert n_files > 1
-    assert epochs == {b.name: n_files for b in sums}
+    assert epochs == {b.name: (1, n_files - 1) for b in sums}
 
 
 def test_json_roundtrip_preserves_schema(spark):
@@ -259,7 +263,9 @@ def test_kafka_reader_options_reference_parity():
 
     opts = kafka_reader_options("broker:9092")
     assert opts["subscribe"] == "financial_transactions"
-    assert opts["kafka.group.id"] == "flink-group"
+    # one consumer group per query, each named after the reference's
+    assert opts["groupIdPrefix"] == "flink-group"
+    assert "kafka.group.id" not in opts
     assert opts["startingOffsets"] == "latest"
     assert opts["failOnDataLoss"] == "false"
     assert "maxOffsetsPerTrigger" not in opts
