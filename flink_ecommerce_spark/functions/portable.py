@@ -48,12 +48,12 @@ def hash32_from_digest(digest: Column | str, half: int = 0) -> Column:
     return F.conv(F.substring(d, 1 + 8 * half, 8), 16, 10).cast("long")
 
 
-def hash32(col: Column | str, salt: str | None = None, half: int = 0) -> Column:
+def hash32(col: Column | str, salt: str | None = None) -> Column:
     """Spark Column: 32 bits of md5(salt || ':' || s) as a long.
     Convenience one-expression form; callers needing BOTH halves on a
     hot path should project ``salted_md5`` once and use
     ``hash32_from_digest`` (see its docstring)."""
-    return hash32_from_digest(salted_md5(col, salt), half)
+    return hash32_from_digest(salted_md5(col, salt))
 
 
 def sql_hash32(expr: str, salt: str | None = None, half: int = 0) -> str:

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame
 
 from .session import get_spark
 from .streaming import ddl
-from .streaming.runner import TRIGGER_MS, StreamingJob, reference_branches
+from .streaming.runner import StreamingJob, reference_branches, start_query
 from .streaming.sinks import StagedMergeSink
 
 
@@ -145,15 +145,11 @@ def start(argv: list[str] | None = None) -> StreamingJob:
         from .streaming.es_sink import EsBulkSink, http_post_transport
 
         es = EsBulkSink(http_post_transport(args.es_url))
-        q = (
-            source.writeStream.outputMode("append")
-            .queryName("es_transactions")
-            .trigger(processingTime=f"{TRIGGER_MS} milliseconds")
-            .option("checkpointLocation", f"{args.checkpoint}/es")
-            .foreachBatch(es.foreach_batch())
-            .start()
+        job.queries.append(
+            start_query(
+                source, "es_transactions", f"{args.checkpoint}/es", es.foreach_batch()
+            )
         )
-        job.queries.append(q)
     return job
 
 

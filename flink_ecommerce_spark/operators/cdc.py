@@ -23,13 +23,9 @@ OPEN_END = None
 
 
 def scd2_merge(
-    current: DataFrame,
-    updates: DataFrame,
-    key: str,
-    attrs: list[str],
-    ts_col: str = "effective_ts",
+    current: DataFrame, updates: DataFrame, key: str, attrs: list[str]
 ) -> DataFrame:
-    """Apply ``updates(key, attrs, ts_col)`` to an SCD2 ``current``
+    """Apply ``updates(key, attrs, effective_ts)`` to an SCD2 ``current``
     table with columns (key, attrs, valid_from, valid_to, is_current).
 
     - new key → insert open row
@@ -37,7 +33,7 @@ def scd2_merge(
     - unchanged → keep as-is
     Late-arriving updates older than the open row are ignored (the
     standard append-only SCD2 contract). When one batch carries
-    SEVERAL updates for a key, only the latest (by ``ts_col``,
+    SEVERAL updates for a key, only the latest (by ``effective_ts``,
     tie-broken deterministically on the attrs) is applied — the
     intra-batch history is collapsed, matching MERGE semantics where
     a source must have one row per key."""
@@ -47,11 +43,11 @@ def scd2_merge(
     # per-key sort
     updates = (
         updates.groupBy(key)
-        .agg(F.max(F.struct(ts_col, *attrs)).alias("__m"))
+        .agg(F.max(F.struct("effective_ts", *attrs)).alias("__m"))
         .select(
             key,
             *[F.col(f"__m.{a}").alias(a) for a in attrs],
-            F.col(f"__m.{ts_col}").alias(ts_col),
+            F.col("__m.effective_ts").alias("effective_ts"),
         )
     )
     open_rows = current.filter(F.col("is_current"))
@@ -67,19 +63,19 @@ def scd2_merge(
 
     fresh = joined.filter(
         F.col(f"o.{key}").isNull()
-        | (changed_cond & (F.col(f"u.{ts_col}") > F.col("o.valid_from")))
+        | (changed_cond & (F.col("u.effective_ts") > F.col("o.valid_from")))
     )
     # rows to insert (new open versions)
     inserts = fresh.select(
         F.col(f"u.{key}").alias(key),
         *[F.col(f"u.{a}").alias(a) for a in attrs],
-        F.col(f"u.{ts_col}").alias("valid_from"),
+        F.col("u.effective_ts").alias("valid_from"),
         F.lit(OPEN_END).cast("timestamp").alias("valid_to"),
         F.lit(True).alias("is_current"),
     )
     # open rows being superseded -> close them at the update ts
     superseded_keys = fresh.filter(F.col(f"o.{key}").isNotNull()).select(
-        F.col(f"u.{key}").alias(key), F.col(f"u.{ts_col}").alias("__close_ts")
+        F.col(f"u.{key}").alias(key), F.col("u.effective_ts").alias("__close_ts")
     )
     closed_now = (
         open_rows.join(superseded_keys, key)
@@ -145,12 +141,12 @@ def pit_join(
     )
 
 
-def empty_scd2(updates: DataFrame, key: str, attrs: list[str], ts_col: str = "effective_ts") -> DataFrame:
+def empty_scd2(updates: DataFrame, key: str, attrs: list[str]) -> DataFrame:
     """Bootstrap an SCD2 table from an initial snapshot."""
     return updates.select(
         key,
         *attrs,
-        F.col(ts_col).alias("valid_from"),
+        F.col("effective_ts").alias("valid_from"),
         F.lit(OPEN_END).cast("timestamp").alias("valid_to"),
         F.lit(True).alias("is_current"),
     )

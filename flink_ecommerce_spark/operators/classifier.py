@@ -226,9 +226,7 @@ WHERE rk = 1
 CALIB_MAX_BUCKET = 20  # margins >= this many whole nats share one bin
 
 
-def calibration_by_margin(
-    documents: DataFrame, max_bucket: int = CALIB_MAX_BUCKET
-) -> DataFrame:
+def calibration_by_margin(documents: DataFrame) -> DataFrame:
     """Classifier RELIABILITY report: does the NB margin actually
     predict correctness? Output one row per confidence bucket:
     (margin_bucket, n_docs, n_correct, acc_u) — the reliability
@@ -238,7 +236,7 @@ def calibration_by_margin(
 
     Confidence is the INTEGER margin between the top-1 and top-2
     class scores in whole nats (micro-nat difference DIV 1e6,
-    clamped to ``max_bucket``) — not a softmax probability: exp()
+    clamped to ``CALIB_MAX_BUCKET``) — not a softmax probability: exp()
     of large-magnitude micro-nat sums is engine-dependent float
     territory, while the margin is a difference of longs, so every
     bucket boundary is exact in both engines. Monotone in the
@@ -305,7 +303,7 @@ def calibration_by_margin(
     binned = per_doc.select(
         F.least(
             F.expr(f"(s1 - COALESCE(s2, s1)) DIV {MICRO}"),
-            F.lit(max_bucket).cast("long"),
+            F.lit(CALIB_MAX_BUCKET).cast("long"),
         )
         .cast("int")
         .alias("margin_bucket"),
@@ -328,7 +326,7 @@ def calibration_by_margin(
     )
 
 
-def sql_calibration_by_margin(max_bucket: int = CALIB_MAX_BUCKET) -> str:
+def sql_calibration_by_margin() -> str:
     """DuckDB oracle for ``calibration_by_margin`` — same scored
     CTEs, same integer margin binning (// matches Spark DIV on the
     non-negative margins)."""
@@ -344,7 +342,7 @@ per_doc AS (SELECT doc_id,
                    MAX(CASE WHEN rk = 2 THEN score_u END) AS s2
             FROM top2 WHERE rk <= 2 GROUP BY 1),
 binned AS (SELECT CAST(LEAST((p.s1 - COALESCE(p.s2, p.s1)) // {MICRO},
-                             {max_bucket}) AS INT) AS margin_bucket,
+                             {CALIB_MAX_BUCKET}) AS INT) AS margin_bucket,
                   CASE WHEN p.pred_lang = d.lang THEN 1 ELSE 0 END AS ok
            FROM per_doc p JOIN documents d USING (doc_id))
 SELECT margin_bucket,

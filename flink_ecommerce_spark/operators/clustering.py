@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 DEFAULT_K = 8
 DEFAULT_ITER = 5
+SILHOUETTE_KS = (2, 4, 8, 16)  # the K values silhouette_by_k sweeps
 
 
 def _sq_dist_to(cvec: list[float]):
@@ -127,17 +128,17 @@ def kmeans_assign(
     return _assign_with(corpus, centroids).select("vec_id", "cluster")
 
 
-def kmeans_sizes(embeddings: DataFrame, k: int = DEFAULT_K, n_iter: int = DEFAULT_ITER) -> DataFrame:
+def kmeans_sizes(embeddings: DataFrame) -> DataFrame:
     """Cluster cardinalities — the compact, registry-friendly output."""
     return (
-        kmeans_assign(embeddings, k, n_iter)
+        kmeans_assign(embeddings)
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
 
 
-def kmeans_oracle_sql(k: int = DEFAULT_K, n_iter: int = DEFAULT_ITER) -> str:
-    """Exact DuckDB twin of ``kmeans_sizes``: the ``n_iter`` Lloyd
+def kmeans_oracle_sql(k: int = DEFAULT_K) -> str:
+    """Exact DuckDB twin of ``kmeans_sizes``: the ``DEFAULT_ITER`` Lloyd
     rounds unrolled as CTEs (assign aᵢ from centroids cᵢ₋₁, update cᵢ
     from aᵢ), the same pattern as supplier_pagerank's unrolled oracle.
     Portability anchors mirror the Spark side exactly: centroid means
@@ -159,7 +160,7 @@ def kmeans_oracle_sql(k: int = DEFAULT_K, n_iter: int = DEFAULT_ITER) -> str:
         " AS cluster, e AS c FROM"
         f" (SELECT vec_id, e FROM emb ORDER BY vec_id LIMIT {k})),",
     ]
-    for i in range(1, n_iter + 1):
+    for i in range(1, DEFAULT_ITER + 1):
         prev = f"c{i - 1}"
         d = dist.format(c=prev)
         parts.append(
@@ -169,7 +170,7 @@ def kmeans_oracle_sql(k: int = DEFAULT_K, n_iter: int = DEFAULT_ITER) -> str:
             f" ORDER BY {d}, {prev}.cluster) AS rn"
             f" FROM emb CROSS JOIN {prev}) WHERE rn = 1),"
         )
-        if i == n_iter:
+        if i == DEFAULT_ITER:
             break  # the final round only assigns (matches the Spark loop)
         parts.append(
             f"m{i} AS (SELECT a.cluster, s.i - 1 AS dim,"
@@ -188,7 +189,7 @@ def kmeans_oracle_sql(k: int = DEFAULT_K, n_iter: int = DEFAULT_ITER) -> str:
         )
     parts[-1] = parts[-1].rstrip(",")
     parts.append(
-        f"SELECT cluster, COUNT(*) AS n_vectors FROM a{n_iter}"
+        f"SELECT cluster, COUNT(*) AS n_vectors FROM a{DEFAULT_ITER}"
         " GROUP BY cluster"
     )
     return "\n".join(parts)
@@ -265,23 +266,21 @@ def cluster_silhouette(
     )
 
 
-def cluster_silhouette_oracle_sql(
-    k: int = DEFAULT_K, n_iter: int = DEFAULT_ITER
-) -> str:
+def cluster_silhouette_oracle_sql(k: int = DEFAULT_K) -> str:
     """DuckDB twin of ``cluster_silhouette``: reuses the unrolled
     Lloyd CTEs of ``kmeans_oracle_sql`` through the final assignment
-    a{n_iter}, then scores each vector against the SAME round's
+    a{DEFAULT_ITER}, then scores each vector against the SAME round's
     centroid table c{n_iter-1}: a = sqrt of the 9dp-rounded squared
     distance to the assigned centroid, b = the min over the others —
     identical to the Spark side's sorted-array second-minimum
     because the assigned centroid attains the global minimum."""
-    base = kmeans_oracle_sql(k, n_iter)
-    # strip kmeans' final SELECT; keep the WITH-chain through a{n_iter}
+    base = kmeans_oracle_sql(k)
+    # strip kmeans' final SELECT; keep the WITH-chain through a{DEFAULT_ITER}
     cut = base.rindex("SELECT cluster, COUNT(*) AS n_vectors")
     prefix = base[:cut].rstrip()
     if not prefix.endswith(","):
         prefix += ","
-    cfin = f"c{n_iter - 1}"
+    cfin = f"c{DEFAULT_ITER - 1}"
     dist = (
         "sqrt(ROUND(list_inner_product(a.e, a.e)"
         f" + list_inner_product({cfin}.c, {cfin}.c)"
@@ -290,7 +289,7 @@ def cluster_silhouette_oracle_sql(
     return f"""{prefix}
 dists AS (SELECT a.vec_id, a.cluster, {cfin}.cluster AS cc,
                  {dist} AS dist
-          FROM a{n_iter} a CROSS JOIN {cfin}),
+          FROM a{DEFAULT_ITER} a CROSS JOIN {cfin}),
 ab AS (SELECT vec_id, cluster,
               MIN(CASE WHEN cc = cluster THEN dist END) AS a_d,
               MIN(CASE WHEN cc != cluster THEN dist END) AS b_d
@@ -309,8 +308,7 @@ FROM su GROUP BY cluster
 
 def silhouette_by_k(
     embeddings: DataFrame,
-    ks: tuple[int, ...] = (2, 4, 8, 16),
-    n_iter: int = DEFAULT_ITER,
+    ks: tuple[int, ...] = SILHOUETTE_KS,
 ) -> DataFrame:
     """(k, n_clusters_used, mean_silhouette_micro) — the choose-K
     sweep over the silhouette meter: run the quantized Lloyd pipeline
@@ -324,13 +322,13 @@ def silhouette_by_k(
     past the natural cell count splits tight cells and the score
     visibly drops (pinned in tests).
 
-    Scale: each K is one independent Lloyd run (n_iter scans) + one
+    Scale: each K is one independent Lloyd run (DEFAULT_ITER scans) + one
     scoring scan reduced to a 1-row aggregate — the sweep is len(ks)
     such pipelines unioned lazily into a len(ks)-row frame; nothing
     is quadratic and nothing collects to the driver."""
     out = None
     for k in ks:
-        pts = _silhouette_points(embeddings, k=k, n_iter=n_iter)
+        pts = _silhouette_points(embeddings, k=k)
         rep = pts.agg(
             F.countDistinct("cluster").cast("int").alias("n_clusters_used"),
             F.expr(
@@ -348,17 +346,15 @@ def silhouette_by_k(
     return out.filter(F.col("__n") > 0).drop("__n")
 
 
-def silhouette_by_k_oracle_sql(
-    ks: tuple[int, ...] = (2, 4, 8, 16), n_iter: int = DEFAULT_ITER
-) -> str:
+def silhouette_by_k_oracle_sql() -> str:
     """DuckDB twin of ``silhouette_by_k``: per candidate K, the
     cluster_silhouette oracle's WITH-chain through the per-point
     score table ``su``, re-aggregated corpus-wide (COUNT(DISTINCT
     cluster) + the same shifted SUM-DIV integer mean), one
     parenthesized WITH-subquery per K glued with UNION ALL."""
     parts = []
-    for k in ks:
-        base = cluster_silhouette_oracle_sql(k, n_iter)
+    for k in SILHOUETTE_KS:
+        base = cluster_silhouette_oracle_sql(k)
         cut = base.rindex("SELECT cluster, COUNT(*) AS n_vectors")
         prefix = base[:cut].rstrip()
         parts.append(

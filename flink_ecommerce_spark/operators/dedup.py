@@ -184,9 +184,7 @@ def minhash_signatures(documents: DataFrame, num_hashes: int = NUM_HASHES) -> Da
     )
 
 
-def source_overlap_minhash(
-    documents: DataFrame, num_hashes: int = NUM_HASHES
-) -> DataFrame:
+def source_overlap_minhash(documents: DataFrame) -> DataFrame:
     """(source_a, source_b, n_equal_slots, est_jaccard) — pairwise
     shingle-set similarity BETWEEN SOURCES from per-source MinHash
     signatures: the corpus-overlap report a mixture designer reads
@@ -196,7 +194,7 @@ def source_overlap_minhash(
 
     Scale shape: a source's MinHash signature is the element-wise MIN
     over its shingles' hash values — a map-side-combinable aggregate,
-    so the shuffle carries (source, ``num_hashes`` longs) regardless
+    so the shuffle carries (source, ``NUM_HASHES`` longs) regardless
     of corpus size (shingle text never moves), and a new batch's
     signature MERGES into the stored one by the same MIN — the sketch
     is mergeable across shards and across time, like the portable
@@ -227,20 +225,20 @@ def source_overlap_minhash(
     sig = hashed.groupBy("source").agg(
         *[
             F.min((F.col("h1") + i * F.col("h2")) % MINHASH_PRIME).alias(f"mh{i}")
-            for i in range(num_hashes)
+            for i in range(NUM_HASHES)
         ]
     )
     a = sig.select(
         F.col("source").alias("source_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_hashes)],
+        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
     )
     b = sig.select(
         F.col("source").alias("source_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(num_hashes)],
+        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
     )
     n_eq = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     )
     return (
         a.join(F.broadcast(b), F.col("source_a") < F.col("source_b"))
@@ -249,7 +247,7 @@ def source_overlap_minhash(
             "source_b",
             n_eq.cast("int").alias("n_equal_slots"),
             micro(
-                n_eq.cast("double") / F.lit(float(num_hashes))
+                n_eq.cast("double") / F.lit(float(NUM_HASHES))
             ).alias("est_jaccard_micro"),
         )
     )
@@ -513,9 +511,7 @@ def simhash_near_pairs(
     )
 
 
-def incremental_dedup(
-    new_docs: DataFrame, corpus: DataFrame, normalized: bool = True
-) -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Daily-pipeline dedup: keep only the NEW batch's documents whose
     content hash is absent from the existing corpus AND unique within
     the batch (first doc_id wins intra-batch, matching dedup_exact's
@@ -525,14 +521,10 @@ def incremental_dedup(
     before any join — the corpus side ships one hash per distinct
     content, the anti-join and the intra-batch groupBy shuffle hashes
     only, never text."""
-    def h(df):
-        text = F.col("text")
-        if normalized:
-            text = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-        return F.md5(text).alias("__h")
-
-    seen = corpus.select(h(corpus)).distinct()
-    batch = new_docs.select("doc_id", h(new_docs))
+    normalized = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    h = F.md5(normalized).alias("__h")
+    seen = corpus.select(h).distinct()
+    batch = new_docs.select("doc_id", h)
     fresh = batch.join(seen, "__h", "left_anti")
     keep = (
         fresh.groupBy("__h").agg(F.min("doc_id").alias("doc_id"))
@@ -568,8 +560,6 @@ def incremental_fuzzy_dedup(
     new_docs: DataFrame,
     corpus: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
     corpus_signatures: DataFrame | None = None,
     verify: bool = True,
 ) -> DataFrame:
@@ -604,15 +594,13 @@ def incremental_fuzzy_dedup(
     # no checkpoint (r10 job-count audit): nb feeds exactly ONE join
     # side, so the old eager checkpoint bought no reuse — it only
     # added a scheduling barrier + a materialization job per batch
-    nb = _band_buckets(
-        minhash_signatures(new_docs, num_hashes=num_hashes), num_hashes, num_bands
-    )
+    nb = _band_buckets(minhash_signatures(new_docs))
     sigs = (
         corpus_signatures
         if corpus_signatures is not None
-        else minhash_signatures(corpus, num_hashes=num_hashes)
+        else minhash_signatures(corpus)
     )
-    cb = _band_buckets(sigs, num_hashes, num_bands)
+    cb = _band_buckets(sigs)
     cands = (
         nb.alias("n")
         .join(
@@ -679,14 +667,7 @@ FUZZY_DECON_NUM = 7  # contamination Jaccard threshold as the exact
 FUZZY_DECON_DEN = 10  # rational 7/10 — integer-only gate arithmetic
 
 
-def fuzzy_decontaminate(
-    documents: DataFrame,
-    eval_mod: int = 20,
-    threshold_num: int = FUZZY_DECON_NUM,
-    threshold_den: int = FUZZY_DECON_DEN,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-) -> DataFrame:
+def fuzzy_decontaminate(documents: DataFrame) -> DataFrame:
     """(doc_id, eval_doc_id, jaccard_micro) — NEAR-duplicate benchmark
     contamination: training documents with a verified near-duplicate
     (shingle Jaccard ≥ num/den) in the held-out eval slice, each with
@@ -712,17 +693,12 @@ def fuzzy_decontaminate(
     from pyspark.sql import Window
 
     from ..functions.portable import micro
+    from .text import EVAL_MOD
 
-    train = documents.filter((F.col("doc_id") % eval_mod) != 0)
-    eval_docs = documents.filter((F.col("doc_id") % eval_mod) == 0)
-    tb = _band_buckets(
-        minhash_signatures(train, num_hashes=num_hashes), num_hashes, num_bands
-    )
-    eb = _band_buckets(
-        minhash_signatures(eval_docs, num_hashes=num_hashes),
-        num_hashes,
-        num_bands,
-    )
+    train = documents.filter((F.col("doc_id") % EVAL_MOD) != 0)
+    eval_docs = documents.filter((F.col("doc_id") % EVAL_MOD) == 0)
+    tb = _band_buckets(minhash_signatures(train))
+    eb = _band_buckets(minhash_signatures(eval_docs))
     cands = (
         tb.alias("t")
         .join(
@@ -767,8 +743,8 @@ def fuzzy_decontaminate(
             "eval_doc_id",
         )
         .filter(
-            F.lit(threshold_den) * F.col("n_inter")
-            >= F.lit(threshold_num)
+            F.lit(FUZZY_DECON_DEN) * F.col("n_inter")
+            >= F.lit(FUZZY_DECON_NUM)
             * (F.col("na") + F.col("nb") - F.col("n_inter"))
         )
         .select(
@@ -845,11 +821,7 @@ def shingle_novelty(
     )
 
 
-def containment_pairs(
-    documents: DataFrame,
-    threshold: float = 0.8,
-    max_df_frac: float = NGRAM_MAX_DF_FRAC,
-) -> DataFrame:
+def containment_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Asymmetric CONTAINMENT: |A∩B| / |A| and |A∩B| / |B| for pairs
     sharing at least one (df-capped) shingle, kept when either side
     is mostly contained in the other. Broder's resemblance-vs-
@@ -873,7 +845,7 @@ def containment_pairs(
         sh_all.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") > max_df_frac * F.col("n_docs"))
+        .filter(F.col("df") > NGRAM_MAX_DF_FRAC * F.col("n_docs"))
         .select("shingle")
     )
     sh = sh_all.join(F.broadcast(hot), "shingle", "left_anti")
@@ -912,17 +884,11 @@ CONTAIN_NUM = 4  # containment threshold as the exact rational 4/5,
 CONTAIN_DEN = 5  # matching containment_pairs' 0.8 default
 
 
-def containment_sketch_pairs(
-    documents: DataFrame,
-    threshold_num: int = CONTAIN_NUM,
-    threshold_den: int = CONTAIN_DEN,
-    k: int = CONTAIN_SKETCH_K,
-    max_df_frac: float = NGRAM_MAX_DF_FRAC,
-) -> DataFrame:
+def containment_sketch_pairs(documents: DataFrame) -> DataFrame:
     """(doc_a, doc_b, k_eff, n_hits, containment_est_micro) — the
     SCALE path ``containment_pairs`` promises in its docstring: the
     bottom-k containment sketch (Broder's sampling argument) replaces
-    the full posting self-join. Per document, keep the k shingles
+    the full posting self-join. Per document, keep the k = CONTAIN_SKETCH_K shingles
     with the smallest portable hash (a deterministic uniform sample
     of its capped shingle set — the ``kmv_sample`` primitive); the
     estimate of C(A→B) is the fraction of A's sampled shingles
@@ -951,7 +917,7 @@ def containment_sketch_pairs(
         sh_all.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") > max_df_frac * F.col("n_docs"))
+        .filter(F.col("df") > NGRAM_MAX_DF_FRAC * F.col("n_docs"))
         .select("shingle")
     )
     sh = sh_all.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint(
@@ -961,7 +927,7 @@ def containment_sketch_pairs(
     sample = (
         sh.withColumn("__h", hash32(F.col("shingle"), salt="kc"))
         .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
+        .filter(F.col("__rk") <= CONTAIN_SKETCH_K)
         .select("doc_id", "shingle")
     )
     k_eff = sample.groupBy("doc_id").agg(F.count(F.lit(1)).alias("k_eff"))
@@ -979,8 +945,8 @@ def containment_sketch_pairs(
             k_eff.select(F.col("doc_id").alias("doc_a"), "k_eff"), "doc_a"
         )
         .filter(
-            F.lit(threshold_den) * F.col("n_hits")
-            >= F.lit(threshold_num) * F.col("k_eff")
+            F.lit(CONTAIN_DEN) * F.col("n_hits")
+            >= F.lit(CONTAIN_NUM) * F.col("k_eff")
         )
         .select(
             "doc_a",
@@ -1373,9 +1339,9 @@ def prefix_jaccard_pairs(
     )
 
 
-def corpus_growth(documents: DataFrame, bucket_size: int = 100) -> DataFrame:
+def corpus_growth(documents: DataFrame) -> DataFrame:
     """The data-scaling question in one table: as the corpus grows (in
-    doc_id order, bucketed every ``bucket_size`` docs), how much NEW
+    doc_id order, bucketed every 100 docs), how much NEW
     content does each increment bring? Output per bucket:
     (bucket, n_docs, n_pairs, n_novel, novelty_rate_micro,
     cum_vocab) — n_pairs = distinct (doc, shingle) occurrences in the
@@ -1391,7 +1357,7 @@ def corpus_growth(documents: DataFrame, bucket_size: int = 100) -> DataFrame:
     Scale: one shingle pass; first-occurrence is a min aggregation on
     shingle (map-side combined); per-bucket rollups shuffle bucket
     keys only. The cumulative-vocabulary window runs over
-    corpus_size/bucket_size rows — thousands, not billions."""
+    corpus_size/100 rows — thousands, not billions."""
     from pyspark.sql import Window
 
     from .scale import ensure_parallelism
@@ -1400,7 +1366,7 @@ def corpus_growth(documents: DataFrame, bucket_size: int = 100) -> DataFrame:
         # floor division, NOT a double cast: Spark's double->long cast
         # truncates while DuckDB's rounds — floor is the one spelling
         # both engines agree on
-        F.floor(F.col("doc_id") / bucket_size).alias("bucket"),
+        F.floor(F.col("doc_id") / 100).alias("bucket"),
         "doc_id",
         "shingle",
     ).localCheckpoint(eager=True)
@@ -1427,9 +1393,7 @@ def corpus_growth(documents: DataFrame, bucket_size: int = 100) -> DataFrame:
     )
 
 
-def lsh_recall_report(
-    documents: DataFrame, threshold: float = PREFIX_JOIN_THRESHOLD
-) -> DataFrame:
+def lsh_recall_report(documents: DataFrame) -> DataFrame:
     """Self-auditing approximation quality: how much of the EXACT
     near-dup truth does the MinHash-LSH pipeline surface? One row:
     (n_true, n_lsh, n_hit, recall).
@@ -1447,8 +1411,8 @@ def lsh_recall_report(
     At 100 TB you'd run this on a SAMPLE (the exact join is the
     expensive branch); the report shape is the point — an engine that
     ships approximate dedup should ship its own recall meter."""
-    truth = prefix_jaccard_pairs(documents, threshold).select("doc_a", "doc_b")
-    lsh = lsh_candidate_pairs(documents, threshold).select("doc_a", "doc_b")
+    truth = prefix_jaccard_pairs(documents).select("doc_a", "doc_b")
+    lsh = lsh_candidate_pairs(documents, PREFIX_JOIN_THRESHOLD).select("doc_a", "doc_b")
     truth = truth.localCheckpoint(eager=True)
     lsh = lsh.localCheckpoint(eager=True)
     hit = truth.join(lsh, ["doc_a", "doc_b"], "left_semi")
@@ -1471,11 +1435,7 @@ def lsh_recall_report(
     )
 
 
-def lsh_recall_sampled(
-    documents: DataFrame,
-    threshold: float = PREFIX_JOIN_THRESHOLD,
-    sample_mod: int = 2,
-) -> DataFrame:
+def lsh_recall_sampled(documents: DataFrame, sample_mod: int = 2) -> DataFrame:
     """The recall meter that stays usable on corpora too large for
     the exact prefix join: exact truth is computed only
     over a deterministic portable-hash sample of documents
@@ -1502,8 +1462,8 @@ def lsh_recall_sampled(
     sampled = documents.filter(
         hash32(F.col("doc_id").cast("string"), salt="rs") % sample_mod == 0
     )
-    truth = prefix_jaccard_pairs(sampled, threshold).select("doc_a", "doc_b")
-    lsh = lsh_candidate_pairs(sampled, threshold).select("doc_a", "doc_b")
+    truth = prefix_jaccard_pairs(sampled).select("doc_a", "doc_b")
+    lsh = lsh_candidate_pairs(sampled, PREFIX_JOIN_THRESHOLD).select("doc_a", "doc_b")
     truth = truth.localCheckpoint(eager=True)
     lsh = lsh.localCheckpoint(eager=True)
     hit = truth.join(lsh, ["doc_a", "doc_b"], "left_semi")
@@ -1557,15 +1517,10 @@ def dup_rate_by_source(documents: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_precision(
-    documents: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-) -> DataFrame:
+def lsh_candidate_precision(documents: DataFrame) -> DataFrame:
     """One-row PRECISION report for the LSH banding: of the raw
     band-bucket candidate pairs, how many verify at exact shingle
-    Jaccard >= ``threshold``. The complement of ``lsh_recall_report``
+    Jaccard >= ``JACCARD_THRESHOLD``. The complement of ``lsh_recall_report``
     / ``lsh_recall_sampled`` — recall says what the banding misses,
     precision says what the verify stage pays to throw away, and the
     two together are the full operating point of the banding
@@ -1590,9 +1545,9 @@ def lsh_candidate_precision(
     false positive) has no intersection row; the left join counts
     it as unverified instead of dropping it, which is the entire
     point of a precision meter."""
-    tau_u = int(round(threshold * 1_000_000))
-    sigs = minhash_signatures(documents, num_hashes=num_hashes)
-    bb = _band_buckets(sigs, num_hashes, num_bands).localCheckpoint(eager=True)
+    tau_u = int(round(JACCARD_THRESHOLD * 1_000_000))
+    sigs = minhash_signatures(documents)
+    bb = _band_buckets(sigs).localCheckpoint(eager=True)
     a = bb.alias("a")
     b = bb.alias("b")
     cands = (
@@ -1686,10 +1641,10 @@ WINNOW_POS_MOD = 1 << 24  # position bits packed under the hash in the key
 WINNOW_MIN_SHARED = 2  # overlap pairs need >= this many shared fingerprints
 
 
-def _winnow_fp_arrays(documents: DataFrame, w: int = WINNOW_W) -> DataFrame:
+def _winnow_fp_arrays(documents: DataFrame) -> DataFrame:
     """(doc_id, __n, __fp) — per-document array of DISTINCT winnowed
     fingerprint keys (Schleimer, Wilkerson & Aiken, SIGMOD 2003: the
-    MOSS algorithm): per sliding window of ``w`` consecutive shingle
+    MOSS algorithm): per sliding window of w = ``WINNOW_W`` consecutive shingle
     hashes, select the minimum, breaking ties to the RIGHTMOST
     position (the paper's rule — it maximizes fingerprint sharing
     between overlapping documents).
@@ -1701,7 +1656,7 @@ def _winnow_fp_arrays(documents: DataFrame, w: int = WINNOW_W) -> DataFrame:
     16M-shingle document the tie-break (only) degrades, documented
     not hidden. Windows that would run past the end of the document
     are dropped (pos ≤ n−w), except that a document with fewer than
-    ``w`` shingles keeps its single truncated window — every document
+    w shingles keeps its single truncated window — every document
     with at least one shingle (≥ 3 words) fingerprints; shorter
     documents produce no shingles and are absent (pinned in
     test_winnowing_short_doc_single_fingerprint /
@@ -1745,27 +1700,25 @@ def _winnow_fp_arrays(documents: DataFrame, w: int = WINNOW_W) -> DataFrame:
         F.array_distinct(
             F.transform(
                 F.sequence(
-                    F.lit(0), F.greatest(F.col("__n") - w, F.lit(0))
+                    F.lit(0), F.greatest(F.col("__n") - WINNOW_W, F.lit(0))
                 ),
-                lambda i: F.array_min(F.slice(F.col("__k"), i + 1, w)),
+                lambda i: F.array_min(F.slice(F.col("__k"), i + 1, WINNOW_W)),
             )
         ).alias("__fp"),
     )
 
 
-def _winnow_keys(documents: DataFrame, w: int = WINNOW_W) -> DataFrame:
+def _winnow_keys(documents: DataFrame) -> DataFrame:
     """(doc_id, __n, key) — winnowed fingerprint keys, one row per
     distinct key per document (see _winnow_fp_arrays for the
     selection rule). The explode is narrow — it emits the ~2/(w+1)
     winnowed sample, never the full shingle stream."""
-    return _winnow_fp_arrays(documents, w).select(
+    return _winnow_fp_arrays(documents).select(
         "doc_id", "__n", F.explode("__fp").alias("key")
     )
 
 
-def winnowing_fingerprints(
-    documents: DataFrame, w: int = WINNOW_W
-) -> DataFrame:
+def winnowing_fingerprints(documents: DataFrame) -> DataFrame:
     """(doc_id, n_shingles, n_fingerprints, density_u) — per-document
     winnowing summary. Expected density is 2/(w+1) (paper §5);
     density_u = n_fingerprints·1e6 DIV n_windows lets a pipeline
@@ -1776,7 +1729,7 @@ def winnowing_fingerprints(
     arithmetic (_winnow_fp_arrays) and this summary reads the array
     sizes in the same scan task. Nothing moves: not text, not
     shingles, not keys."""
-    fp = _winnow_fp_arrays(documents, w)
+    fp = _winnow_fp_arrays(documents)
     return fp.select(
         "doc_id",
         F.col("__n").cast("long").alias("n_shingles"),
@@ -1787,7 +1740,7 @@ def winnowing_fingerprints(
         "n_fingerprints",
         F.expr(
             f"CAST((n_fingerprints * 1000000)"
-            f" DIV (GREATEST(n_shingles - {w}, 0) + 1) AS BIGINT)"
+            f" DIV (GREATEST(n_shingles - {WINNOW_W}, 0) + 1) AS BIGINT)"
         ).alias("density_u"),
     )
 

@@ -25,12 +25,10 @@ MAX_DIST = 1
 
 def fuzzy_name_pairs(
     customer: DataFrame,
-    block_len: int = BLOCK_LEN,
-    max_dist: int = MAX_DIST,
     max_block_rows: int | None = None,
 ) -> DataFrame:
     """Candidate duplicate-customer pairs: same normalized-name prefix
-    (block), Levenshtein distance ≤ max_dist, each unordered pair
+    (block), Levenshtein distance ≤ MAX_DIST, each unordered pair
     reported once (custkey_1 < custkey_2).
 
     Scale: the self-join shuffles both sides on the block key once;
@@ -52,7 +50,7 @@ def fuzzy_name_pairs(
     t = customer.select(
         "c_custkey",
         norm.alias("name"),
-        F.substring(norm, 1, block_len).alias("blk"),
+        F.substring(norm, 1, BLOCK_LEN).alias("blk"),
     )
     if max_block_rows is not None:
         hot = (
@@ -70,7 +68,7 @@ def fuzzy_name_pairs(
             (F.col("a.blk") == F.col("b.blk"))
             & (F.col("a.c_custkey") < F.col("b.c_custkey")),
         )
-        .filter(dist <= max_dist)
+        .filter(dist <= MAX_DIST)
         .select(
             F.col("a.c_custkey").alias("custkey_1"),
             F.col("b.c_custkey").alias("custkey_2"),
@@ -79,13 +77,13 @@ def fuzzy_name_pairs(
     )
 
 
-def block_profile(customer: DataFrame, block_len: int = BLOCK_LEN) -> DataFrame:
+def block_profile(customer: DataFrame) -> DataFrame:
     """Block-size histogram — the operational health check for the
     blocked join (a runaway block means the blocking key stopped
     discriminating and the join cost curve went quadratic)."""
     norm = F.lower(F.trim(F.col("c_name")))
     return (
-        customer.select(F.substring(norm, 1, block_len).alias("blk"))
+        customer.select(F.substring(norm, 1, BLOCK_LEN).alias("blk"))
         .groupBy("blk")
         .agg(F.count(F.lit(1)).alias("block_size"))
         .groupBy("block_size")

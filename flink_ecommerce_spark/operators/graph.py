@@ -23,9 +23,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank(
-    edges: DataFrame, iterations: int = 5, damping: float = 0.85
-) -> DataFrame:
+DAMPING = 0.85  # the teleport complement, as in Brin & Page
+
+
+def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """Fixed-iteration PageRank (Brin/Page 1998, power method) as a
     driver loop of join+groupBy rounds — iterative algorithm #3 in
     this module's family (k-means, connected components, PageRank).
@@ -96,8 +97,8 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping) / F.col("n")
-                    + F.lit(damping) * F.coalesce("c", F.lit(0.0))
+                    F.lit(1.0 - DAMPING) / F.col("n")
+                    + F.lit(DAMPING) * F.coalesce("c", F.lit(0.0))
                 ).alias("rank"),
             )
         )

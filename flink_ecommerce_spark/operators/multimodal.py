@@ -261,28 +261,24 @@ def media_ahash(documents: DataFrame) -> DataFrame:
     )
 
 
-def media_ahash_pairs(
-    documents: DataFrame,
-    max_hamming: int = AHASH_HAMMING_MAX,
-    band_bits: int = AHASH_BAND_BITS,
-) -> DataFrame:
+def media_ahash_pairs(documents: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming) — perceptual near-duplicate pairs by
-    aHash hamming distance ≤ max_hamming, candidates from matching
-    any ``band_bits``-wide band (simhash_near_pairs' banding shape).
-    Pigeonhole: with B = 64/band_bits bands, a pair at hamming < B
+    aHash hamming distance ≤ AHASH_HAMMING_MAX, candidates from matching
+    any ``AHASH_BAND_BITS``-wide band (simhash_near_pairs' banding shape).
+    Pigeonhole: with B = 64/AHASH_BAND_BITS bands, a pair at hamming < B
     must share an untouched band — at 8-bit bands B = 8 > 7, so
     recall is EXACT for the shipped threshold. Scale knob: 8-bit
     bands give 256 buckets per band, so at large corpora hot buckets
-    form from true perceptual-dup mass — widen ``band_bits`` exactly
+    form from true perceptual-dup mass — widen ``AHASH_BAND_BITS`` exactly
     as for ``dedup.simhash_near_pairs`` (wider bands bound the
     self-join; recall beyond the pigeonhole bound is then metered,
     not assumed)."""
-    assert 64 % band_bits == 0 and band_bits in (8, 16, 32)
+    assert 64 % AHASH_BAND_BITS == 0 and AHASH_BAND_BITS in (8, 16, 32)
     sh = media_ahash(documents).localCheckpoint(eager=True)
-    mask = (1 << band_bits) - 1
+    mask = (1 << AHASH_BAND_BITS) - 1
     structs = []
-    for k in range(64 // band_bits):
-        off = k * band_bits
+    for k in range(64 // AHASH_BAND_BITS):
+        off = k * AHASH_BAND_BITS
         src, rel = ("ahash_lo", off) if off < 32 else ("ahash_hi", off - 32)
         structs.append(
             F.struct(
@@ -320,5 +316,5 @@ def media_ahash_pairs(
             ).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= AHASH_HAMMING_MAX)
     )

@@ -267,9 +267,7 @@ def balanced_shards(
     )
 
 
-def shard_balance(
-    documents: DataFrame, n_shards: int = N_SHARDS, id_bucket_bits: int = 0
-) -> DataFrame:
+def shard_balance(documents: DataFrame, n_shards: int = N_SHARDS) -> DataFrame:
     """Per-shard load report for ``balanced_shards``: document count,
     token total, and each shard's token share of the corpus — the
     number a data-parallel training job checks before launch (a
@@ -277,9 +275,7 @@ def shard_balance(
 
     Scale: reuses the balanced_shards assignment (narrow rows), then
     one n_shards-row aggregate with map-side combine."""
-    a = balanced_shards(
-        documents, n_shards=n_shards, id_bucket_bits=id_bucket_bits
-    )
+    a = balanced_shards(documents, n_shards=n_shards)
     # n_shards rows; checkpointed so the corpus-total branch reads it
     # instead of re-planning the whole rank decomposition
     totals = a.groupBy("shard").agg(
@@ -303,9 +299,7 @@ def shard_balance(
     )
 
 
-def shard_manifest(
-    documents: DataFrame, n_shards: int = N_SHARDS, id_bucket_bits: int = 0
-) -> DataFrame:
+def shard_manifest(documents: DataFrame) -> DataFrame:
     """Per-shard integrity manifest: document count, token total,
     doc_id range, and an ORDER-INDEPENDENT content checksum (the sum
     of each member's portable 32-bit hash of md5(text)). This is the
@@ -317,14 +311,12 @@ def shard_manifest(
     Scale: the shard assignment ships narrow rows (ids + tokens); the
     md5 is computed at the documents scan and reduced to 32 bits
     before the doc_id-keyed join, so text never shuffles; the final
-    aggregate is n_shards rows with map-side combine. Integer sums
+    aggregate is N_SHARDS rows with map-side combine. Integer sums
     are exact and commutative — executor scheduling can't change the
     checksum."""
     from ..functions.portable import hash32
 
-    assign = balanced_shards(
-        documents, n_shards=n_shards, id_bucket_bits=id_bucket_bits
-    ).select("doc_id", "n_tokens", "shard")
+    assign = balanced_shards(documents).select("doc_id", "n_tokens", "shard")
     content = documents.select(
         "doc_id", hash32(F.md5("text"), salt="manifest").alias("__h")
     )
@@ -348,7 +340,6 @@ def epoch_shuffle(
     documents: DataFrame,
     seed: int = 0,
     n_shards: int = N_SHARDS,
-    bucket_bits: int = EPOCH_SHUFFLE_BUCKET_BITS,
 ) -> DataFrame:
     """Deterministic per-epoch global permutation of training samples
     — the data-loader step between ``balanced_shards`` and an
@@ -367,12 +358,12 @@ def epoch_shuffle(
 
     Scale (the no-global-sort discipline of ``balanced_shards``): a
     single ORDER BY hash window would collapse to one task. Instead
-    the hash's TOP ``bucket_bits`` bits bucket the rows — bucket
+    the hash's TOP ``EPOCH_SHUFFLE_BUCKET_BITS`` bits bucket the rows — bucket
     order IS hash order, so ranks decompose exactly: (1) per-bucket
-    counts (map-side combined, 2^bucket_bits rows), (2) running
+    counts (map-side combined, 2^EPOCH_SHUFFLE_BUCKET_BITS rows), (2) running
     offsets over that tiny table, (3) row_number within each bucket
     (ordered by hash, doc_id) + broadcast offset. Parallelism =
-    2^bucket_bits regardless of corpus size; no stage sees more than
+    2^EPOCH_SHUFFLE_BUCKET_BITS regardless of corpus size; no stage sees more than
     one bucket of rows. The reference job has no batch analog
     (streaming-only; SURVEY.md §2) — this operator is LLM-pipeline
     extension surface."""
@@ -383,7 +374,9 @@ def epoch_shuffle(
         # top bits: bucket ascending == hash ascending, so per-bucket
         # offsets + within-bucket ranks compose to the exact global rank
         "__b",
-        F.floor(F.col("__h") / F.lit(1 << (32 - bucket_bits))).cast("int"),
+        F.floor(
+            F.col("__h") / F.lit(1 << (32 - EPOCH_SHUFFLE_BUCKET_BITS))
+        ).cast("int"),
     )
     # counts and ranks share this narrow frame; materialize once
     t = t.localCheckpoint(eager=True)

@@ -69,21 +69,16 @@ def _toks(documents: DataFrame) -> DataFrame:
     )
 
 
-def bm25_topk(
-    documents: DataFrame,
-    queries: dict[str, str] | None = None,
-    k: int = BM25_K,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
+def bm25_topk(documents: DataFrame, queries: dict[str, str] | None = None) -> DataFrame:
     """BM25 top-k documents per query. Output: (query_id, doc_id,
     score, rank), rank 1..k by (score desc, doc_id asc).
 
     Uses the Lucene-style always-positive idf
     ``ln(1 + (N - df + 0.5) / (df + 0.5))`` so stop-wordy query terms
     degrade toward zero instead of going negative, and the standard
-    tf saturation ``tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``
-    (Robertson/Spärck Jones; the exact formula Lucene ships).
+    tf saturation ``tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``, with
+    k1 = ``BM25_K1`` and b = ``BM25_B`` (Robertson/Spärck Jones; the
+    exact formula Lucene ships).
 
     Scores are rounded to 6 decimals BEFORE ranking so the ranking is
     reproducible cross-engine (the oracle twin ranks the same rounded
@@ -118,11 +113,11 @@ def bm25_topk(
     contrib = (
         idf
         * F.col("tf")
-        * F.lit(k1 + 1.0)
+        * F.lit(BM25_K1 + 1.0)
         / (
             F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+            + F.lit(BM25_K1)
+            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
         )
     )
     scored = (
@@ -142,7 +137,7 @@ def bm25_topk(
     )
     return (
         scored.withColumn("rank", rank)
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= BM25_K)
         .select("query_id", "doc_id", "score", "rank")
     )
 
@@ -152,15 +147,13 @@ HYBRID_M = 20  # per-modality shortlist depth fed into the fusion
 HYBRID_K = 10  # fused results returned per query
 
 
-def lexical_topk(
-    documents: DataFrame, n_queries: int = 10, m: int = HYBRID_M
-) -> DataFrame:
+def lexical_topk(documents: DataFrame) -> DataFrame:
     """More-like-this lexical ranking: for each query document
-    (doc_id < n_queries), the top-m corpus docs by word-shingle
+    (doc_id < 10), the top-m corpus docs by word-shingle
     Jaccard (self excluded). Output: (query_id, doc_id, jaccard,
     lex_rk).
 
-    Scale: the query side is n_queries docs' shingles — broadcast-
+    Scale: the query side is 10 docs' shingles — broadcast-
     sized — so the corpus shingle table is scanned once and joined
     against a tiny build side; fan-out per query shingle is that
     shingle's posting length.
@@ -169,7 +162,7 @@ def lexical_topk(
     table fed three consumers (sizes, the query slice, the posting
     join), each of which re-ran the tokenize+shingle scan. It is now
     materialized ONCE (localCheckpoint at construction; persist on a
-    cluster) and the query slice shingles only the n_queries
+    cluster) and the query slice shingles only the 10
     documents (filter pushed BELOW the per-row shingle work — same
     rows, since shingling is per-row). Same values everywhere:
     _doc_shingles is a pure per-row function, so filter-then-shingle
@@ -183,7 +176,7 @@ def lexical_topk(
         eager=True
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    qs = _doc_shingles(documents.filter(F.col("doc_id") < n_queries)).select(
+    qs = _doc_shingles(documents.filter(F.col("doc_id") < 10)).select(
         F.col("doc_id").alias("query_id"), "shingle"
     )
     inter = (
@@ -212,25 +205,19 @@ def lexical_topk(
     )
     return (
         scored.withColumn("lex_rk", rk)
-        .filter(F.col("lex_rk") <= m)
+        .filter(F.col("lex_rk") <= HYBRID_M)
         .select("query_id", "doc_id", "jaccard", "lex_rk")
     )
 
 
-def hybrid_search_rrf(
-    documents: DataFrame,
-    embeddings: DataFrame,
-    k: int = HYBRID_K,
-    m: int = HYBRID_M,
-    rrf_k: int = RRF_K,
-) -> DataFrame:
+def hybrid_search_rrf(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
     """Hybrid retrieval: reciprocal-rank fusion (Cormack et al. 2009)
     of the semantic shortlist (exact cosine kNN over embeddings) and
     the lexical shortlist (word-shingle Jaccard), for the shared
     query set (doc_id == vec_id < 10, the similarity family's
     convention). Output: (query_id, doc_id, rrf_score, rank).
 
-    rrf(d) = Σ_modality 1/(rrf_k + rank_modality(d)) over the top-m of
+    rrf(d) = Σ_modality 1/(RRF_K + rank_modality(d)) over the top-m of
     each modality — rank fusion needs no score calibration between
     cosine and Jaccard, which is exactly why RRF is the default fuser
     in production hybrid search. A doc surfaced by BOTH modalities
@@ -239,19 +226,19 @@ def hybrid_search_rrf(
     retrieval stack for RAG/curation over a large corpus.
 
     Scale: both shortlists are top-m per query (tiny); the fusion is
-    a full outer join of two (n_queries × m)-row tables."""
+    a full outer join of two (n_queries × HYBRID_M)-row tables."""
     from .similarity import knn_bruteforce
 
-    sem = knn_bruteforce(embeddings, k=m).select(
+    sem = knn_bruteforce(embeddings, k=HYBRID_M).select(
         "query_id",
         F.col("neighbor_id").alias("doc_id"),
         F.col("rk").alias("sem_rk"),
     )
-    lex = lexical_topk(documents, m=m).select("query_id", "doc_id", "lex_rk")
+    lex = lexical_topk(documents).select("query_id", "doc_id", "lex_rk")
     fused = sem.join(lex, ["query_id", "doc_id"], "full")
     rrf = F.round(
-        F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("sem_rk")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("lex_rk")), F.lit(0.0)),
+        F.coalesce(F.lit(1.0) / (F.lit(RRF_K) + F.col("sem_rk")), F.lit(0.0))
+        + F.coalesce(F.lit(1.0) / (F.lit(RRF_K) + F.col("lex_rk")), F.lit(0.0)),
         6,
     )
     from pyspark.sql import Window
@@ -264,7 +251,7 @@ def hybrid_search_rrf(
     return (
         fused.withColumn("rrf_score", rrf)
         .withColumn("rank", rank)
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= HYBRID_K)
         .select("query_id", "doc_id", "rrf_score", "rank")
     )
 
@@ -344,7 +331,6 @@ def phrase_scan(documents: DataFrame, phrase: str = PHRASE) -> DataFrame:
 def retrieval_eval(
     documents: DataFrame,
     queries: dict[str, str] | None = None,
-    k: int = BM25_K,
 ) -> DataFrame:
     """(query_id, n_relevant, first_rel_rank, rr_u) — retrieval
     QUALITY metrics for the BM25 ranker: reciprocal rank of the
@@ -390,7 +376,7 @@ def retrieval_eval(
         .select("query_id", "doc_id")
         .localCheckpoint(eager=True)  # feeds the count AND the rank join
     )
-    topk = bm25_topk(documents, qs, k)
+    topk = bm25_topk(documents, qs)
     first = (
         topk.join(rel, ["query_id", "doc_id"], "left_semi")
         .groupBy("query_id")
@@ -424,7 +410,6 @@ def retrieval_eval(
 def retrieval_ndcg(
     documents: DataFrame,
     queries: dict[str, str] | None = None,
-    k: int = BM25_K,
 ) -> DataFrame:
     """(query_id, n_relevant, dcg_micro, idcg_micro, ndcg_micro) —
     nDCG@k for the BM25 ranker under the same deterministic
@@ -466,7 +451,7 @@ def retrieval_ndcg(
         .select("query_id", "doc_id")
         .localCheckpoint(eager=True)  # feeds the count AND the rank join
     )
-    topk = bm25_topk(documents, qs, k)
+    topk = bm25_topk(documents, qs)
     term_u = F.floor(
         F.lit(1_000_000.0) / F.log2(F.col("rank") + F.lit(1.0)) + F.lit(0.5)
     ).cast("long")
@@ -482,7 +467,7 @@ def retrieval_ndcg(
     idcg = nrel.select(
         "query_id",
         F.expr(
-            f"aggregate(sequence(1, int(least(n_relevant, {k}))),"
+            f"aggregate(sequence(1, int(least(n_relevant, {BM25_K}))),"
             " cast(0 as bigint),"
             " (acc, i) -> acc"
             " + CAST(FLOOR(1000000.0 / log2(i + 1.0) + 0.5) AS BIGINT))"

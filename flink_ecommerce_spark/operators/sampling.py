@@ -21,26 +21,21 @@ def _bucket(key: Column, salt: str, n: int = 100) -> Column:
     return hash32(key.cast("string"), salt=salt) % n
 
 
-def sample_events(events: DataFrame, pct: int = 10, salt: str = "sample") -> DataFrame:
-    """Deterministic ~pct% sample keyed on event_id."""
-    return events.filter(_bucket(F.col("event_id"), salt) < pct).select(
+def sample_events(events: DataFrame) -> DataFrame:
+    """Deterministic ~10% sample keyed on event_id."""
+    return events.filter(_bucket(F.col("event_id"), "sample") < 10).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
 
 
-def dataset_splits(
-    events: DataFrame,
-    train_pct: int = 80,
-    val_pct: int = 10,
-    salt: str = "split",
-) -> DataFrame:
+def dataset_splits(events: DataFrame) -> DataFrame:
     """Assign train/val/test by hash bucket of the USER (not the
     event): all of a user's events share a split — the leakage-safe
     grouping for behavioral data."""
-    b = _bucket(F.col("user_id"), salt)
+    b = _bucket(F.col("user_id"), "split")
     split = (
-        F.when(b < train_pct, F.lit("train"))
-        .when(b < train_pct + val_pct, F.lit("val"))
+        F.when(b < 80, F.lit("train"))
+        .when(b < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     return events.select("event_id", "user_id", split.alias("split"))
@@ -71,11 +66,7 @@ STRATA_RATES: dict[str, int] = {
 }
 
 
-def stratified_sample(
-    events: DataFrame,
-    rates: dict[str, int] | None = None,
-    salt: str = "strat",
-) -> DataFrame:
+def stratified_sample(events: DataFrame) -> DataFrame:
     """Deterministic stratified sampling: each stratum (event_type)
     keeps its own hash-bucket percentage of rows — the class-
     rebalancing step of a training pipeline, reproducible across
@@ -85,10 +76,9 @@ def stratified_sample(
     Scale: the rate lookup folds into a CASE expression on the scan —
     a pure per-row filter, no shuffle, no driver-side sampling
     state."""
-    rates = STRATA_RATES if rates is None else rates
-    b = _bucket(F.col("event_id"), salt)
+    b = _bucket(F.col("event_id"), "strat")
     rate = F.lit(0)
-    for k, v in rates.items():
+    for k, v in STRATA_RATES.items():
         rate = F.when(F.col("event_type") == k, F.lit(v)).otherwise(rate)
     return events.filter(b < rate).select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -107,11 +97,7 @@ MIXTURE_WEIGHTS: dict[str, int] = {
 }
 
 
-def mixture_sample(
-    documents: DataFrame,
-    weights: dict[str, int] | None = None,
-    salt: str = "mix",
-) -> DataFrame:
+def mixture_sample(documents: DataFrame) -> DataFrame:
     """Corpus mixture construction: deterministically keep a per-
     source percentage of documents — the "data recipe" step that
     turns raw source corpora into a training mixture. Same hash-
@@ -120,10 +106,9 @@ def mixture_sample(
     Scale: per-row filter on the scan; at 100 TB this runs at read
     speed with partition pruning intact when the corpus is
     source-partitioned."""
-    weights = MIXTURE_WEIGHTS if weights is None else weights
-    b = _bucket(F.col("doc_id"), salt)
+    b = _bucket(F.col("doc_id"), "mix")
     rate = F.lit(0)
-    for k, v in weights.items():
+    for k, v in MIXTURE_WEIGHTS.items():
         rate = F.when(F.col("source") == k, F.lit(v)).otherwise(rate)
     return documents.select(
         "doc_id",
@@ -140,14 +125,11 @@ def sql_rate_case(col: str, rates: dict[str, int]) -> str:
 
 
 WEIGHTED_K = 64
+WEIGHTED_COL = "n_chars"
+WEIGHTED_SALT = "ws"
 
 
-def weighted_sample(
-    documents: DataFrame,
-    k: int = WEIGHTED_K,
-    weight_col: str = "n_chars",
-    salt: str = "ws",
-) -> DataFrame:
+def weighted_sample(documents: DataFrame, k: int = WEIGHTED_K) -> DataFrame:
     """Weight-proportional sampling WITHOUT replacement (Efraimidis-
     Spirakis A-Res, 2006): each row draws a deterministic uniform
     u ∈ (0, 1) from the portable hash of its key and scores
@@ -170,17 +152,17 @@ def weighted_sample(
     The ``+ 0.0`` after rounding folds IEEE ``-0.0`` to ``+0.0`` — a
     huge-weight row's score rounds to zero and the engines disagree
     on the sign of that zero's string form otherwise."""
-    u = (hash32(F.col("doc_id").cast("string"), salt=salt) + 1) / F.lit(
+    u = (hash32(F.col("doc_id").cast("string"), salt=WEIGHTED_SALT) + 1) / F.lit(
         4294967297.0
     )
-    w = F.col(weight_col).cast("double")
+    w = F.col(WEIGHTED_COL).cast("double")
     score = F.log(u) / w
     return (
         documents.filter(w > 0)
         .select(
             "doc_id",
             "source",
-            F.col(weight_col).alias("weight"),
+            F.col(WEIGHTED_COL).alias("weight"),
             (F.round(score, 6) + F.lit(0.0)).alias("sample_score"),
         )
         .orderBy(F.desc(F.col("sample_score")), F.asc("doc_id"))
@@ -188,20 +170,18 @@ def weighted_sample(
     )
 
 
-def sql_weighted_sample(
-    k: int = WEIGHTED_K, weight_col: str = "n_chars", salt: str = "ws"
-) -> str:
+def sql_weighted_sample() -> str:
     """DuckDB oracle for ``weighted_sample`` — identical hash, score,
     and tie-break."""
-    h = sql_hash32("CAST(doc_id AS VARCHAR)", salt=salt)
+    h = sql_hash32("CAST(doc_id AS VARCHAR)", salt=WEIGHTED_SALT)
     return f"""
-SELECT doc_id, source, {weight_col} AS weight,
-       ROUND(ln(({h} + 1) / 4294967297.0) / CAST({weight_col} AS DOUBLE), 6) + 0.0
+SELECT doc_id, source, {WEIGHTED_COL} AS weight,
+       ROUND(ln(({h} + 1) / 4294967297.0) / CAST({WEIGHTED_COL} AS DOUBLE), 6) + 0.0
          AS sample_score
 FROM documents
-WHERE CAST({weight_col} AS DOUBLE) > 0
+WHERE CAST({WEIGHTED_COL} AS DOUBLE) > 0
 ORDER BY sample_score DESC, doc_id ASC
-LIMIT {k}
+LIMIT {WEIGHTED_K}
 """
 
 
@@ -211,8 +191,6 @@ WEIGHTED_K_PER_SOURCE = 16
 def weighted_sample_by_source(
     documents: DataFrame,
     k_per_source: int = WEIGHTED_K_PER_SOURCE,
-    weight_col: str = "n_chars",
-    salt: str = "ws",
 ) -> DataFrame:
     """Per-stratum A-Res: ``weighted_sample``'s score, top-k WITHIN
     each source — the "sample 16 docs per source ∝ length" recipe
@@ -222,14 +200,14 @@ def weighted_sample_by_source(
     Scale: one window partitioned by source over the per-row score;
     parallelism = |sources|, rows per partition = source size — the
     standard per-group top-k shape (AQE splits a skewed source)."""
-    u = (hash32(F.col("doc_id").cast("string"), salt=salt) + 1) / F.lit(
+    u = (hash32(F.col("doc_id").cast("string"), salt=WEIGHTED_SALT) + 1) / F.lit(
         4294967297.0
     )
-    w = F.col(weight_col).cast("double")
+    w = F.col(WEIGHTED_COL).cast("double")
     scored = documents.filter(w > 0).select(
         "doc_id",
         "source",
-        F.col(weight_col).alias("weight"),
+        F.col(WEIGHTED_COL).alias("weight"),
         (F.round(F.log(u) / w, 6) + F.lit(0.0)).alias("sample_score"),
     )
     win = Window.partitionBy("source").orderBy(
@@ -242,26 +220,22 @@ def weighted_sample_by_source(
     )
 
 
-def sql_weighted_sample_by_source(
-    k_per_source: int = WEIGHTED_K_PER_SOURCE,
-    weight_col: str = "n_chars",
-    salt: str = "ws",
-) -> str:
+def sql_weighted_sample_by_source() -> str:
     """DuckDB oracle for ``weighted_sample_by_source``."""
-    h = sql_hash32("CAST(doc_id AS VARCHAR)", salt=salt)
+    h = sql_hash32("CAST(doc_id AS VARCHAR)", salt=WEIGHTED_SALT)
     return f"""
 SELECT doc_id, source, weight, sample_score, CAST(rk AS INT) AS rk FROM (
-  SELECT doc_id, source, {weight_col} AS weight,
-         ROUND(ln(({h} + 1) / 4294967297.0) / CAST({weight_col} AS DOUBLE), 6) + 0.0
+  SELECT doc_id, source, {WEIGHTED_COL} AS weight,
+         ROUND(ln(({h} + 1) / 4294967297.0) / CAST({WEIGHTED_COL} AS DOUBLE), 6) + 0.0
            AS sample_score,
          ROW_NUMBER() OVER (
            PARTITION BY source
            ORDER BY ROUND(ln(({h} + 1) / 4294967297.0)
-                          / CAST({weight_col} AS DOUBLE), 6) + 0.0 DESC,
+                          / CAST({WEIGHTED_COL} AS DOUBLE), 6) + 0.0 DESC,
                     doc_id ASC) AS rk
   FROM documents
-  WHERE CAST({weight_col} AS DOUBLE) > 0)
-WHERE rk <= {k_per_source}
+  WHERE CAST({WEIGHTED_COL} AS DOUBLE) > 0)
+WHERE rk <= {WEIGHTED_K_PER_SOURCE}
 """
 
 
@@ -300,11 +274,7 @@ def _temperature_rates(documents: DataFrame, target_frac: float) -> DataFrame:
     )
 
 
-def temperature_mixture(
-    documents: DataFrame,
-    target_frac: float = TEMP_TARGET_FRAC,
-    salt: str = "temp",
-) -> DataFrame:
+def temperature_mixture(documents: DataFrame) -> DataFrame:
     """Temperature-based source rebalancing (the α-sampling recipe of
     multilingual LM pipelines): keep quotas proportional to n_s^α
     with α = 0.5, so small sources are over-represented relative to
@@ -317,19 +287,15 @@ def temperature_mixture(
     Scale: two tiny aggregates (per-source counts, a 1-row total)
     broadcast back; the keep decision is a per-row filter expression
     on the scan — 100 TB runs at read speed."""
-    rates = _temperature_rates(documents, target_frac)
-    b = _bucket(F.col("doc_id"), salt, TEMP_BUCKETS)
+    rates = _temperature_rates(documents, TEMP_TARGET_FRAC)
+    b = _bucket(F.col("doc_id"), "temp", TEMP_BUCKETS)
     return (
         documents.join(F.broadcast(rates), "source")
         .select("doc_id", "source", (b < F.col("thr")).alias("kept"))
     )
 
 
-def temperature_mixture_summary(
-    documents: DataFrame,
-    target_frac: float = TEMP_TARGET_FRAC,
-    salt: str = "temp",
-) -> DataFrame:
+def temperature_mixture_summary(documents: DataFrame) -> DataFrame:
     """The recipe view: per source, raw share vs temperature share —
     n_docs, the effective keep rate, and realized kept counts.
 
@@ -346,8 +312,8 @@ def temperature_mixture_summary(
     tie behavior drifts across oracle-engine releases and was the
     only red row signature in r05 (VERDICT item 1). keep_rate_ppm /
     1e6 is the exact rate."""
-    rates = _temperature_rates(documents, target_frac)
-    b = _bucket(F.col("doc_id"), salt, TEMP_BUCKETS)
+    rates = _temperature_rates(documents, TEMP_TARGET_FRAC)
+    b = _bucket(F.col("doc_id"), "temp", TEMP_BUCKETS)
     kept = documents.join(F.broadcast(rates), "source").select(
         "source", "thr", (b < F.col("thr")).alias("kept")
     )
@@ -366,7 +332,7 @@ def temperature_mixture_summary(
     )
 
 
-def sql_temperature_rates(target_frac: float = TEMP_TARGET_FRAC) -> str:
+def sql_temperature_rates() -> str:
     """DuckDB CTE body computing (source, n_s, thr) exactly like
     ``_temperature_rates`` (sqrt weights, rounded 1e6 threshold)."""
     return f"""
@@ -375,15 +341,17 @@ tot AS (SELECT SUM(n_s) AS n_total, SUM(SQRT(CAST(n_s AS DOUBLE))) AS z
         FROM counts),
 rates AS (SELECT source, n_s,
                  CAST(FLOOR(LEAST(1.0,
-                        {target_frac} * n_total
+                        {TEMP_TARGET_FRAC} * n_total
                         * (SQRT(CAST(n_s AS DOUBLE)) / z) / n_s)
                       * {TEMP_BUCKETS} + 0.5) AS INT) AS thr
           FROM counts, tot)"""
 
 
-def sample_k_per_group(
-    documents: DataFrame, k: int = 20, group_col: str = "lang"
-) -> DataFrame:
+GROUP_COL = "lang"  # the strata of sample_k_per_group
+GROUP_K = 20  # docs kept per stratum
+
+
+def sample_k_per_group(documents: DataFrame, k: int = GROUP_K) -> DataFrame:
     """(lang, doc_id, rk) — up to k docs per group (exactly k when the
     group has ≥ k members; smaller groups return all rows), chosen by
     portable-hash order (deterministic across runs, partitionings,
@@ -400,7 +368,7 @@ def sample_k_per_group(
     from .similarity import topk_per_key
 
     scored = documents.select(
-        F.col(group_col),
+        F.col(GROUP_COL),
         "doc_id",
         hash32(F.col("doc_id").cast("string"), salt="groupk").alias(
             "__h"
@@ -408,35 +376,33 @@ def sample_k_per_group(
     )
     out = topk_per_key(
         scored,
-        key=group_col,
+        key=GROUP_COL,
         order=[F.asc("__h"), F.asc("doc_id")],
         k=k,
         salt_col="doc_id",
     )
-    return out.select(group_col, "doc_id", "rk")
+    return out.select(GROUP_COL, "doc_id", "rk")
 
 
-def sql_sample_k_per_group(k: int = 20, group_col: str = "lang") -> str:
+def sql_sample_k_per_group() -> str:
     """DuckDB oracle for ``sample_k_per_group``."""
     from ..functions.portable import sql_hash32
 
     h = sql_hash32("CAST(doc_id AS VARCHAR)", salt="groupk")
     return f"""
-WITH scored AS (SELECT {group_col}, doc_id, {h} AS h FROM documents),
-rk AS (SELECT {group_col}, doc_id,
-              CAST(ROW_NUMBER() OVER (PARTITION BY {group_col}
+WITH scored AS (SELECT {GROUP_COL}, doc_id, {h} AS h FROM documents),
+rk AS (SELECT {GROUP_COL}, doc_id,
+              CAST(ROW_NUMBER() OVER (PARTITION BY {GROUP_COL}
                                       ORDER BY h, doc_id) AS INT) AS rk
        FROM scored)
-SELECT {group_col}, doc_id, rk FROM rk WHERE rk <= {k}
+SELECT {GROUP_COL}, doc_id, rk FROM rk WHERE rk <= {GROUP_K}
 """
 
 
 QMATCH_RES = 1_000_000  # hash-threshold resolution for rate sampling
 
 
-def quality_matched_sample(
-    documents: DataFrame, salt: str = "qmatch"
-) -> DataFrame:
+def quality_matched_sample(documents: DataFrame) -> DataFrame:
     """(doc_id, source, bucket) — per-source importance resampling so
     every source's QUALITY-SCORE DISTRIBUTION matches the corpus-wide
     one (the CCNet-shaped distribution-matching step): within each
@@ -495,7 +461,7 @@ def quality_matched_sample(
         )
     )
     keep = (
-        hash32(F.col("doc_id").cast("string"), salt=salt) % QMATCH_RES
+        hash32(F.col("doc_id").cast("string"), salt="qmatch") % QMATCH_RES
     ) < F.col("__thr")
     return (
         scored.join(F.broadcast(thr), ["source", "bucket"])
@@ -581,7 +547,7 @@ def token_waterfill(
     )
 
 
-def sql_token_waterfill(target_frac: float = WATERFILL_TARGET_FRAC) -> str:
+def sql_token_waterfill() -> str:
     """DuckDB twin of ``token_waterfill`` — identical rank order,
     integer cumulative sums, feasibility rule, and floor(T) cap."""
     return f"""
@@ -595,7 +561,7 @@ rk AS (SELECT source, n_tokens,
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
        FROM ps),
 tot AS (SELECT MAX(r) AS k,
-               CAST(FLOOR(SUM(n_tokens) * {target_frac}) AS BIGINT) AS b
+               CAST(FLOOR(SUM(n_tokens) * {WATERFILL_TARGET_FRAC}) AS BIGINT) AS b
         FROM rk),
 sel AS (SELECT COALESCE(MAX(CASE WHEN (cum - n_tokens)
                      + n_tokens * (k - r + 1) <= b THEN r END), 0) AS i_star,
@@ -624,8 +590,6 @@ EPOCH_CAP_LO = 2  # max epochs for the rest
 def epoch_mixture(
     documents: DataFrame,
     budget_mult: float = EPOCH_BUDGET_MULT,
-    cap_hi: int = EPOCH_CAP_HI,
-    cap_lo: int = EPOCH_CAP_LO,
 ) -> DataFrame:
     """(source, n_tokens, mean_quality_micro, cap_epochs,
     epochs_micro, allocated_tokens, saturated) — repeat-capped epoch
@@ -635,8 +599,8 @@ def epoch_mixture(
     the corpus, the plan is how many EPOCHS of each source to run.
     Quality-tiered caps encode the practice of repeating curated
     sources more than web scrape: sources in the top half by mean
-    document quality may repeat up to ``cap_hi`` epochs, the rest
-    ``cap_lo``. Epochs are then WATER-FILLED under those caps —
+    document quality may repeat up to ``EPOCH_CAP_HI`` epochs, the rest
+    ``EPOCH_CAP_LO``. Epochs are then WATER-FILLED under those caps —
     every source runs at the same level E except those whose cap
     binds: e_s = min(E, cap_s), with E the unique level at which
     Σ n_s·e_s = B.
@@ -684,9 +648,9 @@ def epoch_mixture(
         F.when(
             F.row_number().over(k_half)
             <= F.ceil(F.count(F.lit(1)).over(n_src) / 2),
-            F.lit(cap_hi),
+            F.lit(EPOCH_CAP_HI),
         )
-        .otherwise(F.lit(cap_lo))
+        .otherwise(F.lit(EPOCH_CAP_LO))
         .cast("long")
         .alias("cap_epochs"),
     )

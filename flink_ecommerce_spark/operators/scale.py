@@ -77,9 +77,7 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
 HEAVY_SCAN_MIN_BYTES = 4 << 20  # per-partition estimate that justifies the fixup
 
 
-def ensure_parallelism_for_heavy_scan(
-    df: DataFrame, min_bytes_per_partition: int = HEAVY_SCAN_MIN_BYTES
-) -> DataFrame:
+def ensure_parallelism_for_heavy_scan(df: DataFrame) -> DataFrame:
     """``ensure_parallelism`` gated on the plan's size estimate: the
     round-robin shuffle ships the full input once, so it only pays
     when each of the too-few partitions carries enough CPU-heavy
@@ -108,7 +106,7 @@ def ensure_parallelism_for_heavy_scan(
             size = None  # string payloads not in the estimate
     except Exception:  # stats unavailable — assume heavy
         size = None
-    if size is not None and size // parts < min_bytes_per_partition:
+    if size is not None and size // parts < HEAVY_SCAN_MIN_BYTES:
         return df
     return df.repartition(target)
 
@@ -183,7 +181,7 @@ def checkpoint_keep_partitioning(
         return df.localCheckpoint(eager=eager)
 
 
-def key_skew_topk(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
+def key_skew_topk(df: DataFrame, key: str) -> DataFrame:
     """The heaviest keys of a prospective join/groupBy key, with their
     row share — the pre-flight check before keying a 100 TB shuffle
     (a key holding >> 1/partitions of the rows means salting,
@@ -196,7 +194,7 @@ def key_skew_topk(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
     TakeOrderedAndProject, a per-partition heap + driver merge —
     NEVER a global row_number window, which would sort all n_keys
     rows through one task. Ranks are assigned after the limit, over
-    top_k rows."""
+    10 rows."""
     from pyspark.sql import Window
 
     counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
@@ -211,7 +209,7 @@ def key_skew_topk(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
             ),
         )
         .orderBy(F.col("n_rows").desc(), F.col(key))
-        .limit(top_k)
+        .limit(10)
     )
     rank = F.row_number().over(
         Window.orderBy(F.col("n_rows").desc(), F.col(key))
@@ -293,13 +291,15 @@ def table_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
+PREFILTER_BITS = 8192  # Bloom filter size of bloom_prefilter
+PREFILTER_HASHES = 4  # probes per key
+
+
 def bloom_prefilter(
     fact: DataFrame,
     keys: DataFrame,
     fact_key: str,
     keys_key: str | None = None,
-    n_bits: int = 8192,
-    n_hashes: int = 4,
 ) -> DataFrame:
     """Runtime-filter / sideways-information-passing: drop fact rows
     that CANNOT join (their key misses the Bloom filter of the other
@@ -320,13 +320,13 @@ def bloom_prefilter(
     reuse of the filtered fact correct.
 
     EAGER: building the mask runs the keys-side aggregation NOW (one
-    bounded .collect() of ≤ n_bits distinct positions — the sketch,
+    bounded .collect() of ≤ PREFILTER_BITS distinct positions — the sketch,
     never the keys); constructing this plan is not free, unlike the
     lazy operators around it.
 
-    Mechanics: the keys side reduces to ≤ n_bits set positions via
+    Mechanics: the keys side reduces to ≤ PREFILTER_BITS set positions via
     Kirsch-Mitzenmacher double hashing (one md5 per key); those pack
-    into n_bits/64 longs collected to the driver — a BOUNDED pull
+    into PREFILTER_BITS/64 longs, collected — a BOUNDED pull
     (the sketch, never the keys) embedded as a literal bitmask, so
     the membership test is a pure map-side expression: no join, no
     shuffle, no broadcast table."""
@@ -344,8 +344,8 @@ def bloom_prefilter(
             F.explode(
                 F.array(
                     *[
-                        ((h1 + F.lit(j) * h2) % n_bits).cast("int")
-                        for j in range(n_hashes)
+                        ((h1 + F.lit(j) * h2) % PREFILTER_BITS).cast("int")
+                        for j in range(PREFILTER_HASHES)
                     ]
                 )
             ).alias("pos")
@@ -353,7 +353,7 @@ def bloom_prefilter(
         .distinct()
         .collect()
     )
-    n_words = (n_bits + 63) // 64
+    n_words = (PREFILTER_BITS + 63) // 64
     mask = [0] * n_words
     for r in pos_rows:
         mask[r["pos"] // 64] |= 1 << (r["pos"] % 64)
@@ -363,8 +363,8 @@ def bloom_prefilter(
 
     f1, f2 = halves(fact_key)
     checks = []
-    for j in range(n_hashes):
-        p = (f1 + F.lit(j) * f2) % n_bits
+    for j in range(PREFILTER_HASHES):
+        p = (f1 + F.lit(j) * f2) % PREFILTER_BITS
         word = F.element_at(mask_col, (p / 64).cast("int") + 1)
         checks.append(F.getbit(word, (p % 64).cast("int")) == 1)
     keep = checks[0]

@@ -44,7 +44,6 @@ def topk_per_key(
     order: list,
     k: int,
     salt_col: str,
-    n_buckets: int = TOPK_BUCKETS,
 ) -> DataFrame:
     """EXACT per-key top-k without funneling each key's full candidate
     set through one window task. A plain
@@ -52,16 +51,16 @@ def topk_per_key(
     partitions — with 10 queries against a corpus-sized candidate set,
     ten tasks each sort millions of rows (the 10× rehearsal measured
     pq_ann_topk at 43 s on exactly this shape). Two phases fix the
-    parallelism: bucket candidates by ``salt_col % n_buckets`` and
+    parallelism: bucket candidates by ``salt_col % TOPK_BUCKETS`` and
     take top-k within each (key, bucket) — key × bucket parallel
-    sorts over 1/n_buckets of the rows — then rank the surviving
+    sorts over 1/TOPK_BUCKETS of the rows — then rank the surviving
     ≤ keys × buckets × k rows in the final (tiny) per-key window.
     Identical output to the single-window form: every global top-k
     row is necessarily inside its own bucket's top-k, and the
     ordering (with its deterministic tie-break) is unchanged."""
     w1 = Window.partitionBy(key, "__b").orderBy(*order)
     pre = (
-        scored.withColumn("__b", F.pmod(F.col(salt_col), F.lit(n_buckets)))
+        scored.withColumn("__b", F.pmod(F.col(salt_col), F.lit(TOPK_BUCKETS)))
         .withColumn("__rk1", F.row_number().over(w1))
         .filter(F.col("__rk1") <= k)
         .drop("__b", "__rk1")
@@ -80,9 +79,10 @@ def plane_weight(p: int, d: int) -> float:
     return 1.0 if h % 2 == 0 else -1.0
 
 
-def lsh_plan_for(
-    corpus_size: int, target_bucket_rows: int = 1024, recall_bands: int = 4
-) -> tuple[int, int]:
+LSH_BUCKET_ROWS = 1024  # rows per LSH bucket that lsh_plan_for aims at
+
+
+def lsh_plan_for(corpus_size: int) -> tuple[int, int]:
     """Scale-aware (n_planes, n_bands) for the hyperplane LSH ops.
 
     The near-dup self-join costs Σ(bucket size²); with 2^P buckets the
@@ -100,23 +100,19 @@ def lsh_plan_for(
     back recall."""
     import math
 
-    if corpus_size <= 2 * target_bucket_rows:
+    if corpus_size <= 2 * LSH_BUCKET_ROWS:
         return 1, 1
-    n_planes = math.ceil(math.log2(corpus_size / target_bucket_rows))
-    return n_planes, recall_bands if n_planes > N_PLANES else 1
+    n_planes = math.ceil(math.log2(corpus_size / LSH_BUCKET_ROWS))
+    return n_planes, 4 if n_planes > N_PLANES else 1
 
 
-def ann_plan_for(
-    corpus_size: int,
-    n_queries: int = DEFAULT_N_QUERIES,
-    gemm_budget: int = 200_000_000,
-) -> dict:
+def ann_plan_for(corpus_size: int) -> dict:
     """Strategy-level ANN planner — WHICH operator, not just its
-    knobs. The decision variable is the brute-force work n_queries ×
+    knobs. The decision variable is the brute-force work DEFAULT_N_QUERIES ×
     corpus_size (one GEMM pass over the corpus, zero index build,
     recall exactly 1.0):
 
-    - under ``gemm_budget`` dot products: ``knn_bruteforce[_pandas]``.
+    - under 2·10^8 dot products: ``knn_bruteforce[_pandas]``.
       Exact beats approximate whenever it's affordable — a 2k-vector
       fixture or a 10-query probe of a 10M corpus are both GEMM
       territory; every indexed method only subtracts recall there
@@ -134,7 +130,7 @@ def ann_plan_for(
     only for the lsh strategy but always present so callers can log
     one shape."""
     n_planes, n_bands = lsh_plan_for(corpus_size)
-    if n_queries * corpus_size <= gemm_budget:
+    if DEFAULT_N_QUERIES * corpus_size <= 200_000_000:
         return {"strategy": "bruteforce", "n_planes": n_planes, "n_bands": n_bands}
     return {"strategy": "pq_rerank", "n_planes": n_planes, "n_bands": n_bands}
 
@@ -225,7 +221,6 @@ def _band_structs(emb_col: str, n_planes: int, n_bands: int) -> F.Column:
 def ann_lsh_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
-    n_queries: int = DEFAULT_N_QUERIES,
     n_planes: int = N_PLANES,
     n_bands: int = 1,
 ) -> DataFrame:
@@ -243,7 +238,7 @@ def ann_lsh_topk(
     corpus = ensure_parallelism(embeddings)
     if n_bands == 1:
         bucketed = corpus.withColumn("bucket", _lsh_bucket("embedding", n_planes))
-        q = bucketed.filter(F.col("vec_id") < n_queries).select(
+        q = bucketed.filter(F.col("vec_id") < DEFAULT_N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             F.col("bucket").alias("q_bucket"),
@@ -268,7 +263,7 @@ def ann_lsh_topk(
             "embedding",
             F.explode(_band_structs("embedding", n_planes, n_bands)).alias("bb"),
         ).select("vec_id", "embedding", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        q = bands.filter(F.col("vec_id") < n_queries).select(
+        q = bands.filter(F.col("vec_id") < DEFAULT_N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             "band",
@@ -302,21 +297,16 @@ def ann_lsh_topk(
     )
 
 
-def ann_lsh_multiprobe(
-    embeddings: DataFrame,
-    k: int = DEFAULT_K,
-    n_queries: int = DEFAULT_N_QUERIES,
-    n_planes: int = N_PLANES,
-) -> DataFrame:
+def ann_lsh_multiprobe(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Multi-probe hyperplane LSH (Lv et al., VLDB'07 shape): each
     query probes its own bucket PLUS every bucket at Hamming distance
-    1 — one plane bit flipped, so n_planes+1 probes. A true neighbor
+    1 — one plane bit flipped, so N_PLANES+1 probes. A true neighbor
     that lands one hyperplane away (the dominant miss mode of
     single-probe LSH: the pair straddles exactly one plane) is
     recovered without a second corpus bucketing. Cost shape at scale:
     the CORPUS is still hashed and shuffled ONCE (unlike n_bands > 1,
     which re-buckets the corpus per band); only the tiny broadcast
-    query side fans out ×(n_planes+1), and each probe bucket holds
+    query side fans out ×(N_PLANES+1), and each probe bucket holds
     ~n/2^P rows, so a query reads ~(P+1)/2^P of the corpus. Probe
     buckets are pairwise distinct, and every corpus row lives in
     exactly one bucket, so candidate sets are disjoint — no dedup
@@ -325,8 +315,8 @@ def ann_lsh_multiprobe(
     from .scale import ensure_parallelism
 
     corpus = ensure_parallelism(embeddings)
-    bucketed = corpus.withColumn("bucket", _lsh_bucket("embedding", n_planes))
-    q = bucketed.filter(F.col("vec_id") < n_queries).select(
+    bucketed = corpus.withColumn("bucket", _lsh_bucket("embedding"))
+    q = bucketed.filter(F.col("vec_id") < DEFAULT_N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.explode(
@@ -334,7 +324,7 @@ def ann_lsh_multiprobe(
                 F.col("bucket"),
                 *[
                     F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                    for p in range(n_planes)
+                    for p in range(N_PLANES)
                 ],
             )
         ).alias("probe"),
@@ -364,9 +354,7 @@ MMR_K = 5
 MMR_LAMBDA = 0.5
 
 
-def mmr_select(
-    embeddings: DataFrame, k: int = MMR_K, lam: float = MMR_LAMBDA
-) -> DataFrame:
+def mmr_select(embeddings: DataFrame) -> DataFrame:
     """(step, vec_id, score_micro) — greedy Maximal Marginal Relevance
     (Carbonell & Goldstein '98) exemplar selection: step 1 takes the
     vector most similar to the corpus centroid; each later step takes
@@ -422,7 +410,7 @@ def mmr_select(
     )
     picks = []  # (step, plan) — unioned for the returned DataFrame
     selected: list[tuple[int, list[float]]] = []
-    for step in range(1, k + 1):
+    for step in range(1, MMR_K + 1):
         cand = rel
         if selected:
             cand = cand.filter(
@@ -439,8 +427,8 @@ def mmr_select(
             ]
             msim_u = F.greatest(*sims) if len(sims) > 1 else sims[0]
             score = F.floor(
-                F.lit(lam) * F.col("rel_u")
-                - F.lit(1.0 - lam) * msim_u
+                F.lit(MMR_LAMBDA) * F.col("rel_u")
+                - F.lit(1.0 - MMR_LAMBDA) * msim_u
                 + F.lit(0.5)
             ).cast("long")
         else:
@@ -466,7 +454,7 @@ def mmr_select(
     return out
 
 
-def mmr_oracle_sql(k: int = MMR_K, lam: float = MMR_LAMBDA) -> str:
+def mmr_oracle_sql() -> str:
     """Unrolled DuckDB twin of ``mmr_select``: sel₀ = ∅; pickᵢ =
     argmax over non-selected of the (integer-micro) MMR score against
     selᵢ₋₁; selᵢ = selᵢ₋₁ ∪ pickᵢ. Ties to the lowest vec_id via the
@@ -489,7 +477,7 @@ def mmr_oracle_sql(k: int = MMR_K, lam: float = MMR_LAMBDA) -> str:
         " FROM rel ORDER BY score_micro DESC, vec_id ASC LIMIT 1),",
         "sel1 AS (SELECT vec_id, e FROM pick1),",
     ]
-    for i in range(2, k + 1):
+    for i in range(2, MMR_K + 1):
         prev = f"sel{i - 1}"
         cos_sel = sql_cosine("r.e", "s.e", EMB_DIM)
         parts.append(
@@ -502,7 +490,7 @@ def mmr_oracle_sql(k: int = MMR_K, lam: float = MMR_LAMBDA) -> str:
         )
         parts.append(
             f"pick{i} AS (SELECT {i} AS step, r.vec_id, r.e,"
-            f" CAST(FLOOR({lam} * r.rel_u - {1.0 - lam} * m.msim_u + 0.5)"
+            f" CAST(FLOOR({MMR_LAMBDA} * r.rel_u - {1.0 - MMR_LAMBDA} * m.msim_u + 0.5)"
             f" AS BIGINT) AS score_micro"
             f" FROM rel r JOIN ms{i} m USING (vec_id)"
             f" ORDER BY score_micro DESC, vec_id ASC LIMIT 1),"
@@ -514,7 +502,7 @@ def mmr_oracle_sql(k: int = MMR_K, lam: float = MMR_LAMBDA) -> str:
     parts[-1] = parts[-1].rstrip(",")
     union = "\nUNION ALL\n".join(
         f"SELECT step, vec_id, score_micro FROM pick{i}"
-        for i in range(1, k + 1)
+        for i in range(1, MMR_K + 1)
     )
     return "\n".join(parts) + "\n" + union
 
@@ -531,11 +519,7 @@ def embedding_norms(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def knn_bruteforce_pandas(
-    embeddings: DataFrame,
-    k: int = DEFAULT_K,
-    n_queries: int = DEFAULT_N_QUERIES,
-) -> DataFrame:
+def knn_bruteforce_pandas(embeddings: DataFrame) -> DataFrame:
     """Same result as knn_bruteforce, computed through the Arrow path:
     a mapInPandas over corpus partitions doing the whole query-block
     scoring as one numpy matmul per batch.
@@ -550,7 +534,7 @@ def knn_bruteforce_pandas(
 
     spark = embeddings.sparkSession
     q_rows = (
-        embeddings.filter(F.col("vec_id") < n_queries)
+        embeddings.filter(F.col("vec_id") < DEFAULT_N_QUERIES)
         .select("vec_id", "embedding")
         .collect()
     )
@@ -566,7 +550,7 @@ def knn_bruteforce_pandas(
 
     def score(batches):
         ids, qn = bc.value
-        k_local = k
+        k_local = DEFAULT_K
         for pdf in batches:
             c = np.array(list(pdf["embedding"]), dtype=np.float64)
             cn = c / np.maximum(
@@ -608,7 +592,7 @@ def knn_bruteforce_pandas(
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= DEFAULT_K)
         .select("query_id", "neighbor_id", "cos_sim", "rk")
     )
 
@@ -715,11 +699,9 @@ def ivf_probe(
     assignments: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
-    k: int = DEFAULT_K,
-    n_probe: int = IVF_N_PROBE,
 ) -> DataFrame:
     """Probe a prebuilt IVF index: ``queries`` is (query_id, q_emb);
-    each query ranks the centroids, searches its ``n_probe`` nearest
+    each query ranks the centroids, searches its ``IVF_N_PROBE`` nearest
     cells, and exact-cosine re-ranks the candidates. The query side
     broadcasts; the corpus-sized assignments table never reshuffles
     (join on cell — co-located when assignments are bucketed by
@@ -733,7 +715,7 @@ def ivf_probe(
     w_probe = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("label"))
     qprobe = (
         qd.withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= n_probe)
+        .filter(F.col("rk") <= IVF_N_PROBE)
         .select("query_id", "q_emb", F.col("label").alias("cell"))
     )
     scored = (
@@ -750,17 +732,12 @@ def ivf_probe(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= DEFAULT_K)
         .select("query_id", "neighbor_id", "cos_sim", "rk")
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    k: int = DEFAULT_K,
-    n_queries: int = DEFAULT_N_QUERIES,
-    n_probe: int = IVF_N_PROBE,
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame, n_queries: int = DEFAULT_N_QUERIES) -> DataFrame:
     """IVF ANN in one call: build_ivf_index + ivf_probe with the
     query set drawn from the corpus (vec_id < n_queries). Kept as the
     registry/oracle surface; pipelines that issue many query batches
@@ -771,7 +748,7 @@ def ivf_topk(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
     )
-    return ivf_probe(assign, cents, queries, k=k, n_probe=n_probe)
+    return ivf_probe(assign, cents, queries)
 
 
 def label_centroids(embeddings: DataFrame) -> DataFrame:
@@ -1158,11 +1135,7 @@ def semantic_dedup(
     )
 
 
-def hard_negatives(
-    embeddings: DataFrame,
-    k: int = DEFAULT_K,
-    n_queries: int = DEFAULT_N_QUERIES,
-) -> DataFrame:
+def hard_negatives(embeddings: DataFrame) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query
     vector, the top-k most-similar corpus vectors with a DIFFERENT
     label. These near-miss negatives carry most of the gradient
@@ -1179,7 +1152,7 @@ def hard_negatives(
     corpus = ensure_parallelism(embeddings).select(
         "vec_id", "embedding", "label", l2_norm(F.col("embedding")).alias("__norm")
     )
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
+    q = embeddings.filter(F.col("vec_id") < DEFAULT_N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("label").alias("q_label"),
@@ -1204,7 +1177,7 @@ def hard_negatives(
         scored,
         "query_id",
         [F.desc("cos_sim"), F.asc("neighbor_id")],
-        k,
+        DEFAULT_K,
         salt_col="neighbor_id",
     ).select("query_id", "neighbor_id", "neighbor_label", "cos_sim", "rk")
 
@@ -1220,31 +1193,29 @@ def _jl_sign(i: int, j: int) -> float:
     return 1.0 if h % 2 == 0 else -1.0
 
 
-def jl_project(
-    embeddings: DataFrame, dim_out: int = JL_DIM_OUT, dim_in: int = EMB_DIM
-) -> DataFrame:
-    """Johnson-Lindenstrauss random projection to ``dim_out``
-    dimensions with a deterministic ±1/sqrt(dim_out) sign matrix
+def jl_project(embeddings: DataFrame) -> DataFrame:
+    """Johnson-Lindenstrauss random projection to ``JL_DIM_OUT``
+    dimensions with a deterministic ±1/sqrt(JL_DIM_OUT) sign matrix
     (Achlioptas 2003: database-friendly random projections — ±1
     entries preserve pairwise distances like Gaussian ones). The
     dimensionality-reduction front end for 100 TB similarity: project
     once on the scan, then run near-dup / ANN / clustering in the
-    reduced space at dim_out/dim_in of the compute and shuffle width.
+    reduced space at JL_DIM_OUT/EMB_DIM of the compute and shuffle width.
 
     Output is unnested (vec_id, dim ∈ 1..dim_out, proj) — the same
     long shape as embedding_quantize_int8, exact across engines
     because the fold order is fixed (j ascending, left fold).
 
-    Scale: a pure per-row expression (dim_out fixed-order sums over
+    Scale: a pure per-row expression (JL_DIM_OUT fixed-order sums over
     a zip_with product) — no shuffle, no UDF, whole-stage codegen;
-    the sign matrix is dim_out x dim_in literals folded into the
+    the sign matrix is JL_DIM_OUT x EMB_DIM literals folded into the
     plan, not a join."""
     emb = F.col("embedding").cast("array<double>")
     outs = []
-    inv = 1.0 / (dim_out ** 0.5)
-    for i in range(dim_out):
+    inv = 1.0 / (JL_DIM_OUT ** 0.5)
+    for i in range(JL_DIM_OUT):
         signs = F.array(
-            *[F.lit(_jl_sign(i, j)) for j in range(dim_in)]
+            *[F.lit(_jl_sign(i, j)) for j in range(EMB_DIM)]
         )
         s = F.aggregate(
             F.zip_with(emb, signs, lambda x, sgn: x * sgn),
@@ -1263,15 +1234,15 @@ def jl_project(
     ).select("vec_id", F.col("p.dim").alias("dim"), F.col("p.proj").alias("proj"))
 
 
-def sql_jl_project(dim_out: int = JL_DIM_OUT, dim_in: int = EMB_DIM) -> str:
+def sql_jl_project() -> str:
     """DuckDB oracle for ``jl_project``: the identical sign literals
     and the identical left-to-right add chain per output dim."""
-    inv = 1.0 / (dim_out ** 0.5)
+    inv = 1.0 / (JL_DIM_OUT ** 0.5)
     rows = []
-    for i in range(dim_out):
+    for i in range(JL_DIM_OUT):
         terms = " + ".join(
             f"CAST(embedding[{j + 1}] AS DOUBLE) * ({_jl_sign(i, j)})"
-            for j in range(dim_in)
+            for j in range(EMB_DIM)
         )
         rows.append(
             f"SELECT vec_id, {i + 1} AS dim, "
@@ -1499,21 +1470,15 @@ def pq_ann_rerank(
     )
 
 
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    k: int = DEFAULT_K,
-    n_queries: int = DEFAULT_N_QUERIES,
-    n_probe: int = IVF_N_PROBE,
-    shortlist: int = PQ_RERANK,
-) -> DataFrame:
+def ivf_pq_topk(embeddings: DataFrame) -> DataFrame:
     """IVF-PQ (Jégou et al. 2011, the billion-scale workhorse):
-    coarse cells ROUTE each query to n_probe cells, PQ codes score the
+    coarse cells ROUTE each query to IVF_N_PROBE cells, PQ codes score the
     routed candidates by ADC, and exact cosine re-ranks the ADC
     shortlist. The composition of the three certified parts
     (build_ivf_index, pq_codes, knn-style re-rank) with the cost
     profile that survives 100 TB: the full-precision corpus is read
     once at build; per query batch, routing touches centroids
-    (broadcast), ADC touches ~n_probe/K of the 8-byte codes, and the
+    (broadcast), ADC touches ~IVF_N_PROBE/K of the 8-byte codes, and the
     re-rank reads shortlist-many embeddings.
 
     Pytest-covered composition (recall pinned between raw ADC and
@@ -1525,10 +1490,10 @@ def ivf_pq_topk(
     codes = pq_codes(embeddings).join(
         assign.select("vec_id", "cell"), "vec_id"
     )
-    queries = embeddings.filter(F.col("vec_id") < n_queries).select(
+    queries = embeddings.filter(F.col("vec_id") < DEFAULT_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # route: each query's n_probe nearest cells (same shape as
+    # route: each query's IVF_N_PROBE nearest cells (same shape as
     # ivf_probe's routing stage)
     qd = queries.crossJoin(F.broadcast(cents)).select(
         "query_id",
@@ -1539,7 +1504,7 @@ def ivf_pq_topk(
     w_probe = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("label"))
     routed = (
         qd.withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= n_probe)
+        .filter(F.col("rk") <= IVF_N_PROBE)
         .select("query_id", F.col("label").alias("cell"))
     )
     # ADC over routed cells only
@@ -1564,7 +1529,7 @@ def ivf_pq_topk(
     )
     short = (
         adc.withColumn("srk", F.row_number().over(w_short))
-        .filter(F.col("srk") <= shortlist)
+        .filter(F.col("srk") <= PQ_RERANK)
         .select("query_id", "neighbor_id")
     )
     scored = (
@@ -1591,7 +1556,7 @@ def ivf_pq_topk(
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= DEFAULT_K)
         .select("query_id", "neighbor_id", "cos_sim", "rk")
     )
 
@@ -1650,9 +1615,7 @@ def corpus_diversity(embeddings: DataFrame) -> DataFrame:
 OUTLIER_Z = 2.0
 
 
-def embedding_outliers(
-    embeddings: DataFrame, z_threshold: float = OUTLIER_Z
-) -> DataFrame:
+def embedding_outliers(embeddings: DataFrame) -> DataFrame:
     """(vec_id, label, d2_micro, z_micro) — vectors anomalously far
     from their own label's centroid (z-score of squared distance >
     threshold): the embedding-table quality screen that surfaces
@@ -1706,15 +1669,11 @@ def embedding_outliers(
     return (
         d2.join(F.broadcast(mom), "label")
         .select("vec_id", "label", "d2_micro", z.alias("z_micro"))
-        .filter(F.col("z_micro") > int(z_threshold * 1_000_000))
+        .filter(F.col("z_micro") > int(OUTLIER_Z * 1_000_000))
     )
 
 
-def ivf_recall_report(
-    embeddings: DataFrame,
-    k: int = DEFAULT_K,
-    n_queries: int = DEFAULT_N_QUERIES,
-) -> DataFrame:
+def ivf_recall_report(embeddings: DataFrame) -> DataFrame:
     """One row (n_true, n_ivf, n_hit, recall_micro) — the IVF twin of
     dedup.lsh_recall_report: how much of the exact brute-force top-k
     does single-probe IVF routing surface? Routing loss (true
@@ -1727,10 +1686,10 @@ def ivf_recall_report(
     per branch so the hit count is a pair-keyed semi join. At 100 TB
     this runs on a query SAMPLE — the exact branch is the expensive
     one; the report shape is the point."""
-    truth = knn_bruteforce(embeddings, k=k, n_queries=n_queries).select(
+    truth = knn_bruteforce(embeddings).select(
         "query_id", "neighbor_id"
     ).localCheckpoint(eager=False)
-    ivf = ivf_topk(embeddings, k=k, n_queries=n_queries).select(
+    ivf = ivf_topk(embeddings).select(
         "query_id", "neighbor_id"
     ).localCheckpoint(eager=False)
     hit = truth.join(ivf, ["query_id", "neighbor_id"], "left_semi")

@@ -35,6 +35,7 @@ from .textprep import words
 
 CM_DEPTH = 4
 CM_WIDTH = 256
+CM_TOP_K = 20  # terms countmin_estimates reports
 
 
 def _cm_cells(term: F.Column, depth: int, width: int) -> F.Column:
@@ -70,7 +71,7 @@ def countmin_sketch(
 
 def countmin_estimates(
     documents: DataFrame,
-    k: int = 20,
+    k: int = CM_TOP_K,
     depth: int = CM_DEPTH,
     width: int = CM_WIDTH,
 ) -> DataFrame:
@@ -103,13 +104,14 @@ def countmin_estimates(
     )
 
 
-def sql_countmin_sketch(depth: int = CM_DEPTH, width: int = CM_WIDTH) -> str:
+def sql_countmin_sketch() -> str:
     """DuckDB oracle for ``countmin_sketch``."""
     from .textprep import sql_words
 
     cells = "\nUNION ALL\n".join(
-        f"SELECT {j} AS j, CAST(({sql_hash32('term', salt=f'cm{j}')} % {width}) AS INT) AS bucket FROM terms"
-        for j in range(depth)
+        f"SELECT {j} AS j, CAST(({sql_hash32('term', salt=f'cm{j}')} % {CM_WIDTH})"
+        " AS INT) AS bucket FROM terms"
+        for j in range(CM_DEPTH)
     )
     return f"""
 WITH terms AS (SELECT unnest({sql_words('text')}) AS term FROM documents),
@@ -118,21 +120,20 @@ SELECT j, bucket, COUNT(*) AS n FROM cells GROUP BY 1, 2
 """
 
 
-def sql_countmin_estimates(
-    k: int = 20, depth: int = CM_DEPTH, width: int = CM_WIDTH
-) -> str:
+def sql_countmin_estimates() -> str:
     """DuckDB oracle for ``countmin_estimates``."""
     from .textprep import sql_words
 
     cells = "\nUNION ALL\n".join(
-        f"SELECT {j} AS j, CAST(({sql_hash32('term', salt=f'cm{j}')} % {width}) AS INT) AS bucket FROM terms"
-        for j in range(depth)
+        f"SELECT {j} AS j, CAST(({sql_hash32('term', salt=f'cm{j}')} % {CM_WIDTH})"
+        " AS INT) AS bucket FROM terms"
+        for j in range(CM_DEPTH)
     )
     tcells = "\nUNION ALL\n".join(
         f"SELECT term, n_true, {j} AS j, "
-        f"CAST(({sql_hash32('term', salt=f'cm{j}')} % {width}) AS INT) AS bucket "
+        f"CAST(({sql_hash32('term', salt=f'cm{j}')} % {CM_WIDTH}) AS INT) AS bucket "
         f"FROM true_counts"
-        for j in range(depth)
+        for j in range(CM_DEPTH)
     )
     return f"""
 WITH terms AS (SELECT unnest({sql_words('text')}) AS term FROM documents),
@@ -145,7 +146,7 @@ est AS (SELECT t.term, t.n_true, MIN(s.n) AS n_est
         GROUP BY 1, 2)
 SELECT term, n_true, n_est FROM est
 ORDER BY n_true DESC, term ASC
-LIMIT {k}
+LIMIT {CM_TOP_K}
 """
 
 
@@ -186,14 +187,10 @@ def _bloom_positions(
     )
 
 
-def bloom_bits(
-    documents: DataFrame,
-    n_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> DataFrame:
+def bloom_bits(documents: DataFrame) -> DataFrame:
     """(pos) — the SET bit positions of a Bloom filter over the
     corpus's normalized-text membership (Bloom 1970). Bounded at
-    n_bits rows regardless of corpus size, mergeable across
+    BLOOM_BITS rows regardless of corpus size, mergeable across
     shards/days by distinct-union, and the admission side
     (``bloom_admission``) broadcasts it — the history a new batch is
     screened against is a few KB, not the corpus.
@@ -206,19 +203,14 @@ def bloom_bits(
     return (
         documents.select(
             F.explode(
-                _bloom_positions(F.col("text"), n_bits, n_hashes)
+                _bloom_positions(F.col("text"), BLOOM_BITS, BLOOM_HASHES)
             ).alias("pos")
         )
         .distinct()
     )
 
 
-def bloom_admission(
-    new_batch: DataFrame,
-    corpus: DataFrame,
-    n_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> DataFrame:
+def bloom_admission(new_batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """(doc_id, maybe_seen) — screen a new batch against the corpus
     Bloom filter: maybe_seen=true iff ALL the doc's probe positions
     are set. Guaranteed no false negatives (an exact duplicate of any
@@ -229,14 +221,14 @@ def bloom_admission(
     (tiny) maybe-seen fraction.
 
     Plan shape: the filter builds with one explode+distinct bounded
-    at n_bits rows, broadcasts to the batch side, and the verdict is
+    at BLOOM_BITS rows, broadcasts to the batch side, and the verdict is
     a per-doc count compare — the new batch never shuffles."""
-    bits = bloom_bits(corpus, n_bits, n_hashes)
+    bits = bloom_bits(corpus)
     probes = new_batch.select(
         "doc_id",
         F.explode(
             F.array_distinct(
-                _bloom_positions(F.col("text"), n_bits, n_hashes)
+                _bloom_positions(F.col("text"), BLOOM_BITS, BLOOM_HASHES)
             )
         ).alias("pos"),
     )
@@ -273,32 +265,30 @@ def _sql_bloom_pos_cte(
 """
 
 
-def sql_bloom_bits(
-    n_bits: int = BLOOM_BITS, n_hashes: int = BLOOM_HASHES
-) -> str:
+def sql_bloom_bits() -> str:
     """DuckDB oracle for ``bloom_bits`` over the documents view."""
-    cte = _sql_bloom_pos_cte("SELECT doc_id, text FROM documents", n_bits, n_hashes)
+    cte = _sql_bloom_pos_cte(
+        "SELECT doc_id, text FROM documents", BLOOM_BITS, BLOOM_HASHES
+    )
     return f"""
 WITH {cte}
 SELECT DISTINCT pos FROM pos
 """
 
 
-def sql_bloom_admission(
-    n_bits: int = BLOOM_BITS, n_hashes: int = BLOOM_HASHES
-) -> str:
+def sql_bloom_admission() -> str:
     """DuckDB oracle for ``bloom_admission`` with the registry's
     fixture split (doc_id % 5 = 0 is the new batch)."""
     new_cte = _sql_bloom_pos_cte(
         "SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0",
-        n_bits,
-        n_hashes,
+        BLOOM_BITS,
+        BLOOM_HASHES,
         prefix="new_",
     )
     corpus_cte = _sql_bloom_pos_cte(
         "SELECT doc_id, text FROM documents WHERE doc_id % 5 != 0",
-        n_bits,
-        n_hashes,
+        BLOOM_BITS,
+        BLOOM_HASHES,
     )
     return f"""
 WITH {corpus_cte},
@@ -325,7 +315,7 @@ def _hll_alpha_m2(m: int) -> float:
     return (0.7213 / (1.0 + 1.079 / m)) * m * m
 
 
-def hll_registers(events: DataFrame, p: int = HLL_P) -> DataFrame:
+def hll_registers(events: DataFrame) -> DataFrame:
     """(bucket, max_rank) — the populated registers of a HyperLogLog
     sketch over user_id (Flajolet-Furet-Gandouet-Meunier 2007).
     Fixed at 2^p rows no matter how many events or users flow
@@ -338,7 +328,7 @@ def hll_registers(events: DataFrame, p: int = HLL_P) -> DataFrame:
     first 32 hash bits mod m, rank = leading-zero count of the
     second 32 bits + 1 via the bin()-string trick both engines
     evaluate identically — so the sketch itself is oracle-exact."""
-    bucket, rank = _hll_bucket_rank(F.col("user_id").cast("string"), p)
+    bucket, rank = _hll_bucket_rank(F.col("user_id").cast("string"))
     return (
         events.select(bucket.alias("bucket"), rank.alias("rank"))
         .groupBy("bucket")
@@ -365,7 +355,7 @@ def _hll_bucket_rank(
     return bucket, rank
 
 
-def hll_distinct_users(events: DataFrame, p: int = HLL_P) -> DataFrame:
+def hll_distinct_users(events: DataFrame) -> DataFrame:
     """(n_exact, n_hll, rel_err) — the HLL estimate next to the true
     distinct count (the audit view, like countmin_estimates; a
     production pipeline ships only the 2^p-row register table).
@@ -375,8 +365,8 @@ def hll_distinct_users(events: DataFrame, p: int = HLL_P) -> DataFrame:
     ≤ 2^41, exact in both engines), divided by 2^33 once; the
     small-range (linear-counting) branch fires on exact integer
     comparisons. No float accumulates across rows anywhere."""
-    m = 1 << p
-    regs = hll_registers(events, p)
+    m = 1 << HLL_P
+    regs = hll_registers(events)
     grid = events.agg(F.lit(1).alias("__one")).select(
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("bucket")
     )
@@ -408,10 +398,10 @@ def hll_distinct_users(events: DataFrame, p: int = HLL_P) -> DataFrame:
     )
 
 
-def _sql_hll_regs_cte(p: int = HLL_P) -> str:
+def _sql_hll_regs_cte() -> str:
     from ..functions.portable import sql_hash32_from_digest
 
-    m = 1 << p
+    m = 1 << HLL_P
     h1 = sql_hash32_from_digest("d", 0)
     h2 = sql_hash32_from_digest("d", 1)
     return f"""
@@ -424,20 +414,20 @@ regs AS (SELECT bucket, MAX(rank) AS max_rank FROM br GROUP BY 1)
 """
 
 
-def sql_hll_registers(p: int = HLL_P) -> str:
+def sql_hll_registers() -> str:
     """DuckDB oracle for ``hll_registers``."""
     return f"""
-WITH {_sql_hll_regs_cte(p)}
+WITH {_sql_hll_regs_cte()}
 SELECT bucket, max_rank FROM regs
 """
 
 
-def sql_hll_distinct_users(p: int = HLL_P) -> str:
+def sql_hll_distinct_users() -> str:
     """DuckDB oracle for ``hll_distinct_users``."""
-    m = 1 << p
+    m = 1 << HLL_P
     alpha_m2 = _hll_alpha_m2(m)
     return f"""
-WITH {_sql_hll_regs_cte(p)},
+WITH {_sql_hll_regs_cte()},
 grid AS (SELECT CAST(g AS INT) AS bucket
          FROM UNNEST(generate_series(0, {m - 1})) AS t(g)),
 filled AS (SELECT g.bucket, COALESCE(r.max_rank, 0) AS max_rank
@@ -473,7 +463,7 @@ def _hll_estimate(sum_int: F.Column, zeros: F.Column, m: int) -> F.Column:
     ).otherwise(e_raw)
 
 
-def daily_distinct_users_hll(events: DataFrame, p: int = HLL_P) -> DataFrame:
+def daily_distinct_users_hll(events: DataFrame) -> DataFrame:
     """(d, n_exact, n_hll, rel_err) — per-DAY distinct users, exact
     next to the HLL estimate: the windowed form of
     ``hll_distinct_users``. This is the shape that matters at 100 TB
@@ -483,9 +473,9 @@ def daily_distinct_users_hll(events: DataFrame, p: int = HLL_P) -> DataFrame:
     the same per-bucket MAX. The exact column exists as the audit
     (drop it in production and the plan never touches user
     cardinality)."""
-    m = 1 << p
+    m = 1 << HLL_P
     d = F.to_date("ts").alias("d")
-    bucket, rank = _hll_bucket_rank(F.col("user_id").cast("string"), p)
+    bucket, rank = _hll_bucket_rank(F.col("user_id").cast("string"))
     regs = (
         events.select(d, bucket.alias("bucket"), rank.alias("rank"))
         .groupBy("d", "bucket")
@@ -527,11 +517,11 @@ def daily_distinct_users_hll(events: DataFrame, p: int = HLL_P) -> DataFrame:
     )
 
 
-def sql_daily_distinct_users_hll(p: int = HLL_P) -> str:
+def sql_daily_distinct_users_hll() -> str:
     """DuckDB oracle for ``daily_distinct_users_hll``."""
     from ..functions.portable import sql_hash32_from_digest
 
-    m = 1 << p
+    m = 1 << HLL_P
     alpha_m2 = _hll_alpha_m2(m)
     h1 = sql_hash32_from_digest("dg", 0)
     h2 = sql_hash32_from_digest("dg", 1)
@@ -570,9 +560,7 @@ FROM est JOIN ex ON ex.d = est.d
 """
 
 
-def weekly_distinct_users_hll(
-    events: DataFrame, p: int = HLL_P
-) -> DataFrame:
+def weekly_distinct_users_hll(events: DataFrame) -> DataFrame:
     """(week_start, n_exact, n_hll, rel_err) — weekly distinct users
     ROLLED UP FROM THE DAILY REGISTERS by per-bucket MAX: the
     mergeability claim as a live query. At 100 TB this is the whole
@@ -585,10 +573,10 @@ def weekly_distinct_users_hll(
     (date_trunc('week') anchors differ subtly across engines and
     versions); week_start reports the index as its first calendar
     day."""
-    m = 1 << p
+    m = 1 << HLL_P
     d = F.to_date("ts")
     week = F.floor(F.datediff(d, F.lit("1970-01-01")) / 7).cast("long")
-    bucket, rank = _hll_bucket_rank(F.col("user_id").cast("string"), p)
+    bucket, rank = _hll_bucket_rank(F.col("user_id").cast("string"))
     daily = (
         events.select(
             d.alias("d"),
@@ -646,12 +634,12 @@ def weekly_distinct_users_hll(
     )
 
 
-def sql_weekly_distinct_users_hll(p: int = HLL_P) -> str:
+def sql_weekly_distinct_users_hll() -> str:
     """DuckDB oracle for ``weekly_distinct_users_hll`` (same daily →
     weekly MAX roll-up)."""
     from ..functions.portable import sql_hash32_from_digest
 
-    m = 1 << p
+    m = 1 << HLL_P
     alpha_m2 = _hll_alpha_m2(m)
     h1 = sql_hash32_from_digest("dg", 0)
     h2 = sql_hash32_from_digest("dg", 1)
@@ -698,12 +686,11 @@ FROM est JOIN ex ON ex.week = est.week
 
 
 KMV_K = 256
+KMV_SALT = "kmv"
 KMV_PROBS = (0.25, 0.5, 0.75, 0.9, 0.99)
 
 
-def kmv_sample(
-    events: DataFrame, k: int = KMV_K, salt: str = "kmv"
-) -> DataFrame:
+def kmv_sample(events: DataFrame, k: int = KMV_K) -> DataFrame:
     """The k rows with the smallest portable hash of their event_id —
     a deterministic uniform sample without replacement (a hash-ordered
     prefix of a uniform permutation), and the KMV/bottom-k sketch
@@ -720,16 +707,14 @@ def kmv_sample(
         events.select(
             "event_id",
             "value",
-            hash32(F.col("event_id").cast("string"), salt=salt).alias("__h"),
+            hash32(F.col("event_id").cast("string"), salt=KMV_SALT).alias("__h"),
         )
         .orderBy(F.asc("__h"), F.asc("event_id"))
         .limit(k)
     )
 
 
-def kmv_value_quantiles(
-    events: DataFrame, k: int = KMV_K, salt: str = "kmv"
-) -> DataFrame:
+def kmv_value_quantiles(events: DataFrame) -> DataFrame:
     """One-row approximate value quantiles from the KMV bottom-k
     sample — the 100 TB quantile path: an exact percentile() needs
     the full sorted column; this reads k rows chosen by hash order
@@ -740,7 +725,7 @@ def kmv_value_quantiles(
     per-shard bottom-k sets union → re-take bottom-k → identical
     estimate. Exact interpolated percentile over the sample matches
     DuckDB's quantile_cont (the certified idiom)."""
-    s = kmv_sample(events, k, salt)
+    s = kmv_sample(events)
     from ..functions.portable import micro
 
     aggs = [F.count(F.lit(1)).alias("n_sampled")]
@@ -750,12 +735,12 @@ def kmv_value_quantiles(
     return s.agg(*aggs)
 
 
-def sql_kmv_value_quantiles(k: int = KMV_K, salt: str = "kmv") -> str:
+def sql_kmv_value_quantiles() -> str:
     """DuckDB twin of ``kmv_value_quantiles`` — identical hash order,
     tie-break, and interpolation."""
     from ..functions.portable import sql_hash32
 
-    h = sql_hash32("CAST(event_id AS VARCHAR)", salt=salt)
+    h = sql_hash32("CAST(event_id AS VARCHAR)", salt=KMV_SALT)
     from ..functions.portable import sql_micro
 
     qs = ",\n       ".join(
@@ -765,7 +750,7 @@ def sql_kmv_value_quantiles(k: int = KMV_K, salt: str = "kmv") -> str:
     return f"""
 WITH s AS (SELECT value FROM (
   SELECT event_id, value, {h} AS h FROM events
-  ORDER BY h ASC, event_id ASC LIMIT {k}))
+  ORDER BY h ASC, event_id ASC LIMIT {KMV_K}))
 SELECT COUNT(*) AS n_sampled,
        {qs}
 FROM s
@@ -775,9 +760,7 @@ FROM s
 KMV_GROUP_K = 128
 
 
-def kmv_value_quantiles_by_type(
-    events: DataFrame, k: int = KMV_GROUP_K, salt: str = "kmv"
-) -> DataFrame:
+def kmv_value_quantiles_by_type(events: DataFrame) -> DataFrame:
     """(event_type, n_sampled, p50, p90) — the KMV bottom-k quantile
     sketch PER GROUP: each event_type keeps its own k-smallest-hash
     sample, so grouped percentile estimates stay reproducible and
@@ -796,13 +779,13 @@ def kmv_value_quantiles_by_type(
         "event_type",
         "event_id",
         "value",
-        hash32(F.col("event_id").cast("string"), salt=salt).alias("__h"),
+        hash32(F.col("event_id").cast("string"), salt=KMV_SALT).alias("__h"),
     )
     sample = topk_per_key(
         scored,
         "event_type",
         [F.asc("__h"), F.asc("event_id")],
-        k,
+        KMV_GROUP_K,
         salt_col="event_id",
     )
     from ..functions.portable import micro
@@ -814,22 +797,20 @@ def kmv_value_quantiles_by_type(
     )
 
 
-def sql_kmv_value_quantiles_by_type(
-    k: int = KMV_GROUP_K, salt: str = "kmv"
-) -> str:
+def sql_kmv_value_quantiles_by_type() -> str:
     """DuckDB twin — identical per-group hash order and
     interpolation (a plain per-group ROW_NUMBER: the oracle engine
     doesn't need the two-phase parallelism trick, the OUTPUT is
     defined to be identical)."""
     from ..functions.portable import sql_hash32
 
-    h = sql_hash32("CAST(event_id AS VARCHAR)", salt=salt)
+    h = sql_hash32("CAST(event_id AS VARCHAR)", salt=KMV_SALT)
     return f"""
 WITH s AS (SELECT event_type, value FROM (
   SELECT event_type, value,
          ROW_NUMBER() OVER (PARTITION BY event_type
                             ORDER BY {h} ASC, event_id ASC) AS rn
-  FROM events) WHERE rn <= {k})
+  FROM events) WHERE rn <= {KMV_GROUP_K})
 SELECT event_type, COUNT(*) AS n_sampled,
        CAST(FLOOR(quantile_cont(value, 0.5) * 1000000 + 0.5) AS BIGINT)
          AS p50_micro,

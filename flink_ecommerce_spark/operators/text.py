@@ -190,26 +190,21 @@ def _quality_raw_column() -> Column:
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def sql_quality_raw(
-    n_tok: str = "n_tok",
-    n_punct: str = "n_punct",
-    n_stop: str = "n_stop",
-    n_chars: str = "n_chars",
-) -> str:
+def sql_quality_raw() -> str:
     """DuckDB SQL twin of ``_quality_raw_column()`` — the ONE place
     the quality logistic's coefficients live on the SQL side (r08
-    ADVICE: a coefficient edit must not be a many-place change).
-    Callers pass the column/expression names of the four raw counts.
-    Composed by the curation_scores oracle; the remaining inline
+    ADVICE: a coefficient edit must not be a many-place change), over
+    the four raw count columns ``n_tok``, ``n_punct``, ``n_stop`` and
+    ``n_chars``. Composed by the curation_scores oracle; the remaining inline
     copies in certified out-of-window oracle strings (grep
     ``0.02 * n_tok`` in registry.py) are byte-frozen with their green
     rows and fold onto this fragment as their rotations bring them
     into a verify window."""
     return (
-        f"1.0 / (1.0 + exp(-(-2.0 + 0.02 * {n_tok}"
-        f" + 4.0 * ({n_stop} / {n_tok})"
-        f" - 8.0 * ({n_punct} / {n_chars})"
-        f" - 0.1 * abs(({n_chars} - ({n_tok} - 1)) / {n_tok} - 5.0))))"
+        "1.0 / (1.0 + exp(-(-2.0 + 0.02 * n_tok"
+        " + 4.0 * (n_stop / n_tok)"
+        " - 8.0 * (n_punct / n_chars)"
+        " - 0.1 * abs((n_chars - (n_tok - 1)) / n_tok - 5.0))))"
     )
 
 
@@ -303,7 +298,7 @@ def quality_scores_int(documents: DataFrame) -> DataFrame:
     )
 
 
-def top_bigrams(documents: DataFrame, k: int = 20) -> DataFrame:
+def top_bigrams(documents: DataFrame) -> DataFrame:
     """Global top-k word bigrams by frequency (corpus n-gram stats —
     a standard training-data diagnostic). Explode → count → top-k
     with deterministic tie-break on the bigram string. The count is
@@ -318,11 +313,11 @@ def top_bigrams(documents: DataFrame, k: int = 20) -> DataFrame:
         bigrams.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
-        .limit(k)
+        .limit(20)
     )
 
 
-def tfidf_top_terms_int(documents: DataFrame, k: int = 3) -> DataFrame:
+def tfidf_top_terms_int(documents: DataFrame) -> DataFrame:
     """Top-k terms per document by tf-idf (ln-scaled idf, raw tf)
     under the integer output contract: idf = ln(N / df) with N the
     corpus size, the score ships as ``tfidf_micro`` =
@@ -354,7 +349,7 @@ def tfidf_top_terms_int(documents: DataFrame, k: int = 3) -> DataFrame:
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 3)
         .select("doc_id", "term", "tf", "tfidf_micro", F.col("rk").alias("rk"))
     )
 
@@ -461,16 +456,16 @@ def repetition_scores_int(documents: DataFrame) -> DataFrame:
     )
 
 
-def char_entropy(documents: DataFrame, max_chars: int = 2000) -> DataFrame:
+def char_entropy(documents: DataFrame) -> DataFrame:
     """Shannon entropy (nats) of the character distribution over the
-    first ``max_chars`` characters of each document, plus the sampled
+    first 2000 characters of each document, plus the sampled
     length and distinct-character count. Low entropy flags repetitive
     / low-information text (padding, keyboard mashing, base64-free
     boilerplate) — the character-level complement of the word-level
     ``repetition_scores``; pipelines that gate on compression ratio
     use this as the deterministic, engine-portable stand-in.
 
-    Scale: the explode is capped at ``max_chars`` per document (the
+    Scale: the explode is capped at 2000 per document (the
     entropy estimate saturates long before 2k chars), so shuffled
     volume is bounded per doc regardless of document length; both
     aggregations key on doc_id with map-side combine. H is computed
@@ -487,7 +482,7 @@ def char_entropy(documents: DataFrame, max_chars: int = 2000) -> DataFrame:
     "Oracle encoding rule")."""
     chars = documents.filter(F.length("text") > 0).select(
         "doc_id",
-        F.explode(F.split(F.substring("text", 1, max_chars), "")).alias("c"),
+        F.explode(F.split(F.substring("text", 1, 2000), "")).alias("c"),
     )
     freq = chars.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n"))
     n = F.col("n").cast("double")
@@ -504,13 +499,11 @@ def char_entropy(documents: DataFrame, max_chars: int = 2000) -> DataFrame:
 SENTS_PER_CHUNK = 3
 
 
-def sentence_chunks(
-    documents: DataFrame, sents_per_chunk: int = SENTS_PER_CHUNK
-) -> DataFrame:
+def sentence_chunks(documents: DataFrame) -> DataFrame:
     """Sentence-boundary RAG chunks: split each document into
     sentences (portable `[^.!?]+[.!?]?` extraction — RE2 has no
     lookbehind, so the boundary pattern keeps its punctuation inside
-    the sentence) and group consecutive sentences ``sents_per_chunk``
+    the sentence) and group consecutive sentences ``SENTS_PER_CHUNK``
     at a time. The semantic-boundary companion to the token-window
     ``doc_chunks``: chunks never split mid-sentence, at the cost of
     variable token width.
@@ -528,7 +521,7 @@ def sentence_chunks(
     return (
         sents.groupBy(
             "doc_id",
-            F.floor(F.col("idx") / sents_per_chunk).cast("int").alias("chunk_id"),
+            F.floor(F.col("idx") / SENTS_PER_CHUNK).cast("int").alias("chunk_id"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_sentences"),
@@ -543,18 +536,18 @@ def sentence_chunks(
     )
 
 
+EVAL_MOD = 20  # the held-out eval slice is doc_id % EVAL_MOD == 0
 EVAL_BCAST_MAX_BYTES = 256 * 1024 * 1024  # see _maybe_broadcast_eval
 
 
-def _maybe_broadcast_eval(eval_shingles: DataFrame, documents: DataFrame,
-                          eval_mod: int):
+def _maybe_broadcast_eval(eval_shingles: DataFrame, documents: DataFrame):
     """Size-gate the eval-shingle broadcast (VERDICT r09 #5/#7): the
-    eval slice is 1/eval_mod of the CORPUS, so its distinct-shingle
+    eval slice is 1/EVAL_MOD of the CORPUS, so its distinct-shingle
     set grows with corpus size — a broadcast that fits at sf0.1 will
     not fit at 100 TB (the 8 GB/512M-row broadcast cap, guide §3.1).
     The gate estimates the exploded eval shingle volume from the
     source relation's optimizer size statistic (on-disk bytes ×
-    ~3 overlapping word-shingles per token position / eval_mod — a
+    ~3 overlapping word-shingles per token position / EVAL_MOD — a
     coarse upper-shape estimate, deliberately cheap: no job, no
     count) and keeps the explicit broadcast hint only under
     ``EVAL_BCAST_MAX_BYTES`` (256 MB). Past the
@@ -572,16 +565,16 @@ def _maybe_broadcast_eval(eval_shingles: DataFrame, documents: DataFrame,
         )
     except Exception:  # stats unavailable — keep the legacy hint
         base = 0
-    est = base * 3 // max(eval_mod, 1)
+    est = base * 3 // EVAL_MOD
     if est <= EVAL_BCAST_MAX_BYTES:
         return F.broadcast(eval_shingles)
     return eval_shingles
 
 
-def decontaminate(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
+def decontaminate(documents: DataFrame) -> DataFrame:
     """Benchmark decontamination: for every training document, the
     fraction of its distinct word-3-gram shingles that also occur in
-    the held-out eval slice (doc_id % eval_mod == 0 — the fixtures'
+    the held-out eval slice (doc_id % EVAL_MOD == 0 — the fixtures'
     stand-in for an external benchmark corpus). Docs with high overlap
     are contamination-removal candidates.
 
@@ -593,17 +586,17 @@ def decontaminate(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
 
     sh = F.array_distinct(word_shingles(F.col("text")))
     eval_shingles = (
-        documents.filter((F.col("doc_id") % eval_mod) == 0)
+        documents.filter((F.col("doc_id") % EVAL_MOD) == 0)
         .select(F.explode(sh).alias("sh"))
         .distinct()
         .withColumn("in_eval", F.lit(1))
     )
-    train = documents.filter((F.col("doc_id") % eval_mod) != 0).select(
+    train = documents.filter((F.col("doc_id") % EVAL_MOD) != 0).select(
         "doc_id", F.explode(sh).alias("sh")
     )
     return (
         train.join(
-            _maybe_broadcast_eval(eval_shingles, documents, eval_mod),
+            _maybe_broadcast_eval(eval_shingles, documents),
             "sh",
             "left_outer",
         )
@@ -625,7 +618,7 @@ def decontaminate(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
     )
 
 
-def decontaminate_int(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
+def decontaminate_int(documents: DataFrame) -> DataFrame:
     """``decontaminate`` under the integer output contract: the
     overlap fraction ships as ``contamination_frac_micro`` =
     floor(x·1e6 + 0.5) BIGINT, recomputed from the integer counts the
@@ -633,7 +626,7 @@ def decontaminate_int(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
     change below it."""
     from ..functions.portable import micro
 
-    return decontaminate(documents, eval_mod=eval_mod).select(
+    return decontaminate(documents).select(
         "doc_id",
         "n_shingles",
         "n_contaminated",
@@ -685,14 +678,7 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
     )
 
 
-def curated_corpus(
-    documents: DataFrame,
-    min_quality: float = 0.2,
-    max_dup3: float = 0.9,
-    max_contamination: float = 0.9,
-    per_source_k: int = 5,
-    eval_mod: int = 20,
-) -> DataFrame:
+def curated_corpus(documents: DataFrame) -> DataFrame:
     """The curation pipeline end product: per-row quality and
     repetition metrics, decontamination against the eval slice,
     threshold filters, then the top-k surviving documents per source
@@ -707,21 +693,19 @@ def curated_corpus(
     by definition and drop with the inner join."""
     from pyspark.sql import Window
 
-    metrics = documents.filter((F.col("doc_id") % eval_mod) != 0).select(
+    metrics = documents.filter((F.col("doc_id") % EVAL_MOD) != 0).select(
         "doc_id",
         "source",
         _quality_column().alias("quality"),
         _dup_3gram_column().alias("dup_3gram_frac"),
     )
-    dec = decontaminate(documents, eval_mod=eval_mod).select(
-        "doc_id", "contamination_frac"
-    )
+    dec = decontaminate(documents).select("doc_id", "contamination_frac")
     survivors = (
         metrics.join(dec, "doc_id")
         .filter(
-            (F.col("quality") >= min_quality)
-            & (F.col("dup_3gram_frac") <= max_dup3)
-            & (F.col("contamination_frac") <= max_contamination)
+            (F.col("quality") >= 0.2)
+            & (F.col("dup_3gram_frac") <= 0.9)
+            & (F.col("contamination_frac") <= 0.9)
         )
     )
     rk = F.row_number().over(
@@ -731,7 +715,7 @@ def curated_corpus(
     )
     return (
         survivors.withColumn("rk", rk)
-        .filter(F.col("rk") <= per_source_k)
+        .filter(F.col("rk") <= 5)
         .select(
             "doc_id", "source", "quality", "dup_3gram_frac",
             "contamination_frac", "rk",
@@ -739,14 +723,7 @@ def curated_corpus(
     )
 
 
-def curated_corpus_int(
-    documents: DataFrame,
-    min_quality_micro: int = 200_000,
-    max_dup3_micro: int = 900_000,
-    max_contamination_micro: int = 900_000,
-    per_source_k: int = 5,
-    eval_mod: int = 20,
-) -> DataFrame:
+def curated_corpus_int(documents: DataFrame) -> DataFrame:
     """``curated_corpus`` under the integer output contract: the
     three fractional metrics ship (and threshold, and order) as
     ``*_micro`` = floor(x·1e6 + 0.5) BIGINTs. Thresholds are the
@@ -761,19 +738,17 @@ def curated_corpus_int(
 
     from ..functions.portable import micro
 
-    metrics = documents.filter((F.col("doc_id") % eval_mod) != 0).select(
+    metrics = documents.filter((F.col("doc_id") % EVAL_MOD) != 0).select(
         "doc_id",
         "source",
         micro(_quality_raw_column()).alias("quality_micro"),
         micro(_dup_3gram_raw_column()).alias("dup_3gram_frac_micro"),
     )
-    dec = decontaminate_int(documents, eval_mod=eval_mod).select(
-        "doc_id", "contamination_frac_micro"
-    )
+    dec = decontaminate_int(documents).select("doc_id", "contamination_frac_micro")
     survivors = metrics.join(dec, "doc_id").filter(
-        (F.col("quality_micro") >= min_quality_micro)
-        & (F.col("dup_3gram_frac_micro") <= max_dup3_micro)
-        & (F.col("contamination_frac_micro") <= max_contamination_micro)
+        (F.col("quality_micro") >= 200_000)
+        & (F.col("dup_3gram_frac_micro") <= 900_000)
+        & (F.col("contamination_frac_micro") <= 900_000)
     )
     rk = F.row_number().over(
         Window.partitionBy("source").orderBy(
@@ -782,7 +757,7 @@ def curated_corpus_int(
     )
     return (
         survivors.withColumn("rk", rk)
-        .filter(F.col("rk") <= per_source_k)
+        .filter(F.col("rk") <= 5)
         .select(
             "doc_id", "source", "quality_micro", "dup_3gram_frac_micro",
             "contamination_frac_micro", "rk",
@@ -822,9 +797,7 @@ def unigram_surprisal(documents: DataFrame) -> DataFrame:
 KN_DISCOUNT = 0.75
 
 
-def kn_bigram_surprisal(
-    documents: DataFrame, d: float = KN_DISCOUNT
-) -> DataFrame:
+def kn_bigram_surprisal(documents: DataFrame) -> DataFrame:
     """Per-document mean bigram surprisal under an interpolated
     Kneser-Ney LM estimated from the corpus itself — the step up from
     ``unigram_surprisal`` toward real model perplexity: KN's
@@ -888,8 +861,8 @@ def kn_bigram_surprisal(
     nb = bc.groupBy("w2").agg(F.count(F.lit(1)).alias("n1b"))
     t = bc.agg(F.count(F.lit(1)).alias("t"))
     pkn = (
-        F.greatest(F.col("c") - F.lit(d), F.lit(0.0))
-        + F.lit(d) * F.col("n1f") * F.col("n1b") / F.col("t")
+        F.greatest(F.col("c") - F.lit(KN_DISCOUNT), F.lit(0.0))
+        + F.lit(KN_DISCOUNT) * F.col("n1f") * F.col("n1b") / F.col("t")
     ) / F.col("c1")
     p = (
         bc.join(c1, "w1")
@@ -910,9 +883,7 @@ def kn_bigram_surprisal(
     )
 
 
-def kn_trigram_surprisal(
-    documents: DataFrame, d: float = KN_DISCOUNT
-) -> DataFrame:
+def kn_trigram_surprisal(documents: DataFrame) -> DataFrame:
     """Per-document mean TRIGRAM surprisal under a fully interpolated
     Kneser-Ney LM (Chen & Goodman 1999's formulation) estimated from
     the corpus itself — the standard step up from
@@ -988,12 +959,12 @@ def kn_trigram_surprisal(
     uni = ct.groupBy("w3").agg(F.count(F.lit(1)).alias("nc3"))
     tt = ct.agg(F.count(F.lit(1)).alias("t"))
     p2 = (
-        F.greatest(F.col("n23") - F.lit(d), F.lit(0.0))
-        + F.lit(d) * F.col("nfol") * (F.col("nc3") / F.col("t"))
+        F.greatest(F.col("n23") - F.lit(KN_DISCOUNT), F.lit(0.0))
+        + F.lit(KN_DISCOUNT) * F.col("nfol") * (F.col("nc3") / F.col("t"))
     ) / F.col("nmid")
     p3 = (
-        F.greatest(F.col("c3") - F.lit(d), F.lit(0.0))
-        + F.lit(d) * F.col("n1f12") * p2
+        F.greatest(F.col("c3") - F.lit(KN_DISCOUNT), F.lit(0.0))
+        + F.lit(KN_DISCOUNT) * F.col("n1f12") * p2
     ) / F.col("c12")
     p = (
         tc.join(c12, ["w1", "w2"])
@@ -1123,7 +1094,7 @@ def bigram_surprisal(documents: DataFrame) -> DataFrame:
     )
 
 
-def contamination_report(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
+def contamination_report(documents: DataFrame) -> DataFrame:
     """The eval-side view of ``decontaminate``: for every EVAL
     document, how many distinct training documents share at least one
     word-3-gram with it, and the training side's worst per-doc overlap
@@ -1138,7 +1109,7 @@ def contamination_report(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
 
     sh = F.array_distinct(word_shingles(F.col("text")))
     eval_sh = (
-        documents.filter((F.col("doc_id") % eval_mod) == 0)
+        documents.filter((F.col("doc_id") % EVAL_MOD) == 0)
         .select(F.col("doc_id").alias("eval_doc_id"), sh.alias("__sh"))
         .select("eval_doc_id", F.explode("__sh").alias("sh"))
         .distinct()
@@ -1146,7 +1117,7 @@ def contamination_report(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
     # shingle array projected once BELOW the explode (the size and the
     # generator would otherwise each re-run the shingling per row)
     train = (
-        documents.filter((F.col("doc_id") % eval_mod) != 0)
+        documents.filter((F.col("doc_id") % EVAL_MOD) != 0)
         .select("doc_id", sh.alias("__sh"))
         .select(
             "doc_id",
@@ -1171,7 +1142,7 @@ def contamination_report(documents: DataFrame, eval_mod: int = 20) -> DataFrame:
     )
 
 
-def _budget_cumsum(m: DataFrame, bucket_decimals: int = 3) -> DataFrame:
+def _budget_cumsum(m: DataFrame) -> DataFrame:
     """The exact two-pass greedy prefix sum shared by
     ``budgeted_mixture`` and ``corpus_funnel``: given a narrow frame
     (doc_id, source, quality, n_tokens), adds ``cum_tokens`` — the
@@ -1187,7 +1158,7 @@ def _budget_cumsum(m: DataFrame, bucket_decimals: int = 3) -> DataFrame:
     text:projection width ratio."""
     from pyspark.sql import Window
 
-    m = m.withColumn("__qb", F.round("quality", bucket_decimals)).localCheckpoint(
+    m = m.withColumn("__qb", F.round("quality", 3)).localCheckpoint(
         eager=True
     )
     mass = m.groupBy("source", "__qb").agg(F.sum("n_tokens").alias("__mass"))
@@ -1214,7 +1185,6 @@ def _budget_cumsum(m: DataFrame, bucket_decimals: int = 3) -> DataFrame:
 def budgeted_mixture(
     documents: DataFrame,
     token_budget_per_source: int = 1000,
-    bucket_decimals: int = 3,
 ) -> DataFrame:
     """Budgeted mixture construction: within each source, documents
     are ranked by quality (ties broken by doc_id) and kept greedily
@@ -1228,7 +1198,7 @@ def budgeted_mixture(
     sources dominate. Instead the greedy prefix sum is decomposed
     exactly:
 
-    1. bucket quality to ``bucket_decimals`` (coarse, contiguous
+    1. bucket quality to 3 decimals (coarse, contiguous
        ranges: descending bucket order == descending quality order);
     2. aggregate per-(source, bucket) token mass — a map-side-combined
        aggregate whose output is at most |sources| x 10^decimals rows;
@@ -1252,7 +1222,7 @@ def budgeted_mixture(
         F.round(_quality_column(), 6).alias("quality"),
         nt.alias("n_tokens"),
     )
-    c = _budget_cumsum(m, bucket_decimals=bucket_decimals)
+    c = _budget_cumsum(m)
     return c.select(
         "doc_id",
         "source",
@@ -1419,12 +1389,7 @@ def _gopher_keep(gm: dict[str, Column]) -> Column:
 FUNNEL_STAGES = ("raw", "rules", "dedup", "decontam", "budget")
 
 
-def corpus_funnel(
-    documents: DataFrame,
-    token_budget_per_source: int = 1000,
-    max_contamination: float = 0.9,
-    eval_mod: int = 20,
-) -> DataFrame:
+def corpus_funnel(documents: DataFrame) -> DataFrame:
     """The curation funnel report: document and token counts
     surviving each stage of the full training-data pipeline —
 
@@ -1438,7 +1403,7 @@ def corpus_funnel(
     Dedup keeps the smallest doc_id among RULE-SURVIVING copies of a
     normalized text; decontamination drops eval-slice docs
     themselves plus training docs whose eval-shingle overlap exceeds
-    ``max_contamination``; the budget stage replays
+    0.9; the budget stage replays
     ``budgeted_mixture``'s greedy per-source (quality DESC, doc_id)
     selection over the decontaminated survivors.
 
@@ -1451,9 +1416,7 @@ def corpus_funnel(
     (source, quality-bucket) decomposition via ``_budget_cumsum``.
     The final answer is five conditional aggregates in ONE pass over
     the narrow frame, unpivoted with stack()."""
-    b4 = _funnel_flags(
-        documents, token_budget_per_source, max_contamination, eval_mod
-    )
+    b4 = _funnel_flags(documents)
     row = b4.agg(*_funnel_aggs())
     stack = ", ".join(
         f"'{nm}', {i}, __d_{nm}, __t_{nm}"
@@ -1469,12 +1432,7 @@ def corpus_funnel(
     )
 
 
-def corpus_funnel_by_source(
-    documents: DataFrame,
-    token_budget_per_source: int = 1000,
-    max_contamination: float = 0.9,
-    eval_mod: int = 20,
-) -> DataFrame:
+def corpus_funnel_by_source(documents: DataFrame) -> DataFrame:
     """``corpus_funnel`` broken out per source — the view a mixture
     owner reads ("the budget binds for source X but rules dominate
     source Y's losses"). Same flag frame, grouped by source before
@@ -1482,9 +1440,7 @@ def corpus_funnel_by_source(
 
     Scale: identical to corpus_funnel except the final aggregate is
     keyed by source (map-side combine; |sources| × 5 output rows)."""
-    b4 = _funnel_flags(
-        documents, token_budget_per_source, max_contamination, eval_mod
-    )
+    b4 = _funnel_flags(documents)
     row = b4.groupBy("source").agg(*_funnel_aggs())
     stack = ", ".join(
         f"'{nm}', {i}, __d_{nm}, __t_{nm}"
@@ -1525,12 +1481,7 @@ def _funnel_aggs() -> list[Column]:
     return aggs
 
 
-def _funnel_flags(
-    documents: DataFrame,
-    token_budget_per_source: int,
-    max_contamination: float,
-    eval_mod: int,
-) -> DataFrame:
+def _funnel_flags(documents: DataFrame) -> DataFrame:
     """Per-document stage-survival flags shared by corpus_funnel and
     corpus_funnel_by_source (see corpus_funnel for the stage
     semantics and scale argument).
@@ -1592,12 +1543,12 @@ def _funnel_flags(
         "__dedup", F.col("__rules") & (F.col("doc_id") == F.col("__keep"))
     )
     eval_shingles = (
-        base.filter((F.col("doc_id") % eval_mod) == 0)
+        base.filter((F.col("doc_id") % EVAL_MOD) == 0)
         .select(F.explode("__sh").alias("sh"))
         .distinct()
         .withColumn("in_eval", F.lit(1))
     )
-    train = base.filter((F.col("doc_id") % eval_mod) != 0).select(
+    train = base.filter((F.col("doc_id") % EVAL_MOD) != 0).select(
         "doc_id", F.explode("__sh").alias("sh")
     )
     dec = (
@@ -1605,7 +1556,7 @@ def _funnel_flags(
         # reads the ORIGINAL documents relation's stats (base is a
         # checkpoint RDD with no file statistics)
         train.join(
-            _maybe_broadcast_eval(eval_shingles, documents, eval_mod),
+            _maybe_broadcast_eval(eval_shingles, documents),
             "sh",
             "left_outer",
         )
@@ -1626,10 +1577,10 @@ def _funnel_flags(
     b3 = b2.join(dec, "doc_id", "left").withColumn(
         "__decontam",
         F.col("__dedup")
-        & ((F.col("doc_id") % eval_mod) != 0)
+        & ((F.col("doc_id") % EVAL_MOD) != 0)
         & (
             F.coalesce(F.col("contamination_frac"), F.lit(1.0))
-            <= max_contamination
+            <= 0.9
         ),
     )
     cum = _budget_cumsum(
@@ -1642,17 +1593,12 @@ def _funnel_flags(
         F.col("__decontam")
         & (
             F.coalesce(F.col("cum_tokens"), F.lit(1 << 60))
-            <= token_budget_per_source
+            <= 1000
         ),
     )
 
 
-def curation_drop_reasons(
-    documents: DataFrame,
-    token_budget_per_source: int = 1000,
-    max_contamination: float = 0.9,
-    eval_mod: int = 20,
-) -> DataFrame:
+def curation_drop_reasons(documents: DataFrame) -> DataFrame:
     """Per-document disposition for the curation funnel: the FIRST
     stage that dropped the document (``rules`` / ``dedup`` /
     ``decontam`` / ``budget``) or ``kept``. The debugging companion
@@ -1663,9 +1609,7 @@ def curation_drop_reasons(
 
     Scale: a pure projection over the same ``_funnel_flags`` frame —
     no additional shuffle beyond the funnel's own."""
-    b4 = _funnel_flags(
-        documents, token_budget_per_source, max_contamination, eval_mod
-    )
+    b4 = _funnel_flags(documents)
     reason = (
         F.when(~F.col("__rules"), F.lit("rules"))
         .when(~F.col("__dedup"), F.lit("dedup"))
@@ -1719,7 +1663,7 @@ def quality_thresholds(
     )
 
 
-def bpe_merge_candidates(documents: DataFrame, k: int = 20) -> DataFrame:
+def bpe_merge_candidates(documents: DataFrame) -> DataFrame:
     """The first step of BPE tokenizer training: corpus-wide counts
     of adjacent character pairs within words, top-k by frequency —
     the pair a BPE trainer would merge first. (Full BPE training is
@@ -1747,12 +1691,16 @@ def bpe_merge_candidates(documents: DataFrame, k: int = 20) -> DataFrame:
         pairs.groupBy("pair")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("pair"))
-        .limit(k)
+        .limit(20)
     )
 
 
+PMI_K = 30  # collocations pmi_collocations reports
+PMI_MIN_COUNT = 5  # bigram count floor
+
+
 def pmi_collocations(
-    documents: DataFrame, k: int = 30, min_count: int = 5
+    documents: DataFrame, k: int = PMI_K, min_count: int = PMI_MIN_COUNT
 ) -> DataFrame:
     """(w1, w2, n_pair, pmi) — top-k word collocations by pointwise
     mutual information, pmi = ln(p(w1,w2) / (p(w1)·p(w2))) (Church &
@@ -1831,7 +1779,7 @@ def pmi_collocations(
     )
 
 
-def sql_pmi_collocations(k: int = 30, min_count: int = 5) -> str:
+def sql_pmi_collocations() -> str:
     """DuckDB oracle for ``pmi_collocations``."""
     from .textprep import sql_word_shingles, sql_words
 
@@ -1844,7 +1792,7 @@ nb AS (SELECT COUNT(*) AS n_bigrams FROM bg),
 bgc AS (SELECT string_split(bigram, ' ')[1] AS w1,
                string_split(bigram, ' ')[2] AS w2,
                COUNT(*) AS n_pair
-        FROM bg GROUP BY 1, 2 HAVING COUNT(*) >= {min_count}),
+        FROM bg GROUP BY 1, 2 HAVING COUNT(*) >= {PMI_MIN_COUNT}),
 j AS (SELECT b.w1, b.w2, b.n_pair,
              ROUND(ln((CAST(b.n_pair AS DOUBLE) / nb.n_bigrams) /
                       ((CAST(u1.n_term AS DOUBLE) / nt.n_tokens) *
@@ -1853,7 +1801,7 @@ j AS (SELECT b.w1, b.w2, b.n_pair,
       JOIN uni u1 ON u1.term = b.w1
       JOIN uni u2 ON u2.term = b.w2, nt, nb)
 SELECT w1, w2, CAST(n_pair AS BIGINT) AS n_pair, pmi
-FROM j ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT {k}
+FROM j ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT {PMI_K}
 """
 
 
@@ -1977,14 +1925,14 @@ def zipf_fit(documents: DataFrame, top_n: int = ZIPF_TOP_N) -> DataFrame:
     )
 
 
-def sql_zipf_fit(top_n: int = ZIPF_TOP_N) -> str:
+def sql_zipf_fit() -> str:
     """DuckDB oracle for ``zipf_fit``."""
     from .textprep import sql_words
 
     return f"""
 WITH toks AS (SELECT unnest({sql_words('text')}) AS term FROM documents),
 tc AS (SELECT term, COUNT(*) AS n FROM toks GROUP BY 1
-       ORDER BY n DESC, term ASC LIMIT {top_n}),
+       ORDER BY n DESC, term ASC LIMIT {ZIPF_TOP_N}),
 xy AS (SELECT ln(CAST(ROW_NUMBER() OVER (ORDER BY n DESC, term ASC)
                       AS DOUBLE)) AS x,
               ln(CAST(n AS DOUBLE)) AS y
@@ -2029,12 +1977,12 @@ def l_diversity_report(documents: DataFrame, l: int = LDIV_L) -> DataFrame:
     )
 
 
-def sql_l_diversity_report(l: int = LDIV_L) -> str:
+def sql_l_diversity_report() -> str:
     """DuckDB oracle for ``l_diversity_report``."""
     return f"""
 SELECT source, CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_distinct_langs,
-       COUNT(DISTINCT lang) >= {l} AS meets_l
+       COUNT(DISTINCT lang) >= {LDIV_L} AS meets_l
 FROM documents GROUP BY source
 """
 
@@ -2042,9 +1990,7 @@ FROM documents GROUP BY source
 TCLOSE_T_MICRO = 200_000  # TV-distance release gate: t = 0.2
 
 
-def t_closeness_report(
-    documents: DataFrame, t_micro: int = TCLOSE_T_MICRO
-) -> DataFrame:
+def t_closeness_report(documents: DataFrame) -> DataFrame:
     """(source, n_rows, n_langs_present, tv_micro, meets_t) —
     t-closeness audit (Li, Li & Venkatasubramanian, ICDE 2007): the
     third privacy release gate after ``k_anonymity_report`` (class
@@ -2103,12 +2049,12 @@ def t_closeness_report(
             "n_rows",
             "n_langs_present",
             "tv_micro",
-            (F.col("tv_micro") <= t_micro).alias("meets_t"),
+            (F.col("tv_micro") <= TCLOSE_T_MICRO).alias("meets_t"),
         )
     )
 
 
-def sql_t_closeness_report(t_micro: int = TCLOSE_T_MICRO) -> str:
+def sql_t_closeness_report() -> str:
     """DuckDB oracle for ``t_closeness_report`` — identical per-cell
     quantization, identical integer halving."""
     return f"""
@@ -2132,7 +2078,7 @@ SELECT source,
        CAST(MAX(n_src) AS BIGINT) AS n_rows,
        CAST(SUM(present) AS BIGINT) AS n_langs_present,
        CAST(SUM(dev_micro) // 2 AS BIGINT) AS tv_micro,
-       SUM(dev_micro) // 2 <= {t_micro} AS meets_t
+       SUM(dev_micro) // 2 <= {TCLOSE_T_MICRO} AS meets_t
 FROM cells GROUP BY 1
 """
 
@@ -2203,13 +2149,13 @@ def dp_source_counts(
     )
 
 
-def sql_dp_source_counts(epsilon: float = DP_EPSILON) -> str:
+def sql_dp_source_counts() -> str:
     """DuckDB oracle for ``dp_source_counts`` — identical hash-seeded
     uniform, identical mechanism arithmetic and parenthesization (the
     product order matters for bit-exact doubles)."""
     from ..functions.portable import sql_hash32
 
-    b = 1.0 / epsilon
+    b = 1.0 / DP_EPSILON
     u = f"(({sql_hash32('source', salt='dp')}) + 0.5) / 4294967296.0"
     noise = (
         f"(({-b!r}) * sign(({u}) - 0.5))"
@@ -2224,14 +2170,12 @@ WITH counts AS (SELECT source, COUNT(*) AS n_docs
 SELECT source,
        CAST(n_docs * 1000000 + {noise_centi} * 10000 AS BIGINT)
          AS noisy_n_docs_micro,
-       CAST({int(round(epsilon * 1_000_000))} AS BIGINT) AS epsilon_micro
+       CAST({int(round(DP_EPSILON * 1_000_000))} AS BIGINT) AS epsilon_micro
 FROM counts
 """
 
 
-def quality_psi_by_source(
-    documents: DataFrame, n_buckets: int = 10
-) -> DataFrame:
+def quality_psi_by_source(documents: DataFrame) -> DataFrame:
     """(source, n_baseline, n_current, psi) — PSI of the QUALITY
     distribution between the already-ingested corpus and the
     incoming batch, per source (fixture split doc_id % 5 == 0 = the
@@ -2246,32 +2190,32 @@ def quality_psi_by_source(
     steps (engine-portable, no quantile estimation); the PSI
     arithmetic is the shared ``psi_from_bucket_counts`` core, so
     every PSI monitor agrees on what PSI means. One text scan
-    computes the score; state is #sources × n_buckets."""
+    computes the score; state is #sources × PSI_BUCKETS."""
     corpus = documents.filter(F.col("doc_id") % 5 != 0)
     batch = documents.filter(F.col("doc_id") % 5 == 0)
-    return quality_psi_frames(batch, corpus, n_buckets)
+    return quality_psi_frames(batch, corpus)
 
 
-def _quality_bucket(n_buckets: int = 10) -> F.Column:
+def _quality_bucket() -> F.Column:
+    from ..plans.analytics import PSI_BUCKETS
+
     q = _quality_column()
     return (
         F.least(
-            F.lit(n_buckets - 1),
-            F.greatest(F.lit(0), F.floor(q * n_buckets)),
+            F.lit(PSI_BUCKETS - 1),
+            F.greatest(F.lit(0), F.floor(q * PSI_BUCKETS)),
         )
         .cast("int")
     )
 
 
-def quality_psi_frames(
-    batch: DataFrame, corpus: DataFrame, n_buckets: int = 10
-) -> DataFrame:
+def quality_psi_frames(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """The frame-explicit core of ``quality_psi_by_source``: PSI of
     the batch's per-source quality distribution against an arbitrary
     corpus frame (the registry query fixes the fixture split)."""
     from ..plans.analytics import psi_from_bucket_counts
 
-    bucket = _quality_bucket(n_buckets)
+    bucket = _quality_bucket()
     b = corpus.select("source", bucket.alias("bucket")).groupBy(
         "source", "bucket"
     ).agg(F.count(F.lit(1)).alias("nb"))
@@ -2281,7 +2225,7 @@ def quality_psi_frames(
     counts = b.join(c, ["source", "bucket"], "full").fillna(
         0, ["nb", "nc"]
     )
-    return psi_from_bucket_counts(counts, n_buckets, key_col="source")
+    return psi_from_bucket_counts(counts, key_col="source")
 
 
 def corpus_datasheet(documents: DataFrame) -> DataFrame:
@@ -2659,9 +2603,7 @@ def ks_report_from_quality_counts(sq: DataFrame) -> DataFrame:
 DUPQ_MAX_BUCKET = 5  # duplicate-count bucket cap: 5 = "5 or more copies"
 
 
-def dup_quality_report(
-    documents: DataFrame, max_bucket: int = DUPQ_MAX_BUCKET
-) -> DataFrame:
+def dup_quality_report(documents: DataFrame) -> DataFrame:
     """(n_copies_bucket, n_groups, n_docs, mean_quality_micro) —
     curation analytics BRIDGING the dedup and quality families: is
     duplicated content lower-quality than unique content? The
@@ -2670,7 +2612,7 @@ def dup_quality_report(
     exact dedup is also a quality filter and the pipeline can run it
     first and spend the expensive quality pass on fewer rows;
     flat buckets say the two passes are independent and order by
-    cost alone. Bucket = LEAST(n_copies, max_bucket).
+    cost alone. Bucket = LEAST(n_copies, DUPQ_MAX_BUCKET).
 
     Scale: ONE projection computes the md5 content hash and the
     micro quality score together (the text is scanned once and
@@ -2690,7 +2632,7 @@ def dup_quality_report(
     )
     return (
         per_hash.groupBy(
-            F.least(F.col("n_copies"), F.lit(max_bucket))
+            F.least(F.col("n_copies"), F.lit(DUPQ_MAX_BUCKET))
             .cast("int")
             .alias("n_copies_bucket")
         )
@@ -2710,7 +2652,7 @@ def dup_quality_report(
     )
 
 
-def sql_dup_quality_report(max_bucket: int = DUPQ_MAX_BUCKET) -> str:
+def sql_dup_quality_report() -> str:
     """DuckDB oracle for ``dup_quality_report`` — the quality
     expression is byte-compatible with the certified quality_scores
     oracle (same logistic, same micro flooring)."""
@@ -2733,7 +2675,7 @@ q AS (SELECT text_hash,
       FROM m),
 ph AS (SELECT text_hash, COUNT(*) AS n_copies, SUM(q_u) AS sq
        FROM q GROUP BY 1)
-SELECT CAST(LEAST(n_copies, {max_bucket}) AS INT) AS n_copies_bucket,
+SELECT CAST(LEAST(n_copies, {DUPQ_MAX_BUCKET}) AS INT) AS n_copies_bucket,
        CAST(COUNT(*) AS BIGINT) AS n_groups,
        CAST(SUM(n_copies) AS BIGINT) AS n_docs,
        CAST(SUM(sq) // SUM(n_copies) AS BIGINT) AS mean_quality_micro

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.portable import micro
 
 
-def top_users_per_event_type(events: DataFrame, k: int = 5) -> DataFrame:
+def top_users_per_event_type(events: DataFrame) -> DataFrame:
     """Top-k users by total value within each event_type:
     agg → ranked window → filter. Classic two-shuffle top-k; the
     window partitions on event_type so no global sort."""
@@ -30,7 +30,7 @@ def top_users_per_event_type(events: DataFrame, k: int = 5) -> DataFrame:
     )
     return (
         per_user.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 5)
         .select("event_type", "user_id", "user_value", "rk")
     )
 
@@ -93,10 +93,10 @@ def _sessionized(events: DataFrame, gap_minutes: int) -> DataFrame:
     )
 
 
-def user_sessions(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def user_sessions(events: DataFrame) -> DataFrame:
     """Sessionization via lag + gap-cumsum (the batch equivalent of a
     session window): new session when the gap to the previous event of
-    the same user exceeds `gap_minutes`. Output: per-user session
+    the same user exceeds 30 minutes. Output: per-user session
     count and average session length (events per session).
 
     micro(AVG(n_events)) is order-INDEPENDENT here despite the double
@@ -104,7 +104,7 @@ def user_sessions(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     below 2^53, and the single final division is one IEEE op — no
     partial-sum-order hazard (unlike AVG over fractional doubles,
     the r08 ADVICE class)."""
-    per_session = _sessionized(events, gap_minutes).groupBy(
+    per_session = _sessionized(events, 30).groupBy(
         "user_id", "sess_id"
     ).agg(F.count(F.lit(1)).alias("n_events"))
     return per_session.groupBy("user_id").agg(
@@ -113,14 +113,14 @@ def user_sessions(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def session_window_stats(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_window_stats(events: DataFrame) -> DataFrame:
     """Native session-window aggregation (F.session_window — the same
     operator Structured Streaming uses for streaming sessions): merge
-    each user's events closer than ``gap``, emit session bounds and
-    size. Boundary semantics: an event exactly ``gap`` after the
+    each user's events closer than 30 minutes, emit session bounds and
+    size. Boundary semantics: an event exactly 30 minutes after the
     previous one starts a NEW session (window end is exclusive)."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -318,10 +318,10 @@ def seasonal_daily_decompose(events: DataFrame) -> DataFrame:
     )
 
 
-def robust_value_stats(events: DataFrame, mad_k: float = 3.0) -> DataFrame:
+def robust_value_stats(events: DataFrame) -> DataFrame:
     """Median / MAD / outlier screen per event type — the robust
     twin of value_stats_per_type: outliers are values whose absolute
-    deviation from the type's median exceeds ``mad_k`` × MAD (median
+    deviation from the type's median exceeds 3 × MAD (median
     absolute deviation). Robust statistics resist exactly the skewed
     heavy-tail value distributions where mean/stddev screens
     (daily_anomaly_scores' z-score) stop working; MAD = 0 (at least
@@ -360,7 +360,7 @@ def robust_value_stats(events: DataFrame, mad_k: float = 3.0) -> DataFrame:
             (F.round(F.min("__mad"), 6) + 0.0).alias("mad"),
             F.sum(
                 F.when(
-                    F.col("__ad") > F.lit(mad_k) * F.col("__mad"), 1
+                    F.col("__ad") > F.lit(3.0) * F.col("__mad"), 1
                 ).otherwise(0)
             )
             .cast("long")
@@ -415,7 +415,7 @@ def conversion_funnel(events: DataFrame) -> DataFrame:
     )
 
 
-def weekly_retention(events: DataFrame, anchor: str = "2024-01-01") -> DataFrame:
+def weekly_retention(events: DataFrame) -> DataFrame:
     """Cohort retention: users grouped by first-seen week, counted in
     each subsequent week they were active. Two aggregations + one
     join — the classic retention-matrix dataflow."""
@@ -429,7 +429,7 @@ def weekly_retention(events: DataFrame, anchor: str = "2024-01-01") -> DataFrame
     return (
         joined.select(
             "user_id",
-            F.floor(F.datediff("d0", F.lit(anchor)) / 7).cast("int").alias(
+            F.floor(F.datediff("d0", F.lit("2024-01-01")) / 7).cast("int").alias(
                 "cohort_week"
             ),
             F.floor(F.datediff("d", F.col("d0")) / 7).cast("int").alias(
@@ -441,7 +441,7 @@ def weekly_retention(events: DataFrame, anchor: str = "2024-01-01") -> DataFrame
     )
 
 
-def cohort_ltv(events: DataFrame, anchor: str = "2024-01-01") -> DataFrame:
+def cohort_ltv(events: DataFrame) -> DataFrame:
     """(cohort_week, week_offset, n_purchasers, revenue_cents,
     cum_revenue_per_cohort_user_micro) — the LTV triangle: purchase
     revenue per
@@ -460,7 +460,7 @@ def cohort_ltv(events: DataFrame, anchor: str = "2024-01-01") -> DataFrame:
     first_seen = events.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("d0")
     )
-    cohort_of = F.floor(F.datediff("d0", F.lit(anchor)) / 7).cast("int")
+    cohort_of = F.floor(F.datediff("d0", F.lit("2024-01-01")) / 7).cast("int")
     sized = first_seen.select("user_id", cohort_of.alias("cohort_week"))
     cohort_sizes = sized.groupBy("cohort_week").agg(
         F.count(F.lit(1)).alias("__n_cohort")
@@ -654,7 +654,7 @@ def rfm_segments(events: DataFrame) -> DataFrame:
     )
 
 
-def decayed_user_value(events: DataFrame, half_life_days: float = 7.0) -> DataFrame:
+def decayed_user_value(events: DataFrame) -> DataFrame:
     """Exponentially time-decayed purchase value per user — the
     recency-weighted feature a ranking or churn model consumes
     (yesterday's purchase counts ~2x one a week old at the default
@@ -670,7 +670,7 @@ def decayed_user_value(events: DataFrame, half_life_days: float = 7.0) -> DataFr
     age_days = (F.col("__a") - F.expr("unix_micros(cast(ts as timestamp))")) / F.lit(
         86400.0 * 1e6
     )
-    lam = float(math.log(2.0) / half_life_days)
+    lam = float(math.log(2.0) / 7.0)
     return (
         p.crossJoin(F.broadcast(anchor))
         .groupBy("user_id")
@@ -684,21 +684,19 @@ def decayed_user_value(events: DataFrame, half_life_days: float = 7.0) -> DataFr
     )
 
 
-def top_session_paths(
-    events: DataFrame, gap_minutes: int = 30, max_steps: int = 10, k: int = 20
-) -> DataFrame:
+def top_session_paths(events: DataFrame) -> DataFrame:
     """Most common session journeys: the ordered event-type path of
     each gap-based session (same sessionization as ``user_sessions``),
-    truncated to ``max_steps``, counted across all sessions, top-k.
+    truncated to 10 steps, counted across all sessions, top-k.
     The "how do users actually move through the product" view that
     transition matrices (``event_transitions``) marginalize away.
 
     Scale: sessions are bounded (a user's events within one gap
     horizon), so the per-session collect_list is small by
-    construction and capped at max_steps anyway; path counting is a
+    construction and capped at 10 steps anyway; path counting is a
     hash aggregation on the path string and top-k compiles to
     TakeOrderedAndProject."""
-    paths = _sessionized(events, gap_minutes).groupBy("user_id", "sess_id").agg(
+    paths = _sessionized(events, 30).groupBy("user_id", "sess_id").agg(
         F.concat_ws(
             ">",
             F.slice(
@@ -709,7 +707,7 @@ def top_session_paths(
                     lambda s: s["event_type"],
                 ),
                 1,
-                max_steps,
+                10,
             ),
         ).alias("path")
     )
@@ -717,19 +715,19 @@ def top_session_paths(
         paths.groupBy("path")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
         .orderBy(F.desc("n_sessions"), F.asc("path"))
-        .limit(k)
+        .limit(20)
     )
 
 
-def rolling_active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
+def rolling_active_users(events: DataFrame) -> DataFrame:
     """DAU + trailing-WAU: per day, distinct active users that day and
-    across the trailing ``window_days`` (the growth-dashboard pair).
+    across the trailing 7 days (the growth-dashboard pair).
     Exact rolling DISTINCT — not a sum of daily counts, which
     double-counts users active on several days.
 
     Scale: the classic trick for exact windowed distinct without a
     per-day re-scan: reduce to distinct (user, day) first, then each
-    such row contributes to ``window_days`` target days (a bounded
+    such row contributes to 7 target days (a bounded
     explode — ×7, known at plan time), and one countDistinct per
     target day finishes it. Shuffles carry (user, day) pairs, never
     raw events; days beyond the corpus's last day are clipped so
@@ -743,7 +741,7 @@ def rolling_active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
         ud.select(
             "user_id",
             F.explode(
-                F.sequence(F.lit(0), F.lit(window_days - 1))
+                F.sequence(F.lit(0), F.lit(6))
             ).alias("__off"),
             "d",
         )
@@ -758,7 +756,7 @@ def rolling_active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
     return dau.join(wau, "d").select("d", "dau", "wau")
 
 
-def retention_rates(events: DataFrame, anchor: str = "2024-01-01") -> DataFrame:
+def retention_rates(events: DataFrame) -> DataFrame:
     """The consumed form of the retention matrix: each cohort's
     week-k active count normalized by the cohort's size. Offset 0
     contains every cohort member by construction (the first-seen day
@@ -767,7 +765,7 @@ def retention_rates(events: DataFrame, anchor: str = "2024-01-01") -> DataFrame:
 
     Scale: weekly_retention's two aggregations plus one join against
     the cohorts-sized offset-0 slice (broadcast)."""
-    m = weekly_retention(events, anchor)
+    m = weekly_retention(events)
     sizes = m.filter(F.col("week_offset") == 0).select(
         "cohort_week", F.col("n_users").alias("__size")
     )
@@ -857,11 +855,11 @@ def event_type_correlations(events: DataFrame) -> DataFrame:
 
 
 PSI_EPS = 1e-3  # share-smoothing epsilon (shared with every PSI oracle)
+PSI_BUCKETS = 10  # value buckets; the last one is open-ended
+PSI_BUCKET_WIDTH = 10.0  # width of every other bucket
 
 
-def value_psi_by_type(
-    events: DataFrame, n_buckets: int = 10, bucket_width: float = 10.0
-) -> DataFrame:
+def value_psi_by_type(events: DataFrame) -> DataFrame:
     """(event_type, n_baseline, n_current, psi) — Population
     Stability Index of the value distribution per event type between
     the first and second half of the observed date range: the
@@ -882,7 +880,7 @@ def value_psi_by_type(
 
     Scale: two narrow aggregations (type×bucket counts, then the
     bucket-grid join against a types-sized frame) — state is
-    #types × n_buckets regardless of event volume; the date midpoint
+    #types × PSI_BUCKETS regardless of event volume; the date midpoint
     is a one-row broadcast."""
     d = F.to_date("ts")
     bounds = events.agg(F.min(d).alias("dmin"), F.max(d).alias("dmax"))
@@ -892,33 +890,28 @@ def value_psi_by_type(
     ev = events.crossJoin(F.broadcast(bounds)).select(
         "event_type",
         F.when(d < mid, F.lit(1)).otherwise(F.lit(0)).alias("is_base"),
-        value_bucket(F.col("value"), n_buckets, bucket_width).alias(
-            "bucket"
-        ),
+        value_bucket(F.col("value")).alias("bucket"),
     )
     counts = ev.groupBy("event_type", "bucket").agg(
         F.sum("is_base").alias("nb"),
         (F.count(F.lit(1)) - F.sum("is_base")).alias("nc"),
     )
-    return psi_from_bucket_counts(counts, n_buckets)
+    return psi_from_bucket_counts(counts)
 
 
-def value_bucket(value: F.Column, n_buckets: int = 10,
-                 bucket_width: float = 10.0) -> F.Column:
+def value_bucket(value: F.Column) -> F.Column:
     """The fixed-width PSI bucket index — shared by the batch split
     and the streaming monitor so both sides bin identically."""
     return (
         F.least(
-            F.lit(n_buckets - 1),
-            F.greatest(F.lit(0), F.floor(value / bucket_width)),
+            F.lit(PSI_BUCKETS - 1),
+            F.greatest(F.lit(0), F.floor(value / PSI_BUCKET_WIDTH)),
         )
         .cast("int")
     )
 
 
-def psi_from_bucket_counts(
-    counts: DataFrame, n_buckets: int = 10, key_col: str = "event_type"
-) -> DataFrame:
+def psi_from_bucket_counts(counts: DataFrame, key_col: str = "event_type") -> DataFrame:
     """PSI per key from a (key_col, bucket, nb, nc) count table — the
     arithmetic core shared by ``value_psi_by_type`` (one corpus,
     date-split, keyed by event_type), the streaming monitor (static
@@ -932,7 +925,7 @@ def psi_from_bucket_counts(
         .select(
             key_col,
             F.explode(
-                F.sequence(F.lit(0), F.lit(n_buckets - 1))
+                F.sequence(F.lit(0), F.lit(PSI_BUCKETS - 1))
             ).alias("bucket"),
         )
     )
@@ -951,7 +944,7 @@ def psi_from_bucket_counts(
     # identical distributions score exactly 0 at any size ratio,
     # while empty buckets still contribute finite terms.
     eps = PSI_EPS
-    denom = 1.0 + n_buckets * eps
+    denom = 1.0 + PSI_BUCKETS * eps
     p = (
         F.when(F.col("tb") > 0, F.col("nb") / F.col("tb")).otherwise(
             F.lit(0.0)
@@ -1180,14 +1173,12 @@ def time_of_week_profile(events: DataFrame) -> DataFrame:
     )
 
 
-def user_lifecycle_stages(
-    events: DataFrame, active_days: int = 7, at_risk_days: int = 21
-) -> DataFrame:
+def user_lifecycle_stages(events: DataFrame) -> DataFrame:
     """(stage, n_users) — rule-based lifecycle segmentation by recency
     against the corpus horizon: 'new' (first seen within
-    ``active_days``), 'active' (seen within ``active_days`` but not
-    new), 'at_risk' (quiet ``active_days``..``at_risk_days``),
-    'churned' (quieter than ``at_risk_days``). The coarse operational
+    7 days), 'active' (seen within 7 days but not
+    new), 'at_risk' (quiet 8..21 days),
+    'churned' (quieter than 21 days). The coarse operational
     complement to the quartile-scored ``rfm_segments`` — thresholds a
     human set, so the stages mean the same thing week over week
     (quartiles move with the population).
@@ -1204,9 +1195,9 @@ def user_lifecycle_stages(
         F.datediff("max_d", "first_d").alias("since_first"),
     )
     stage = (
-        F.when(F.col("since_first") <= active_days, F.lit("new"))
-        .when(F.col("since_last") <= active_days, F.lit("active"))
-        .when(F.col("since_last") <= at_risk_days, F.lit("at_risk"))
+        F.when(F.col("since_first") <= 7, F.lit("new"))
+        .when(F.col("since_last") <= 7, F.lit("active"))
+        .when(F.col("since_last") <= 21, F.lit("at_risk"))
         .otherwise(F.lit("churned"))
     )
     return u.groupBy(stage.alias("stage")).agg(

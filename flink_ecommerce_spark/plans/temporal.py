@@ -63,12 +63,10 @@ def asof_join_last_click(events: DataFrame) -> DataFrame:
     )
 
 
-def interval_join_click_purchase_cents(
-    events: DataFrame, window_hours: int = 1
-) -> DataFrame:
+def interval_join_click_purchase_cents(events: DataFrame) -> DataFrame:
     """Interval join (Flink's interval-join shape): every (click,
     purchase) pair of the same user where the purchase lands within
-    ``window_hours`` after the click. In batch this is an equi-join
+    one hour after the click. In batch this is an equi-join
     on user_id with a range predicate — one shuffle, and the range
     filter runs during the join; tests/test_stream_joins.py runs the
     same shape stream-stream with watermarks on both sides. Under the
@@ -94,7 +92,7 @@ def interval_join_click_purchase_cents(
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {window_hours} HOURS")
+            <= F.col("click_ts") + F.expr("INTERVAL 1 HOURS")
         ),
     ).select(
         clicks.user_id.alias("user_id"),
@@ -192,15 +190,13 @@ def value_percentiles(events: DataFrame) -> DataFrame:
 HIST_BUCKETS = 256
 
 
-def value_percentiles_hist(
-    events: DataFrame, buckets: int = HIST_BUCKETS
-) -> DataFrame:
+def value_percentiles_hist(events: DataFrame) -> DataFrame:
     """Bounded-memory percentiles: the 100 TB path that
     ``value_percentiles``' docstring promises. Exact `percentile()`
     holds every group's values in the aggregation state; this
-    histogram sketch holds exactly ``buckets`` counters no matter how
+    histogram sketch holds exactly ``HIST_BUCKETS`` counters no matter how
     many rows flow — one scan with map-side-combined bucket counts,
-    then percentile selection over a ``buckets``-row table (the only
+    then percentile selection over a ``HIST_BUCKETS``-row table (the only
     single-partition step is over those 256 rows, bounded by
     construction).
 
@@ -226,10 +222,10 @@ def value_percentiles_hist(
     # by clamping estimates to vmax at the end instead.
     w = F.when(
         F.col("vmax") > F.col("vmin"),
-        (F.col("vmax") - F.col("vmin")) / F.lit(float(buckets)),
+        (F.col("vmax") - F.col("vmin")) / F.lit(float(HIST_BUCKETS)),
     ).otherwise(F.lit(1.0))
     idx = F.least(
-        F.lit(buckets - 1),
+        F.lit(HIST_BUCKETS - 1),
         F.floor((F.col("value") - F.col("vmin")) / w),
     ).alias("idx")
     hist = (
@@ -575,10 +571,10 @@ def sliding_event_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def linear_attribution(events: DataFrame, window_hours: int = 1) -> DataFrame:
+def linear_attribution(events: DataFrame) -> DataFrame:
     """(channel, n_touches, attributed_value) — multi-touch LINEAR
     revenue attribution: each purchase's value splits equally across
-    every click/view by the same user in the ``window_hours`` before
+    every click/view by the same user in the hour before
     it (strictly earlier); purchases with no preceding touch
     attribute whole to the 'direct' channel. The multi-touch
     complement to ``asof_last_click`` (last-touch) — linear is the
@@ -610,7 +606,7 @@ def linear_attribution(events: DataFrame, window_hours: int = 1) -> DataFrame:
         & (F.col("t_ts") < F.col("p_ts"))
         & (
             F.col("t_ts")
-            >= F.col("p_ts") - F.expr(f"INTERVAL {window_hours} HOURS")
+            >= F.col("p_ts") - F.expr("INTERVAL 1 HOURS")
         ),
         "left",
     )
@@ -866,7 +862,7 @@ FROM risked
 """
 
 
-def position_attribution(events: DataFrame, window_hours: int = 1) -> DataFrame:
+def position_attribution(events: DataFrame) -> DataFrame:
     """(channel, n_touches, attributed_value_micro) — POSITION-BASED
     (U-shaped) multi-touch attribution: 40% of each purchase's value
     to the first touch in the window, 40% to the last, 20% split
@@ -879,7 +875,7 @@ def position_attribution(events: DataFrame, window_hours: int = 1) -> DataFrame:
     positions come from a per-purchase window ordered by (touch ts,
     touch event_id) — deterministic under timestamp ties — whose
     partitions are bounded by the touches one user makes in
-    ``window_hours``, never corpus-sized. Money quantizes to integer
+    one hour, never corpus-sized. Money quantizes to integer
     micro-units per row before the cross-purchase sum (the float-
     order discipline every attribution op here shares)."""
     touches = events.filter(
@@ -902,7 +898,7 @@ def position_attribution(events: DataFrame, window_hours: int = 1) -> DataFrame:
         & (F.col("t_ts") < F.col("p_ts"))
         & (
             F.col("t_ts")
-            >= F.col("p_ts") - F.expr(f"INTERVAL {window_hours} HOURS")
+            >= F.col("p_ts") - F.expr("INTERVAL 1 HOURS")
         ),
         "left",
     )
@@ -990,9 +986,7 @@ def _markov_transitions(events: DataFrame) -> DataFrame:
     )
 
 
-def markov_attribution(
-    events: DataFrame, steps: int = MARKOV_STEPS
-) -> DataFrame:
+def markov_attribution(events: DataFrame) -> DataFrame:
     """(channel, base_pconv_u, removed_pconv_u, effect_u, share_u) —
     Markov-chain REMOVAL-EFFECT attribution (Anderl et al. 2014), the
     data-driven successor to the positional heuristics
@@ -1004,11 +998,11 @@ def markov_attribution(
     purchase attribute ~nothing, which no positional rule can see.
 
     Mechanism: absorption probability at CONV is computed by
-    ``steps`` propagation rounds (the oracle unrolls the same rounds
+    ``MARKOV_STEPS`` propagation rounds (the oracle unrolls the same rounds
     as CTEs — no recursive CTE, whose aggregate-in-recursion rules
     differ by engine); a channel's removal redirects its inbound hops
     to NULL WITHOUT renormalizing (the standard removal semantics).
-    Truncation at ``steps`` discards the leftover transient mass
+    Truncation at ``MARKOV_STEPS`` discards the leftover transient mass
     identically in both engines; ``journey_length_hist`` is the
     companion METER — on the fixture it reads cum_share 96.8% of
     journeys within 8 hops — and the residual largely cancels in the
@@ -1030,7 +1024,7 @@ def markov_attribution(
     propagation walks run as exact integer arithmetic in Python —
     Spark SQL ``DIV`` and Python ``//`` agree on the non-negative
     masses involved. The previous all-Spark unrolling evaluated
-    3 walks × Σ(steps) ≈ 108 broadcast-join mini-plans whose
+    3 walks × Σ(MARKOV_STEPS) ≈ 108 broadcast-join mini-plans whose
     fixed job overhead dominated wall time at EVERY corpus size
     (60.99 s at the 10× rehearsal, ~95% of it spent on the ≤25-row
     matrix); the collected-matrix form keeps the identical integer
@@ -1047,7 +1041,7 @@ def markov_attribution(
             out.setdefault(s, []).append((d, p))
         v = {"START": 1_000_000}
         conv = 0
-        for _ in range(steps):
+        for _ in range(MARKOV_STEPS):
             nxt_num: dict[str, int] = {}
             for s, m in v.items():
                 if s in ("CONV", "NULL"):
@@ -1083,7 +1077,7 @@ def markov_attribution(
     )
 
 
-def sql_markov_attribution(steps: int = MARKOV_STEPS) -> str:
+def sql_markov_attribution() -> str:
     """DuckDB oracle for ``markov_attribution`` — identical journey
     split, integer matrix, and unrolled propagation rounds."""
 
@@ -1091,7 +1085,7 @@ def sql_markov_attribution(steps: int = MARKOV_STEPS) -> str:
         ctes = [
             f"{tag}0 AS (SELECT 'START' AS state, CAST(1000000 AS BIGINT) AS m_u)"
         ]
-        for i in range(1, steps + 1):
+        for i in range(1, MARKOV_STEPS + 1):
             ctes.append(
                 f"{tag}{i} AS (SELECT t.dst AS state,\n"
                 f"  CAST(SUM(v.m_u * t.p_u) // 1000000 AS BIGINT) AS m_u\n"
@@ -1100,7 +1094,7 @@ def sql_markov_attribution(steps: int = MARKOV_STEPS) -> str:
             )
         union = "\n  UNION ALL ".join(
             f"SELECT m_u FROM {tag}{i} WHERE state = 'CONV'"
-            for i in range(1, steps + 1)
+            for i in range(1, MARKOV_STEPS + 1)
         )
         ctes.append(
             f"{tag}conv AS (SELECT CAST(COALESCE(SUM(m_u), 0) AS BIGINT)"

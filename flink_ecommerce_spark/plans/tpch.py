@@ -19,11 +19,11 @@ from pyspark.sql import functions as F
 from ..functions.portable import micro
 
 
-def q1_pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> DataFrame:
+def q1_pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: scan → pushed filter → one shuffle, 8 aggregates
     sharing a single partial-agg pass."""
     return (
-        lineitem.filter(F.col("l_shipdate") <= F.lit(ship_cutoff).cast("timestamp"))
+        lineitem.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -51,17 +51,15 @@ def q3_shipping_priority(
     customer: DataFrame,
     orders: DataFrame,
     lineitem: DataFrame,
-    segment: str = "BUILDING",
-    cutoff: str = "1998-03-15",
 ) -> DataFrame:
     """TPC-H Q3 shape: broadcast the filtered customer dim into orders,
     shuffle-join lineitem on l_orderkey, top-10 revenue.
 
     The limit-after-sort is a TakeOrderedAndProject — each partition
     keeps only its local top-10, so no global sort materializes."""
-    cust = customer.filter(F.col("c_mktsegment") == segment).select("c_custkey")
-    ords = orders.filter(F.col("o_orderdate") < F.lit(cutoff).cast("timestamp"))
-    li = lineitem.filter(F.col("l_shipdate") > F.lit(cutoff).cast("timestamp"))
+    cust = customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
+    ords = orders.filter(F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp"))
+    li = lineitem.filter(F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp"))
     return (
         li.join(
             ords.join(F.broadcast(cust), ords.o_custkey == cust.c_custkey),
@@ -151,9 +149,9 @@ def customers_without_orders(customer: DataFrame, orders: DataFrame) -> DataFram
     ).select("c_custkey", "c_name")
 
 
-def orders_with_big_lineitem(orders: DataFrame, lineitem: DataFrame, min_price: float = 90000.0) -> DataFrame:
+def orders_with_big_lineitem(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """LEFT SEMI join: orders having at least one expensive line item."""
-    big = lineitem.filter(F.col("l_extendedprice") > min_price)
+    big = lineitem.filter(F.col("l_extendedprice") > 90000.0)
     return orders.join(
         big, orders.o_orderkey == big.l_orderkey, "left_semi"
     ).select("o_orderkey", F.round("o_totalprice", 2).alias("o_totalprice"))
@@ -193,7 +191,6 @@ def q2_min_cost_supplier(
     part: DataFrame,
     supplier: DataFrame,
     lineitem: DataFrame,
-    max_size: int = 10,
 ) -> DataFrame:
     """TPC-H Q2 shape (argmin per group). The fixtures have no partsupp,
     so lineitem plays its role: a (part, supplier) pair's unit cost is
@@ -212,7 +209,7 @@ def q2_min_cost_supplier(
             ).alias("unit_cost")
         )
     )
-    small_parts = part.filter(F.col("p_size") <= max_size).select(
+    small_parts = part.filter(F.col("p_size") <= 10).select(
         "p_partkey", "p_name", "p_size"
     )
     ranked = (
@@ -258,25 +255,18 @@ def q4_order_priority(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     )
 
 
-def q6_revenue_forecast(
-    lineitem: DataFrame,
-    year_start: str = "1996-01-01",
-    year_end: str = "1997-01-01",
-    disc_lo: float = 0.02,
-    disc_hi: float = 0.04,
-    max_qty: float = 24.0,
-) -> DataFrame:
+def q6_revenue_forecast(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q6: the canonical filter-pushdown probe — three range
     predicates, no join, one global sum. All three predicates must
     appear in the parquet scan's PushedFilters; the whole query is a
     single scan + partial/final agg with no shuffle of raw rows."""
     return (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(year_start).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(year_end).cast("timestamp"))
-            & (F.col("l_discount") >= disc_lo)
-            & (F.col("l_discount") <= disc_hi)
-            & (F.col("l_quantity") < max_qty)
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
+            & (F.col("l_discount") >= 0.02)
+            & (F.col("l_discount") <= 0.04)
+            & (F.col("l_quantity") < 24.0)
         )
         .agg(
             F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
@@ -338,7 +328,6 @@ def q9_product_profit(
     lineitem: DataFrame,
     orders: DataFrame,
     nation: DataFrame,
-    name_like: str = "%bolt%",
 ) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation and order year for a
     part-name-filtered slice. No partsupp in the fixtures, so cost is
@@ -347,7 +336,7 @@ def q9_product_profit(
     Scale: part filter broadcasts (name LIKE prunes ~1/7 of parts);
     supplier+nation broadcast; the only fact-fact shuffle is
     lineitem⋈orders on the order key."""
-    parts = part.filter(F.col("p_name").like(name_like)).select(
+    parts = part.filter(F.col("p_name").like("%bolt%")).select(
         "p_partkey", "p_retailprice"
     )
     supp = supplier.join(
@@ -380,9 +369,6 @@ def q10_returned_items(
     orders: DataFrame,
     lineitem: DataFrame,
     nation: DataFrame,
-    date_lo: str = "1996-07-01",
-    date_hi: str = "1996-10-01",
-    k: int = 20,
 ) -> DataFrame:
     """TPC-H Q10: top-k customers by revenue lost to returned items in
     one quarter. Covers grouped top-k over a 4-way join.
@@ -392,8 +378,8 @@ def q10_returned_items(
     top-20 is TakeOrderedAndProject (per-partition heads, no global
     sort)."""
     ords = orders.filter(
-        (F.col("o_orderdate") >= F.lit(date_lo).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(date_hi).cast("timestamp"))
+        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
     li = lineitem.filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_extendedprice", "l_discount"
@@ -412,7 +398,7 @@ def q10_returned_items(
             ).alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -437,20 +423,15 @@ def q13_order_distribution(customer: DataFrame, orders: DataFrame) -> DataFrame:
     )
 
 
-def q14_promo_revenue(
-    lineitem: DataFrame,
-    part: DataFrame,
-    month_lo: str = "1996-03-01",
-    month_hi: str = "1996-04-01",
-) -> DataFrame:
+def q14_promo_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q14: promo revenue share — a conditional-sum ratio in one
     aggregation pass over a month of shipments (p_type = 'PROMO' is the
     fixtures' analog of TPC-H's 'PROMO%' prefix)."""
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(month_lo).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(month_hi).cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
         .join(F.broadcast(part.select("p_partkey", "p_type")),
               F.col("l_partkey") == F.col("p_partkey"))
@@ -465,9 +446,7 @@ def q14_promo_revenue(
     )
 
 
-def q17_small_quantity_revenue(
-    lineitem: DataFrame, part: DataFrame, brand: str = "Brand#3"
-) -> DataFrame:
+def q17_small_quantity_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q17: yearly revenue that would vanish if sub-20%-of-average
     quantity orders stopped — the correlated-average filter.
 
@@ -478,7 +457,7 @@ def q17_small_quantity_revenue(
     IEEE double and the 0.2×avg threshold is engine-portable."""
     branded = lineitem.join(
         F.broadcast(
-            part.filter(F.col("p_brand") == brand).select("p_partkey")
+            part.filter(F.col("p_brand") == "Brand#3").select("p_partkey")
         ),
         lineitem.l_partkey == F.col("p_partkey"),
     )
@@ -500,7 +479,6 @@ def q18_large_volume_customers(
     customer: DataFrame,
     orders: DataFrame,
     lineitem: DataFrame,
-    min_qty: float = 300.0,
 ) -> DataFrame:
     """TPC-H Q18: customers whose single orders exceed a total-quantity
     threshold — aggregate-HAVING on the fact, then joins outward.
@@ -511,7 +489,7 @@ def q18_large_volume_customers(
     big = (
         lineitem.groupBy("l_orderkey")
         .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-        .filter(F.col("sum_qty") > min_qty)
+        .filter(F.col("sum_qty") > 300.0)
     )
     return (
         orders.join(F.broadcast(big), orders.o_orderkey == big.l_orderkey)
@@ -603,9 +581,6 @@ def q8_market_share(
     customer: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    region_name: str = "ASIA",
-    part_type: str = "ECONOMY",
-    target_nation: str = "NATION_5",
 ) -> DataFrame:
     """TPC-H Q8: one nation's market share, per year, of a part type
     sold to customers in one region — a conditional-sum ratio over an
@@ -619,7 +594,7 @@ def q8_market_share(
     amount = _dec2("l_extendedprice") * (1 - _dec2("l_discount"))
     region_nations = nation.join(
         F.broadcast(
-            region.filter(F.col("r_name") == region_name).select("r_regionkey")
+            region.filter(F.col("r_name") == "ASIA").select("r_regionkey")
         ),
         nation.n_regionkey == F.col("r_regionkey"),
     ).select(F.col("n_nationkey").alias("rn_nk"))
@@ -635,7 +610,7 @@ def q8_market_share(
         ),
         supplier.s_nationkey == F.col("s_nk"),
     ).select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    parts = part.filter(F.col("p_type") == part_type).select("p_partkey")
+    parts = part.filter(F.col("p_type") == "ECONOMY").select("p_partkey")
     return (
         lineitem.join(F.broadcast(parts), lineitem.l_partkey == F.col("p_partkey"))
         .join(F.broadcast(supp), lineitem.l_suppkey == F.col("s_suppkey"))
@@ -644,7 +619,7 @@ def q8_market_share(
         .agg(
             F.round(
                 F.sum(
-                    F.when(F.col("supp_nation") == target_nation, amount).otherwise(
+                    F.when(F.col("supp_nation") == "NATION_5", amount).otherwise(
                         F.lit(0)
                     )
                 ).cast("double")
@@ -659,8 +634,6 @@ def q11_important_parts(
     lineitem: DataFrame,
     supplier: DataFrame,
     nation: DataFrame,
-    nation_name: str = "NATION_3",
-    fraction: float = 0.001,
 ) -> DataFrame:
     """TPC-H Q11 shape: parts representing a significant fraction of
     one nation's traded value — group-sum HAVING a share of a global
@@ -674,7 +647,7 @@ def q11_important_parts(
     and the threshold comparison order-independent."""
     supp = supplier.join(
         F.broadcast(
-            nation.filter(F.col("n_name") == nation_name).select("n_nationkey")
+            nation.filter(F.col("n_name") == "NATION_3").select("n_nationkey")
         ),
         supplier.s_nationkey == F.col("n_nationkey"),
     ).select("s_suppkey")
@@ -690,7 +663,7 @@ def q11_important_parts(
         vals.join(F.broadcast(total))
         .filter(
             F.col("value_dec").cast("double")
-            > F.col("total_dec").cast("double") * fraction
+            > F.col("total_dec").cast("double") * 0.001
         )
         .select(
             "l_partkey",
@@ -699,12 +672,7 @@ def q11_important_parts(
     )
 
 
-def q12_priority_shipping(
-    orders: DataFrame,
-    lineitem: DataFrame,
-    year_lo: str = "1996-01-01",
-    year_hi: str = "1997-01-01",
-) -> DataFrame:
+def q12_priority_shipping(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q12 shape: high- vs low-priority line counts per group for
     a year of late shipments. The fixtures lack shipmode/commitdate, so
     the group is l_returnflag and "late" is l_shipdate > o_orderdate.
@@ -715,8 +683,8 @@ def q12_priority_shipping(
     high = ("1-URGENT", "2-HIGH")
     j = (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(year_lo).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(year_hi).cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         )
         .join(
             orders.select("o_orderkey", "o_orderdate", "o_orderpriority"),
@@ -734,12 +702,7 @@ def q12_priority_shipping(
     )
 
 
-def q15_top_supplier(
-    supplier: DataFrame,
-    lineitem: DataFrame,
-    date_lo: str = "1996-01-01",
-    date_hi: str = "1996-04-01",
-) -> DataFrame:
+def q15_top_supplier(supplier: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q15: the supplier(s) with maximum revenue in a quarter —
     an aggregate view joined against its own scalar max (ties kept,
     exactly as the spec's revenue view semantics).
@@ -750,8 +713,8 @@ def q15_top_supplier(
     engines, so the max-equality join is safe on doubles."""
     rev = (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(date_lo).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(date_hi).cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
         .groupBy("l_suppkey")
         .agg(
@@ -778,10 +741,6 @@ def q16_part_supplier_counts(
     part: DataFrame,
     supplier: DataFrame,
     lineitem: DataFrame,
-    exclude_brand: str = "Brand#5",
-    exclude_type_prefix: str = "PROMO",
-    sizes: tuple = (1, 4, 9, 16, 25, 36, 49),
-    complaint_bal: float = 1000.0,
 ) -> DataFrame:
     """TPC-H Q16 shape: how many distinct suppliers can provide parts
     with given attribute filters, excluding blacklisted suppliers.
@@ -794,11 +753,11 @@ def q16_part_supplier_counts(
     dim slice)."""
     pairs = lineitem.select("l_partkey", "l_suppkey").distinct()
     parts = part.filter(
-        (F.col("p_brand") != exclude_brand)
-        & (~F.col("p_type").startswith(exclude_type_prefix))
-        & (F.col("p_size").isin(*sizes))
+        (F.col("p_brand") != "Brand#5")
+        & (~F.col("p_type").startswith("PROMO"))
+        & (F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
     ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad = supplier.filter(F.col("s_acctbal") < complaint_bal).select("s_suppkey")
+    bad = supplier.filter(F.col("s_acctbal") < 1000.0).select("s_suppkey")
     return (
         pairs.join(F.broadcast(parts), pairs.l_partkey == F.col("p_partkey"))
         .join(
@@ -814,10 +773,6 @@ def q20_promotion_suppliers(
     nation: DataFrame,
     part: DataFrame,
     lineitem: DataFrame,
-    name_like: str = "%bolt%",
-    date_lo: str = "1996-01-01",
-    date_hi: str = "1997-01-01",
-    min_qty: float = 50.0,
 ) -> DataFrame:
     """TPC-H Q20 shape: suppliers who moved significant volume of a
     part family in a year — nested IN over an aggregate threshold,
@@ -827,16 +782,16 @@ def q20_promotion_suppliers(
     Scale: part filter broadcasts into the date-pruned fact; the
     per-(part, supplier) quantity agg collapses before the threshold;
     the surviving supplier keys semi-join (broadcast) into the dim."""
-    parts = part.filter(F.col("p_name").like(name_like)).select("p_partkey")
+    parts = part.filter(F.col("p_name").like("%bolt%")).select("p_partkey")
     movers = (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(date_lo).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(date_hi).cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         )
         .join(F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > min_qty)
+        .filter(F.col("qty") > 50.0)
         .select("l_suppkey")
         .distinct()
     )
@@ -858,8 +813,6 @@ def q21_waiting_suppliers(
     supplier: DataFrame,
     lineitem: DataFrame,
     orders: DataFrame,
-    late_days: int = 30,
-    k: int = 100,
 ) -> DataFrame:
     """TPC-H Q21 shape: suppliers who were the SOLE late shipper on
     multi-supplier orders. The reference formulation is EXISTS (another
@@ -868,7 +821,7 @@ def q21_waiting_suppliers(
     aggregation: distinct-supplier count, distinct-late-supplier count,
     and max(late suppkey) — when the late count is exactly 1, that max
     IS the sole late supplier, so no second pass over the fact is
-    needed to recover who it was. "Late" is shipping > late_days after
+    needed to recover who it was. "Late" is shipping > 30 days after
     the order date (no commit/receipt dates in the fixtures).
 
     Scale: lineitem joins orders on the order key (one fact shuffle,
@@ -881,7 +834,7 @@ def q21_waiting_suppliers(
     ).withColumn(
         "is_late",
         F.col("l_shipdate")
-        > F.col("o_orderdate") + F.expr(f"INTERVAL {int(late_days)} DAYS"),
+        > F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"),
     )
     late_supp = F.when(F.col("is_late"), F.col("l_suppkey"))
     per_order = li.groupBy("l_orderkey").agg(
@@ -899,8 +852,11 @@ def q21_waiting_suppliers(
         )
         .select("s_name", "numwait")
         .orderBy(F.desc("numwait"), F.asc("s_name"))
-        .limit(k)
+        .limit(100)
     )
+
+
+COPURCHASE_MIN_SUPPORT = 2  # orders a part pair must share to be an edge
 
 
 def _copurchase_support_pairs(
@@ -961,11 +917,9 @@ def _copurchase_support_pairs(
     return op, pairs
 
 
-def copurchase_components(
-    lineitem: DataFrame, min_support: int = 2, max_rounds: int = 20
-) -> DataFrame:
+def copurchase_components(lineitem: DataFrame) -> DataFrame:
     """Product COMMUNITIES: connected components over the co-purchase
-    graph (edges = part pairs bought together in >= ``min_support``
+    graph (edges = part pairs bought together in >= COPURCHASE_MIN_SUPPORT
     orders) — the step after ``copurchase_pairs``\' pair list, when
     the merchandising question is "which products form a basket
     family", not "which pair co-occurs". Every part in the lineitem
@@ -979,17 +933,17 @@ def copurchase_components(
     ``operators.graph.connected_components`` — the same
     edge-touched-only min-label propagation dedup_clusters runs, so
     per-round state is |parts with an edge|, not |catalog|. Basket
-    families can chain longer than near-dup clusters, so
-    ``max_rounds`` is exposed; connected_components RAISES rather
-    than truncating if the diameter exceeds it. Exact oracle: the
+    families can chain longer than near-dup clusters, so it allows
+    20 rounds; connected_components RAISES rather than truncating if
+    the diameter exceeds that. Exact oracle: the
     recursive-CTE reachability walk (dedup_clusters' pattern)."""
     from ..operators.graph import connected_components
 
-    op, pairs = _copurchase_support_pairs(lineitem, min_support)
+    op, pairs = _copurchase_support_pairs(lineitem, COPURCHASE_MIN_SUPPORT)
     edges = pairs.select(
         F.col("part_a").alias("doc_a"), F.col("part_b").alias("doc_b")
     )
-    labels = connected_components(edges, max_rounds=max_rounds)
+    labels = connected_components(edges)
     parts = op.select(F.col("l_partkey").alias("part_id")).distinct()
     return parts.join(
         labels.select(F.col("doc_id").alias("part_id"), "cluster_id"),
@@ -1001,7 +955,7 @@ def copurchase_components(
     )
 
 
-def copurchase_pairs(lineitem: DataFrame, min_support: int = 2, k: int = 100) -> DataFrame:
+def copurchase_pairs(lineitem: DataFrame) -> DataFrame:
     """Market-basket analysis over order line items: part pairs that
     co-occur in the same order, with support (co-occurrence count)
     and lift (observed co-occurrence vs independence). The retail
@@ -1014,7 +968,7 @@ def copurchase_pairs(lineitem: DataFrame, min_support: int = 2, k: int = 100) ->
     Margins are part-catalog-sized and broadcast into the lift
     expression; top-k compiles to TakeOrderedAndProject, never a
     global sort."""
-    op, pairs = _copurchase_support_pairs(lineitem, min_support)
+    op, pairs = _copurchase_support_pairs(lineitem, COPURCHASE_MIN_SUPPORT)
     n_orders = op.agg(
         F.countDistinct("l_orderkey").alias("__n_orders")
     )
@@ -1044,7 +998,7 @@ def copurchase_pairs(lineitem: DataFrame, min_support: int = 2, k: int = 100) ->
             ).alias("lift"),
         )
         .orderBy(F.desc("support"), F.asc("part_a"), F.asc("part_b"))
-        .limit(k)
+        .limit(100)
     )
 
 
@@ -1052,11 +1006,7 @@ ITEM_NEIGHBORS_MIN_SUPPORT = 2
 ITEM_NEIGHBORS_K = 10
 
 
-def item_neighbors_topk(
-    lineitem: DataFrame,
-    min_support: int = ITEM_NEIGHBORS_MIN_SUPPORT,
-    k: int = ITEM_NEIGHBORS_K,
-) -> DataFrame:
+def item_neighbors_topk(lineitem: DataFrame, k: int = ITEM_NEIGHBORS_K) -> DataFrame:
     """Item-item collaborative similarity: for every part, its top-k
     co-purchase NEIGHBORS ranked by basket Jaccard — the
     "customers who bought X also bought Y" recommendation primitive
@@ -1077,7 +1027,7 @@ def item_neighbors_topk(
     edge list, already bounded by the support threshold."""
     from pyspark.sql import Window
 
-    op, pairs = _copurchase_support_pairs(lineitem, min_support)
+    op, pairs = _copurchase_support_pairs(lineitem, ITEM_NEIGHBORS_MIN_SUPPORT)
     part_n = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("__n"))
     sym = pairs.select(
         F.col("part_a").alias("part"),
@@ -1124,9 +1074,7 @@ def item_neighbors_topk(
     )
 
 
-def copurchase_graph_stats(
-    lineitem: DataFrame, min_support: int = 2
-) -> DataFrame:
+def copurchase_graph_stats(lineitem: DataFrame) -> DataFrame:
     """(n_parts, n_edges, n_wedges, n_triangles, global_clustering)
     — triangle census of the support-thresholded co-purchase graph:
     the graph-density / community-strength summary (global clustering
@@ -1144,7 +1092,7 @@ def copurchase_graph_stats(
     instead of Σd² (which a hub makes quadratic). The close check is
     a semi-join against the oriented edges; counts stay integers to
     the end (the coefficient divides once, rounded)."""
-    _, pairs = _copurchase_support_pairs(lineitem, min_support)
+    _, pairs = _copurchase_support_pairs(lineitem, COPURCHASE_MIN_SUPPORT)
     # lazy localCheckpoints: both the edge list and the oriented edges
     # feed multiple consumers, but materialization waits for the first
     # action — constructing the plan (registry enumeration, plan
@@ -1207,9 +1155,7 @@ def copurchase_graph_stats(
     )
 
 
-def basket_rules(
-    lineitem: DataFrame, min_support: int = 2, k: int = 200
-) -> DataFrame:
+def basket_rules(lineitem: DataFrame) -> DataFrame:
     """(antecedent, consequent, support, confidence_micro, lift_micro)
     — DIRECTED
     association rules from the co-purchase pairs: confidence(a→b) =
@@ -1224,7 +1170,7 @@ def basket_rules(
     count is bounded, so the self-join is linear in orders); the
     direction fan-out doubles only the already-thresholded pair rows;
     margins broadcast; TakeOrderedAndProject for the top-k."""
-    op, pairs = _copurchase_support_pairs(lineitem, min_support)
+    op, pairs = _copurchase_support_pairs(lineitem, COPURCHASE_MIN_SUPPORT)
     n_orders = op.select("l_orderkey").distinct().agg(
         F.count(F.lit(1)).alias("__n_orders")
     )
@@ -1268,7 +1214,7 @@ def basket_rules(
             ).alias("lift_micro"),
         )
         .orderBy(F.desc("support"), F.asc("antecedent"), F.asc("consequent"))
-        .limit(k)
+        .limit(200)
     )
 
 

@@ -5327,20 +5327,20 @@ FROM events"""
 )
 
 
-def _sql_source_overlap_minhash(num_hashes: int = dedup.NUM_HASHES) -> str:
-    """Oracle builder generated from the SAME ``num_hashes`` the
-    operator defaults to (ADVICE r05: the previous hand-unrolled
+def _sql_source_overlap_minhash() -> str:
+    """The oracle, generated from the SAME ``dedup.NUM_HASHES`` the
+    operator reads (ADVICE r05: the previous hand-unrolled
     16-slot literal would silently desynchronize if NUM_HASHES
     moved), mirroring the kmeans/mmr generated-oracle pattern."""
     slots = ",\n    ".join(
         f"MIN((h1 + {i} * h2) % {dedup.MINHASH_PRIME}) AS mh{i}"
-        for i in range(num_hashes)
+        for i in range(dedup.NUM_HASHES)
     )
     eq = " + ".join(
         f"(CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(num_hashes)
+        for i in range(dedup.NUM_HASHES)
     )
-    jac = sql_micro(f"CAST(n_eq AS DOUBLE) / {num_hashes}.0")
+    jac = sql_micro(f"CAST(n_eq AS DOUBLE) / {dedup.NUM_HASHES}.0")
     return f"""
 WITH sh AS (SELECT source, unnest({_SHINGLES}) AS s FROM documents),
 h AS (SELECT source, {sql_hash32('s', salt='mh', half=0)} AS h1,

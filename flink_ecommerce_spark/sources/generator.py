@@ -34,14 +34,11 @@ def transactions(
     spark: SparkSession,
     n_rows: int = 10_000,
     seed: int = 42,
-    start_date: str = "2023-01-01",
-    days: int = 730,
-    partitions: int | None = None,
 ) -> DataFrame:
-    """n_rows deterministic transactions spanning ``days`` from
-    ``start_date`` (≥2 years by default to exercise day/month/year
-    grouping and the year-collision case, FIXTURES.md §1)."""
-    ids = spark.range(0, n_rows, 1, partitions or spark.sparkContext.defaultParallelism)
+    """n_rows deterministic transactions spanning the 730 days from
+    2023-01-01 (≥2 years, to exercise day/month/year grouping and the
+    year-collision case, FIXTURES.md §1)."""
+    ids = spark.range(0, n_rows, 1, spark.sparkContext.defaultParallelism)
 
     def h(tag: str) -> F.Column:
         return hash32(F.concat_ws(":", F.lit(seed), F.lit(tag), F.col("id")))
@@ -49,8 +46,8 @@ def transactions(
     price = F.round((h("price") % 99000) / 100.0 + 10.0, 2)  # uniform-ish [10, 1000)
     qty = (h("qty") % 10 + 1).cast("int")
     ts = F.timestamp_seconds(
-        F.unix_timestamp(F.lit(start_date).cast("timestamp"))
-        + (h("ts") % (days * 86400))
+        F.unix_timestamp(F.lit("2023-01-01").cast("timestamp"))
+        + (h("ts") % (730 * 86400))
     )
     return ids.select(
         F.md5(F.concat_ws(":", F.lit(seed), F.lit("txid"), F.col("id"))).alias(

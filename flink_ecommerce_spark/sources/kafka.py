@@ -69,14 +69,11 @@ def kafka_transaction_stream(
     spark: SparkSession,
     bootstrap_servers: str,
     topic: str = DEFAULT_TOPIC,
-    max_offsets_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming DataFrame of typed transactions from Kafka. Requires
     the spark-sql-kafka package on the classpath, which the tests do
     not have."""
     reader = spark.readStream.format("kafka")
-    for k, v in kafka_reader_options(
-        bootstrap_servers, topic, max_offsets_per_trigger
-    ).items():
+    for k, v in kafka_reader_options(bootstrap_servers, topic).items():
         reader = reader.option(k, v)
     return parse_transactions(reader.load())

@@ -52,24 +52,23 @@ def http_post_transport(es_url: str) -> Callable[[str], None]:
 
 
 class EsBulkSink:
-    """foreachBatch sink: index every row, doc id = ``id_col``.
+    """foreachBatch sink: index every row into ``DEFAULT_INDEX``, doc
+    id = ``id_col``.
     ``transport(body)`` performs the actual POST — injectable so tests
     (and airgapped runs) can capture instead of send."""
 
     def __init__(
         self,
         transport: Callable[[str], None],
-        index: str = DEFAULT_INDEX,
         id_col: str = "transactionId",
         batch_docs: int = 1000,
     ):
         self.transport = transport
-        self.index = index
         self.id_col = id_col
         self.batch_docs = batch_docs
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
-        transport, index, batch_docs = self.transport, self.index, self.batch_docs
+        transport, batch_docs = self.transport, self.batch_docs
         serialized = batch_df.select(
             F.col(self.id_col).cast("string").alias("__id"),
             F.to_json(F.struct(*batch_df.columns)).alias("__doc"),
@@ -80,10 +79,10 @@ class EsBulkSink:
             for row in rows:
                 buf.append((row["__id"], row["__doc"]))
                 if len(buf) >= batch_docs:
-                    transport(bulk_payload(buf, index))
+                    transport(bulk_payload(buf))
                     buf.clear()
             if buf:
-                transport(bulk_payload(buf, index))
+                transport(bulk_payload(buf))
 
         serialized.foreachPartition(send_partition)
 

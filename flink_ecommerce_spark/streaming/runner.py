@@ -98,6 +98,24 @@ def _drop_null_keys(
     return lambda df: plan(df).dropna(subset=list(key_cols))
 
 
+def start_query(
+    df: DataFrame,
+    name: str,
+    checkpoint: str,
+    foreach_batch: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start ``df`` as the stream query ``name``, the one way the job
+    starts a query: a micro-batch every ``TRIGGER_MS``, its checkpoint
+    at ``checkpoint``, and each batch handed to ``foreach_batch``."""
+    return (
+        df.writeStream.queryName(name)
+        .trigger(processingTime=f"{TRIGGER_MS} milliseconds")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(foreach_batch)
+        .start()
+    )
+
+
 @dataclass
 class StreamingJob:
     """Assembled job: start()/stop()/process_available() over all
@@ -120,15 +138,14 @@ class StreamingJob:
         for branch in self.branches:
             sink = self.sink_factory(branch)
             self.sinks[branch.name] = sink
-            query = (
-                branch.plan(self.source)
-                .writeStream.queryName(branch.name)
-                .trigger(processingTime=f"{TRIGGER_MS} milliseconds")
-                .option("checkpointLocation", f"{self.checkpoint_root}/{branch.name}")
-                .foreachBatch(sink.foreach_batch())
-                .start()
+            self.queries.append(
+                start_query(
+                    branch.plan(self.source),
+                    branch.name,
+                    f"{self.checkpoint_root}/{branch.name}",
+                    sink.foreach_batch(),
+                )
             )
-            self.queries.append(query)
         return self
 
     def process_available(self) -> None:

@@ -56,34 +56,6 @@ class MemoryUpsertSink:
         return list(self.state.values())
 
 
-def _on_conflict(columns: Sequence[str], key_cols: Sequence[str]) -> str:
-    """The last-write-wins ON CONFLICT clause. When every column is a
-    key column there is nothing to update on conflict, so it is
-    insert-only instead of a malformed empty SET."""
-    updates = ", ".join(
-        f"{c} = EXCLUDED.{c}" for c in columns if c not in set(key_cols)
-    )
-    action = f"DO UPDATE SET {updates}" if updates else "DO NOTHING"
-    return f"ON CONFLICT ({', '.join(key_cols)}) {action}"
-
-
-def merge_upsert_sql(
-    table: str,
-    source: str,
-    columns: Sequence[str],
-    key_cols: Sequence[str],
-) -> str:
-    """ONE set-based upsert statement ingesting ``source`` (a table
-    name or subquery, e.g. a registered Arrow table) into ``table``:
-    INSERT .. SELECT .. ON CONFLICT DO UPDATE, the reference's K2-K5
-    upsert in set form (the bundled DuckDB predates MERGE INTO)."""
-    collist = ", ".join(columns)
-    return (
-        f"INSERT INTO {table} ({collist}) SELECT {collist} FROM ({source}) "
-        + _on_conflict(columns, key_cols)
-    )
-
-
 def upsert_sql(
     table: str,
     columns: Sequence[str],
@@ -95,10 +67,13 @@ def upsert_sql(
     that DuckDB and Postgres both accept.
 
     Without ``sum_col``: the latest row per key replaces the stored
-    one. ``__batch`` may repeat a key (a redelivered event), and ON
+    one, INSERT .. SELECT .. ON CONFLICT DO UPDATE, the reference's
+    K2-K5 upsert in set form (the bundled DuckDB predates MERGE INTO).
+    ``__batch`` may repeat a key (a redelivered event), and ON
     CONFLICT rejects a key twice in one statement, so the source keeps
     per key the row with the largest non-key columns, compared in
-    column order — a deterministic tie-break.
+    column order — a deterministic tie-break. The table has at least
+    one non-key column to update.
 
     With ``sum_col``: ``__batch`` holds one row per sale, and the
     batch's per-key sum is ADDED to the stored one. Money is summed in
@@ -110,12 +85,14 @@ def upsert_sql(
     keys = ", ".join(key_cols)
     if sum_col is None:
         non_key = [c for c in columns if c not in key_cols]
+        collist = ", ".join(columns)
         order = ", ".join([keys] + [f"{c} DESC NULLS LAST" for c in non_key])
-        latest = (
-            f"SELECT DISTINCT ON ({keys}) {', '.join(columns)} "
-            f"FROM __batch ORDER BY {order}"
+        updates = ", ".join(f"{c} = EXCLUDED.{c}" for c in non_key)
+        return (
+            f"INSERT INTO {table} ({collist}) SELECT {collist} FROM ("
+            f"SELECT DISTINCT ON ({keys}) {collist} FROM __batch ORDER BY {order}"
+            f") ON CONFLICT ({keys}) DO UPDATE SET {updates}"
         )
-        return merge_upsert_sql(table, latest, columns, key_cols)
     stored, added = f"{table}.{sum_col}", f"EXCLUDED.{sum_col}"
     return (
         f"INSERT INTO {table} ({keys}, {sum_col}) "
@@ -156,6 +133,18 @@ def _record_epoch(cur, param: str, table: str, qid: str, epoch_id: int) -> bool:
 
 # attempts at one batch's transaction, the reference's retry count (K6)
 _ATTEMPTS = 5
+
+
+def _transient(exc: Exception) -> bool:
+    """Whether a failed attempt is worth retrying: a DB-API
+    ``OperationalError`` of either database client. For DuckDB that is a
+    ``TransactionException`` (a concurrent writer committed the same
+    key first: "Failed to commit: PRIMARY KEY or UNIQUE constraint
+    violated") or an ``IOException``; for psycopg2 a serialization
+    failure or a deadlock. A constraint, type or SQL error fails the
+    same way on every attempt. The class is matched by name, so
+    psycopg2 need not be importable to classify DuckDB's errors."""
+    return any(c.__name__ == "OperationalError" for c in type(exc).__mro__)
 
 
 def _begin_batch(conn, batch, table: str) -> tuple[object, str]:
@@ -205,8 +194,9 @@ class StagedMergeSink:
        table's epoch is recorded in the ledger (a replay rolls back
        here) and ONE ``upsert_sql`` statement applies ``__batch``.
 
-    A failed attempt is rolled back whole and the transaction retried,
-    up to ``_ATTEMPTS`` times with a growing pause."""
+    A failed attempt is rolled back whole. A transient failure
+    (``_transient``) retries the transaction, up to ``_ATTEMPTS`` times
+    with a growing pause; any other failure is raised at once."""
 
     def __init__(
         self,
@@ -240,13 +230,13 @@ class StagedMergeSink:
                     cur.execute(sql)
                     conn.commit()
                     return
-                except Exception:
+                except Exception as exc:
                     # DuckDB refuses a rollback with no open transaction,
                     # as after its "Failed to commit" (a concurrent writer
                     # inserted the same key first; the retry upserts it)
                     with contextlib.suppress(Exception):
                         conn.rollback()
-                    if attempt == _ATTEMPTS - 1:
+                    if attempt == _ATTEMPTS - 1 or not _transient(exc):
                         raise
                     time.sleep(0.2 * (attempt + 1))
         finally:

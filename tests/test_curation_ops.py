@@ -347,12 +347,15 @@ def test_eval_shingle_broadcast_gate_branches(spark, monkeypatch):
     # falls back to a shuffle join (at 100 TB the real sizes
     # force this branch; AQE may still broadcast when runtime
     # sizes allow, which is the desired adaptive behavior)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
     try:
         forced = decontaminate(docs)
         plan = forced._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
         rows_s = sorted(tuple(r) for r in forced.collect())
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        # the session's value, not Spark's default, for later tests
+        spark.conf.set(key, prev)
     assert rows_b == rows_s

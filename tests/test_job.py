@@ -125,6 +125,37 @@ def test_job_cli_staged_duckdb_end_to_end(spark, tmp_path):
         assert abs(total_raw - total) < 0.05
 
 
+def test_enable_es_starts_a_fifth_query_the_same_way(spark, tmp_path):
+    """``--enable-es`` adds the Elasticsearch query beside the four sink
+    queries, started the same way: named, with its own checkpoint
+    under ``--checkpoint``. The input is empty, so nothing is sent."""
+    src = tmp_path / "in"
+    src.mkdir()
+    job = job_mod.start(
+        [
+            "--source", "file",
+            "--input-path", str(src),
+            "--jdbc-url", f"duckdb://{tmp_path / 'job.duckdb'}",
+            "--checkpoint", str(tmp_path / "ck"),
+            "--enable-es", "--es-url", "http://localhost:9",
+        ]
+    )
+    try:
+        job.process_available()
+        names = [q.name for q in job.queries]
+        active = [q.isActive for q in job.queries]
+    finally:
+        job.stop()
+    assert names == [
+        "transactions", "sales_per_category", "sales_per_day", "sales_per_month",
+        "es_transactions",
+    ]
+    assert all(active)
+    assert sorted(p.name for p in (tmp_path / "ck").iterdir()) == sorted(
+        ["transactions", "sales_per_category", "sales_per_day", "sales_per_month", "es"]
+    )
+
+
 def _write_input(spark, path, n_rows, seed):
     df = generator.transactions(spark, n_rows=n_rows, seed=seed)
     generator.transactions_as_json(df).coalesce(2).write.mode("overwrite").text(path)
@@ -360,3 +391,102 @@ def test_package_holds_only_what_a_caller_imports():
     assert not unused, f"referenced by no caller's code: {unused}"
     stale = sorted(set(TEST_ONLY_NAMES) - defined)
     assert not stale, f"TEST_ONLY_NAMES entries with no definition: {stale}"
+
+
+def test_every_default_parameter_is_set_somewhere():
+    """Every defaulted parameter of a package function is an option
+    some code uses: a call passes it, by position or by keyword, from
+    the package, perfbench, ``__spark_entry__.py``, ``tools/`` or the
+    tests. A parameter no call sets has one value in use, so it is a
+    constant in the body, not a parameter.
+
+    Calls are matched by name (``f(..)``, ``x.f(..)``, an import alias
+    of ``f``, and a class name for its ``__init__``); a function used
+    as a value, or called with ``*args``/``**kwargs``, counts as having
+    every parameter set. An argument that only forwards an unset
+    parameter of the calling function, with the same default, sets
+    nothing, so the pass repeats until the unset set stops growing."""
+    import ast
+    from collections import defaultdict
+
+    pkg_dir = Path(job_mod.__file__).parent
+    root = pkg_dir.parent
+    files = [*pkg_dir.rglob("*.py"), *(root / "perfbench").rglob("*.py"),
+             root / "__spark_entry__.py", *(root / "tools").rglob("*.py"),
+             *(root / "tests").rglob("*.py")]
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in files}
+
+    defs = {}  # def node -> (name, {param: default}, params a call fills by position)
+    by_name = defaultdict(list)
+
+    def collect(node, prefix, in_class):
+        for st in ast.iter_child_nodes(node):
+            if isinstance(st, ast.ClassDef):
+                collect(st, f"{prefix}{st.name}.", True)
+            elif isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = st.args
+                pos = [x.arg for x in a.posonlyargs + a.args]
+                dflt = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+                kw = zip(a.kwonlyargs, a.kw_defaults)
+                dflt.update((x.arg, d) for x, d in kw if d is not None)
+                defs[st] = (f"{prefix}{st.name}", dflt, pos[1:] if in_class else pos)
+                by_name[st.name].append(st)
+                if in_class and st.name == "__init__":
+                    by_name[prefix.rstrip(".").rpartition(".")[2]].append(st)
+                collect(st, f"{prefix}{st.name}.", False)
+            else:
+                collect(st, prefix, in_class)
+
+    for p in pkg_dir.rglob("*.py"):
+        mod = ".".join(p.relative_to(pkg_dir).with_suffix("").parts)
+        collect(trees[p], f"{mod}.", False)
+
+    def walk(node, fn=None):
+        for child in ast.iter_child_nodes(node):
+            yield child, node, fn
+            inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            yield from walk(child, child if inner else fn)
+
+    def called(node, alias):
+        if isinstance(node, ast.Name):
+            return alias.get(node.id, node.id)
+        return getattr(node, "attr", None)
+
+    unset: set = set()
+    while True:
+        set_params, whole = set(), set()
+        for tree in trees.values():
+            alias = {a.asname: a.name for n in ast.walk(tree)
+                     if isinstance(n, ast.ImportFrom) for a in n.names if a.asname}
+            for n, parent, fn in walk(tree):
+                if isinstance(n, ast.Call):
+                    targets = by_name.get(called(n.func, alias), [])
+                    if any(isinstance(a, ast.Starred) for a in n.args) or any(
+                            k.arg is None for k in n.keywords):
+                        whole.update(targets)
+                        continue
+                    for d in targets:
+                        _, dflt, pos = defs[d]
+                        kws = [(k.arg, k.value) for k in n.keywords]
+                        for prm, v in [*zip(pos, n.args), *kws]:
+                            if prm not in dflt:
+                                continue
+                            forwarded = (
+                                isinstance(v, ast.Name) and (fn, v.id) in unset
+                                and ast.dump(defs[fn][1][v.id]) == ast.dump(dflt[prm]))
+                            if not forwarded:
+                                set_params.add((d, prm))
+                elif isinstance(n, (ast.Name, ast.Attribute)) and isinstance(
+                        n.ctx, ast.Load):
+                    # a function used as a value: any caller may set anything
+                    if isinstance(parent, ast.Attribute) or (
+                            isinstance(parent, ast.Call) and parent.func is n):
+                        continue
+                    whole.update(by_name.get(called(n, alias), []))
+        now = {(d, prm) for d, (_, dflt, _) in defs.items() if d not in whole
+               for prm in dflt if (d, prm) not in set_params}
+        if now == unset:
+            break
+        unset = now
+    found = sorted(f"{defs[d][0]}({prm})" for d, prm in unset)
+    assert not found, f"defaulted parameters that no call sets: {found}"

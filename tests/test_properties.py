@@ -5,7 +5,7 @@ run in seconds.
 - sequence packing's closed-form chunk arithmetic == a literal
   walk-the-token-stream simulation (the claim that lets the op
   distribute as one window cumsum);
-- merge_upsert_sql applied batch-by-batch through DuckDB == a Python
+- upsert_sql applied batch-by-batch through DuckDB == a Python
   dict upsert (the idempotent-upsert contract every sink shares);
 - the portable hash32, int(md5[:8], 16), is identical in Python and
   DuckDB.
@@ -20,7 +20,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from flink_ecommerce_spark.functions.portable import sql_hash32
-from flink_ecommerce_spark.streaming.sinks import merge_upsert_sql
+from flink_ecommerce_spark.streaming.sinks import upsert_sql
 
 
 @settings(max_examples=200, deadline=None)
@@ -69,7 +69,7 @@ def test_packing_closed_form_equals_stream_walk(tokens, ctx):
     )
 )
 def test_merge_upsert_sql_equals_dict_upsert(batches):
-    """Applying merge_upsert_sql batch-by-batch to a real engine ends
+    """Applying upsert_sql batch-by-batch to a real engine ends
     in the same state as a last-write-wins dict, for any batch
     sequence. Within a batch, one row per key (the sink reduces
     first), so dedup each batch keeping the last pair."""
@@ -82,13 +82,11 @@ def test_merge_upsert_sql_equals_dict_upsert(batches):
         if not reduced:
             continue
         values = ", ".join(f"({k}, {v})" for k, v in reduced.items())
-        sql = merge_upsert_sql(
-            "t",
-            f"SELECT * FROM (VALUES {values}) AS x(k, v)",
-            ["k", "v"],
-            ["k"],
+        con.execute(
+            f"CREATE OR REPLACE TEMP TABLE __batch AS "
+            f"SELECT * FROM (VALUES {values}) AS x(k, v)"
         )
-        con.execute(sql)
+        con.execute(upsert_sql("t", ["k", "v"], ["k"]))
     got = dict(con.execute("SELECT k, v FROM t").fetchall())
     con.close()
     assert got == expected

@@ -19,7 +19,6 @@ from flink_ecommerce_spark.streaming.runner import reference_branches
 from flink_ecommerce_spark.streaming.sinks import (
     MemoryUpsertSink,
     StagedMergeSink,
-    merge_upsert_sql,
     upsert_sql,
 )
 
@@ -62,9 +61,9 @@ def test_memory_upsert_idempotent(spark):
 class _PsycopgOverDuckDB:
     """A psycopg2-style connection over a DuckDB file: ``%s``
     placeholders, a transaction opened by the first statement, and a
-    COMMIT that fails ``fail_commits`` times — after the batch, the
-    ledger row and the sums were written, so a retry that did not roll
-    back would count them twice."""
+    COMMIT that fails ``fail_commits`` times with a transient error —
+    after the batch, the ledger row and the sums were written, so a
+    retry that did not roll back would count them twice."""
 
     def __init__(self, db, fail_commits=0):
         self.con = duckdb.connect(db)
@@ -93,7 +92,7 @@ class _PsycopgOverDuckDB:
     def commit(self):
         if self.fail_commits:
             self.fail_commits -= 1
-            raise RuntimeError("transient failure")
+            raise duckdb.TransactionException("transient failure")
         self.con.commit()
         self.in_txn = False
 
@@ -185,12 +184,49 @@ def test_jdbc_upsert_exhausted_retries_raise(spark, tmp_path):
         lambda: _PsycopgOverDuckDB(db, fail_commits=10**9),
         b.name, b.key_cols, b.sum_col,
     )
-    with pytest.raises(RuntimeError, match="transient failure"):
+    with pytest.raises(duckdb.TransactionException, match="transient failure"):
         sink.write_batch(b.plan(df), 0)
     assert _sums(db, "sales_per_day") == {}
     con = duckdb.connect(db)
     assert con.execute("SELECT count(*) FROM _sink_epochs").fetchone()[0] == 0
     con.close()
+
+
+class _CountingDuckDB:
+    """A DuckDB connection that counts the transactions begun on it."""
+
+    def __init__(self, db):
+        self.con = duckdb.connect(db)
+        self.begins = 0
+
+    def __getattr__(self, name):
+        return getattr(self.con, name)
+
+    def begin(self):
+        self.begins += 1
+        return self.con.begin()
+
+
+def test_constraint_violation_fails_on_the_first_attempt(spark, tmp_path):
+    """A CHECK violation fails the same way on every attempt, so the
+    sink raises it from the first one, on the one connection it
+    opened, without a transient failure's retries and back-off."""
+    db = str(tmp_path / "check.duckdb")
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE kv (k BIGINT PRIMARY KEY, v DOUBLE CHECK (v >= 0))")
+    con.close()
+    opened = []
+
+    def connect():
+        opened.append(_CountingDuckDB(db))
+        return opened[-1]
+
+    sink = StagedMergeSink(connect, "kv", ["k"])
+    batch = spark.createDataFrame([(1, -1.0)], "k long, v double")
+    with pytest.raises(duckdb.ConstraintException, match="CHECK constraint"):
+        sink.write_batch(batch, 0)
+    assert len(opened) == 1
+    assert opened[0].begins == 1
 
 
 @pytest.mark.parametrize("kind", ["staged", "jdbc"])
@@ -245,10 +281,12 @@ def test_epoch_ledger_keeps_only_the_latest_epoch(spark, tmp_path, kind):
 def test_merge_upsert_sql_dialects():
     cols = ["transaction_date", "category", "total_sales"]
     keys = ["transaction_date", "category"]
-    oc = merge_upsert_sql("t", "SELECT * FROM stage", cols, keys)
+    oc = upsert_sql("t", cols, keys)
     assert oc == (
         "INSERT INTO t (transaction_date, category, total_sales) "
-        "SELECT transaction_date, category, total_sales FROM (SELECT * FROM stage) "
+        "SELECT transaction_date, category, total_sales FROM (SELECT DISTINCT ON "
+        "(transaction_date, category) transaction_date, category, total_sales "
+        "FROM __batch ORDER BY transaction_date, category, total_sales DESC NULLS LAST) "
         "ON CONFLICT (transaction_date, category) DO UPDATE SET "
         "total_sales = EXCLUDED.total_sales"
     )
@@ -308,17 +346,6 @@ def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path, kind):
     con.close()
     # merge source collapsed to one row per key: the larger v wins for k=1
     assert rows == {1: (99.0, 200), 2: (5.0, 50)}
-
-
-def test_merge_upsert_sql_all_key_columns_insert_only():
-    """Every column in the key → no SET clause to emit; both upsert
-    forms must degrade to insert-only instead of malformed SQL."""
-    for sql in (
-        merge_upsert_sql("t", "SELECT * FROM s0", ["a", "b"], ["a", "b"]),
-        upsert_sql("t", ["a", "b"], ["a", "b"]),
-    ):
-        assert sql.endswith("ON CONFLICT (a, b) DO NOTHING"), sql
-        assert "DO UPDATE" not in sql, sql
 
 
 @pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
