@@ -8,8 +8,8 @@ reference's topic (the default) and consumer-group name (fixed, as a
 prefix: see ``kafka_reader_options``). The JSON
 parse happens JVM-side inside codegen; a malformed record yields a
 NULL struct (Jackson in the reference would throw — we keep the row
-with nulls, the more stream-robust choice; the job drops rows with a
-null key before its sinks, ``runner._drop_null_keys``).
+with nulls, the more stream-robust choice; each sink's statement
+skips a row with a null key, ``streaming.sinks.upsert_sql``).
 
 The tests run no broker, so there this module only BUILDS plans; they
 cover the parse path with the file source and in-memory DataFrames of

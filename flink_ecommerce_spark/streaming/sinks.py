@@ -27,7 +27,6 @@ whole backlog (perfbench's ``txn_backlog`` workload measures this case).
 
 from __future__ import annotations
 
-import contextlib
 import time
 from collections.abc import Callable, Sequence
 
@@ -66,14 +65,21 @@ def upsert_sql(
     (whose columns, in order, are ``columns``) to ``table``; plain SQL
     that DuckDB and Postgres both accept.
 
+    Both forms read only the ``__batch`` rows with no NULL key column
+    (a malformed JSON line parses to an all-null row, whose key would
+    fail the table's constraint on every retry). A filter in the Spark
+    plan would cost a parse per key column: Catalyst pushes it below
+    ``from_json`` and copies the parse into it.
+
     Without ``sum_col``: the latest row per key replaces the stored
     one, INSERT .. SELECT .. ON CONFLICT DO UPDATE, the reference's
     K2-K5 upsert in set form (the bundled DuckDB predates MERGE INTO).
     ``__batch`` may repeat a key (a redelivered event), and ON
-    CONFLICT rejects a key twice in one statement, so the source keeps
+    CONFLICT rejects a key twice in one statement, so a window keeps
     per key the row with the largest non-key columns, compared in
-    column order — a deterministic tie-break. The table has at least
-    one non-key column to update.
+    column order — a deterministic tie-break that sorts within a key,
+    not the batch (the derived table is named, as PostgreSQL before
+    16 requires). The table has at least one non-key column to update.
 
     With ``sum_col``: ``__batch`` holds one row per sale, and the
     batch's per-key sum is ADDED to the stored one. Money is summed in
@@ -83,21 +89,23 @@ def upsert_sql(
     and converted to the DDL's DOUBLE only when stored. A NULL amount
     is skipped, as SUM skips it."""
     keys = ", ".join(key_cols)
+    keyed = "__batch WHERE " + " AND ".join(f"{k} IS NOT NULL" for k in key_cols)
     if sum_col is None:
         non_key = [c for c in columns if c not in key_cols]
         collist = ", ".join(columns)
-        order = ", ".join([keys] + [f"{c} DESC NULLS LAST" for c in non_key])
+        order = ", ".join(f"{c} DESC NULLS LAST" for c in non_key)
         updates = ", ".join(f"{c} = EXCLUDED.{c}" for c in non_key)
         return (
             f"INSERT INTO {table} ({collist}) SELECT {collist} FROM ("
-            f"SELECT DISTINCT ON ({keys}) {collist} FROM __batch ORDER BY {order}"
-            f") ON CONFLICT ({keys}) DO UPDATE SET {updates}"
+            f"SELECT {collist}, row_number() OVER (PARTITION BY {keys} "
+            f"ORDER BY {order}) AS __rn FROM {keyed}) __latest WHERE __rn = 1 "
+            f"ON CONFLICT ({keys}) DO UPDATE SET {updates}"
         )
     stored, added = f"{table}.{sum_col}", f"EXCLUDED.{sum_col}"
     return (
         f"INSERT INTO {table} ({keys}, {sum_col}) "
         f"SELECT {keys}, sum({sql_micro(sum_col, 100)}) / 100.0 "
-        f"FROM __batch GROUP BY {keys} "
+        f"FROM {keyed} GROUP BY {keys} "
         f"ON CONFLICT ({keys}) DO UPDATE SET {sum_col} = coalesce("
         f"({sql_micro(stored, 100)} + {sql_micro(added, 100)}) / 100.0, "
         f"{stored}, {added})"
@@ -117,10 +125,10 @@ def _record_epoch(cur, param: str, table: str, qid: str, epoch_id: int) -> bool:
     """Inside the caller's open transaction, make ``(table, qid,
     epoch_id)`` the ledger's one row for ``(table, qid)``. False when
     the ledger holds this epoch or a later one: the epoch was applied
-    before, and the caller rolls back. A query's epochs only grow and
-    Spark replays only its latest one, so the latest row is all the
-    ledger needs, and the older rows are deleted here. ``param`` is
-    the driver's placeholder (``?`` or ``%s``)."""
+    before, and the caller commits nothing. A query's epochs only grow
+    and Spark replays only its latest one, so the latest row is all
+    the ledger needs, and the older rows are deleted here. ``param``
+    is the driver's placeholder (``?`` or ``%s``)."""
     key = (table, qid, epoch_id)
     where = f"sink = {param} AND query_id = {param}"
     cur.execute(f"SELECT 1 FROM _sink_epochs WHERE {where} AND epoch >= {param}", key)
@@ -141,8 +149,8 @@ def _transient(exc: Exception) -> bool:
     ``TransactionException`` (a concurrent writer committed the same
     key first: "Failed to commit: PRIMARY KEY or UNIQUE constraint
     violated") or an ``IOException``; for psycopg2 a serialization
-    failure or a deadlock. A constraint, type or SQL error fails the
-    same way on every attempt. The class is matched by name, so
+    failure, a deadlock or a lost connection. A constraint, type or
+    SQL error fails the same way on every attempt. The class is matched by name, so
     psycopg2 need not be importable to classify DuckDB's errors."""
     return any(c.__name__ == "OperationalError" for c in type(exc).__mro__)
 
@@ -190,13 +198,14 @@ class StagedMergeSink:
     1. ONE Spark action: the batch is collected to the driver as an
        Arrow table (``toArrow``), so its plan runs once; an empty batch
        stops here;
-    2. in one transaction on one connection (``_begin_batch``), a sum
-       table's epoch is recorded in the ledger (a replay rolls back
+    2. in one transaction on a new connection (``_begin_batch``), a
+       sum table's epoch is recorded in the ledger (a replay stops
        here) and ONE ``upsert_sql`` statement applies ``__batch``.
 
-    A failed attempt is rolled back whole. A transient failure
-    (``_transient``) retries the transaction, up to ``_ATTEMPTS`` times
-    with a growing pause; any other failure is raised at once."""
+    A failed attempt is rolled back whole and its connection closed.
+    A transient failure (``_transient``) retries the transaction on a
+    new connection, up to ``_ATTEMPTS`` times with a growing pause; any
+    other failure is raised at once."""
 
     def __init__(
         self,
@@ -217,30 +226,25 @@ class StagedMergeSink:
             return
         sql = upsert_sql(self.table, batch.column_names, self.key_cols, self.sum_col)
         qid = _query_id(batch_df)
-        conn = self.connection_factory()
-        try:
-            for attempt in range(_ATTEMPTS):
-                try:
-                    cur, param = _begin_batch(conn, batch, self.table)
-                    if self.sum_col and not _record_epoch(
-                        cur, param, self.table, qid, epoch_id
-                    ):
-                        conn.rollback()
-                        return
+        for attempt in range(_ATTEMPTS):
+            # a new connection per attempt, since a lost one stays lost;
+            # closing one rolls back what it left uncommitted: a failed
+            # attempt's writes, a replayed epoch's ledger read
+            conn = self.connection_factory()
+            try:
+                cur, param = _begin_batch(conn, batch, self.table)
+                if not self.sum_col or _record_epoch(
+                    cur, param, self.table, qid, epoch_id
+                ):
                     cur.execute(sql)
                     conn.commit()
-                    return
-                except Exception as exc:
-                    # DuckDB refuses a rollback with no open transaction,
-                    # as after its "Failed to commit" (a concurrent writer
-                    # inserted the same key first; the retry upserts it)
-                    with contextlib.suppress(Exception):
-                        conn.rollback()
-                    if attempt == _ATTEMPTS - 1 or not _transient(exc):
-                        raise
-                    time.sleep(0.2 * (attempt + 1))
-        finally:
-            conn.close()
+                return
+            except Exception as exc:
+                if attempt == _ATTEMPTS - 1 or not _transient(exc):
+                    raise
+            finally:
+                conn.close()
+            time.sleep(0.2 * (attempt + 1))
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return self.write_batch

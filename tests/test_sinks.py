@@ -25,7 +25,8 @@ from flink_ecommerce_spark.streaming.sinks import (
 
 def test_upsert_sql_shape():
     """A sum table adds the batch's integer-cent sums to the stored ones
-    (a NULL on either side is skipped, as SUM skips it)."""
+    (a NULL on either side is skipped, as SUM skips it); a row with a
+    NULL key is not read."""
     sql = upsert_sql(
         "sales_per_category",
         ["transaction_date", "category", "total_sales"],
@@ -36,7 +37,8 @@ def test_upsert_sql_shape():
         "INSERT INTO sales_per_category (transaction_date, category, total_sales) "
         "SELECT transaction_date, category, "
         "sum(CAST(FLOOR((total_sales) * 100 + 0.5) AS BIGINT)) / 100.0 "
-        "FROM __batch GROUP BY transaction_date, category "
+        "FROM __batch WHERE transaction_date IS NOT NULL AND category IS NOT NULL "
+        "GROUP BY transaction_date, category "
         "ON CONFLICT (transaction_date, category) DO UPDATE SET total_sales = "
         "coalesce((CAST(FLOOR((sales_per_category.total_sales) * 100 + 0.5) AS BIGINT)"
         " + CAST(FLOOR((EXCLUDED.total_sales) * 100 + 0.5) AS BIGINT)) / 100.0, "
@@ -69,6 +71,7 @@ class _PsycopgOverDuckDB:
         self.con = duckdb.connect(db)
         self.fail_commits = fail_commits
         self.in_txn = False
+        self.closed = False
 
     def cursor(self):
         return self
@@ -96,13 +99,24 @@ class _PsycopgOverDuckDB:
         self.con.commit()
         self.in_txn = False
 
-    def rollback(self):
-        if self.in_txn:
-            self.con.rollback()
-            self.in_txn = False
-
     def close(self):
         self.con.close()
+        self.closed = True
+
+
+class OperationalError(Exception):
+    """psycopg2's class for a lost connection, matched by name."""
+
+
+class _LostPsycopg(_PsycopgOverDuckDB):
+    """A psycopg2 connection whose server is gone: every statement on
+    it raises ``OperationalError``, the first as on every retry."""
+
+    def execute(self, sql, params=()):
+        raise OperationalError("server closed the connection unexpectedly")
+
+    def executemany(self, sql, rows):
+        self.execute(sql)
 
 
 def _connect(kind, db):
@@ -163,15 +177,37 @@ def test_jdbc_upsert_writes_all_rows(spark, tmp_path):
 
 def test_jdbc_upsert_retries_then_succeeds(spark, tmp_path):
     """Two failed COMMITs, each after the sums were written: every
-    attempt is rolled back whole, so the third adds the sums once."""
+    attempt is rolled back whole, so the third adds the sums once. Each
+    attempt runs on a connection of its own."""
     db = _sink_db(tmp_path)
     df = generator.transactions(spark, n_rows=50, seed=17)
     b = _branch("sales_per_day")
+    conns = iter([_PsycopgOverDuckDB(db, fail_commits=1) for _ in range(2)])
     sink = StagedMergeSink(
-        lambda: _PsycopgOverDuckDB(db, fail_commits=2), b.name, b.key_cols, b.sum_col
+        lambda: next(conns, None) or _PsycopgOverDuckDB(db),
+        b.name, b.key_cols, b.sum_col,
     )
     sink.write_batch(b.plan(df), 0)
     assert _sums(db, "sales_per_day") == _day_cents(df)
+
+
+def test_lost_connection_is_retried_on_a_new_one(spark, tmp_path):
+    """The first connection dies on its first statement: the retry opens
+    a new one, the batch's sums land exactly once, and every connection
+    the sink opened is closed."""
+    db = _sink_db(tmp_path)
+    df = generator.transactions(spark, n_rows=50, seed=17)
+    b = _branch("sales_per_day")
+    opened = []
+
+    def connect():
+        opened.append((_LostPsycopg if not opened else _PsycopgOverDuckDB)(db))
+        return opened[-1]
+
+    StagedMergeSink(connect, b.name, b.key_cols, b.sum_col).write_batch(b.plan(df), 0)
+    assert _sums(db, "sales_per_day") == _day_cents(df)
+    assert [type(c) for c in opened] == [_LostPsycopg, _PsycopgOverDuckDB]
+    assert all(c.closed for c in opened)
 
 
 def test_jdbc_upsert_exhausted_retries_raise(spark, tmp_path):
@@ -275,18 +311,58 @@ def test_epoch_ledger_keeps_only_the_latest_epoch(spark, tmp_path, kind):
     assert rows == [("sales_per_day", 2)]
 
 
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_null_keys_are_skipped_by_the_statement(spark, tmp_path, kind):
+    """One batch through the four sinks: a sale, a malformed line (an
+    all-null row) and a sale with an id but no date. No plan filters
+    them, and nothing raises: ``transactions`` keeps both rows with an
+    id, and each sum table counts only the dated sale. On psycopg2 the
+    NULL-key rows also pass through ``__batch``, whose ``CREATE TEMP
+    TABLE .. AS`` copy of the sink table keeps no key constraint."""
+    from flink_ecommerce_spark.sources.kafka import parse_transactions
+
+    sale = generator.transactions(spark, n_rows=1, seed=5)
+    lines = [
+        generator.transactions_as_json(sale).first()["value"],
+        "{not json",
+        '{"transactionId": "no-date", "totalAmount": 7.0}',
+    ]
+    batch = parse_transactions(spark.createDataFrame([(v,) for v in lines], ["value"]))
+    db = _sink_db(tmp_path)
+    for b in reference_branches():
+        sink = StagedMergeSink(_connect(kind, db), b.name, b.key_cols, b.sum_col)
+        sink.write_batch(b.plan(batch), 0)
+    (dated,) = sale.collect()
+    con = duckdb.connect(db)
+    ids = con.execute("SELECT transaction_id FROM transactions").fetchall()
+    sums = {
+        t: con.execute(f"SELECT total_sales FROM {t}").fetchall()
+        for t in ("sales_per_category", "sales_per_day", "sales_per_month")
+    }
+    con.close()
+    assert sorted(ids) == sorted([(dated["transactionId"],), ("no-date",)])
+    cents = next(iter(_day_cents(sale).values()))
+    assert sums == {t: [(cents,)] for t in sums}
+
+
 # ---- the set-based upsert sink on either connection --------------------
 
 
 def test_merge_upsert_sql_dialects():
+    """The latest row per key, picked by a window over the keyed rows,
+    from a named derived table (PostgreSQL before 16 rejects an
+    unnamed one)."""
     cols = ["transaction_date", "category", "total_sales"]
     keys = ["transaction_date", "category"]
     oc = upsert_sql("t", cols, keys)
     assert oc == (
         "INSERT INTO t (transaction_date, category, total_sales) "
-        "SELECT transaction_date, category, total_sales FROM (SELECT DISTINCT ON "
-        "(transaction_date, category) transaction_date, category, total_sales "
-        "FROM __batch ORDER BY transaction_date, category, total_sales DESC NULLS LAST) "
+        "SELECT transaction_date, category, total_sales FROM ("
+        "SELECT transaction_date, category, total_sales, row_number() OVER "
+        "(PARTITION BY transaction_date, category ORDER BY total_sales DESC NULLS LAST)"
+        " AS __rn FROM __batch "
+        "WHERE transaction_date IS NOT NULL AND category IS NOT NULL) __latest "
+        "WHERE __rn = 1 "
         "ON CONFLICT (transaction_date, category) DO UPDATE SET "
         "total_sales = EXCLUDED.total_sales"
     )

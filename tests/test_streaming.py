@@ -148,8 +148,9 @@ def test_json_roundtrip_preserves_schema(spark):
 
 
 def test_malformed_json_parses_to_all_null_row(spark):
-    """A malformed line is kept as a row of nulls (the job's sinks drop
-    it by its null key); a well-formed one beside it parses as usual."""
+    """A malformed line is kept as a row of nulls (each sink's statement
+    skips it by its null key); a well-formed one beside it parses as
+    usual."""
     from flink_ecommerce_spark.sources.kafka import parse_transactions
 
     rows = [("{not json",), ('{"transactionId": "t1", "totalAmount": 5.0}',)]
@@ -158,6 +159,22 @@ def test_malformed_json_parses_to_all_null_row(spark):
     assert len(parsed) == 2
     assert all(v is None for v in parsed[0])
     assert parsed[1]["transactionId"] == "t1" and parsed[1]["totalAmount"] == 5.0
+
+
+def test_each_branch_parses_an_event_once(spark, txn_json_dir):
+    """Every branch's executed plan holds one ``from_json``. A filter on
+    the branch's keys, such as a ``dropna``, would be pushed below the
+    parse with a copy of ``from_json`` per key column; the sink's
+    statement skips the NULL keys instead."""
+    from flink_ecommerce_spark.sources.kafka import parse_transactions
+
+    src = parse_transactions(spark.read.text(txn_json_dir))
+    parses = {
+        b.name: b.plan(src)._jdf.queryExecution().executedPlan().toString()
+        .count("from_json(")
+        for b in reference_branches()
+    }
+    assert parses == {b.name: 1 for b in reference_branches()}
 
 
 def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_path):
@@ -214,8 +231,8 @@ def test_streaming_staged_merge_matches_memory_sink(spark, txn_json_dir, tmp_pat
 def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
     """A line that is not JSON parses to an all-null row. Its null
     upsert key would fail the sinks' NOT NULL keys and stop every
-    query on every retry; instead each branch drops it and the valid
-    transaction next to it lands in all four tables."""
+    query on every retry; instead each sink's statement skips it and
+    the valid transaction next to it lands in all four tables."""
     import duckdb
 
     from flink_ecommerce_spark.sources.kafka import parse_transactions
