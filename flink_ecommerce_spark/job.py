@@ -13,9 +13,14 @@ others and ends it, raising the failure. Every query triggers every
 Lifecycle parity (SURVEY.md §3): build session → load config (CLI
 args ≈ the reference's ParameterTool) → declare source → attach the
 four sink branches → start (``start``) + awaitTermination (``main``).
-DDL runs once before the stream starts (K1 fixed). The ES branch
+DDL runs once before the stream starts (K1 fixed). The four queries
+start concurrently, as the reference's one ``env.execute()`` starts
+its whole dataflow, and ``job.queries`` holds them in branch order.
+A start that fails stops the queries already started and raises, so
+no query is left running without a job to stop it. The ES branch
 exists but is off by default (K7 parity: the reference ships it
-commented out).
+commented out); it starts after the four, and if it fails to start
+the four are stopped.
 
 Every sink table gets one upsert form, ``INSERT .. ON CONFLICT (key)
 DO UPDATE``, applied per micro-batch by one sink,
@@ -145,11 +150,16 @@ def start(argv: list[str] | None = None) -> StreamingJob:
         from .streaming.es_sink import EsBulkSink, http_post_transport
 
         es = EsBulkSink(http_post_transport(args.es_url))
-        job.queries.append(
-            start_query(
-                source, "es_transactions", f"{args.checkpoint}/es", es.foreach_batch()
+        try:
+            job.queries.append(
+                start_query(
+                    source, "es_transactions", f"{args.checkpoint}/es",
+                    es.foreach_batch(),
+                )
             )
-        )
+        except BaseException:
+            job.stop()
+            raise
     return job
 
 

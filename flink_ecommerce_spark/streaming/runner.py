@@ -23,12 +23,15 @@ Reference-vs-us deliberate deltas (SURVEY.md §7):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark.java_gateway import ensure_callback_server_started
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.util import inheritable_thread_target
 
 from ..plans import sales
 
@@ -112,6 +115,11 @@ class StreamingJob:
     branches. ``sink_factory(branch)`` returns an object with a
     ``foreach_batch()`` callable (see streaming/sinks.py).
 
+    ``start()`` starts the branches' queries concurrently, one thread
+    per branch, so set-up waits for the slowest start rather than for
+    every start in turn; ``queries`` is in branch order all the same.
+    A start that fails stops the queries that did start, then raises.
+
     ``checkpoint_root`` is required: each branch's checkpoint keeps its
     query id and the files or offsets its source has read. Without it a
     restart would get a new query id and re-read every input, and the
@@ -125,18 +133,35 @@ class StreamingJob:
     sinks: dict[str, object] = field(init=False, default_factory=dict)
 
     def start(self) -> "StreamingJob":
+        """Make each branch's sink, in order on this thread, then plan
+        and start every branch's query at once, each on its own thread
+        with this thread's Spark local properties. Returns when all have
+        started, with ``queries`` in branch order. If any plan or start
+        fails, the queries that started are stopped and the first
+        failure, in branch order, is raised."""
         for branch in self.branches:
-            sink = self.sink_factory(branch)
-            self.sinks[branch.name] = sink
-            self.queries.append(
-                start_query(
-                    branch.plan(self.source),
-                    branch.name,
-                    f"{self.checkpoint_root}/{branch.name}",
-                    sink.foreach_batch(),
-                )
-            )
+            self.sinks[branch.name] = self.sink_factory(branch)
+        spark = self.source.sparkSession
+        # foreachBatch starts Py4J's callback server on its first use,
+        # unlocked; start it here so that the threads find it running
+        ensure_callback_server_started(spark.sparkContext._gateway)
+        start_branch = inheritable_thread_target(spark)(self._start_branch)
+        with ThreadPoolExecutor(len(self.branches)) as pool:
+            starts = [pool.submit(start_branch, b) for b in self.branches]
+        errors = [f.exception() for f in starts if f.exception() is not None]
+        self.queries = [f.result() for f in starts if f.exception() is None]
+        if errors:
+            self.stop()
+            raise errors[0]
         return self
+
+    def _start_branch(self, branch: Branch) -> StreamingQuery:
+        return start_query(
+            branch.plan(self.source),
+            branch.name,
+            f"{self.checkpoint_root}/{branch.name}",
+            self.sinks[branch.name].foreach_batch(),
+        )
 
     def process_available(self) -> None:
         """Drain everything currently available (test harness use)."""

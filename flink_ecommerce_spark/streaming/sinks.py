@@ -38,7 +38,8 @@ from ..functions.portable import sql_micro
 class MemoryUpsertSink:
     """Keyed upsert into a driver-side dict. Final state == what the
     reference's Postgres table holds after the same events, for a
-    last-write-wins table."""
+    last-write-wins table. A row with a NULL key column is skipped, as
+    the database sink's statement skips it (``upsert_sql``)."""
 
     def __init__(self, key_cols: Sequence[str]):
         self.key_cols = tuple(key_cols)
@@ -46,7 +47,9 @@ class MemoryUpsertSink:
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
         for row in batch_df.collect():
-            self.state[tuple(row[k] for k in self.key_cols)] = row
+            key = tuple(row[k] for k in self.key_cols)
+            if None not in key:
+                self.state[key] = row
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return self.write_batch

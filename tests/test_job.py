@@ -156,6 +156,29 @@ def test_enable_es_starts_a_fifth_query_the_same_way(spark, tmp_path):
     )
 
 
+def test_failed_es_start_stops_the_four_queries(spark, tmp_path, monkeypatch):
+    """If the ES query fails to start, ``start`` stops the four sink
+    queries before it raises: none is left running without a job."""
+
+    def failing_start(*args):
+        raise RuntimeError("ES query did not start")
+
+    monkeypatch.setattr(job_mod, "start_query", failing_start)
+    src = tmp_path / "in"
+    src.mkdir()
+    with pytest.raises(RuntimeError, match="ES query did not start"):
+        job_mod.start(
+            [
+                "--source", "file",
+                "--input-path", str(src),
+                "--jdbc-url", f"duckdb://{tmp_path / 'job.duckdb'}",
+                "--checkpoint", str(tmp_path / "ck"),
+                "--enable-es", "--es-url", "http://localhost:9",
+            ]
+        )
+    assert spark.streams.active == []
+
+
 def _write_input(spark, path, n_rows, seed):
     df = generator.transactions(spark, n_rows=n_rows, seed=seed)
     generator.transactions_as_json(df).coalesce(2).write.mode("overwrite").text(path)

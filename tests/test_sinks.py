@@ -404,6 +404,39 @@ def test_staged_merge_final_state_matches_memory_sink(spark, tmp_path):
 
 
 @pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
+def test_memory_sink_skips_key_less_rows_as_the_database_sink_does(
+    spark, tmp_path, kind
+):
+    """A sale and a malformed line (an all-null row) through the raw
+    branch: the memory sink and the database sink both keep the sale
+    alone, as equal rows."""
+    from flink_ecommerce_spark.sources.kafka import parse_transactions
+
+    sale = generator.transactions(spark, n_rows=1, seed=5)
+    lines = [generator.transactions_as_json(sale).first()["value"], "{not json"]
+    b = _branch("transactions")
+    batch = b.plan(
+        parse_transactions(spark.createDataFrame([(v,) for v in lines], ["value"]))
+    )
+    db = _sink_db(tmp_path)
+    StagedMergeSink(_connect(kind, db), b.name, b.key_cols).write_batch(batch, 0)
+    mem_sink = MemoryUpsertSink(b.key_cols)
+    mem_sink.write_batch(batch, 0)
+
+    def utc(v):
+        # collected timestamps are naive process-local; the table's are UTC
+        if isinstance(v, dt.datetime):
+            return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        return v
+
+    con = duckdb.connect(db)
+    stored = con.execute(f"SELECT {', '.join(batch.columns)} FROM {b.name}").fetchall()
+    con.close()
+    kept = [tuple(utc(v) for v in r) for r in mem_sink.rows()]
+    assert kept == stored and len(stored) == 1
+
+
+@pytest.mark.parametrize("kind", ["duckdb", "psycopg"])
 def test_staged_merge_collapses_duplicate_keys_in_batch(spark, tmp_path, kind):
     db = str(tmp_path / "dup.duckdb")
     con = duckdb.connect(db)

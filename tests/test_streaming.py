@@ -39,9 +39,9 @@ SUM_TABLES = {
 }
 
 
-def _run_staged(spark, src, db, ckpt, branches, max_files_per_trigger=None):
+def _staged_job(spark, src, db, ckpt, branches, max_files_per_trigger=None):
     """The job's branches from the JSON files in ``src`` into DuckDB
-    through StagedMergeSink, drained and stopped."""
+    through StagedMergeSink, not yet started."""
     import duckdb
 
     from flink_ecommerce_spark.sources.kafka import parse_transactions
@@ -52,14 +52,19 @@ def _run_staged(spark, src, db, ckpt, branches, max_files_per_trigger=None):
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    job = StreamingJob(
+    return StreamingJob(
         source=parse_transactions(reader.load(src)),
         sink_factory=lambda b: StagedMergeSink(
             lambda: duckdb.connect(db), b.name, b.key_cols, b.sum_col
         ),
         branches=branches,
         checkpoint_root=ckpt,
-    ).start()
+    )
+
+
+def _run_staged(spark, src, db, ckpt, branches, max_files_per_trigger=None):
+    """``_staged_job`` started, drained and stopped."""
+    job = _staged_job(spark, src, db, ckpt, branches, max_files_per_trigger).start()
     try:
         job.process_available()
     finally:
@@ -264,6 +269,70 @@ def test_malformed_line_does_not_stop_staged_job(spark, tmp_path):
         job.stop()
 
     assert failed == []
+    con = duckdb.connect(db)
+    counts = {
+        b.name: con.execute(f"SELECT COUNT(*) FROM {b.name}").fetchone()[0]
+        for b in branches
+    }
+    con.close()
+    assert counts == {b.name: 1 for b in branches}
+
+
+def test_failed_start_stops_the_started_queries(spark, tmp_path):
+    """The four queries start concurrently and ``queries`` keeps branch
+    order. When one branch's plan fails (it selects a column the source
+    lacks), ``start()`` raises and no query of the job is left
+    running, although the branches before it in order did start."""
+    from pyspark.errors import AnalysisException
+
+    from flink_ecommerce_spark.streaming.runner import Branch
+
+    src = tmp_path / "in"
+    src.mkdir()
+    db = str(tmp_path / "start.duckdb")
+    branches = reference_branches()
+    job = _staged_job(spark, str(src), db, str(tmp_path / "ok"), branches).start()
+    try:
+        names = [q.name for q in job.queries]
+    finally:
+        job.stop()
+    assert names == [b.name for b in branches]
+
+    bad = Branch("bad", lambda df: df.select("noSuchColumn"), ("noSuchColumn",))
+    broken = branches[:2] + [bad] + branches[2:3]
+    failing = _staged_job(spark, str(src), db, str(tmp_path / "bad"), broken)
+    try:
+        with pytest.raises(AnalysisException):
+            failing.start()
+        left = [q.name for q in spark.streams.active]
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+    assert left == []
+
+
+def test_stop_right_after_start_is_clean_and_restartable(spark, tmp_path):
+    """Stopped the moment it has started, on an empty directory, no
+    query records a failure, though a query's thread may still be
+    creating its checkpoint. A restart on the same checkpoints then
+    drains a new file into all four tables."""
+    import duckdb
+
+    valid = generator.transactions_as_json(
+        generator.transactions(spark, n_rows=1, seed=5)
+    ).first()["value"]
+    src = tmp_path / "in"
+    src.mkdir()
+    db = str(tmp_path / "restart.duckdb")
+    ckpt = str(tmp_path / "ckpt")
+    branches = reference_branches()
+
+    job = _staged_job(spark, str(src), db, ckpt, branches).start()
+    job.stop()
+    assert [q.exception() for q in job.queries] == [None] * len(branches)
+
+    (src / "part-0.json").write_text(valid + "\n")
+    _run_staged(spark, str(src), db, ckpt, branches)
     con = duckdb.connect(db)
     counts = {
         b.name: con.execute(f"SELECT COUNT(*) FROM {b.name}").fetchone()[0]
